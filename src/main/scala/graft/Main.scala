@@ -24,26 +24,34 @@ import graft.table.TableLog
 object Main {
 
   /** The whole pipeline minus session lifecycle (testable e2e).
+    * Decoding runs inside Spark tasks, so a decode error reaches the driver
+    * wrapped in a job failure; the first [[GraftError]] in the cause chain
+    * is rethrown, keeping the reference's typed errors at the CLI.
     * @param schema optional namespace dir (reference `--schema`,
     *               `cli.rs:94-96` create_schema before create_table). */
   def run(spark: SparkSession, input: String, table: String,
           srid: Int = 4326, reproject: Option[Int] = None,
-          mode: String = "fail", schema: Option[String] = None): graft.table.TableLog.Snapshot = {
-    val isPbf = input.toLowerCase.endsWith(".pbf")
-    val effSrid = if (isPbf) 4326 else srid // reference forces 4326 for pbf
-    // all three formats flow through the dispatch (validateArgs included)
-    val df = SourceDispatch.read(spark, input, effSrid, reproject)
-    val qualified = schema match {
-      case Some(ns) => TableLog.createNamespace(ns); s"$ns/$table"
-      case None => table
+          mode: String = "fail", schema: Option[String] = None): graft.table.TableLog.Snapshot =
+    try {
+      val isPbf = input.toLowerCase.endsWith(".pbf")
+      val effSrid = if (isPbf) 4326 else srid // reference forces 4326 for pbf
+      // all three formats flow through the dispatch (validateArgs included)
+      val df = SourceDispatch.read(spark, input, effSrid, reproject)
+      val qualified = schema match {
+        case Some(ns) => TableLog.createNamespace(ns); s"$ns/$table"
+        case None => table
+      }
+      // srid property records what the GEOMETRY actually is: pbf never
+      // reprojects (dispatch above), so --reproject must not relabel it.
+      // (Deliberate deviation: reference `cli.rs:98-100` stamps the reproject
+      // srid unconditionally, mislabeling pbf loads run with --reproject.)
+      val outSrid = if (isPbf) effSrid else reproject.getOrElse(effSrid)
+      TableLog.write(df, qualified, mode, srid = outSrid)
+    } catch {
+      case e: Exception =>
+        throw Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .collectFirst { case g: GraftError => g }.getOrElse(e)
     }
-    // srid property records what the GEOMETRY actually is: pbf never
-    // reprojects (dispatch above), so --reproject must not relabel it.
-    // (Deliberate deviation: reference `cli.rs:98-100` stamps the reproject
-    // srid unconditionally, mislabeling pbf loads run with --reproject.)
-    val outSrid = if (isPbf) effSrid else reproject.getOrElse(effSrid)
-    TableLog.write(df, qualified, mode, srid = outSrid)
-  }
 
   def main(args: Array[String]): Unit = {
     val opts = args.sliding(2, 2).collect {

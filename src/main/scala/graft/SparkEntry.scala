@@ -797,11 +797,11 @@ object SparkEntry {
     // q75's fixture round-tripped through the GeoJSONL SINK (export) and
     // re-read: the closed-form oracle catches any encoder drift
     "q92_geojsonl_roundtrip" -> ((s, _) => sources.FileFixtures.geojsonlRoundtripQuery(s)),
-    // q40's fixture through the FeatureCollection DSV2 (executor-side
-    // streaming parse + column pruning) — same closed-form oracle
-    "q78_geojson_dsv2" -> ((s, _) => sources.FileFixtures.geojsonScanQueryV2(s)),
-    // q42's fixture through the blob-range osmpbf DSV2 + the same assembly
-    "q79_pbf_dsv2" -> ((s, _) => sources.FileFixtures.pbfScanQueryV2(s)),
+    // same body as q40: the FeatureCollection DSV2 (executor-side
+    // streaming parse + column pruning)
+    "q78_geojson_dsv2" -> ((s, _) => sources.FileFixtures.geojsonScanQuery(s)),
+    // same body as q42: the blob-range osmpbf DSV2 scans + way assembly
+    "q79_pbf_dsv2" -> ((s, _) => sources.FileFixtures.pbfScanQuery(s)),
 
     // --- multimodal binary columns ---
     "q31_media_meta" -> ((s, dir) =>

@@ -41,4 +41,15 @@ object Mercator {
         throw new IllegalArgumentException(
           s"unsupported srid pair $fromSrid->$toSrid (reference restricts srid to {4326,3857})")
     }
+
+  /** [[transform]] applied to every coordinate of `g`, in place (P3). */
+  def projectInPlace(g: org.locationtech.jts.geom.Geometry, fromSrid: Int, toSrid: Int): Unit = {
+    g.apply(new org.locationtech.jts.geom.CoordinateFilter {
+      override def filter(c: org.locationtech.jts.geom.Coordinate): Unit = {
+        val (x, y) = transform(c.x, c.y, fromSrid, toSrid)
+        c.x = x; c.y = y
+      }
+    })
+    g.geometryChanged()
+  }
 }

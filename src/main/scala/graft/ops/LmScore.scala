@@ -61,7 +61,9 @@ object LmScore {
   }
 
   /** DuckDB replica over a `corpus(doc_id, text)` relation string: same
-    * tokenization, same lead-window bigrams, same floor/scale sequence. */
+    * tokenization and floor/scale sequence, and the same adjacent-pair
+    * bigrams — built here with a `lead` window, where [[lmScore]] builds
+    * them row-locally with `transform`. */
   def lmScoreSql(corpusRelation: String): String =
     s"""WITH corpus AS $corpusRelation,
        | tokarr AS (SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS a

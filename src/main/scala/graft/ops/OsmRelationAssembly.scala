@@ -127,7 +127,8 @@ object OsmRelationAssembly {
       WkbCodec.write(WkbCodec.multiPolygon(polys))))
   }
 
-  /** relations/ways/nodes as produced by [[graft.sources.OsmPbfReader]]. */
+  /** relations/ways/nodes as produced by the `format("osmpbf")` element
+    * scans ([[graft.sources.v2.OsmPbfSource]]). */
   def assemble(spark: SparkSession, relations: DataFrame, ways: DataFrame,
                nodes: DataFrame, broadcastNodes: Boolean = true): DataFrame = {
     val mp = relations

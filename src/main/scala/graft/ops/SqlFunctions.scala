@@ -112,13 +112,7 @@ object SqlFunctions {
     override def dataType: DataType = BinaryType
     override def nullSafeEval(wkb: Any, from: Any, to: Any): Any = {
       val g = WkbCodec.read(wkb.asInstanceOf[Array[Byte]])
-      val f = asI(from); val t = asI(to)
-      g.apply(new org.locationtech.jts.geom.CoordinateFilter {
-        override def filter(c: org.locationtech.jts.geom.Coordinate): Unit = {
-          val (x, y) = Mercator.transform(c.x, c.y, f, t); c.x = x; c.y = y
-        }
-      })
-      g.geometryChanged()
+      Mercator.projectInPlace(g, asI(from), asI(to))
       WkbCodec.write(g)
     }
     override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =

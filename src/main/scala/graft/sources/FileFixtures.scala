@@ -11,8 +11,8 @@ import graft.FixtureWriters
 
 /** Oracle-checked file-source coverage (S1-S4, P1-P4, S5-S7): each query
   * synthesizes a deterministic fixture FILE from the closed-form
-  * definitions below, reads it back through the REAL binary reader
-  * (GeoJsonReader / ShapefileReader / OsmPbfReader), and emits
+  * definitions below, reads it back through the REAL binary reader (the
+  * DSV2 sources, via SourceDispatch / OsmPbfReader.read), and emits
   * BIGINT/VARCHAR columns. The DuckDB oracle is a VALUES literal generated
   * from the SAME closed-form definitions — never from the reader output —
   * so a decode bug on the Spark side cannot self-verify.
@@ -99,19 +99,12 @@ object FileFixtures {
       round(call_function("st_x", call_function("st_centroid", col("geom"))) * 4).cast("long").as("x4"),
       round(call_function("st_y", call_function("st_centroid", col("geom"))) * 4).cast("long").as("y4"))
 
+  /** q40 and q78: the DSV2 scan (executor-side streaming parse, column
+    * pruning) through [[SourceDispatch.read]]. */
   def geojsonScanQuery(spark: SparkSession): DataFrame = {
     val dir = fixtureDir("q40")(d => writeGeoJson(s"$d/fix.geojson"))
-    val path = s"$dir/fix.geojson"
     graft.ops.GraftFunctions.register(spark)
-    geoProjection(GeoJsonReader.read(spark, path))
-  }
-
-  /** Same q40 fixture through the DSV2 scan (executor-side streaming
-    * parse, column pruning) — must match the same closed-form oracle. */
-  def geojsonScanQueryV2(spark: SparkSession): DataFrame = {
-    val dir = fixtureDir("q40")(d => writeGeoJson(s"$d/fix.geojson"))
-    graft.ops.GraftFunctions.register(spark)
-    geoProjection(spark.read.format("geojson").load(s"$dir/fix.geojson"))
+    geoProjection(SourceDispatch.read(spark, s"$dir/fix.geojson"))
   }
 
   val geojsonOracle: String = valuesSql(
@@ -252,7 +245,7 @@ object FileFixtures {
     val dir = fixtureDir("q41")(d => { writeShapefile(d.toString); () })
     val shp = s"$dir/fix.shp"
     graft.ops.GraftFunctions.register(spark)
-    shpProjection(ShapefileReader.read(spark, shp))
+    shpProjection(SourceDispatch.read(spark, shp))
   }
 
   /** Same fixture and oracle through the SPLIT DataSource V2 path (q43):
@@ -391,22 +384,12 @@ object FileFixtures {
     Files.write(Paths.get(path), out.toByteArray)
   }
 
+  /** q42 and q79: the DSV2 blob-range scans (nodes + ways as
+    * `format("osmpbf")` tables) and the way assembly, i.e.
+    * [[OsmPbfReader.read]]. */
   def pbfScanQuery(spark: SparkSession): DataFrame = {
     val dir = fixtureDir("q42")(d => writePbf(s"$d/fix.osm.pbf"))
-    val path = s"$dir/fix.osm.pbf"
-    val df = OsmPbfReader.read(spark, path)
-    df.select(col("way_id"), col("kind"), col("npts").cast("long").as("npts"),
-      element_at(col("tags"), 1).as("tag0"))
-  }
-
-  /** Same q42 fixture through the DSV2 blob-range scans (nodes + ways as
-    * `format("osmpbf")` tables) and the same assembly — same oracle. */
-  def pbfScanQueryV2(spark: SparkSession): DataFrame = {
-    val dir = fixtureDir("q42")(d => writePbf(s"$d/fix.osm.pbf"))
-    val path = s"$dir/fix.osm.pbf"
-    val nodes = spark.read.format("osmpbf").option("element", "nodes").load(path)
-    val ways = spark.read.format("osmpbf").option("element", "ways").load(path)
-    graft.ops.OsmWayAssembly.assemble(spark, nodes, ways)
+    OsmPbfReader.read(spark, s"$dir/fix.osm.pbf")
       .select(col("way_id"), col("kind"), col("npts").cast("long").as("npts"),
         element_at(col("tags"), 1).as("tag0"))
   }
@@ -534,11 +517,10 @@ object FileFixtures {
 
   def pbfRelQuery(spark: SparkSession): DataFrame = {
     val dir = fixtureDir("q60")(d => writePbfRel(s"$d/rel.osm.pbf"))
-    val path = s"$dir/rel.osm.pbf"
+    def scan(element: String) = spark.read.format("osmpbf")
+      .option("element", element).load(s"$dir/rel.osm.pbf")
     graft.ops.OsmRelationAssembly.assemble(spark,
-        OsmPbfReader.relations(spark, path),
-        OsmPbfReader.ways(spark, path),
-        OsmPbfReader.nodes(spark, path))
+        scan("relations"), scan("ways"), scan("nodes"))
       .select(col("rel_id"), col("n_outer"), col("n_inner"), col("npts"),
         md5(col("geom")).as("wkb_md5"))
   }

@@ -1,13 +1,14 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.GraftError
 import graft.geom.{GeoJsonDecode, Mercator, WkbCodec}
 
-import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** GeoJSON FeatureCollection source (reference S1/S2,
@@ -27,10 +28,11 @@ import scala.jdk.CollectionConverters._
   * the reference's HashMap order is nondeterministic and can silently
   * mis-assign same-typed columns).
   *
-  * Scale note: one .geojson file is a single JSON document, so the file is
-  * the parallel unit ([[readDir]] parses on executors). For geometry JSON
-  * already inside a 10^12-row table column, use [[geomFromGeoJson]] — a
-  * per-row function, no driver involvement.
+  * This object is the codec: schema inference and the single-threaded
+  * parse. DataFrames come from the DSV2 source
+  * ([[graft.sources.v2.GeoJsonSource]], `format("geojson")`), which parses
+  * on executors with the same [[featureStream]] and [[FeatureRows]]. For
+  * geometry JSON already inside a table column, use [[geomFromGeoJson]].
   */
 object GeoJsonReader {
   private val mapper = new ObjectMapper()
@@ -122,39 +124,6 @@ object GeoJsonReader {
     } finally { p.close(); in.close() }
   }
 
-  /** One feature subtree -> one Row (shared by the DOM and streaming paths). */
-  private def rowFromFeature(feat: JsonNode, attrs: Array[StructField],
-                             fromSrid: Int, reproject: Option[Int]): Row = {
-    val props = feat.path("properties")
-    val values = attrs.map { f =>
-      val v = props.path(f.name)
-      if (v.isMissingNode || v.isNull) null
-      else (f.dataType, v) match {
-        case (DoubleType, n) if n.isNumber   => n.asDouble()
-        case (StringType, n) if n.isTextual  => n.asText()
-        case (BooleanType, n) if n.isBoolean => n.asBoolean()
-        case _ => throw GraftError.MixedDataTypes(f.name)
-      }
-    }
-    val geomNode = feat.path("geometry")
-    val geom =
-      if (geomNode.isMissingNode || geomNode.isNull) null
-      else {
-        val g = GeoJsonDecode.decode(geomNode)
-        reproject.foreach { to =>
-          g.apply(new org.locationtech.jts.geom.CoordinateFilter {
-            override def filter(c: org.locationtech.jts.geom.Coordinate): Unit = {
-              val (x, y) = Mercator.transform(c.x, c.y, fromSrid, to)
-              c.x = x; c.y = y
-            }
-          })
-          g.geometryChanged()
-        }
-        WkbCodec.write(g)
-      }
-    Row.fromSeq(values.toSeq :+ geom)
-  }
-
   /** Executor-safe parse of one FeatureCollection string into Rows. */
   def parseRows(json: String, schema: StructType,
                 fromSrid: Int, reproject: Option[Int]): Seq[Row] = {
@@ -163,9 +132,8 @@ object GeoJsonReader {
       System.err.println("[geojson] not a FeatureCollection; no rows")
       return Seq.empty
     }
-    val attrs = schema.fields.dropRight(1)
     val feats = root.path("features")
-    (0 until feats.size()).map(i => rowFromFeature(feats.get(i), attrs, fromSrid, reproject))
+    (0 until feats.size()).map(i => FeatureRows.toRow(feats.get(i), schema, fromSrid, reproject))
   }
 
   /** Streaming parse of one FeatureCollection: features decode one at a
@@ -177,8 +145,7 @@ object GeoJsonReader {
     * The returned iterator closes the stream on exhaustion. */
   def parseRowsStream(open: () => java.io.InputStream, schema: StructType,
                       fromSrid: Int, reproject: Option[Int]): Iterator[Row] = {
-    val attrs = schema.fields.dropRight(1)
-    featureStream(open).map(feat => rowFromFeature(feat, attrs, fromSrid, reproject))
+    featureStream(open).map(feat => FeatureRows.toRow(feat, schema, fromSrid, reproject))
   }
 
   /** Streaming per-feature JsonNode iterator over one FeatureCollection —
@@ -255,28 +222,51 @@ object GeoJsonReader {
     close()
     Iterator.empty // FeatureCollection with no features array
   }
+}
 
-  def read(spark: SparkSession, path: String,
-           fromSrid: Int = 4326, reproject: Option[Int] = None): DataFrame = {
-    val json = new String(Files.readAllBytes(Paths.get(path)), "UTF-8")
-    val schema = inferSchema(json)
-    val rows = parseRows(json, schema, fromSrid, reproject)
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+/** Feature JsonNode -> row against a (possibly pruned) schema: the one
+  * per-feature decoder, shared by the codec above and the FeatureCollection
+  * and ndjson DSV2 readers. The geometry decode is skipped when `geom` is
+  * pruned. */
+private[sources] object FeatureRows {
+
+  def toInternalRow(feat: JsonNode, required: StructType,
+                    srid: Int, reproject: Option[Int]): InternalRow = {
+    val props = feat.path("properties")
+    val values = new Array[Any](required.length)
+    var i = 0
+    required.fields.foreach { f =>
+      values(i) =
+        if (f.name == "geom") decodeGeom(feat, srid, reproject)
+        else {
+          val v = props.path(f.name)
+          if (v.isMissingNode || v.isNull) null
+          else (f.dataType, v) match {
+            case (DoubleType, n) if n.isNumber   => n.asDouble()
+            case (StringType, n) if n.isTextual  => UTF8String.fromString(n.asText())
+            case (BooleanType, n) if n.isBoolean => n.asBoolean()
+            case _ => throw GraftError.MixedDataTypes(f.name)
+          }
+        }
+      i += 1
+    }
+    new GenericInternalRow(values)
   }
 
-  /** Many .geojson files parsed on executors, one per task. Each task
-    * streams its file (token-level parse, per-feature decode) — task memory
-    * stays flat regardless of file size. */
-  def readDir(spark: SparkSession, dir: String,
-              fromSrid: Int = 4326, reproject: Option[Int] = None): DataFrame = {
-    val files = Files.list(Paths.get(dir)).toArray.map(_.toString)
-      .filter(_.endsWith(".geojson")).sorted.toSeq
-    require(files.nonEmpty, s"no .geojson files under $dir")
-    val schema = inferSchemaStream(() => Files.newInputStream(Paths.get(files.head)))
-    val rdd = spark.sparkContext.parallelize(files, files.length).flatMap { f =>
-      parseRowsStream(() => new java.io.BufferedInputStream(
-        Files.newInputStream(Paths.get(f)), 1 << 20), schema, fromSrid, reproject)
+  def toRow(feat: JsonNode, schema: StructType, srid: Int, reproject: Option[Int]): Row =
+    Row.fromSeq(toInternalRow(feat, schema, srid, reproject).toSeq(schema).map {
+      case s: UTF8String => s.toString
+      case v => v
+    })
+
+  private def decodeGeom(feat: JsonNode, srid: Int,
+                         reproject: Option[Int]): Array[Byte] = {
+    val geomNode = feat.path("geometry")
+    if (geomNode.isMissingNode || geomNode.isNull) null
+    else {
+      val g = GeoJsonDecode.decode(geomNode)
+      reproject.foreach(to => Mercator.projectInPlace(g, srid, to))
+      WkbCodec.write(g)
     }
-    spark.createDataFrame(rdd, schema)
   }
 }

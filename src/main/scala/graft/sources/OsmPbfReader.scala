@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.GraftError
 
 import java.io.RandomAccessFile
@@ -22,9 +21,8 @@ import scala.collection.mutable
   * J1), NOT re-implemented here.
   *
   * Scale: the file is indexed into blobs on the driver (header walk, ~13
-  * bytes per blob), then blobs are parsed ON EXECUTORS, one task per blob
-  * range — the same split strategy Hadoop uses for block-compressed
-  * containers.
+  * bytes per blob); the DSV2 source then parses blob ranges ON EXECUTORS
+  * with [[blobData]] and [[parsePrimitiveBlockFull]].
   */
 object OsmPbfReader {
 
@@ -264,56 +262,14 @@ object OsmPbfReader {
     (nodes.toSeq, ways.toSeq, rels.toSeq)
   }
 
-  private val nodeSchema = StructType(Seq(
-    StructField("node_id", LongType), StructField("lon", DoubleType),
-    StructField("lat", DoubleType), StructField("tags", ArrayType(StringType))))
-  private val waySchema = StructType(Seq(
-    StructField("way_id", LongType), StructField("refs", ArrayType(LongType)),
-    StructField("tags", ArrayType(StringType))))
-  private val relSchema = StructType(Seq(
-    StructField("rel_id", LongType),
-    StructField("member_ids", ArrayType(LongType)),
-    StructField("member_types", ArrayType(IntegerType)),
-    StructField("member_roles", ArrayType(StringType)),
-    StructField("tags", ArrayType(StringType))))
-
-  /** (node_id, lon, lat, tags) — blobs parsed on executors. */
-  def nodes(spark: SparkSession, path: String): DataFrame = {
-    val blobs = indexBlobs(path).filter(_.blobType == "OSMData")
-    val rdd = spark.sparkContext.parallelize(blobs, math.max(1, math.min(blobs.size, 64)))
-      .flatMap { ref =>
-        parsePrimitiveBlock(blobData(path, ref))._1.iterator.map(n =>
-          Row(n.id, n.lon, n.lat, n.tags.toSeq))
-      }
-    spark.createDataFrame(rdd, nodeSchema)
-  }
-
-  /** (way_id, refs, tags) — blobs parsed on executors. */
-  def ways(spark: SparkSession, path: String): DataFrame = {
-    val blobs = indexBlobs(path).filter(_.blobType == "OSMData")
-    val rdd = spark.sparkContext.parallelize(blobs, math.max(1, math.min(blobs.size, 64)))
-      .flatMap { ref =>
-        parsePrimitiveBlock(blobData(path, ref))._2.iterator.map(w =>
-          Row(w.id, w.refs.toSeq, w.tags.toSeq))
-      }
-    spark.createDataFrame(rdd, waySchema)
-  }
-
-  /** (rel_id, member_ids, member_types, member_roles, tags) — the superset
-    * element the reference drops; blobs parsed on executors. */
-  def relations(spark: SparkSession, path: String): DataFrame = {
-    val blobs = indexBlobs(path).filter(_.blobType == "OSMData")
-    val rdd = spark.sparkContext.parallelize(blobs, math.max(1, math.min(blobs.size, 64)))
-      .flatMap { ref =>
-        parsePrimitiveBlockFull(blobData(path, ref))._3.iterator.map(r =>
-          Row(r.id, r.memberIds.toSeq, r.memberTypes.toSeq, r.roles.toSeq, r.tags.toSeq))
-      }
-    spark.createDataFrame(rdd, relSchema)
-  }
-
-  /** Full reference dataflow: nodes + ways -> assembled way features
-    * (tags "k=v" array + WKB geom, ways only, srid 4326). */
-  def read(spark: SparkSession, path: String): DataFrame =
-    graft.ops.OsmWayAssembly.assemble(spark, nodes(spark, path), ways(spark, path))
+  /** Full reference dataflow: the `element=nodes` and `element=ways` DSV2
+    * scans ([[graft.sources.v2.OsmPbfSource]], blobs parsed on executors)
+    * -> assembled way features (tags "k=v" array + WKB geom, ways only,
+    * srid 4326). */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    def scan(element: String) =
+      spark.read.format("osmpbf").option("element", element).load(path)
+    graft.ops.OsmWayAssembly.assemble(spark, scan("nodes"), scan("ways"))
       .select("way_id", "tags", "kind", "npts", "geom")
+  }
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import graft.GraftError
 import graft.geom.{Mercator, ShapeDecode, WkbCodec}
@@ -24,9 +24,10 @@ import graft.geom.ShapeDecode._
   * Documented deviation: attribute columns are emitted in LEXICOGRAPHIC
   * order (the reference's HashMap order is nondeterministic — SURVEY §1.3).
   *
-  * Scale note: one shapefile is capped at 2 GB by its 32-bit length field,
-  * so a single file is inherently a driver-side (dim) read; parallelism at
-  * 100 TB comes from MANY files — `readDir` distributes one file per task.
+  * This object is the codec: DBF/SHP decoding, schema inference and the
+  * single-threaded [[parseFileRows]]. DataFrames come from the DSV2 source
+  * ([[graft.sources.v2.ShapefileSource]], `format("shapefile")`), which
+  * splits files on `.shx` record ranges and decodes with the same codec.
   */
 object ShapefileReader {
 
@@ -41,46 +42,52 @@ object ShapefileReader {
     }
   }
 
+  /** Every record of a `.dbf`, in file order: field -> raw cell, or null
+    * for a deleted record (its shape is dropped with it). */
   def dbfRecords(bytes: Array[Byte]): Seq[Map[String, String]] = {
     val b = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val nRec = b.getInt(4)
     val headerSize = b.getShort(8) & 0xffff
     val recSize = b.getShort(10) & 0xffff
     val fields = dbfFields(bytes)
-    (0 until nRec).flatMap { i =>
-      val off = headerSize + i * recSize
-      if (bytes(off) == 0x2a) None // deleted record
-      else {
-        var p = off + 1
-        Some(fields.map { f =>
-          val raw = new String(bytes, p, f.length, "ISO-8859-1")
-          p += f.length
-          f.name -> raw
-        }.toMap)
-      }
-    }
+    (0 until b.getInt(4)).map(i => dbfRecord(bytes, headerSize + i * recSize, fields))
   }
+
+  /** The fixed-size DBF record at `off`: field -> raw cell, null if deleted. */
+  private[sources] def dbfRecord(buf: Array[Byte], off: Int,
+                                 fields: Seq[DbfField]): Map[String, String] =
+    if (buf(off) == 0x2a) null
+    else {
+      var p = off + 1
+      fields.map { f =>
+        val raw = new String(buf, p, f.length, "ISO-8859-1")
+        p += f.length
+        f.name -> raw
+      }.toMap
+    }
 
   // ---- .shp parsing ----
   def shpShapes(bytes: Array[Byte]): Seq[Shape] = {
-    val b = ByteBuffer.wrap(bytes)
-    b.order(ByteOrder.BIG_ENDIAN)
+    val b = ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN)
     require(b.getInt(0) == 9994, "not a shapefile (bad magic)")
-    val fileWords = b.getInt(24)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Shape]
-    var off = 100
-    while (off < fileWords * 2) {
-      val contentWords = ByteBuffer.wrap(bytes, off + 4, 4).order(ByteOrder.BIG_ENDIAN).getInt
-      // slice() rebases index 0 to the record content (wrap alone keeps
-      // absolute indices relative to the whole file)
-      val c = ByteBuffer.wrap(bytes, off + 8, contentWords * 2).slice().order(ByteOrder.LITTLE_ENDIAN)
-      out += parseShape(c)
-      off += 8 + contentWords * 2
-    }
-    out.toSeq
+    shapes(bytes, 100, b.getInt(24) * 2)
   }
 
-  private[sources] def parseShape(c: ByteBuffer): Shape = c.getInt(0) match {
+  /** The `.shp` records laid end to end in `buf[from, until)`. */
+  private[sources] def shapes(buf: Array[Byte], from: Int, until: Int): IndexedSeq[Shape] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[Shape]
+    var off = from
+    while (off < until) {
+      val contentBytes = ByteBuffer.wrap(buf, off + 4, 4).order(ByteOrder.BIG_ENDIAN).getInt * 2
+      // slice() rebases index 0 to the record content (wrap alone keeps
+      // absolute indices relative to the whole buffer)
+      out += parseShape(
+        ByteBuffer.wrap(buf, off + 8, contentBytes).slice().order(ByteOrder.LITTLE_ENDIAN))
+      off += 8 + contentBytes
+    }
+    out.toIndexedSeq
+  }
+
+  private def parseShape(c: ByteBuffer): Shape = c.getInt(0) match {
     case 0 => SNull
     case 1 => SPoint(c.getDouble(4), c.getDouble(12))
     case t @ (3 | 5) =>
@@ -136,19 +143,7 @@ object ShapefileReader {
       }
   }
 
-  /** In-place 4326<->3857 reprojection of every coordinate (P3). */
-  private[sources] def projectInPlace(g: org.locationtech.jts.geom.Geometry,
-                                      fromSrid: Int, to: Int): Unit = {
-    g.apply(new org.locationtech.jts.geom.CoordinateFilter {
-      override def filter(c: org.locationtech.jts.geom.Coordinate): Unit = {
-        val (x, y) = Mercator.transform(c.x, c.y, fromSrid, to)
-        c.x = x; c.y = y
-      }
-    })
-    g.geometryChanged()
-  }
-
-  /** Executor-safe: parse one `.shp`+`.dbf` pair into Rows of `schema`. */
+  /** Parse one `.shp`+`.dbf` pair into Rows of `schema`, in one thread. */
   def parseFileRows(shpPath: String, schema: StructType,
                     fromSrid: Int, reproject: Option[Int]): Seq[Row] = {
     val dbfPath = shpPath.dropRight(4) + ".dbf"
@@ -159,39 +154,11 @@ object ShapefileReader {
     val shapes = shpShapes(shpBytes)
     require(records.length == shapes.length,
       s"shp/dbf record count mismatch: ${shapes.length} vs ${records.length}")
-    shapes.zip(records).map { case (shape, rec) =>
+    shapes.zip(records).collect { case (shape, rec) if rec != null =>
       val geom = ShapeDecode.toGeometry(shape)
-      val projected = (geom, reproject) match {
-        case (null, _) | (_, None) => geom
-        case (g, Some(to)) => projectInPlace(g, fromSrid, to); g
-      }
+      if (geom != null) reproject.foreach(to => Mercator.projectInPlace(geom, fromSrid, to))
       Row.fromSeq(attrs.map(f => parseValue(rec(f.name), f.dataType, f.name)).toSeq :+
-        (if (projected == null) null else WkbCodec.write(projected)))
+        (if (geom == null) null else WkbCodec.write(geom)))
     }
-  }
-
-  /** Read one `.shp`+`.dbf` pair into a DataFrame.
-    * @param reproject optional target srid (4326<->3857 only, like the
-    *                  reference's CLI validation F4). */
-  def read(spark: SparkSession, shpPath: String,
-           fromSrid: Int = 4326, reproject: Option[Int] = None): DataFrame = {
-    require(shpPath.endsWith(".shp"), s"expected .shp path: $shpPath")
-    val schema = inferSchema(Files.readAllBytes(Paths.get(shpPath.dropRight(4) + ".dbf")))
-    val rows = parseFileRows(shpPath, schema, fromSrid, reproject)
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
-  }
-
-  /** Many shapefiles -> one DataFrame, parsed ON EXECUTORS one file per
-    * task (the 100 TB path: a single shapefile is <= 2 GB by format, so
-    * files are the parallel unit; schema from the first file's header). */
-  def readDir(spark: SparkSession, dir: String,
-              fromSrid: Int = 4326, reproject: Option[Int] = None): DataFrame = {
-    val files = Files.list(Paths.get(dir)).toArray.map(_.toString)
-      .filter(_.endsWith(".shp")).sorted.toSeq
-    require(files.nonEmpty, s"no .shp files under $dir")
-    val schema = inferSchema(Files.readAllBytes(Paths.get(files.head.dropRight(4) + ".dbf")))
-    val rdd = spark.sparkContext.parallelize(files, files.length)
-      .flatMap(f => parseFileRows(f, schema, fromSrid, reproject))
-    spark.createDataFrame(rdd, schema)
   }
 }

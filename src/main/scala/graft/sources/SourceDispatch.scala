@@ -4,15 +4,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.GraftError
 
 /** File-type dispatch (reference S8,
-  * `/root/reference/src/format/common.rs:65-80`): extension -> reader;
+  * `src/format/common.rs:65-80`): extension -> DSV2 source
+  * (`format("shapefile"|"geojson"|"osmpbf")`, parsed on executors);
   * unknown -> [[GraftError.UnsupportedFileExtension]]. OsmPBF inputs force
   * srid 4326 like the reference (`src/utils/cli.rs:64`). */
 object SourceDispatch {
 
-  sealed trait FileType
-  case object Shapefile extends FileType
-  case object GeoJson extends FileType
-  case object OsmPbf extends FileType
+  sealed abstract class FileType(val format: String)
+  case object Shapefile extends FileType("shapefile")
+  case object GeoJson extends FileType("geojson")
+  case object OsmPbf extends FileType("osmpbf")
 
   def determineFileType(path: String): FileType =
     path.toLowerCase match {
@@ -37,20 +38,20 @@ object SourceDispatch {
            srid: Int = 4326, reproject: Option[Int] = None): DataFrame = {
     validateArgs(path, srid, reproject)
     determineFileType(path) match {
-      case Shapefile => ShapefileReader.read(spark, path, srid, reproject)
-      case GeoJson   => GeoJsonReader.read(spark, path, srid, reproject)
-      case OsmPbf    =>
-        // reference parity (`src/utils/cli.rs:64-66`): pbf is always 4326 and
-        // `read_osmpbf` never reprojects (reproject only touches shp/geojson,
-        // `shapefile.rs:159`/`geojson.rs:147`); fixed schema tags[] + geom
-        OsmPbfReader.read(spark, path).select("tags", "geom")
+      // reference parity (`src/utils/cli.rs:64-66`): pbf is always 4326 and
+      // `read_osmpbf` never reprojects (reproject only touches shp/geojson,
+      // `shapefile.rs:159`/`geojson.rs:147`); fixed schema tags[] + geom
+      case OsmPbf => pbfFeatures(spark, path)
+      case t      => load(spark, t, path, srid, reproject)
     }
   }
 
   /** Many files of ONE format under a directory -> one DataFrame, parsed
     * on executors (the 100 TB ingest shape: files are the parallel unit;
-    * PBF additionally parallelizes per blob inside each file). Mixed
-    * formats in one dir are rejected — per-format schema rules differ. */
+    * shapefiles also split on record ranges, PBF on blob ranges). PBF is a
+    * union of per-file reads, so way->node resolution never crosses files.
+    * Mixed formats in one dir are rejected — per-format schema rules
+    * differ. */
   def readDir(spark: SparkSession, dir: String,
               srid: Int = 4326, reproject: Option[Int] = None): DataFrame = {
     if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir)))
@@ -63,14 +64,20 @@ object SourceDispatch {
       .toSeq.groupBy(_._1)
     kinds.keySet.toList match {
       case Nil => throw GraftError.FailedValidation(s"no supported files under $dir")
-      case List(Shapefile) => ShapefileReader.readDir(spark, dir, srid, reproject)
-      case List(GeoJson)   => GeoJsonReader.readDir(spark, dir, srid, reproject)
-      case List(OsmPbf)    =>
-        kinds(OsmPbf).map(_._2).sorted
-          .map(p => OsmPbfReader.read(spark, p).select("tags", "geom"))
-          .reduce(_ unionAll _)
+      case List(OsmPbf) =>
+        kinds(OsmPbf).map(_._2).sorted.map(pbfFeatures(spark, _)).reduce(_ union _)
+      case List(t) => load(spark, t, dir, srid, reproject)
       case many => throw GraftError.FailedValidation(
         s"mixed formats under $dir: ${many.mkString(", ")}")
     }
+  }
+
+  private def pbfFeatures(spark: SparkSession, path: String): DataFrame =
+    OsmPbfReader.read(spark, path).select("tags", "geom")
+
+  private def load(spark: SparkSession, t: FileType, path: String,
+                   srid: Int, reproject: Option[Int]): DataFrame = {
+    val reader = spark.read.format(t.format).option("srid", srid.toString)
+    reproject.fold(reader)(to => reader.option("reproject", to.toString)).load(path)
   }
 }

@@ -3,8 +3,6 @@ package graft.sources.v2
 import java.nio.file.{Files, Paths}
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -13,18 +11,17 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.GraftError
-import graft.sources.GeoJsonReader
+import graft.sources.{FeatureRows, GeoJsonReader}
 
 /** GeoJSON FeatureCollection (`.geojson`) as a DataSource V2 —
-  * `spark.read.format("geojson")`. The catalog-surface twin of
-  * [[graft.sources.GeoJsonReader]] (reference S1/S2,
-  * `/root/reference/src/format/geojson.rs:105-166`): same first-feature
-  * schema inference, same per-feature streaming Jackson decode — but the
-  * parse runs ON EXECUTORS (the convenience `GeoJsonReader.read` parses on
-  * the driver), one task per file, with DSV2 column pruning so unneeded
-  * properties are never converted and the geometry decode + WKB encode is
-  * skipped entirely when `geom` is pruned.
+  * `spark.read.format("geojson")`, the read path of
+  * [[graft.sources.SourceDispatch]] for this format (reference S1/S2,
+  * `src/format/geojson.rs:105-166`). Schema inference and
+  * the per-feature streaming Jackson decode are the
+  * [[graft.sources.GeoJsonReader]] codec; the parse runs ON EXECUTORS, one
+  * task per file, with DSV2 column pruning so unneeded properties are never
+  * converted and the geometry decode + WKB encode is skipped entirely when
+  * `geom` is pruned.
   *
   * A FeatureCollection is ONE JSON document, so a single file cannot be
   * byte-range split (the features array has no line structure) — one file
@@ -51,15 +48,8 @@ class GeoJsonSource extends TableProvider with DataSourceRegister {
 }
 
 object GeoJsonSource {
-  def resolvePaths(options: CaseInsensitiveStringMap): Seq[String] = {
-    val path = Option(options.get("path")).getOrElse(
-      throw GraftError.FailedValidation("geojson source requires a path"))
-    val p = Paths.get(path)
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.map(_.toString)
-        .filter(_.endsWith(".geojson")).toSeq.sorted
-    else Seq(path)
-  }
+  def resolvePaths(options: CaseInsensitiveStringMap): Seq[String] =
+    SourcePaths.resolve(options, "geojson", ".geojson")
 }
 
 class GeoJsonTable(tableSchema: StructType) extends Table with SupportsRead {

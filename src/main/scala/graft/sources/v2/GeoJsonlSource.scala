@@ -3,22 +3,16 @@ package graft.sources.v2
 import java.nio.file.{Files, Paths}
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
-import graft.GraftError
-import graft.geom.{GeoJsonDecode, Mercator, WkbCodec}
-import graft.sources.GeoJsonReader
+import graft.sources.{FeatureRows, GeoJsonReader}
 
 /** Line-delimited GeoJSON (GeoJSONL / ndjson, one Feature per line) as a
   * DataSource V2 — `spark.read.format("geojsonl")`. This closes the one
@@ -39,7 +33,7 @@ import graft.sources.GeoJsonReader
   *    WKB encode are skipped entirely (the dominant per-line cost).
   *  - Per-line Jackson parse only — no whole-file DOM, flat task memory.
   *
-  * Semantics match [[graft.sources.GeoJsonReader]] (same first-feature
+  * Semantics match [[GeoJsonSource]] (same first-feature
   * schema inference incl. the `geom`/`geometry` property-key skip of
   * geojson.rs:34-36, same Number→DOUBLE / String→STRING / Bool→BOOLEAN
   * mapping, MixedDataTypes on conflicts, optional 4326↔3857 reprojection,
@@ -68,15 +62,8 @@ class GeoJsonlSource extends TableProvider with DataSourceRegister {
 object GeoJsonlSource {
   private[v2] val mapper = new ObjectMapper()
 
-  def resolvePaths(options: CaseInsensitiveStringMap): Seq[String] = {
-    val path = Option(options.get("path")).getOrElse(
-      throw GraftError.FailedValidation("geojsonl source requires a path"))
-    val p = Paths.get(path)
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.map(_.toString)
-        .filter(f => f.endsWith(".geojsonl") || f.endsWith(".ndjson")).toSeq.sorted
-    else Seq(path)
-  }
+  def resolvePaths(options: CaseInsensitiveStringMap): Seq[String] =
+    SourcePaths.resolve(options, "geojsonl", ".geojsonl", ".ndjson")
 
   /** Schema from the FIRST feature line only (the ndjson analog of the
     * reference's first-feature inference, geojson.rs:29-33): reads one
@@ -149,9 +136,6 @@ class JlPartitionReader(split: JlSplit, required: StructType,
                         srid: Int, reproject: Option[Int])
   extends PartitionReader[InternalRow] {
 
-  private val needGeom = required.fieldNames.contains("geom")
-  private val attrs = required.fields.filter(_.name != "geom")
-
   private val in = new java.io.BufferedInputStream(
     Files.newInputStream(Paths.get(split.path)), 1 << 20)
   // pos = offset of the next unread byte; a line is OURS iff its first
@@ -219,53 +203,4 @@ class JlPartitionReader(split: JlSplit, required: StructType,
 
   override def get(): InternalRow = row
   override def close(): Unit = in.close()
-}
-
-/** Feature JsonNode -> InternalRow against a (possibly pruned) required
-  * schema — shared by the ndjson ([[GeoJsonlSource]]) and FeatureCollection
-  * ([[GeoJsonSource]]) DSV2 readers so both decode identically, including
-  * the geometry-decode skip when `geom` is pruned. */
-private[v2] object FeatureRows {
-
-  def toInternalRow(feat: JsonNode, required: StructType,
-                    srid: Int, reproject: Option[Int]): InternalRow = {
-    val props = feat.path("properties")
-    val values = new Array[Any](required.length)
-    var i = 0
-    required.fields.foreach { f =>
-      values(i) =
-        if (f.name == "geom") decodeGeom(feat, srid, reproject)
-        else {
-          val v = props.path(f.name)
-          if (v.isMissingNode || v.isNull) null
-          else (f.dataType, v) match {
-            case (DoubleType, n) if n.isNumber   => n.asDouble()
-            case (StringType, n) if n.isTextual  => UTF8String.fromString(n.asText())
-            case (BooleanType, n) if n.isBoolean => n.asBoolean()
-            case _ => throw GraftError.MixedDataTypes(f.name)
-          }
-        }
-      i += 1
-    }
-    new GenericInternalRow(values)
-  }
-
-  private def decodeGeom(feat: JsonNode, srid: Int,
-                         reproject: Option[Int]): Array[Byte] = {
-    val geomNode = feat.path("geometry")
-    if (geomNode.isMissingNode || geomNode.isNull) null
-    else {
-      val g = GeoJsonDecode.decode(geomNode)
-      reproject.foreach { to =>
-        g.apply(new org.locationtech.jts.geom.CoordinateFilter {
-          override def filter(c: org.locationtech.jts.geom.Coordinate): Unit = {
-            val (x, y) = Mercator.transform(c.x, c.y, srid, to)
-            c.x = x; c.y = y
-          }
-        })
-        g.geometryChanged()
-      }
-      WkbCodec.write(g)
-    }
-  }
 }

@@ -18,9 +18,10 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.GraftError
 import graft.sources.OsmPbfReader
 
-/** OSM PBF as a DataSource V2 — `spark.read.format("osmpbf")`, the catalog
-  * twin of [[graft.sources.OsmPbfReader]] (reference S5–S7,
-  * `/root/reference/src/format/osmpbf.rs`). `option("element",
+/** OSM PBF as a DataSource V2 — `spark.read.format("osmpbf")`, the element
+  * scans under [[graft.sources.OsmPbfReader.read]] (reference S5–S7,
+  * `src/format/osmpbf.rs`); blob framing and block parsing
+  * are the `OsmPbfReader` codec. `option("element",
   * "nodes"|"ways"|"relations")` picks the element pass (default nodes —
   * the reference's first pass).
   *
@@ -29,9 +30,9 @@ import graft.sources.OsmPbfReader
   * decompression) and groups consecutive OSMData blobs into splits of
   * ~`splitBlobs` each (default 4 ≈ 4×(up to 32 MB uncompressed) per
   * task). Executors then seek, inflate, and parse their own blobs — the
-  * same block-container split strategy as the RDD path, but with the DSV2
-  * surface: catalog format name, column pruning (a pruned `tags`/`refs`
-  * column is never materialized into rows), multi-file directories.
+  * split strategy Hadoop uses for block-compressed containers — with
+  * column pruning (a pruned `tags`/`refs` column is never materialized
+  * into rows) and multi-file directories.
   */
 class OsmPbfSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "osmpbf"
@@ -68,15 +69,8 @@ object OsmPbfSource {
       StructField("tags", ArrayType(StringType))))
   }
 
-  def resolvePaths(options: CaseInsensitiveStringMap): Seq[String] = {
-    val path = Option(options.get("path")).getOrElse(
-      throw GraftError.FailedValidation("osmpbf source requires a path"))
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.isDirectory(p))
-      java.nio.file.Files.list(p).iterator().asScala.map(_.toString)
-        .filter(_.endsWith(".pbf")).toSeq.sorted
-    else Seq(path)
-  }
+  def resolvePaths(options: CaseInsensitiveStringMap): Seq[String] =
+    SourcePaths.resolve(options, "osmpbf", ".pbf")
 }
 
 class OsmPbfTable(tableSchema: StructType, element: String)

@@ -4,8 +4,6 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -16,13 +14,14 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.geom.{ShapeDecode, WkbCodec}
+import graft.geom.{Mercator, ShapeDecode, WkbCodec}
 import graft.sources.ShapefileReader
 
 /** DataSource V2 shapefile reader — `spark.read.format("shapefile")` — the
-  * scale path for S3/S4 beyond the driver-side [[ShapefileReader.read]]
-  * (which SURVEY.md §2a row S3 names as "v1"; this is the planned "v2
-  * DataSource V2 TableProvider with .shp offset-splitting via .shx").
+  * read path of [[graft.sources.SourceDispatch]] for S3/S4 (the "v2
+  * DataSource V2 TableProvider with .shp offset-splitting via .shx" of
+  * SURVEY.md §2a row S3). DBF header, value and shape decoding are the
+  * [[ShapefileReader]] codec.
   *
   * Scale design:
   *  - SPLITS WITHIN one file: the mandatory `.shx` companion is a flat
@@ -42,7 +41,8 @@ import graft.sources.ShapefileReader
   * `N`/`F`→DOUBLE, `C`→STRING, `L`→BOOLEAN, `I`→LONG per
   * `/root/reference/src/format/shapefile.rs:66-80`, same [[ShapeDecode]]
   * quirks, same optional 4326<->3857 reprojection, geom last) — asserted
-  * by an equality test against the v1 reader on the same fixture.
+  * by an equality test against `ShapefileReader.parseFileRows` on the same
+  * fixture.
   *
   * Options: `path` (one `.shp` or a directory of them), `srid` (default
   * 4326), `reproject` (4326|3857), `splitBytes` (default 33554432).
@@ -62,17 +62,14 @@ class ShapefileSource extends TableProvider with DataSourceRegister {
 }
 
 object ShapefileSource {
-  def dbfPath(shp: String): String = shp.dropRight(4) + ".dbf"
-  def shxPath(shp: String): String = shp.dropRight(4) + ".shx"
+  def dbfPath(shp: String): String = companion(shp, "dbf")
+  def shxPath(shp: String): String = companion(shp, "shx")
+  /** `a.shp` -> `a.<ext>`; an upper-case `.SHP` keeps upper-case companions. */
+  private def companion(shp: String, ext: String): String =
+    shp.dropRight(3) + (if (shp.endsWith(".SHP")) ext.toUpperCase else ext)
 
-  def resolvePaths(options: CaseInsensitiveStringMap): Seq[String] = {
-    val path = Option(options.get("path")).getOrElse(
-      throw graft.GraftError.FailedValidation("shapefile source requires a path"))
-    val p = Paths.get(path)
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.map(_.toString).filter(_.endsWith(".shp")).toSeq.sorted
-    else Seq(path)
-  }
+  def resolvePaths(options: CaseInsensitiveStringMap): Seq[String] =
+    SourcePaths.resolve(options, "shapefile", ".shp")
 
   /** Per-record [contentOffsetBytes, contentLenBytes] from the `.shx`
     * (8 bytes/record, never touches the `.shp`); if the `.shx` is missing,
@@ -178,7 +175,7 @@ class ShpPartitionReader(split: ShpSplit, required: StructType,
   private val needGeom = required.fieldNames.contains("geom")
 
   // --- .dbf slice: header (field descriptors) + only this split's records ---
-  private val (dbfFields, dbfRecords) = {
+  private val dbfRecords: IndexedSeq[Map[String, String]] = {
     val raf = new java.io.RandomAccessFile(ShapefileSource.dbfPath(split.shpPath), "r")
     try {
       val head = new Array[Byte](32)
@@ -193,18 +190,8 @@ class ShpPartitionReader(split: ShpSplit, required: StructType,
       val buf = new Array[Byte](n * recSize)
       raf.seek(headerSize.toLong + split.startRec.toLong * recSize)
       raf.readFully(buf)
-      (fields, (0 until n).map { i =>
-        val off = i * recSize
-        if (buf(off) == 0x2a) null // deleted record — skip with its shape
-        else {
-          var p = off + 1
-          fields.map { f =>
-            val raw = new String(buf, p, f.length, "ISO-8859-1")
-            p += f.length
-            f.name -> raw
-          }.toMap
-        }
-      })
+      // a deleted record is null and is skipped with its shape
+      (0 until n).map(i => ShapefileReader.dbfRecord(buf, i * recSize, fields))
     } finally raf.close()
   }
 
@@ -216,15 +203,7 @@ class ShpPartitionReader(split: ShpSplit, required: StructType,
       try {
         val buf = new Array[Byte]((split.shpEndByte - split.shpStartByte).toInt)
         raf.seek(split.shpStartByte); raf.readFully(buf)
-        val out = scala.collection.mutable.ArrayBuffer.empty[graft.geom.ShapeDecode.Shape]
-        var off = 0
-        while (off < buf.length) {
-          val contentBytes = ByteBuffer.wrap(buf, off + 4, 4).order(ByteOrder.BIG_ENDIAN).getInt * 2
-          val c = ByteBuffer.wrap(buf, off + 8, contentBytes).slice().order(ByteOrder.LITTLE_ENDIAN)
-          out += ShapefileReader.parseShape(c)
-          off += 8 + contentBytes
-        }
-        out.toIndexedSeq
+        ShapefileReader.shapes(buf, 0, buf.length)
       } finally raf.close()
     }
 
@@ -241,7 +220,7 @@ class ShpPartitionReader(split: ShpSplit, required: StructType,
         val geom = ShapeDecode.toGeometry(shapes(i))
         if (geom == null) null
         else {
-          reproject.foreach(to => ShapefileReader.projectInPlace(geom, srid, to))
+          reproject.foreach(to => Mercator.projectInPlace(geom, srid, to))
           WkbCodec.write(geom)
         }
       } else ShapefileReader.parseValue(rec(f.name), f.dataType, f.name) match {

@@ -3,11 +3,12 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.types._
 import java.nio.file.Files
-import graft.sources.{FileFixtures, OsmPbfReader, ShapefileReader}
+import graft.sources.{FileFixtures, OsmPbfReader, SourceDispatch}
 
 /** The oracle-checked file-source queries (q40-q42) verified against the
   * same closed-form expectations the DuckDB VALUES oracle is generated
-  * from, plus the DBF 'I' -> LongType golden (shapefile.rs:66-80). */
+  * from, plus the DBF 'I' -> LongType golden (shapefile.rs:66-80) and the
+  * typed decode errors the CLI surfaces. */
 class FileFixturesSpec extends AnyFunSuite with SparkTest {
 
   test("q40: GeoJSON fixture through the real reader matches closed form") {
@@ -45,15 +46,21 @@ class FileFixturesSpec extends AnyFunSuite with SparkTest {
 
   test("PBF fixture: node coordinates decode via both dense and plain paths") {
     val dir = Files.createTempDirectory("graft-pbf-nodes").toString
-    FileFixtures.writePbf(s"$dir/n.osm.pbf")
-    val nodes = OsmPbfReader.nodes(spark, s"$dir/n.osm.pbf")
+    val path = s"$dir/n.osm.pbf"
+    FileFixtures.writePbf(path)
+    val codec = OsmPbfReader.indexBlobs(path).filter(_.blobType == "OSMData")
+      .flatMap(b => OsmPbfReader.parsePrimitiveBlockFull(OsmPbfReader.blobData(path, b))._1)
+      .sortBy(_.id).map(n => (n.id, n.lon, n.lat, n.tags.toSeq))
+    val scan = spark.read.format("osmpbf").option("element", "nodes").load(path)
       .orderBy("node_id").collect()
-    assert(nodes.length === 8)
-    FileFixtures.pbfNodes.zip(nodes).foreach { case (n, r) =>
-      assert(r.getLong(0) === n.id)
-      assert(r.getDouble(1) === 1e-9 * (100L * n.rawLon)) // granularity 100
-      assert(r.getDouble(2) === 1e-9 * (100L * n.rawLat))
-      assert(r.getSeq[String](3) === n.tags.map(t => s"${t._1}=${t._2}"))
+      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getSeq[String](3)))
+    assert(scan.toSeq === codec)
+    assert(codec.length === 8)
+    FileFixtures.pbfNodes.zip(codec).foreach { case (n, (id, lon, lat, tags)) =>
+      assert(id === n.id)
+      assert(lon === 1e-9 * (100L * n.rawLon)) // granularity 100
+      assert(lat === 1e-9 * (100L * n.rawLat))
+      assert(tags === n.tags.map(t => s"${t._1}=${t._2}"))
     }
   }
 
@@ -63,7 +70,7 @@ class FileFixturesSpec extends AnyFunSuite with SparkTest {
       Seq(Seq((0.0, 0.0), (0.0, 1.0), (1.0, 1.0), (1.0, 0.0), (0.0, 0.0))))
     FixtureWriters.writeDbf(s"$dir/i.dbf",
       Seq(("k", 'I', 4)), Seq(Seq("-2147483648")))
-    val df = ShapefileReader.read(spark, s"$dir/i.shp")
+    val df = SourceDispatch.read(spark, s"$dir/i.shp")
     assert(df.schema("k").dataType === LongType)
     assert(df.collect().head.getLong(0) === Int.MinValue.toLong)
   }
@@ -75,6 +82,17 @@ class FileFixturesSpec extends AnyFunSuite with SparkTest {
     FixtureWriters.writeDbf(s"$dir/b.dbf",
       Seq(("n", 'N', 9)), Seq(Seq("notanum")))
     assertThrows[GraftError.MixedDataTypes](
-      ShapefileReader.read(spark, s"$dir/b.shp"))
+      Main.run(spark, s"$dir/b.shp", s"$dir/t"))
+  }
+
+  test("GeoJSON property whose type conflicts with the first feature's surfaces MixedDataTypes") {
+    val dir = Files.createTempDirectory("graft-gj-bad").toString
+    val point = """"geometry":{"type":"Point","coordinates":[1,2]}"""
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/b.geojson"),
+      s"""{"type":"FeatureCollection","features":[
+        {"type":"Feature","properties":{"a":1.5},$point},
+        {"type":"Feature","properties":{"a":"text"},$point}]}""")
+    assertThrows[GraftError.MixedDataTypes](
+      Main.run(spark, s"$dir/b.geojson", s"$dir/t"))
   }
 }

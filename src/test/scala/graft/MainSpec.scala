@@ -1,103 +1,109 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Paths}
-import graft.sources.SourceDispatch
+import java.nio.file.Files
+import graft.sources.{FileFixtures, SourceDispatch}
 import graft.table.TableLog
 
 /** End-to-end pipeline-driver coverage (O1): the reference CLI surface
-  * driven through [[Main.run]] on the reference's own example inputs, and
-  * `.pbf` through the uniform dispatch (S8 completion —
+  * driven through [[Main.run]] on the synthesized file fixtures
+  * ([[FileFixtures]]: 12 GeoJSON features, 10 shapefile polygons, 4 PBF
+  * way features), and `.pbf` through the uniform dispatch (S8 completion —
   * `/root/reference/src/format/common.rs:65-80` handles all three formats
-  * in one place; so does [[SourceDispatch.read]] now).
+  * in one place; so does [[SourceDispatch.read]]).
   */
 class MainSpec extends AnyFunSuite with SparkTest {
 
   private val tmp = Files.createTempDirectory("graft-main-e2e").toString
-  private val spain = "/root/reference/examples/geojson/spain.geojson"
-  private val andalucia = "/root/reference/examples/shapefile/andalucia.shp"
-  private val monaco = "/root/reference/examples/osmpbf/monaco-latest.osm.pbf"
+  private lazy val geojson = { val p = s"$tmp/fix.geojson"; FileFixtures.writeGeoJson(p); p }
+  private lazy val shapefile = FileFixtures.writeShapefile(tmp)
+  private lazy val pbf = { val p = s"$tmp/fix.osm.pbf"; FileFixtures.writePbf(p); p }
 
-  test("e2e: spain.geojson -> table, 19 reprojected rows, geom last") {
-    assume(Files.exists(Paths.get(spain)))
-    val table = s"$tmp/spain_3857"
-    val snap = Main.run(spark, spain, table, srid = 4326,
+  test("e2e: geojson fixture -> table, 12 reprojected rows, geom last") {
+    val table = s"$tmp/gj_3857"
+    val snap = Main.run(spark, geojson, table, srid = 4326,
       reproject = Some(3857), mode = "fail")
     assert(snap.srid === 3857)
     val df = TableLog.read(spark, table)
-    assert(df.count() === 19) // reference parity: 19 autonomous communities
+    assert(df.count() === 12)
     assert(df.columns.last === "geom")
     // reprojected: Mercator x range is meters, far outside [-180, 180]
     graft.ops.GraftFunctions.register(spark)
-    df.createOrReplaceTempView("spain")
+    df.createOrReplaceTempView("gj_3857")
     val maxAbsX = spark.sql(
-      "SELECT max(abs(st_x(st_centroid(geom)))) FROM spain").head().getDouble(0)
+      "SELECT max(abs(st_x(st_centroid(geom)))) FROM gj_3857").head().getDouble(0)
     assert(maxAbsX > 100000.0)
   }
 
   test("e2e: fail mode on existing table throws TableExists (K5)") {
-    assume(Files.exists(Paths.get(spain)))
-    val table = s"$tmp/spain_fail"
-    Main.run(spark, spain, table, mode = "fail")
+    val table = s"$tmp/gj_fail"
+    Main.run(spark, geojson, table, mode = "fail")
     assertThrows[GraftError.TableExists](
-      Main.run(spark, spain, table, mode = "fail"))
+      Main.run(spark, geojson, table, mode = "fail"))
   }
 
   test("e2e: overwrite mode replaces, append adds (K6)") {
-    assume(Files.exists(Paths.get(spain)))
-    val table = s"$tmp/spain_ow"
-    Main.run(spark, spain, table, mode = "fail")
-    Main.run(spark, spain, table, mode = "overwrite")
-    assert(TableLog.read(spark, table).count() === 19)
-    Main.run(spark, spain, table, mode = "append")
-    assert(TableLog.read(spark, table).count() === 38)
+    val table = s"$tmp/gj_ow"
+    Main.run(spark, geojson, table, mode = "fail")
+    Main.run(spark, geojson, table, mode = "overwrite")
+    assert(TableLog.read(spark, table).count() === 12)
+    Main.run(spark, geojson, table, mode = "append")
+    assert(TableLog.read(spark, table).count() === 24)
   }
 
   test("dispatch: .pbf through SourceDispatch.read (S8), fixed tags+geom schema") {
-    assume(Files.exists(Paths.get(monaco)))
-    val df = SourceDispatch.read(spark, monaco)
+    val df = SourceDispatch.read(spark, pbf)
     assert(df.columns.toSeq === Seq("tags", "geom"))
-    assert(df.count() === 4944) // way features, reference parity (OsmPbfSpec)
+    assert(df.count() === 4) // way features of the fixture
   }
 
   test("dispatch: validateArgs runs for pbf too (bad srid rejected)") {
-    assume(Files.exists(Paths.get(monaco)))
     assertThrows[GraftError.FailedValidation](
-      SourceDispatch.read(spark, monaco, srid = 9999))
+      SourceDispatch.read(spark, pbf, srid = 9999))
   }
 
   test("e2e: --schema creates the namespace and qualifies the table (K4)") {
-    assume(Files.exists(Paths.get(spain)))
     val ns = s"$tmp/myschema"
-    Main.run(spark, spain, "spain_t", schema = Some(ns))
+    Main.run(spark, geojson, "gj_t", schema = Some(ns))
     assert(TableLog.namespaceExists(ns))
-    assert(TableLog.read(spark, s"$ns/spain_t").count() === 19)
+    assert(TableLog.read(spark, s"$ns/gj_t").count() === 12)
   }
 
   test("readDir: many geojson files union on executors; mixed formats rejected") {
     val d = Files.createTempDirectory("graft-readdir")
-    graft.sources.FileFixtures.writeGeoJson(s"$d/a.geojson")
-    graft.sources.FileFixtures.writeGeoJson(s"$d/b.geojson")
+    FileFixtures.writeGeoJson(s"$d/a.geojson")
+    FileFixtures.writeGeoJson(s"$d/b.geojson")
     val df = SourceDispatch.readDir(spark, d.toString)
     assert(df.count() === 24) // 12 features x 2 files
-    graft.sources.FileFixtures.writeShapefile(d.toString) // adds fix.shp
+    FileFixtures.writeShapefile(d.toString) // adds fix.shp
     assertThrows[GraftError.FailedValidation](SourceDispatch.readDir(spark, d.toString))
   }
 
   test("readDir: pbf files, per-blob parallel inside each file") {
     val d = Files.createTempDirectory("graft-readdir-pbf")
-    graft.sources.FileFixtures.writePbf(s"$d/a.osm.pbf")
-    graft.sources.FileFixtures.writePbf(s"$d/b.osm.pbf")
+    FileFixtures.writePbf(s"$d/a.osm.pbf")
+    FileFixtures.writePbf(s"$d/b.osm.pbf")
     val df = SourceDispatch.readDir(spark, d.toString)
     assert(df.columns.toSeq === Seq("tags", "geom"))
     assert(df.count() === 8) // 4 ways x 2 files
   }
 
+  test("readDir: extensions match in any letter case") {
+    val d = Files.createTempDirectory("graft-readdir-case")
+    FileFixtures.writeGeoJson(s"$d/A.GEOJSON")
+    assert(SourceDispatch.readDir(spark, d.toString).count() === 12)
+    val s = Files.createTempDirectory("graft-readdir-case-shp")
+    val shp = FileFixtures.writeShapefile(s.toString)
+    for (ext <- Seq("shp", "shx", "dbf"))
+      Files.move(java.nio.file.Paths.get(shp.dropRight(3) + ext),
+        s.resolve("FIX." + ext.toUpperCase))
+    assert(SourceDispatch.readDir(spark, s.toString).count() === 10)
+  }
+
   test("e2e: shapefile through Main.run") {
-    assume(Files.exists(Paths.get(andalucia)))
-    val table = s"$tmp/andalucia"
-    val snap = Main.run(spark, andalucia, table, mode = "fail")
+    val table = s"$tmp/shp"
+    val snap = Main.run(spark, shapefile, table, mode = "fail")
     assert(snap.srid === 4326)
-    assert(TableLog.read(spark, table).count() === 36)
+    assert(TableLog.read(spark, table).count() === 10)
   }
 }

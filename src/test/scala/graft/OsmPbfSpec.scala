@@ -11,6 +11,8 @@ import java.nio.file.{Files, Paths}
 class OsmPbfSpec extends AnyFunSuite with SparkTest {
 
   private val monaco = "/root/reference/examples/osmpbf/monaco-latest.osm.pbf"
+  private def scan(element: String) =
+    spark.read.format("osmpbf").option("element", element).load(monaco)
 
   test("blob index walks the whole file") {
     assume(Files.exists(Paths.get(monaco)))
@@ -22,7 +24,7 @@ class OsmPbfSpec extends AnyFunSuite with SparkTest {
 
   test("node pass parity: 30,798 nodes (osmpbf.rs:155-159)") {
     assume(Files.exists(Paths.get(monaco)))
-    val nodes = OsmPbfReader.nodes(spark, monaco)
+    val nodes = scan("nodes")
     assert(nodes.count() === 30798L)
     // Monaco bbox sanity: lon ~7.4, lat ~43.7
     val r = nodes.selectExpr("min(lon)", "max(lon)", "min(lat)", "max(lat)").collect()(0)
@@ -49,10 +51,9 @@ class OsmPbfSpec extends AnyFunSuite with SparkTest {
 
   test("relation assembly on monaco: relations parse and some multipolygons assemble") {
     assume(Files.exists(Paths.get(monaco)))
-    val rels = OsmPbfReader.relations(spark, monaco)
+    val rels = scan("relations")
     assert(rels.count() > 0)
-    val mp = graft.ops.OsmRelationAssembly.assemble(spark, rels,
-      OsmPbfReader.ways(spark, monaco), OsmPbfReader.nodes(spark, monaco))
+    val mp = graft.ops.OsmRelationAssembly.assemble(spark, rels, scan("ways"), scan("nodes"))
     val rows = mp.collect()
     assert(rows.nonEmpty)
     // every emitted relation has >= 1 outer ring and valid WKB
@@ -66,7 +67,7 @@ class OsmPbfSpec extends AnyFunSuite with SparkTest {
   test("tags are k=v strings from the string table") {
     assume(Files.exists(Paths.get(monaco)))
     import spark.implicits._
-    val tagged = OsmPbfReader.nodes(spark, monaco)
+    val tagged = scan("nodes")
       .select(org.apache.spark.sql.functions.explode($"tags").as("t"))
       .limit(50).as[String].collect()
     assert(tagged.nonEmpty)

@@ -7,6 +7,7 @@ import graft.geom.ShapeDecode._
 import graft.sources.{GeoJsonReader, ShapefileReader, SourceDispatch}
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 class SourcesSpec extends AnyFunSuite with SparkTest {
 
@@ -62,7 +63,7 @@ class SourcesSpec extends AnyFunSuite with SparkTest {
 
   test("shapefile scan: 36 rows, x/y FLOAT8 schema, polygon WKB (shapefile.rs:180-208)") {
     val path = writeAndalucia()
-    val df = ShapefileReader.read(spark, path)
+    val df = SourceDispatch.read(spark, path)
     assert(df.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
       Seq(("x", DoubleType), ("y", DoubleType), ("geom", BinaryType)))
     val rows = df.collect()
@@ -73,18 +74,17 @@ class SourcesSpec extends AnyFunSuite with SparkTest {
 
   test("shapefile reproject 4326->3857 transforms coordinates") {
     val path = writeAndalucia()
-    val df = ShapefileReader.read(spark, path, 4326, Some(3857))
+    val df = SourceDispatch.read(spark, path, 4326, Some(3857))
     val g = WkbCodec.read(df.collect().head.getAs[Array[Byte]]("geom"))
     assert(math.abs(g.getCoordinates.head.x) > 100000) // meters now
   }
 
   test("readDir distributes files and unions rows") {
-    val path = writeAndalucia()
-    Files.copy(Paths.get(path), Paths.get(s"$tmp/andalucia2.shp"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    Files.copy(Paths.get(s"$tmp/andalucia.dbf"), Paths.get(s"$tmp/andalucia2.dbf"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    assert(ShapefileReader.readDir(spark, tmp).count() === 72)
+    writeAndalucia()
+    val dir = Files.createTempDirectory("graft-shp-dir")
+    for (name <- Seq("andalucia", "andalucia2"); ext <- Seq("shp", "shx", "dbf"))
+      Files.copy(Paths.get(s"$tmp/andalucia.$ext"), dir.resolve(s"$name.$ext"))
+    assert(SourceDispatch.readDir(spark, dir.toString).count() === 72)
   }
 
   // ---- spain-like geojson fixture (FIXTURES.md §2) ----
@@ -103,7 +103,7 @@ class SourcesSpec extends AnyFunSuite with SparkTest {
   test("geojson scan: 19 rows, 3 TEXT columns inferred from FIRST feature (geojson.rs:172-201)") {
     val p = s"$tmp/spain.geojson"
     Files.write(Paths.get(p), spainJson().getBytes("UTF-8"))
-    val df = GeoJsonReader.read(spark, p)
+    val df = SourceDispatch.read(spark, p)
     assert(df.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
       Seq(("id", StringType), ("name", StringType), ("source", StringType), ("geom", BinaryType)))
     assert(df.count() === 19)
@@ -117,7 +117,7 @@ class SourcesSpec extends AnyFunSuite with SparkTest {
        "geometry":{"type":"Point","coordinates":[1,2]}}]}"""
     val p = s"$tmp/types.geojson"
     Files.write(Paths.get(p), j.getBytes("UTF-8"))
-    val df = GeoJsonReader.read(spark, p)
+    val df = SourceDispatch.read(spark, p)
     assert(df.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
       Seq(("a", DoubleType), ("b", StringType), ("c", BooleanType), ("geom", BinaryType)))
   }
@@ -125,7 +125,7 @@ class SourcesSpec extends AnyFunSuite with SparkTest {
   test("geojson: non-FeatureCollection -> empty result, no throw (geojson.rs:119-124)") {
     val p = s"$tmp/notfc.geojson"
     Files.write(Paths.get(p), """{"type":"Point","coordinates":[1,2]}""".getBytes("UTF-8"))
-    assert(GeoJsonReader.read(spark, p).count() === 0)
+    assert(SourceDispatch.read(spark, p).count() === 0)
   }
 
   test("geojson streaming parse == DOM parse (rows, schema), incl. reproject") {
@@ -169,9 +169,9 @@ class SourcesSpec extends AnyFunSuite with SparkTest {
   test("geojson reproject is per-coordinate Mercator (P3) and WKB bytes are stable") {
     val p = s"$tmp/spain.geojson"
     Files.write(Paths.get(p), spainJson().getBytes("UTF-8"))
-    val a = GeoJsonReader.read(spark, p, 4326, Some(3857)).collect()
+    val a = SourceDispatch.read(spark, p, 4326, Some(3857)).collect()
       .map(_.getAs[Array[Byte]]("geom").toSeq)
-    val b = GeoJsonReader.read(spark, p, 4326, Some(3857)).collect()
+    val b = SourceDispatch.read(spark, p, 4326, Some(3857)).collect()
       .map(_.getAs[Array[Byte]]("geom").toSeq)
     assert(a.toSeq === b.toSeq)
     val g = WkbCodec.read(a.head.toArray)
@@ -207,7 +207,7 @@ class SourcesSpec extends AnyFunSuite with SparkTest {
   test("reference spain.geojson parity: 19 rows, 3 TEXT columns") {
     val ref = "/root/reference/examples/geojson/spain.geojson"
     assume(Files.exists(Paths.get(ref)))
-    val df = GeoJsonReader.read(spark, ref)
+    val df = SourceDispatch.read(spark, ref)
     assert(df.count() === 19)
     assert(df.schema.fields.map(_.name).toSeq === Seq("id", "name", "source", "geom"))
     assert(df.schema.fields.dropRight(1).forall(_.dataType == StringType))
@@ -216,13 +216,18 @@ class SourcesSpec extends AnyFunSuite with SparkTest {
   test("reference andalucia.shp parity: 36 rows, x/y FLOAT8") {
     val ref = "/root/reference/examples/shapefile/andalucia.shp"
     assume(Files.exists(Paths.get(ref)))
-    val df = ShapefileReader.read(spark, ref)
+    val df = SourceDispatch.read(spark, ref)
     assert(df.count() === 36)
     assert(df.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
       Seq(("x", DoubleType), ("y", DoubleType), ("geom", BinaryType)))
   }
 
-  // ---- DataSource V2 shapefile (split scan) ----
+  // ---- DataSource V2 shapefile (split scan) vs the single-threaded codec ----
+  private def codec(shp: String, reproject: Option[Int] = None) = {
+    val schema = ShapefileReader.inferSchema(Files.readAllBytes(Paths.get(shp.dropRight(4) + ".dbf")))
+    spark.createDataFrame(ShapefileReader.parseFileRows(shp, schema, 4326, reproject).asJava, schema)
+  }
+
   private def rowsKey(df: org.apache.spark.sql.DataFrame): Set[String] = {
     import org.apache.spark.sql.functions._
     df.withColumn("geom_md5", md5(col("geom"))).drop("geom")
@@ -232,7 +237,7 @@ class SourcesSpec extends AnyFunSuite with SparkTest {
   test("DSv2 shapefile: tiny splits -> many partitions, identical rows to driver reader") {
     val dir = Files.createTempDirectory("graft-dsv2").toString
     val shp = graft.sources.FileFixtures.writeShapefile(dir)
-    val v1 = ShapefileReader.read(spark, shp)
+    val v1 = codec(shp)
     val v2 = spark.read.format("shapefile").option("splitBytes", "128").load(shp)
     assert(v2.schema === v1.schema)
     assert(v2.rdd.getNumPartitions > 1, "expected the 10-record file to split")
@@ -246,7 +251,7 @@ class SourcesSpec extends AnyFunSuite with SparkTest {
   test("DSv2 shapefile: reproject option matches driver reader reprojection") {
     val dir = Files.createTempDirectory("graft-dsv2r").toString
     val shp = graft.sources.FileFixtures.writeShapefile(dir)
-    val v1 = ShapefileReader.read(spark, shp, 4326, Some(3857))
+    val v1 = codec(shp, Some(3857))
     val v2 = spark.read.format("shapefile")
       .option("splitBytes", "128").option("reproject", "3857").load(shp)
     assert(rowsKey(v2) === rowsKey(v1))
@@ -258,7 +263,7 @@ class SourcesSpec extends AnyFunSuite with SparkTest {
     // a content-offset reader parses garbage on any externally-produced file
     val ref = "/root/reference/examples/shapefile/andalucia.shp"
     assume(Files.exists(Paths.get(ref)))
-    val v1 = ShapefileReader.read(spark, ref)
+    val v1 = codec(ref)
     val v2 = spark.read.format("shapefile").option("splitBytes", "65536").load(ref)
     assert(v2.rdd.getNumPartitions > 1, "expected the 12 MB file to split")
     assert(rowsKey(v2) === rowsKey(v1))

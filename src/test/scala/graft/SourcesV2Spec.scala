@@ -1,13 +1,15 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sources.{FileFixtures, GeoJsonReader, OsmPbfReader}
 
 /** The GeoJSON FeatureCollection and OSM PBF DataSource V2 scans: parity
-  * with the executor-RDD readers, partition planning, column pruning. */
+  * with the single-threaded codecs, partition planning, column pruning,
+  * path resolution. */
 class SourcesV2Spec extends AnyFunSuite with SparkTest {
 
   private val monaco = "/root/reference/examples/osmpbf/monaco-latest.osm.pbf"
@@ -18,9 +20,17 @@ class SourcesV2Spec extends AnyFunSuite with SparkTest {
     d.toString
   }
 
+  /** `GeoJsonReader.parseRowsStream` over one file, as a local DataFrame. */
+  private def codec(path: String) = {
+    def open() = Files.newInputStream(Paths.get(path))
+    val schema = GeoJsonReader.inferSchemaStream(() => open())
+    spark.createDataFrame(
+      GeoJsonReader.parseRowsStream(() => open(), schema, 4326, None).toSeq.asJava, schema)
+  }
+
   test("geojson DSV2: schema and rows match the streaming reader exactly") {
     val v2 = spark.read.format("geojson").load(s"$gjDir/fix.geojson")
-    val v1 = GeoJsonReader.read(spark, s"$gjDir/fix.geojson")
+    val v1 = codec(s"$gjDir/fix.geojson")
     assert(v2.schema === v1.schema)
     val key = (df: org.apache.spark.sql.DataFrame) =>
       df.selectExpr("name", "val", "flag", "md5(geom) AS g")
@@ -35,7 +45,7 @@ class SourcesV2Spec extends AnyFunSuite with SparkTest {
     val df = spark.read.format("geojson").load(d.toString)
     assert(df.rdd.getNumPartitions === 2)
     assert(df.count() ===
-      GeoJsonReader.read(spark, s"$d/a.geojson").count() * 2)
+      codec(s"$d/a.geojson").count() * 2)
   }
 
   test("geojson DSV2: pruning `geom` reaches the scan (decode skipped)") {
@@ -45,21 +55,44 @@ class SourcesV2Spec extends AnyFunSuite with SparkTest {
     assert(pruned.count() > 0)
   }
 
-  test("osmpbf DSV2: nodes/ways/relations match the RDD readers on monaco") {
-    assume(Files.exists(Paths.get(monaco)))
-    def cnt(el: String) =
-      spark.read.format("osmpbf").option("element", el).load(monaco).count()
-    assert(cnt("nodes") === OsmPbfReader.nodes(spark, monaco).count())
-    assert(cnt("ways") === OsmPbfReader.ways(spark, monaco).count())
-    assert(cnt("relations") === OsmPbfReader.relations(spark, monaco).count())
-    // value parity on a sample: way ids + first tag
-    val v2 = spark.read.format("osmpbf").option("element", "ways").load(monaco)
-      .select(col("way_id"), try_element_at(col("tags"), lit(1)).as("t"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).take(100)
-    val v1 = OsmPbfReader.ways(spark, monaco)
-      .select(col("way_id"), try_element_at(col("tags"), lit(1)).as("t"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).take(100)
-    assert(v2 === v1)
+  private lazy val pbfDir = {
+    val d = Files.createTempDirectory("graft-pbf-v2")
+    FileFixtures.writePbf(s"$d/fix.osm.pbf")
+    FileFixtures.writePbfRel(s"$d/rel.osm.pbf")
+    d.toString
+  }
+
+  /** `parsePrimitiveBlockFull` over every OSMData blob of one file. */
+  private def codecBlocks(path: String) =
+    OsmPbfReader.indexBlobs(path).filter(_.blobType == "OSMData")
+      .map(b => OsmPbfReader.parsePrimitiveBlockFull(OsmPbfReader.blobData(path, b)))
+
+  test("osmpbf DSV2: nodes/ways/relations match the codec on the PBF fixtures") {
+    for (path <- Seq(s"$pbfDir/fix.osm.pbf", s"$pbfDir/rel.osm.pbf")) {
+      def scan(el: String) = spark.read.format("osmpbf").option("element", el).load(path)
+      val blocks = codecBlocks(path)
+      val (nodes, ways, rels) =
+        (blocks.flatMap(_._1), blocks.flatMap(_._2), blocks.flatMap(_._3))
+      assert(scan("nodes").count() === nodes.size)
+      assert(scan("ways").count() === ways.size)
+      assert(scan("relations").count() === rels.size)
+      assert(nodes.nonEmpty && ways.nonEmpty)
+      // value parity: every column of every element
+      assert(scan("nodes").collect().map(r => (r.getLong(0), r.getDouble(1),
+        r.getDouble(2), r.getSeq[String](3))).sortBy(_._1).toSeq ===
+        nodes.map(n => (n.id, n.lon, n.lat, n.tags.toSeq)).sortBy(_._1))
+      assert(scan("ways").collect().map(r => (r.getLong(0), r.getSeq[Long](1),
+        r.getSeq[String](2))).sortBy(_._1).toSeq ===
+        ways.map(w => (w.id, w.refs.toSeq, w.tags.toSeq)).sortBy(_._1))
+      assert(scan("relations").collect().map(r => (r.getLong(0), r.getSeq[Long](1),
+        r.getSeq[Int](2), r.getSeq[String](3), r.getSeq[String](4))).sortBy(_._1).toSeq ===
+        rels.map(x => (x.id, x.memberIds.toSeq, x.memberTypes.toSeq, x.roles.toSeq,
+          x.tags.toSeq)).sortBy(_._1))
+      // way ids + first tag, as the element scan projects them
+      val v2 = scan("ways").select(col("way_id"), try_element_at(col("tags"), lit(1)).as("t"))
+        .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+      assert(v2 === ways.map(w => (w.id, w.tags.headOption.orNull)).sortBy(_._1))
+    }
   }
 
   test("osmpbf DSV2: blob-range splits give multiple partitions; splitBlobs=1 is finest") {
@@ -74,12 +107,32 @@ class SourcesV2Spec extends AnyFunSuite with SparkTest {
   }
 
   test("osmpbf DSV2: pruning to way_id skips refs/tags materialization") {
-    assume(Files.exists(Paths.get(monaco)))
+    val path = s"$pbfDir/fix.osm.pbf"
     val pruned = spark.read.format("osmpbf").option("element", "ways")
-      .load(monaco).select("way_id")
+      .load(path).select("way_id")
     val planned = pruned.queryExecution.executedPlan.toString()
     assert(planned.contains("readSchema=struct<way_id:bigint>"), planned)
-    assert(pruned.count() === OsmPbfReader.ways(spark, monaco).count())
+    assert(pruned.count() === codecBlocks(path).map(_._2.size).sum)
+  }
+
+  test("DSV2 sources: a directory without matching files fails validation") {
+    val d = Files.createTempDirectory("graft-v2-empty").toString
+    Files.writeString(Paths.get(s"$d/notes.txt"), "no inputs here")
+    for (fmt <- Seq("geojson", "geojsonl", "shapefile", "osmpbf")) {
+      val e = intercept[GraftError.FailedValidation] {
+        spark.read.format(fmt).load(d).count()
+      }
+      assert(e.getMessage.contains("files under"), fmt)
+    }
+  }
+
+  test("DSV2 sources: directory extensions match in any letter case") {
+    val d = Files.createTempDirectory("graft-v2-case")
+    FileFixtures.writeGeoJson(s"$d/A.GEOJSON")
+    FileFixtures.writePbf(s"$d/B.OSM.PBF")
+    assert(spark.read.format("geojson").load(d.toString).count() === 12)
+    assert(spark.read.format("osmpbf").option("element", "ways")
+      .load(d.toString).count() === FileFixtures.pbfWays.size)
   }
 
   test("osmpbf DSV2: bad element option fails validation") {
