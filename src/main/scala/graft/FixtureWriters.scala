@@ -28,24 +28,6 @@ object FixtureWriters {
     writeShp(path, 5, records)
   }
 
-  /** Write polyline shapefile with explicit multi-part support. */
-  def writePolylineShp(path: String, lines: Seq[Seq[Seq[(Double, Double)]]]): Unit = {
-    val records = lines.map { parts =>
-      val n = parts.map(_.length).sum
-      val contentBytes = 4 + 32 + 4 + 4 + 4 * parts.length + 16 * n
-      val c = ByteBuffer.allocate(contentBytes).order(ByteOrder.LITTLE_ENDIAN)
-      c.putInt(3)
-      val all = parts.flatten
-      val xs = all.map(_._1); val ys = all.map(_._2)
-      c.putDouble(xs.min).putDouble(ys.min).putDouble(xs.max).putDouble(ys.max)
-      c.putInt(parts.length).putInt(n)
-      parts.scanLeft(0)(_ + _.length).dropRight(1).foreach(c.putInt)
-      all.foreach { case (x, y) => c.putDouble(x).putDouble(y) }
-      c.array()
-    }
-    writeShp(path, 3, records)
-  }
-
   private def writeShp(path: String, shapeType: Int, records: Seq[Array[Byte]]): Unit = {
     val totalBytes = 100 + records.map(8 + _.length).sum
     val b = ByteBuffer.allocate(totalBytes)

@@ -96,7 +96,4 @@ object Pipeline {
       col("lang"))
     EntityExtract.entities(pages)
   }
-
-  def runAmplified(spark: SparkSession, sfDir: String, rep: Int): DataFrame =
-    enrich(spark, sfDir, entitiesAmplified(spark, sfDir, rep))
 }

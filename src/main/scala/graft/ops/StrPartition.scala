@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.{GraftShim => ExpressionUtils}
@@ -150,12 +150,6 @@ object StrPartition {
       .sample(withReplacement = false, fraction, seed).limit(maxSample).collect()
     require(rows.nonEmpty, "empty sample — raise fraction")
     fit(rows.map(_.getDouble(0)), rows.map(_.getDouble(1)), targetPartitions)
-  }
-
-  def partitionIdCol(spark: SparkSession, bounds: StrBounds): (Column, Column) => Column = {
-    val bc = spark.sparkContext.broadcast(bounds)
-    (lon, lat) => ExpressionUtils.column(StrPartitionExpr(
-      ExpressionUtils.expression(lon), ExpressionUtils.expression(lat), bc))
   }
 
   /** Point-in-polygon join over the STR partitioning: points tag their

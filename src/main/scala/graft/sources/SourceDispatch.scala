@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.GraftError
+import graft.sources.v2.ScanOptions
 
 /** File-type dispatch (reference S8,
   * `src/format/common.rs:65-80`): extension -> DSV2 source
@@ -28,10 +29,8 @@ object SourceDispatch {
   def validateArgs(input: String, srid: Int, reproject: Option[Int]): Unit = {
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(input)))
       throw GraftError.FailedValidation(s"input does not exist: $input")
-    val ok = Set(4326, 3857)
-    if (!ok(srid)) throw GraftError.FailedValidation(s"srid must be 4326 or 3857, got $srid")
-    reproject.foreach(r =>
-      if (!ok(r)) throw GraftError.FailedValidation(s"reproject must be 4326 or 3857, got $r"))
+    ScanOptions.checkSrid("srid", srid)
+    reproject.foreach(ScanOptions.checkSrid("reproject", _))
   }
 
   def read(spark: SparkSession, path: String,

@@ -1,14 +1,11 @@
 package graft.sources.v2
 
+import java.io.InputStream
 import java.nio.file.{Files, Paths}
-import java.util
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -45,162 +42,96 @@ import graft.sources.{FeatureRows, GeoJsonReader}
   * them), `srid` (default 4326), `reproject` (4326|3857), `splitBytes`
   * (default 33554432).
   */
-class GeoJsonlSource extends TableProvider with DataSourceRegister {
+class GeoJsonlSource extends GeoFileSource[JlSplit] {
   override def shortName(): String = "geojsonl"
-  override def supportsExternalMetadata(): Boolean = true
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val paths = GeoJsonlSource.resolvePaths(options)
-    GeoJsonlSource.inferFromFirstLine(paths.head)
-  }
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new GeoJsonlTable(schema)
-}
-
-object GeoJsonlSource {
-  private[v2] val mapper = new ObjectMapper()
-
-  def resolvePaths(options: CaseInsensitiveStringMap): Seq[String] =
-    SourcePaths.resolve(options, "geojsonl", ".geojsonl", ".ndjson")
+  override protected def extensions: Seq[String] = Seq(".geojsonl", ".ndjson")
 
   /** Schema from the FIRST feature line only (the ndjson analog of the
     * reference's first-feature inference, geojson.rs:29-33): reads one
     * line of I/O no matter the file size. */
-  def inferFromFirstLine(path: String): StructType = {
+  override protected def inferSchema(files: Seq[String],
+                                     options: CaseInsensitiveStringMap): StructType = {
     val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-      Files.newInputStream(Paths.get(path)), "UTF-8"))
+      Files.newInputStream(Paths.get(files.head)), "UTF-8"))
     try {
       var line = in.readLine()
       while (line != null && line.trim.isEmpty) line = in.readLine()
-      val feat = Option(line).map(mapper.readTree(_): JsonNode)
+      val feat = Option(line).map(GeoJsonlSource.mapper.readTree(_): JsonNode)
         .filter(_.path("type").asText() == "Feature")
       if (line != null && feat.isEmpty)
         System.err.println("[geojsonl] first line is not a Feature; empty schema")
       GeoJsonReader.schemaFromFirstFeature(feat)
     } finally in.close()
   }
-}
 
-class GeoJsonlTable(tableSchema: StructType) extends Table with SupportsRead {
-  override def name(): String = "geojsonl"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GeoJsonlScanBuilder(tableSchema, options)
-}
-
-class GeoJsonlScanBuilder(fullSchema: StructType, options: CaseInsensitiveStringMap)
-  extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = fullSchema
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def build(): Scan = {
-    val srid = Option(options.get("srid")).map(_.toInt).getOrElse(4326)
-    val reproject = Option(options.get("reproject")).map(_.toInt)
-    val splitBytes = Option(options.get("splitBytes")).map(_.toLong).getOrElse(32L * 1024 * 1024)
-    new GeoJsonlScan(GeoJsonlSource.resolvePaths(options), required, srid, reproject, splitBytes)
+  override protected[v2] def planSplits(files: Seq[String], options: CaseInsensitiveStringMap,
+                                        scan: ScanOptions): Seq[JlSplit] = files.flatMap { f =>
+    val len = Files.size(Paths.get(f))
+    val step = scan.splitBytes
+    // byte-range cuts only — no I/O at planning time, any number of files
+    val n = math.max(1L, (len + step - 1) / step)
+    (0L until n).map(i => JlSplit(f, i * step, math.min(len, (i + 1) * step)))
   }
+
+  override protected def readSplit(split: JlSplit, required: StructType, scan: ScanOptions,
+                                   open: String => InputStream): Iterator[InternalRow] = {
+    val in = open(split.path)
+    // pos = offset of the next unread byte; a line is OURS iff its first
+    // byte is in [start, end) (the straddling line is read past `end`; the
+    // next reader discards its leading partial line). A reader with
+    // start > 0 must know whether a line begins EXACTLY at `start` — so it
+    // peeks at byte start-1 (the Hadoop LineRecordReader seek(start-1)
+    // trick): if that byte is '\n', the line at `start` is ours and nothing
+    // is skipped; otherwise `start` falls mid-line and we skip through the
+    // first newline. Without the peek, a line boundary landing exactly on a
+    // split boundary loses the line: this reader skips it, and the previous
+    // reader stops strictly before it (pos >= end).
+    var pos: Long = {
+      if (split.start == 0) 0L
+      else {
+        var skipped = 0L
+        val target = split.start - 1
+        while (skipped < target) skipped += in.skip(target - skipped)
+        var p = target
+        var b = in.read(); p += 1 // the peek byte at start-1
+        if (b != '\n' && b != -1) {
+          b = in.read()
+          while (b != -1 && b != '\n') { p += 1; b = in.read() }
+          if (b != -1) p += 1
+        }
+        p
+      }
+    }
+    val lineBuf = new java.io.ByteArrayOutputStream(1 << 12)
+
+    /* The next line (bytes to '\n' or EOF, exclusive); null at range end /
+     * EOF. Advances `pos` over the line AND its terminator. */
+    def nextLine(): String = {
+      if (pos >= split.end) return null
+      lineBuf.reset()
+      var b = in.read()
+      if (b == -1) return null
+      while (b != -1 && b != '\n') { lineBuf.write(b); b = in.read() }
+      pos += lineBuf.size() + (if (b == -1) 0 else 1)
+      new String(lineBuf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
+    }
+
+    Iterator.continually(nextLine()).takeWhile(_ != null).map(_.trim).filter(_.nonEmpty)
+      .flatMap { t =>
+        val feat = GeoJsonlSource.mapper.readTree(t)
+        if (feat.path("type").asText() == "Feature")
+          Some(FeatureRows.toInternalRow(feat, required, scan.srid, scan.reproject))
+        else {
+          System.err.println("[geojsonl] line is not a Feature; skipped")
+          None
+        }
+      }
+  }
+}
+
+private object GeoJsonlSource {
+  val mapper = new ObjectMapper()
 }
 
 /** One partition = the byte range [start, end) of one file. */
 final case class JlSplit(path: String, start: Long, end: Long) extends InputPartition
-
-class GeoJsonlScan(paths: Seq[String], required: StructType,
-                   srid: Int, reproject: Option[Int], splitBytes: Long)
-  extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"geojsonl ${paths.mkString(",")} readSchema=${required.simpleString}"
-
-  override def planInputPartitions(): Array[InputPartition] = paths.flatMap { f =>
-    val len = Files.size(Paths.get(f))
-    // byte-range cuts only — no I/O at planning time, any number of files
-    val n = math.max(1L, (len + splitBytes - 1) / splitBytes)
-    (0L until n).map(i => JlSplit(f, i * splitBytes, math.min(len, (i + 1) * splitBytes)))
-  }.toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    GeoJsonlReaderFactory(required, srid, reproject)
-}
-
-final case class GeoJsonlReaderFactory(required: StructType, srid: Int, reproject: Option[Int])
-  extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new JlPartitionReader(partition.asInstanceOf[JlSplit], required, srid, reproject)
-}
-
-class JlPartitionReader(split: JlSplit, required: StructType,
-                        srid: Int, reproject: Option[Int])
-  extends PartitionReader[InternalRow] {
-
-  private val in = new java.io.BufferedInputStream(
-    Files.newInputStream(Paths.get(split.path)), 1 << 20)
-  // pos = offset of the next unread byte; a line is OURS iff its first
-  // byte is in [start, end) (the straddling line is read past `end`; the
-  // next reader discards its leading partial line). A reader with
-  // start > 0 must know whether a line begins EXACTLY at `start` — so it
-  // peeks at byte start-1 (the Hadoop LineRecordReader seek(start-1)
-  // trick): if that byte is '\n', the line at `start` is ours and nothing
-  // is skipped; otherwise `start` falls mid-line and we skip through the
-  // first newline. Without the peek, a line boundary landing exactly on a
-  // split boundary loses the line: this reader skips it, and the previous
-  // reader stops strictly before it (pos >= end).
-  private var pos: Long = {
-    if (split.start == 0) 0L
-    else {
-      var skipped = 0L
-      val target = split.start - 1
-      while (skipped < target) skipped += in.skip(target - skipped)
-      var p = target
-      var b = in.read(); p += 1 // the peek byte at start-1
-      if (b != '\n' && b != -1) {
-        b = in.read()
-        while (b != -1 && b != '\n') { p += 1; b = in.read() }
-        if (b != -1) p += 1
-      }
-      p
-    }
-  }
-
-  private var row: InternalRow = _
-  private val lineBuf = new java.io.ByteArrayOutputStream(1 << 12)
-
-  /** Reads the next line (bytes to '\n' or EOF, exclusive); null at range
-    * end / EOF. Advances `pos` over the line AND its terminator. */
-  private def nextLine(): String = {
-    if (pos >= split.end) return null
-    lineBuf.reset()
-    var b = in.read()
-    if (b == -1) return null
-    while (b != -1 && b != '\n') { lineBuf.write(b); b = in.read() }
-    pos += lineBuf.size() + (if (b == -1) 0 else 1)
-    new String(lineBuf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-  }
-
-  override def next(): Boolean = {
-    var line = nextLine()
-    while (line != null) {
-      val t = line.trim
-      if (t.nonEmpty) {
-        val feat = GeoJsonlSource.mapper.readTree(t)
-        if (feat.path("type").asText() != "Feature") {
-          System.err.println("[geojsonl] line is not a Feature; skipped")
-        } else {
-          row = toRow(feat)
-          return true
-        }
-      }
-      line = nextLine()
-    }
-    false
-  }
-
-  private def toRow(feat: JsonNode): InternalRow =
-    FeatureRows.toInternalRow(feat, required, srid, reproject)
-
-  override def get(): InternalRow = row
-  override def close(): Unit = in.close()
-}

@@ -1,16 +1,11 @@
 package graft.sources.v2
 
-import java.util
-
-import scala.jdk.CollectionConverters._
+import java.io.InputStream
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -34,105 +29,56 @@ import graft.sources.OsmPbfReader
   * column pruning (a pruned `tags`/`refs` column is never materialized
   * into rows) and multi-file directories.
   */
-class OsmPbfSource extends TableProvider with DataSourceRegister {
+class OsmPbfSource extends GeoFileSource[PbfSplit] {
   override def shortName(): String = "osmpbf"
-  override def supportsExternalMetadata(): Boolean = true
+  override protected def extensions: Seq[String] = Seq(".pbf")
+  override protected def label(options: CaseInsensitiveStringMap): String =
+    s"osmpbf(${OsmPbfSource.element(options)})"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    OsmPbfSource.schemaFor(OsmPbfSource.element(options))
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new OsmPbfTable(schema, properties.asScala.getOrElse("element", "nodes"))
-}
-
-object OsmPbfSource {
-  def element(options: CaseInsensitiveStringMap): String =
-    Option(options.get("element")).getOrElse("nodes") match {
-      case e @ ("nodes" | "ways" | "relations") => e
-      case other => throw GraftError.FailedValidation(
-        s"osmpbf element must be nodes|ways|relations, got $other")
+  override protected def inferSchema(files: Seq[String],
+                                     options: CaseInsensitiveStringMap): StructType =
+    OsmPbfSource.element(options) match {
+      case "nodes" => StructType(Seq(
+        StructField("node_id", LongType), StructField("lon", DoubleType),
+        StructField("lat", DoubleType), StructField("tags", ArrayType(StringType))))
+      case "ways" => StructType(Seq(
+        StructField("way_id", LongType), StructField("refs", ArrayType(LongType)),
+        StructField("tags", ArrayType(StringType))))
+      case "relations" => StructType(Seq(
+        StructField("rel_id", LongType),
+        StructField("member_ids", ArrayType(LongType)),
+        StructField("member_types", ArrayType(IntegerType)),
+        StructField("member_roles", ArrayType(StringType)),
+        StructField("tags", ArrayType(StringType))))
     }
 
-  def schemaFor(element: String): StructType = element match {
-    case "nodes" => StructType(Seq(
-      StructField("node_id", LongType), StructField("lon", DoubleType),
-      StructField("lat", DoubleType), StructField("tags", ArrayType(StringType))))
-    case "ways" => StructType(Seq(
-      StructField("way_id", LongType), StructField("refs", ArrayType(LongType)),
-      StructField("tags", ArrayType(StringType))))
-    case "relations" => StructType(Seq(
-      StructField("rel_id", LongType),
-      StructField("member_ids", ArrayType(LongType)),
-      StructField("member_types", ArrayType(IntegerType)),
-      StructField("member_roles", ArrayType(StringType)),
-      StructField("tags", ArrayType(StringType))))
+  override protected[v2] def planSplits(files: Seq[String], options: CaseInsensitiveStringMap,
+                                        scan: ScanOptions): Seq[PbfSplit] = {
+    val element = OsmPbfSource.element(options)
+    files.flatMap { f =>
+      OsmPbfReader.indexBlobs(f).filter(_.blobType == "OSMData")
+        .grouped(scan.splitBlobs)
+        .map(g => PbfSplit(f, element, g.map(_.offset).toArray, g.map(_.length).toArray))
+    }
   }
-
-  def resolvePaths(options: CaseInsensitiveStringMap): Seq[String] =
-    SourcePaths.resolve(options, "osmpbf", ".pbf")
-}
-
-class OsmPbfTable(tableSchema: StructType, element: String)
-  extends Table with SupportsRead {
-  override def name(): String = s"osmpbf($element)"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new OsmPbfScanBuilder(tableSchema, options)
-}
-
-class OsmPbfScanBuilder(fullSchema: StructType, options: CaseInsensitiveStringMap)
-  extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = fullSchema
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def build(): Scan = new OsmPbfScan(
-    OsmPbfSource.resolvePaths(options), required,
-    OsmPbfSource.element(options),
-    Option(options.get("splitBlobs")).map(_.toInt).getOrElse(4))
-}
-
-/** One partition = `blobs.length` consecutive OSMData blobs of one file. */
-final case class PbfSplit(path: String, offsets: Array[Long], lengths: Array[Int])
-  extends InputPartition
-
-class OsmPbfScan(paths: Seq[String], required: StructType, element: String,
-                 splitBlobs: Int) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"osmpbf($element) ${paths.mkString(",")} readSchema=${required.simpleString}"
-
-  override def planInputPartitions(): Array[InputPartition] = paths.flatMap { f =>
-    OsmPbfReader.indexBlobs(f).filter(_.blobType == "OSMData")
-      .grouped(math.max(1, splitBlobs))
-      .map(g => PbfSplit(f, g.map(_.offset).toArray, g.map(_.length).toArray))
-  }.toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    OsmPbfReaderFactory(required, element)
-}
-
-final case class OsmPbfReaderFactory(required: StructType, element: String)
-  extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new PbfPartitionReader(partition.asInstanceOf[PbfSplit], required, element)
-}
-
-class PbfPartitionReader(split: PbfSplit, required: StructType, element: String)
-  extends PartitionReader[InternalRow] {
-
-  private def utf8Array(a: Array[String]): ArrayData =
-    ArrayData.toArrayData(a.map(UTF8String.fromString))
 
   // one blob inflated + parsed at a time: the working set is one
   // uncompressed PrimitiveBlock (<= 32 MB by spec), never the whole split
-  private val rows: Iterator[InternalRow] =
+  override protected def readSplit(split: PbfSplit, required: StructType, scan: ScanOptions,
+                                   open: String => InputStream): Iterator[InternalRow] = {
+    def utf8Array(a: Array[String]): ArrayData =
+      ArrayData.toArrayData(a.map(UTF8String.fromString))
+    /* A row with only the REQUIRED (pruned) columns materialized. */
+    def fill(value: String => Any): InternalRow = {
+      val values = new Array[Any](required.length)
+      var i = 0
+      required.fields.foreach { f => values(i) = value(f.name); i += 1 }
+      new GenericInternalRow(values)
+    }
     split.offsets.indices.iterator.flatMap { i =>
       val block = OsmPbfReader.blobData(split.path,
         OsmPbfReader.BlobRef(split.offsets(i), split.lengths(i), "OSMData"))
-      element match {
+      split.element match {
         case "nodes" =>
           OsmPbfReader.parsePrimitiveBlock(block)._1.iterator.map { n =>
             fill {
@@ -162,18 +108,19 @@ class PbfPartitionReader(split: PbfSplit, required: StructType, element: String)
           }
       }
     }
-
-  /** Builds a row with only the REQUIRED (pruned) columns materialized. */
-  private def fill(value: String => Any): InternalRow = {
-    val values = new Array[Any](required.length)
-    var i = 0
-    required.fields.foreach { f => values(i) = value(f.name); i += 1 }
-    new GenericInternalRow(values)
   }
-
-  private var row: InternalRow = _
-  override def next(): Boolean =
-    if (rows.hasNext) { row = rows.next(); true } else false
-  override def get(): InternalRow = row
-  override def close(): Unit = ()
 }
+
+private object OsmPbfSource {
+  def element(options: CaseInsensitiveStringMap): String =
+    Option(options.get("element")).getOrElse("nodes") match {
+      case e @ ("nodes" | "ways" | "relations") => e
+      case other => throw GraftError.FailedValidation(
+        s"osmpbf element must be nodes|ways|relations, got $other")
+    }
+}
+
+/** One partition = `offsets.length` consecutive OSMData blobs of one file,
+  * parsed as `element`. */
+final case class PbfSplit(path: String, element: String, offsets: Array[Long],
+                          lengths: Array[Int]) extends InputPartition

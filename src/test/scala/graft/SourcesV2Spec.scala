@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
@@ -9,7 +10,8 @@ import graft.sources.{FileFixtures, GeoJsonReader, OsmPbfReader}
 
 /** The GeoJSON FeatureCollection and OSM PBF DataSource V2 scans: parity
   * with the single-threaded codecs, partition planning, column pruning,
-  * path resolution. */
+  * path resolution; for all four file sources, scan-option checks,
+  * truncated shapefile parts and file handles closed at task end. */
 class SourcesV2Spec extends AnyFunSuite with SparkTest {
 
   private val monaco = "/root/reference/examples/osmpbf/monaco-latest.osm.pbf"
@@ -140,5 +142,68 @@ class SourcesV2Spec extends AnyFunSuite with SparkTest {
       spark.read.format("osmpbf").option("element", "bogus").load(monaco).count()
     }
     assert(e.getMessage.contains("nodes|ways|relations"))
+  }
+
+  /** One small file per source under a fresh directory. */
+  private def allSources(tag: String): (String, Seq[(String, String)]) = {
+    val d = Files.createTempDirectory(tag).toRealPath().toString
+    val point = """"geometry":{"type":"Point","coordinates":[1,2]}"""
+    FileFixtures.writeGeoJson(s"$d/fix.geojson")
+    Files.writeString(Paths.get(s"$d/fix.geojsonl"), (1 to 3).map(i =>
+      s"""{"type":"Feature","properties":{"a":$i},$point}\n""").mkString)
+    FileFixtures.writeShapefile(d)
+    FileFixtures.writePbf(s"$d/fix.osm.pbf")
+    (d, Seq("geojson" -> "fix.geojson", "geojsonl" -> "fix.geojsonl",
+      "shapefile" -> "fix.shp", "osmpbf" -> "fix.osm.pbf"))
+  }
+
+  test("DSV2 sources: bad scan options fail validation when the scan is built") {
+    val (d, files) = allSources("graft-v2-opts")
+    val cases = Seq(
+      ("geojsonl", "splitBytes", "-1"),
+      ("geojsonl", "splitBytes", "0"),
+      ("geojsonl", "splitBytes", "32MB"),
+      ("shapefile", "splitBytes", "0"),
+      ("osmpbf", "splitBlobs", "0"),
+      ("osmpbf", "splitBlobs", "4294967296"),
+      ("geojson", "reproject", "900913"),
+      ("shapefile", "srid", "2154"),
+      ("geojson", "srid", "x"))
+    for ((fmt, key, value) <- cases) {
+      val e = intercept[GraftError.FailedValidation] {
+        spark.read.format(fmt).option(key, value).load(s"$d/${files.toMap.apply(fmt)}").count()
+      }
+      assert(e.getMessage.contains(s"$key must be"), s"$fmt $key=$value")
+    }
+  }
+
+  test("truncated .shp or .dbf fails the load with GraftError.Format naming the file") {
+    for (ext <- Seq("shp", "dbf")) {
+      val d = Files.createTempDirectory(s"graft-shp-cut-$ext").toString
+      val shp = FileFixtures.writeShapefile(d)
+      val part = Paths.get(s"$d/fix.$ext")
+      val bytes = Files.readAllBytes(part)
+      Files.write(part, bytes.take(bytes.length - 3))
+      val e = intercept[GraftError.Format](Main.run(spark, shp, s"$d/t"))
+      assert(e.getMessage.contains(s"fix.$ext"), e.getMessage)
+    }
+  }
+
+  test("DSV2 sources close their files after limit(1) and after a full scan") {
+    val (d, files) = allSources("graft-v2-fds")
+    def openUnderDir(): List[String] = {
+      val fds = Files.list(Paths.get("/proc/self/fd"))
+      try fds.iterator().asScala
+        .flatMap(fd => Try(Files.readSymbolicLink(fd).toString).toOption)
+        .filter(_.startsWith(d)).toList
+      finally fds.close()
+    }
+    for ((fmt, file) <- files) {
+      val df = spark.read.format(fmt).load(s"$d/$file")
+      assert(df.limit(1).collect().length === 1, fmt)
+      assert(openUnderDir() === Nil, s"$fmt after limit(1)")
+      assert(df.count() > 0, fmt)
+      assert(openUnderDir() === Nil, s"$fmt after count()")
+    }
   }
 }
