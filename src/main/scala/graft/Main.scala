@@ -35,12 +35,13 @@ object Main {
     try {
       val isPbf = input.toLowerCase.endsWith(".pbf")
       val effSrid = if (isPbf) 4326 else srid // reference forces 4326 for pbf
+      val qualified = schema.fold(table)(ns => s"$ns/$table")
+      // fail fast: a bad mode or an existing table in "fail" mode throws
+      // before the read, which for a .pbf already runs a Spark job
+      TableLog.checkWritable(qualified, mode)
       // all three formats flow through the dispatch (validateArgs included)
       val df = SourceDispatch.read(spark, input, effSrid, reproject)
-      val qualified = schema match {
-        case Some(ns) => TableLog.createNamespace(ns); s"$ns/$table"
-        case None => table
-      }
+      schema.foreach(TableLog.createNamespace)
       // srid property records what the GEOMETRY actually is: pbf never
       // reprojects (dispatch above), so --reproject must not relabel it.
       // (Deliberate deviation: reference `cli.rs:98-100` stamps the reproject

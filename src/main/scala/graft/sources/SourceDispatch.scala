@@ -57,10 +57,10 @@ object SourceDispatch {
       throw GraftError.FailedValidation(s"not a directory: $dir")
     validateArgs(dir, srid, reproject)
     import scala.jdk.CollectionConverters._
-    val kinds = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-      .iterator().asScala.map(_.toString)
-      .flatMap(p => scala.util.Try(determineFileType(p)).toOption.map(t => (t, p)))
-      .toSeq.groupBy(_._1)
+    val kinds = scala.util.Using.resource(java.nio.file.Files.list(java.nio.file.Paths.get(dir)))(
+      _.iterator().asScala.map(_.toString)
+        .flatMap(p => scala.util.Try(determineFileType(p)).toOption.map(t => (t, p)))
+        .toSeq).groupBy(_._1)
     kinds.keySet.toList match {
       case Nil => throw GraftError.FailedValidation(s"no supported files under $dir")
       case List(OsmPbf) =>

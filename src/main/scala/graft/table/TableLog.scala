@@ -1,12 +1,15 @@
 package graft.table
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.json4s.jackson.Serialization
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** Iceberg-style snapshot log over Parquet directories (north-rule
   * checkpoint/lineage operator; no Iceberg jar offline, so the manifest
@@ -106,38 +109,37 @@ object TableLog {
 
   def snapshots(table: String): Seq[Snapshot] =
     if (!Files.exists(logDir(table))) Seq.empty
-    else Files.list(logDir(table)).iterator().asScala
-      .filter(_.getFileName.toString.matches("v\\d{8}\\.json")).toSeq.sortBy(_.toString)
+    else Using.resource(Files.list(logDir(table)))(_.iterator().asScala
+      .filter(_.getFileName.toString.matches("v\\d{8}\\.json")).toSeq).sortBy(_.toString)
       .map(p => Serialization.read[Snapshot](new String(Files.readAllBytes(p), "UTF-8")))
 
-  /** Whole-table write with reference save modes (K5 fail / K6 overwrite,
-    * + append). One bucket named "all". */
-  def write(df: DataFrame, table: String, mode: String, srid: Int = 4326): Snapshot =
-    mode match {
-      case "fail" =>
-        if (exists(table)) throw graft.GraftError.TableExists(table)
-        writeBuckets(df.sparkSession, table, "fail", srid, Seq("all" -> df), base = None)
-      case "overwrite" =>
-        // continue the snapshot CHAIN with an emptied bucket map (do NOT
-        // restart numbering: a fresh base would re-commit v00000001.json
-        // over the existing manifest and corrupt the lineage after
-        // overwrite -> append -> overwrite)
-        val base = current(table).map(_.copy(buckets = Map.empty))
-        writeBuckets(df.sparkSession, table, "overwrite", srid, Seq("all" -> df), base)
-      case "append" =>
-        val base = current(table)
-        val n = base.map(_.buckets.size).getOrElse(0)
-        writeBuckets(df.sparkSession, table, "append", srid, Seq(s"all-$n" -> df), base)
-      case m => throw graft.GraftError.InvalidMode(m)
-    }
+  /** The save-mode check of [[write]], cheap enough to run before the input
+    * is read: an unknown mode throws [[graft.GraftError.InvalidMode]], mode
+    * "fail" onto an existing table [[graft.GraftError.TableExists]]. */
+  def checkWritable(table: String, mode: String): Unit = mode match {
+    case "fail" => if (exists(table)) throw graft.GraftError.TableExists(table)
+    case "overwrite" | "append" => ()
+    case m => throw graft.GraftError.InvalidMode(m)
+  }
 
-  private def writeBuckets(spark: SparkSession, table: String, mode: String, srid: Int,
-                           toWrite: Seq[(String, DataFrame)], base: Option[Snapshot]): Snapshot = {
-    var snap = base.getOrElse(Snapshot(0L, None, "", srid, mode, System.currentTimeMillis(), Map.empty))
-    toWrite.foreach { case (bucket, df) =>
-      snap = commitBucket(table, snap, bucket, df, mode, srid)
+  /** Whole-table write with reference save modes (K5 fail / K6 overwrite,
+    * + append). One bucket named "all" ("all-<n>" for the n-th append). */
+  def write(df: DataFrame, table: String, mode: String, srid: Int = 4326): Snapshot = {
+    checkWritable(table, mode)
+    val (bucket, base) = mode match {
+      case "fail" => ("all", None)
+      // overwrite continues the snapshot CHAIN with an emptied bucket map
+      // (do NOT restart numbering: a fresh base would re-commit
+      // v00000001.json over the existing manifest and corrupt the lineage
+      // after overwrite -> append -> overwrite)
+      case "overwrite" => ("all", current(table).map(_.copy(buckets = Map.empty)))
+      case _ =>
+        val b = current(table)
+        (s"all-${b.map(_.buckets.size).getOrElse(0)}", b)
     }
-    snap
+    commitBucket(table,
+      base.getOrElse(Snapshot(0L, None, "", srid, mode, System.currentTimeMillis(), Map.empty)),
+      bucket, df, mode, srid)
   }
 
   /** Write one bucket's parquet dir and commit a new snapshot including it.
@@ -148,21 +150,10 @@ object TableLog {
     * idempotent after a crash: a re-run recomputes the same snapshot
     * number, overwrites the orphaned (never-committed) dir, and commits. */
   def commitBucket(table: String, base: Snapshot, bucket: String, df: DataFrame,
-                   mode: String, srid: Int, cellCol: Option[String] = None): Snapshot = {
+                   mode: String, srid: Int): Snapshot = {
     val t0 = System.currentTimeMillis()
     val path = f"$table/data/bucket=$bucket/v=${base.snapshot + 1}%08d"
-    df.write.mode("overwrite").parquet(path)
-    val readBack = df.sparkSession.read.parquet(path)
-    // rows and (optional) cell stats from the COMMITTED files, one job
-    import org.apache.spark.sql.functions.{count, lit, min, max, col}
-    val (rows, cellMin, cellMax) = cellCol match {
-      case Some(c) =>
-        val r = readBack.agg(count(lit(1)), min(col(c)), max(col(c))).head()
-        (r.getLong(0),
-          if (r.isNullAt(1)) None else Some(r.getLong(1)),
-          if (r.isNullAt(2)) None else Some(r.getLong(2)))
-      case None => (readBack.count(), None, None)
-    }
+    val (rows, _, _) = writeCounted(df, path, cellCol = None)
     val snap = base.copy(
       snapshot = base.snapshot + 1,
       parent = if (base.schemaDdl.isEmpty) None else Some(base.snapshot),
@@ -171,9 +162,29 @@ object TableLog {
       mode = mode,
       tsMillis = System.currentTimeMillis(),
       buckets = base.buckets +
-        (bucket -> BucketMeta(path, rows, System.currentTimeMillis() - t0, cellMin, cellMax)))
+        (bucket -> BucketMeta(path, rows, System.currentTimeMillis() - t0)))
     commit(table, snap)
     snap
+  }
+
+  /** Write `df` as the parquet dir `path` in ONE job and return (rows,
+    * cellMin, cellMax) as that job counted them: an `observe` is the last
+    * operator before the write, so the metrics are gathered in the write's
+    * result stage, where Spark applies each task's accumulator update once
+    * (retried and speculative tasks do not double count). A failed write
+    * throws before the observation is read, so the count is the row count
+    * of the committed files — no re-read of them. */
+  private def writeCounted(df: DataFrame, path: String,
+                           cellCol: Option[String]): (Long, Option[Long], Option[Long]) = {
+    import org.apache.spark.sql.functions.{col, count, lit, max, min}
+    val obs = Observation()
+    val cellStats = cellCol.toSeq.flatMap(c => Seq(min(col(c)), max(col(c))))
+    df.observe(obs, count(lit(1)), cellStats: _*).write.mode("overwrite").parquet(path)
+    // the metrics arrive with the write's query-end event; bounded so a
+    // lost event fails the commit instead of hanging the driver
+    val r = Await.result(obs.future, 10.minutes)
+    def stat(i: Int) = if (r.length <= i || r.isNullAt(i)) None else Some(r.getLong(i))
+    (r.getLong(0), stat(1), stat(2))
   }
 
   /** Z-order clustered spatial write: range-split the Morton cell column
@@ -265,10 +276,7 @@ object TableLog {
         bucketMap += (name -> BucketMeta(path, rows, wallMs, cellMin, cellMax))
       }
       // drop the now-empty staging dir (keeps _SUCCESS etc.)
-      def rm(p: java.nio.file.Path): Unit =
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(q => { Files.deleteIfExists(q); () })
-      rm(Paths.get(tmp))
+      deleteTree(Paths.get(tmp))
     }
     val snap = Snapshot(next, base.map(_.snapshot), df.schema.toDDL, srid, mode,
       System.currentTimeMillis(), bucketMap)
@@ -316,15 +324,8 @@ object TableLog {
           .unionByName(incoming)
           .sortWithinPartitions(cellCol)
         val path = f"$table/data/bucket=$name/v=$next%08d"
-        merged.write.mode("overwrite").parquet(path)
-        val r = df.sparkSession.read.parquet(path)
-          .agg(count(lit(1)),
-            org.apache.spark.sql.functions.min(col(cellCol)),
-            org.apache.spark.sql.functions.max(col(cellCol))).head()
-        buckets += (name -> BucketMeta(path, r.getLong(0),
-          System.currentTimeMillis() - t0,
-          if (r.isNullAt(1)) None else Some(r.getLong(1)),
-          if (r.isNullAt(2)) None else Some(r.getLong(2))))
+        val (rows, cellMin, cellMax) = writeCounted(merged, path, Some(cellCol))
+        buckets += (name -> BucketMeta(path, rows, System.currentTimeMillis() - t0, cellMin, cellMax))
       }
     }
     val snap = base.copy(snapshot = next, parent = Some(base.snapshot),
@@ -434,8 +435,7 @@ object TableLog {
     expire.foreach { s =>
       s.buckets.values.map(m => Paths.get(m.path).normalize()).filterNot(live).foreach { d =>
         if (Files.exists(d)) {
-          Files.walk(d).sorted(java.util.Comparator.reverseOrder[Path]())
-            .forEach(p => Files.deleteIfExists(p))
+          deleteTree(d)
           dirsDeleted += 1
         }
       }
@@ -443,6 +443,10 @@ object TableLog {
     }
     (expire.size, dirsDeleted)
   }
+
+  private def deleteTree(root: Path): Unit =
+    Using.resource(Files.walk(root))(_.sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => { Files.deleteIfExists(p); () }))
 
   /** Checkpointed multi-bucket job: computes each logical input partition
     * via `bucketDf` and commits it as its own snapshot; on re-run, buckets

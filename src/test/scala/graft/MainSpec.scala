@@ -106,4 +106,18 @@ class MainSpec extends AnyFunSuite with SparkTest {
     assert(snap.srid === 4326)
     assert(TableLog.read(spark, table).count() === 10)
   }
+
+  test("e2e: a bad mode or an existing fail-mode table throws before the input is read") {
+    val table = s"$tmp/pbf_fast"
+    Main.run(spark, pbf, table, mode = "fail")
+    val onExisting = Probes.jobs(spark) {
+      intercept[GraftError.TableExists](Main.run(spark, pbf, table, mode = "fail"))
+    }
+    assert(onExisting === 0, "jobs run before TableExists")
+    val onBogus = Probes.jobs(spark) {
+      intercept[GraftError.InvalidMode](Main.run(spark, pbf, s"$tmp/pbf_bogus", mode = "bogus"))
+    }
+    assert(onBogus === 0, "jobs run before InvalidMode")
+    assert(!TableLog.exists(s"$tmp/pbf_bogus"))
+  }
 }

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
-import scala.util.Try
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
@@ -191,13 +190,7 @@ class SourcesV2Spec extends AnyFunSuite with SparkTest {
 
   test("DSV2 sources close their files after limit(1) and after a full scan") {
     val (d, files) = allSources("graft-v2-fds")
-    def openUnderDir(): List[String] = {
-      val fds = Files.list(Paths.get("/proc/self/fd"))
-      try fds.iterator().asScala
-        .flatMap(fd => Try(Files.readSymbolicLink(fd).toString).toOption)
-        .filter(_.startsWith(d)).toList
-      finally fds.close()
-    }
+    def openUnderDir(): List[String] = Probes.openFdsUnder(d)
     for ((fmt, file) <- files) {
       val df = spark.read.format(fmt).load(s"$d/$file")
       assert(df.limit(1).collect().length === 1, fmt)

@@ -1,8 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.sources.{FileFixtures, SourceDispatch}
 import graft.table.TableLog
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 class TableLogSpec extends AnyFunSuite with SparkTest {
 
@@ -323,5 +324,113 @@ class TableLogSpec extends AnyFunSuite with SparkTest {
     // a reader sees either the old or the new snapshot, never a partial file
     TableLog.write(Seq(2).toDF("v"), t, "append")
     assert(TableLog.current(t).get.snapshot === cur.snapshot + 1)
+  }
+
+  /** Each bucket's manifest `rows` against a read-back count of its dir. */
+  private def assertRowsMatchFiles(snap: TableLog.Snapshot, what: String): Unit =
+    snap.buckets.foreach { case (b, m) =>
+      assert(m.rows === spark.read.parquet(m.path).count(), s"$what: bucket $b")
+    }
+
+  test("manifest rows equal the committed rows: every save mode, runCheckpointed, empty frames") {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructType}
+    val t = freshTable()
+    def check(snap: TableLog.Snapshot, what: String): Unit = {
+      assertRowsMatchFiles(snap, what)
+      assert(snap.buckets.values.map(_.rows).sum === TableLog.read(spark, t).count(), what)
+    }
+    check(TableLog.write(spark.range(0, 1000, 1, 3).toDF("v"), t, "fail"), "fail")
+    check(TableLog.write(Seq(1L, 2L).toDF("v"), t, "append"), "append")
+    check(TableLog.write(spark.range(500).repartition(7).filter($"id" % 3 === 0).toDF("v"),
+      t, "append"), "filtered + repartitioned append")
+    check(TableLog.write(spark.range(40).toDF("v"), t, "overwrite"), "overwrite")
+    val local0 = TableLog.write(Seq.empty[Long].toDF("v"), t, "append")
+    assert(local0.buckets("all-1").rows === 0L)
+    check(local0, "zero-row local frame")
+    val noParts = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      new StructType().add("v", LongType))
+    assert(noParts.rdd.getNumPartitions === 0)
+    val empty = TableLog.write(noParts, t, "append")
+    assert(empty.buckets("all-2").rows === 0L)
+    check(empty, "zero-partition emptyRDD frame")
+    val c = freshTable()
+    val (snap, _, written) = TableLog.runCheckpointed(spark, c, Seq("b1", "b2", "b3"),
+      b => spark.range(b.last.asDigit * 10L).toDF("v"))
+    assert(written.size === 3)
+    assert(snap.buckets.values.map(_.rows).toSeq.sorted === Seq(10L, 20L, 30L))
+    assertRowsMatchFiles(snap, "runCheckpointed")
+  }
+
+  test("StreamIngest: batch buckets' manifest rows sum to the streamed row count") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("graft-stream-rows").toString
+    val table = s"$dir/t"
+    val in = MemoryStream[Long]
+    val sizes = Seq(5, 17, 3)
+    sizes.scanLeft(0)(_ + _).zip(sizes).foreach { case (from, n) =>
+      in.addData((from until from + n).map(_.toLong))
+      graft.streaming.StreamIngest.ingest(in.toDF().toDF("id"), table, s"$dir/ckpt")
+        .awaitTermination()
+    }
+    val snap = TableLog.current(table).get
+    assert(snap.buckets.keySet.forall(_.startsWith("batch-")))
+    assert(snap.buckets.size >= sizes.size)
+    assert(snap.buckets.values.map(_.rows).sum === sizes.sum.toLong)
+    assert(TableLog.read(spark, table).count() === sizes.sum.toLong)
+    assertRowsMatchFiles(snap, "stream")
+  }
+
+  test("mergeClustered: rewritten buckets carry rows and cell span equal to their files") {
+    import org.apache.spark.sql.functions._
+    import graft.table.SpatialLayout
+    val dir = Files.createTempDirectory("graft-merge-stats").toString + "/pts"
+    def pts(ids: org.apache.spark.sql.DataFrame, ver: Long) = ids.select(col("id"),
+        (col("id") * 97 % 7200 / lit(20.0) - 180.0).as("lon"),
+        (col("id") * 131 % 3600 / lit(20.0) - 90.0).as("lat"), lit(ver).as("ver"))
+      .withColumn("cell", SpatialLayout.cellCol(col("lon"), col("lat"), 8))
+    val v1 = TableLog.writeClustered(pts(spark.range(2000).toDF(), 0L), dir, "fail", 4326,
+      "cell", buckets = 4)
+    // updates of every 7th id plus inserts past the old id range
+    val v2 = TableLog.mergeClustered(
+      pts(spark.range(0, 2600, 7).toDF(), 1L), dir, "id", "cell")
+    val rewritten = v2.buckets.filter { case (k, m) => v1.buckets(k).path != m.path }
+    assert(rewritten.nonEmpty)
+    rewritten.foreach { case (b, m) =>
+      val r = spark.read.parquet(m.path).agg(count(lit(1)), min("cell"), max("cell")).head()
+      assert((m.rows, m.cellMin, m.cellMax) === ((r.getLong(0), Some(r.getLong(1)), Some(r.getLong(2)))),
+        s"bucket $b")
+    }
+    assert(v2.buckets.values.map(_.rows).sum === TableLog.read(spark, dir).count())
+  }
+
+  test("a table commit runs exactly the jobs of the bare parquet write") {
+    val df = spark.range(0, 5000, 1, 4).toDF("v")
+    val bare = Probes.jobs(spark)(df.write.mode("overwrite").parquet(freshTable()))
+    val commit = Probes.jobs(spark)(TableLog.write(df, freshTable(), "fail"))
+    assert(bare >= 1)
+    assert(commit === bare)
+  }
+
+  test("directory listings and walks leave no file descriptor open") {
+    import org.apache.spark.sql.functions.col
+    val root = Files.createTempDirectory("graft-fds").toRealPath().toString
+    val in = s"$root/in"
+    Files.createDirectories(Paths.get(in))
+    FileFixtures.writeGeoJson(s"$in/a.geojson")
+    FileFixtures.writeGeoJson(s"$in/b.geojson")
+    assert(SourceDispatch.readDir(spark, in).columns.nonEmpty)
+    val t = s"$root/t"
+    TableLog.write(spark.range(3).toDF("v"), t, "fail")
+    TableLog.write(spark.range(5).toDF("v"), t, "overwrite")
+    TableLog.write(spark.range(2).toDF("v"), t, "append")
+    assert(TableLog.snapshots(t).map(_.snapshot) === Seq(1L, 2L, 3L))
+    assert(TableLog.expireSnapshots(t, keepLast = 1) === ((2, 1)))
+    TableLog.writeClustered(spark.range(100).withColumn("cell", col("id") * 3),
+      s"$root/c", "fail", 4326, "cell", buckets = 2)
+    assert(Probes.openFdsUnder(root) === Nil)
   }
 }
