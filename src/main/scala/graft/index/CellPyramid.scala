@@ -220,10 +220,7 @@ object CellPyramid {
     // broadcast-vs-shuffle decision is made on counts alone, and only the
     // one-WKB-per-polygon slice is ever collected (for the broadcast-map
     // refine, below the limit)
-    // Spread (r6): the descent runs at the polygon scan's parallelism —
-    // a small layer is 1-2 splits; no-op once the scan yields >= cores
-    val pairs = graft.ops.Spread.byKey(
-        polygons.select(col("poly_id"), col("geom")), "poly_id")
+    val pairs = polygons.select(col("poly_id"), col("geom"))
       .as[(Long, Array[Byte])]
       .flatMap { case (id, wkb) => pairRowsFor(id, wkb, finest, depth) }
       .toDF("poly_id", "cell", "interior", "wkb")

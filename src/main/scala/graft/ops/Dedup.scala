@@ -128,8 +128,7 @@ object Dedup {
     tokenIds.groupBy("doc_id").agg(mins.head, mins.tail: _*)
   }
 
-  private[ops] def bandPairs(sigs0: DataFrame, maxBucket: Option[Int] = None,
-                             logDrops: Boolean = false): DataFrame = {
+  private[ops] def bandPairs(sigs0: DataFrame, maxBucket: Option[Int] = None): DataFrame = {
     // one explode, NOT a union of per-band selects: Catalyst does not share
     // common subtrees across union branches, so the union form re-derived
     // the whole corpus->shingle->vocab->sig pipeline once per band.
@@ -143,17 +142,12 @@ object Dedup {
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
     // heavy-hitter guard: a bucket of n docs emits n(n-1)/2 pairs — one hot
     // bucket (boilerplate band key) can dominate the whole job at 100 TB.
-    // Cap = drop oversized buckets, log how many (they are near-useless for
-    // near-dup anyway: hot buckets are degenerate/boilerplate signatures).
+    // Cap = drop oversized buckets (they are near-useless for near-dup
+    // anyway: hot buckets are degenerate/boilerplate signatures).
     val buckets = maxBucket match {
       case None => all // uncapped self-join: identical subtrees -> ReusedExchange
       case Some(cap) =>
         val counts = all.groupBy("band", "bkey").agg(count(lit(1)).as("bsz"))
-        if (logDrops) {
-          val nDropped = counts.filter(col("bsz") > cap).count()
-          if (nDropped > 0)
-            System.err.println(s"[dedup] dropped $nDropped LSH buckets larger than $cap docs")
-        }
         // materialize the capped bucket table ONCE: the self-join's two
         // sides would otherwise each re-run the count+join (measured ~2x
         // on the bench after the caps became the default)
@@ -238,15 +232,14 @@ object Dedup {
     * `maxBucket = None` for the uncapped form (quadratic in the hottest
     * bucket — only for small-corpus exact comparisons). */
   def minhashPairs(corpus: DataFrame,
-                   maxBucket: Option[Int] = Some(MaxBucketDefault),
-                   logDrops: Boolean = false): DataFrame = {
+                   maxBucket: Option[Int] = Some(MaxBucketDefault)): DataFrame = {
     // the shingle frame feeds BOTH the vocab build and the join probe;
     // Catalyst does not share the common subtree across the self-reference,
     // so materialize it once (lazy local checkpoint) instead of running the
     // corpus->explode->distinct derivation twice
     val sh = shingled(corpus).localCheckpoint(false)
     bandPairs(minhashSig(sh.join(shVocab(sh), "sh").select("doc_id", "tid")),
-      maxBucket, logDrops)
+      maxBucket)
   }
 
   /** Production variant: shingle id = xxhash64(sh) mod P, no global
@@ -255,9 +248,8 @@ object Dedup {
     * run capped by default, and q21's oracle SQL mirrors the cap).
     * Signatures are row-local ([[minhashSigProd]]): the only shuffles left
     * are the bucket-cap count and the bucket self-join. */
-  def minhashPairsProd(corpus: DataFrame, maxBucket: Int = 1000,
-                       logDrops: Boolean = false): DataFrame =
-    bandPairs(minhashSigProd(corpus), Some(maxBucket), logDrops)
+  def minhashPairsProd(corpus: DataFrame, maxBucket: Int = 1000): DataFrame =
+    bandPairs(minhashSigProd(corpus), Some(maxBucket))
 
   // SimHash: 16 planes; plane j contribution of a token = +1 if
   // (tid*PA_j + PB_j) mod P < P/2 else -1 (threshold, NOT parity: the
@@ -434,13 +426,12 @@ object Dedup {
     * @param maxShingleFreq heavy-hitter guard: shingles appearing in more
     *   than this many docs are dropped from candidate generation (they make
     *   the inverted-index join quadratic in-bucket and carry ~no Jaccard
-    *   signal); dropped count is logged. Defaults ON
+    *   signal). Defaults ON
     *   ([[MaxShingleFreqDefault]], mirrored in the oracle SQL); pass None
     *   for the uncapped form. */
   def jaccardPairs(corpus: DataFrame,
-                   maxShingleFreq: Option[Int] = Some(MaxShingleFreqDefault),
-                   logDrops: Boolean = false): DataFrame = {
-    val ranked = rankedShingles(corpus, maxShingleFreq, logDrops)
+                   maxShingleFreq: Option[Int] = Some(MaxShingleFreqDefault)): DataFrame = {
+    val ranked = rankedShingles(corpus, maxShingleFreq)
     val pref = ranked.filter(col("rn") <= expr("nsh DIV 2 + 1"))
       .select("doc_id", "tid", "nsh")
     val a = pref.as("a"); val b = pref.as("b")
@@ -467,8 +458,7 @@ object Dedup {
     * vocab-sized — broadcast, mirroring denseIds. tid is the alphabetical
     * rank of sh, so (df, tid) is a total order. */
   private def rankedShingles(corpus: DataFrame,
-                             maxShingleFreq: Option[Int],
-                             logDrops: Boolean): DataFrame = {
+                             maxShingleFreq: Option[Int]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val allSh = shingled(corpus).localCheckpoint(false)
     // dense ids: exact long equality for ranking and intersection (xxhash
@@ -477,13 +467,7 @@ object Dedup {
     val freq = shid.groupBy("tid").agg(count(lit(1)).as("sh_df"))
     val fkept = maxShingleFreq match {
       case None => freq
-      case Some(cap) =>
-        if (logDrops) { // opt-in: the count is its own job re-deriving freq
-          val nDropped = freq.filter(col("sh_df") > cap).count()
-          if (nDropped > 0)
-            System.err.println(s"[dedup] dropped $nDropped shingles with doc-freq > $cap")
-        }
-        freq.filter(col("sh_df") <= cap)
+      case Some(cap) => freq.filter(col("sh_df") <= cap)
     }
     val w = Window.partitionBy("doc_id").orderBy("sh_df", "tid")
     shid.join(broadcast(fkept), Seq("tid"))
@@ -511,7 +495,7 @@ object Dedup {
     * row-local sorted-merge intersection. */
   def containmentPairs(corpus: DataFrame,
                        maxShingleFreq: Option[Int] = Some(MaxShingleFreqDefault)): DataFrame = {
-    val ranked = rankedShingles(corpus, maxShingleFreq, logDrops = false)
+    val ranked = rankedShingles(corpus, maxShingleFreq)
     // prefix length n − ceil(0.8 n) + 1, ceil(0.8 n) = (4n + 4) div 5
     val pref = ranked.filter(col("rn") <= col("nsh") - expr("(4 * nsh + 4) DIV 5") + 1)
       .select("doc_id", "tid", "nsh")

@@ -44,10 +44,7 @@ object OsmWayAssembly {
                                 ways: DataFrame): DataFrame = {
     val rows = nodes.select(col("node_id"), col("lon"), col("lat")).collect()
     val bc = spark.sparkContext.broadcast(NodeCoordMap.fromRows(rows))
-    // Spread (r6): per-way assembly (ref resolution + WKB build) is the
-    // query's whole compute and runs at scan parallelism — 1 split for a
-    // small ways file; no-op once the scan yields >= parallelism
-    Spread.byKey(ways, "way_id").select(col("way_id"), col("tags"),
+    ways.select(col("way_id"), col("tags"),
         GeoExpressions.wayAssemble(col("refs"), bc).as("a"))
       .filter(col("a.npts") > 0)
       .select(

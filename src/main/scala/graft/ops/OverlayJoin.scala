@@ -145,14 +145,10 @@ object OverlayJoin {
     * intersecting pair: (a_id, b_id). */
   def intersectsJoin(a: DataFrame, aIdCol: String, b: DataFrame, bIdCol: String,
                      level: Int): DataFrame = {
-    // Spread (r6): the pre-join envelope + bbox-cover explode runs at SCAN
-    // parallelism — a small synthesized layer is 1-2 splits, serializing
-    // the WKB parse/cover work; no-op once the scan yields >= parallelism
     def prep(df: DataFrame, idCol: String, p: String) =
-      Spread.byKey(df, idCol)
-        .select(col(idCol).as(s"${p}_id"), col("geom").as(s"${p}_geom"),
-          xmin(col("geom")).as(s"${p}_xmin"), ymin(col("geom")).as(s"${p}_ymin"),
-          explode(bboxCells(col("geom"), level)).as(s"${p}_cell"))
+      df.select(col(idCol).as(s"${p}_id"), col("geom").as(s"${p}_geom"),
+        xmin(col("geom")).as(s"${p}_xmin"), ymin(col("geom")).as(s"${p}_ymin"),
+        explode(bboxCells(col("geom"), level)).as(s"${p}_cell"))
     val ac = prep(a, aIdCol, "a")
     val bc = prep(b, bIdCol, "b")
     ac.join(bc, col("a_cell") === col("b_cell"))

@@ -114,11 +114,7 @@ object TextStats {
     // to compare each doc against 160 constants. coalesce('') keeps the
     // no-text row semantics of the old outer form: empty profile => every
     // lang at max distance => first lang asc.
-    // Spread (r6): trigram profiling + 160-language scoring is the most
-    // expensive per-row projection in the text suite, and a small corpus
-    // file scans as 1-2 splits — spread it to the session parallelism
-    // when (and only when) the scan yields fewer partitions.
-    Spread.byKey(docs, "doc_id").select(col("doc_id"),
+    docs.select(col("doc_id"),
       NgramExpressions.ctBestLang(
         NgramExpressions.trigramTopN(coalesce(col("text"), lit("")), TopN),
         Profiles, TopN).as("m"))

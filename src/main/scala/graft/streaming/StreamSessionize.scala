@@ -22,12 +22,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * asserts set equality.
   *
   * State per user is O(1): the ordinal counter plus the open session's
-  * (start, last, count). The ordinal survives after a timeout flush (so
-  * numbering stays global per user); pass `dropIdleUsers = true` to remove
-  * the record entirely once flushed — bounded state for unbounded user
-  * populations, at the cost of per-user ordinals restarting from 1 after
-  * an idle period (each regime is the right call at a different scale;
-  * the parity spec runs the default).
+  * (start, last, count). The ordinal survives after a timeout flush, so
+  * numbering stays global per user, as in the batch rollup; the price is
+  * one small record kept for every user ever seen.
   *
   * Late data: events older than the watermark are dropped by Spark before
   * the stateful operator (standard streaming-vs-batch divergence); within
@@ -45,8 +42,7 @@ object StreamSessionize {
     * @param gapUs     inactivity gap closing a session (microseconds)
     * @param watermark max lateness; also gates the timeout flush */
   def sessions(events: DataFrame, gapUs: Long = graft.ops.Sessionize.DefaultGapUs,
-               watermark: String = "1 hour",
-               dropIdleUsers: Boolean = false): Dataset[SessionOut] = {
+               watermark: String = "1 hour"): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
     val gapMs = gapUs / 1000
     events
@@ -62,8 +58,7 @@ object StreamSessionize {
           if (state.hasTimedOut) {
             // idle past the gap: flush the open session
             val s = state.get
-            if (dropIdleUsers) state.remove()
-            else state.update(UserState(s.nextIdx, 0L, Long.MinValue, 0L))
+            state.update(UserState(s.nextIdx, 0L, Long.MinValue, 0L))
             if (s.n > 0)
               Iterator.single(SessionOut(user, s.nextIdx - 1, s.n, s.startUs, s.lastUs - s.startUs))
             else Iterator.empty

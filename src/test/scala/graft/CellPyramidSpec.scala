@@ -125,7 +125,8 @@ class CellPyramidSpec extends AnyFunSuite with SparkTest {
       (1L, 10.0, 20.0, 2.0), (2L, -100.25, 0.5, 1.4), (3L, 140.5, -40.0, 0.75),
       (4L, 179.0, 80.0, 2.2), (5L, 0.0, 0.0, 0.05)) // tiny: likely zero points
       .map { case (id, cx, cy, r) => (id, cx, cy, r, WkbCodec.write(WkbCodec.diamond(cx, cy, r))) }
-    val polyDf = polys.toDF("poly_id", "cx", "cy", "r", "geom")
+    // one partition, fewer than the session's cores
+    val polyDf = polys.toDF("poly_id", "cx", "cy", "r", "geom").coalesce(1)
     val pyr = CellPyramid.build(p, "lon", "lat", finest = 10, depth = 3)
     val got = CellPyramid.polygonCounts(spark, pyr, p, "lon", "lat", polyDf,
       finest = 10, depth = 3).as[(Long, Long)].collect().toMap
@@ -137,11 +138,19 @@ class CellPyramidSpec extends AnyFunSuite with SparkTest {
     assert(want.values.sum > 0, "vacuous fixture")
     // plan shape: both probes are broadcast equi-joins on the cell key —
     // no cartesian, no shuffled join against the point table
-    val plan = CellPyramid.polygonCounts(spark, pyr, p, "lon", "lat", polyDf,
-      finest = 10, depth = 3).queryExecution.executedPlan.toString
+    val counts = CellPyramid.polygonCounts(spark, pyr, p, "lon", "lat", polyDf,
+      finest = 10, depth = 3)
+    val plan = counts.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), s"plan:\n$plan")
     assert(!plan.contains("BroadcastNestedLoopJoin"), s"plan:\n$plan")
     assert(plan.contains("BroadcastHashJoin"), s"plan:\n$plan")
+    // the quadtree descent runs in the polygon frame's own partition: the
+    // checkpointed pair table it fills has that one partition, not a
+    // repartition's
+    val pairParts = Probes.planNodes(counts).collect {
+      case s: org.apache.spark.sql.execution.RDDScanExec
+          if s.output.exists(_.name == "interior") => s.rdd.getNumPartitions }
+    assert(pairParts.nonEmpty && pairParts.forall(_ == 1), s"pair table partitions: $pairParts")
 
     // scale path (broadcastPairLimit = 0): probes become shuffle
     // equi-joins, the WKB reattaches via an equi-join on poly_id, and the

@@ -119,7 +119,7 @@ class DedupAnnSpec extends AnyFunSuite with SparkTest {
     // uncapped: 30*29/2 hot pairs + 1
     assert(Dedup.minhashPairsProd(d, maxBucket = 1000).count() === 30L * 29 / 2 + 1)
     // capped at 10: hot bucket dropped, the small pair survives
-    val capped = Dedup.minhashPairsProd(d, maxBucket = 10, logDrops = true).as[(Long, Long)].collect().toSet
+    val capped = Dedup.minhashPairsProd(d, maxBucket = 10).as[(Long, Long)].collect().toSet
     assert(capped === Set((100L, 101L)))
   }
 
@@ -130,7 +130,7 @@ class DedupAnnSpec extends AnyFunSuite with SparkTest {
     val pair = Seq((100L, "one two three four five six seven"),
                    (101L, "one two three four five six seven"))
     val d = docs(hot ++ pair: _*)
-    val capped = Dedup.jaccardPairs(d, maxShingleFreq = Some(10), logDrops = true)
+    val capped = Dedup.jaccardPairs(d, maxShingleFreq = Some(10))
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(capped === Set((100L, 101L)))
     // uncapped still sees the hot block
@@ -401,9 +401,13 @@ class DedupAnnSpec extends AnyFunSuite with SparkTest {
     // each seed must classify as its own language (distance 0 to itself)
     val seeds = TextStats.LangSeeds.zipWithIndex
       .map { case ((lang, text), i) => (i.toLong, text, lang) }
-    val seedPred = TextStats.langIdNgram(
-        seeds.map(s => (s._1, s._2)).toDF("doc_id", "text"))
-      .as[(Long, String, Long)].collect().sortBy(_._1)
+    // one partition, fewer than the session's cores: scoring stays in the
+    // input's own partitioning, with no exchange
+    val seedDf = TextStats.langIdNgram(
+        seeds.map(s => (s._1, s._2)).toDF("doc_id", "text").coalesce(1))
+    val exchanges = Probes.shuffleKeys(seedDf)
+    assert(exchanges.isEmpty, s"lang id shuffles on: $exchanges")
+    val seedPred = seedDf.as[(Long, String, Long)].collect().sortBy(_._1)
     seeds.zip(seedPred).foreach { case ((_, _, want), (_, got, dist)) =>
       assert(got === want)
       assert(dist === 0L)
@@ -442,9 +446,7 @@ class DedupAnnSpec extends AnyFunSuite with SparkTest {
     assert(out(2) === ((3L, 1L, 1L, 0L, 0L, 0L)))
     assert(out(3) === ((4L, 5L, 2L, 2L, 2L, 5L)))
     // plan: row-local, zero exchanges
-    val plan = TextStats.repetitionStats(docs).queryExecution.executedPlan.collect {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e.nodeName }
-    assert(plan.isEmpty)
+    assert(Probes.shuffleKeys(TextStats.repetitionStats(docs)).isEmpty)
   }
 
   test("url canonicalization: fragment, tracking params, case, trailing slash") {

@@ -63,7 +63,9 @@ class OsmSpec extends AnyFunSuite with SparkTest {
   test("row-local broadcast assembly == declarative shuffle-join assembly") {
     import spark.implicits._
     val nodes = graft.sources.OsmElements.nodes(spark, Sf)
-    val ways = graft.sources.OsmElements.ways(spark, Sf)
+    // one partition, fewer than the session's cores: the assembly must
+    // still run in the ways frame's own partitioning
+    val ways = graft.sources.OsmElements.ways(spark, Sf).coalesce(1)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select("way_id", "kind", "npts", "geom")
         .as[(Long, String, Int, Array[Byte])].collect()
@@ -73,10 +75,8 @@ class OsmSpec extends AnyFunSuite with SparkTest {
     assert(broadcastOut.nonEmpty)
     assert(broadcastOut === shuffleOut)
     // and the broadcast path must be exchange-free
-    val plan = OsmWayAssembly.assemble(spark, nodes, ways).queryExecution.executedPlan
-    val exchanges = plan.collect {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e.nodeName }
-    assert(exchanges.isEmpty, s"broadcast assembly shuffles: $exchanges")
+    val exchanges = Probes.shuffleKeys(OsmWayAssembly.assemble(spark, nodes, ways))
+    assert(exchanges.isEmpty, s"broadcast assembly shuffles on: $exchanges")
   }
 
   test("ways whose refs all miss disappear (inner join), matching the row-set rule") {

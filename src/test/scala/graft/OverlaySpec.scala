@@ -20,11 +20,16 @@ class OverlaySpec extends AnyFunSuite with SparkTest {
   }
 
   test("overlay intersects join == brute-force JTS cross join, each pair exactly once") {
-    val a = diamonds(120, 13L, 0.8)
-    val b = diamonds(90, 29L, 0.7)
+    // one partition per side, fewer than the session's cores
+    val a = diamonds(120, 13L, 0.8).coalesce(1)
+    val b = diamonds(90, 29L, 0.7).coalesce(1)
     for (level <- Seq(4, 6, 8)) {
-      val got = OverlayJoin.intersectsJoin(a, "id", b, "id", level)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val joined = OverlayJoin.intersectsJoin(a, "id", b, "id", level)
+      // each side's envelope + cover runs in its input's own partition:
+      // the cell join is the only thing that may shuffle
+      val keys = Probes.shuffleKeys(joined)
+      assert(keys.flatten.forall(Set("a_cell", "b_cell")), s"level=$level shuffles on: $keys")
+      val got = joined.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       // no pair emitted twice (reporting-cell dedup)
       assert(got.size === got.distinct.size, s"level=$level dup pairs")
       val arows = a.select("id", "geom").collect()

@@ -78,9 +78,8 @@ class TileClipSpec extends AnyFunSuite with SparkTest {
 
   test("q65 plan: cover + clip are row-local (no exchange up to the scan)") {
     val df = SparkEntry.queries("q65_tile_cells")(spark, Sf)
-    val exchanges = df.queryExecution.executedPlan.collect {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e.nodeName }
-    assert(exchanges.isEmpty, s"tile clip shuffles: $exchanges")
+    val exchanges = Probes.shuffleKeys(df)
+    assert(exchanges.isEmpty, s"tile clip shuffles on: $exchanges")
   }
 
   test("st_simplify: spike removal, identity at tol 0, deviation bound, ring closure") {
