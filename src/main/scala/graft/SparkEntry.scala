@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.index.CellGrid
 import graft.sources.{Layers, OsmElements, WebPagesSynth}
 import graft.ops._
 
@@ -36,11 +37,6 @@ object SparkEntry {
     spark.read.parquet(s"$sfDir/$name.parquet")
 
   private def ents(s: SparkSession, dir: String): DataFrame = Pipeline.entities(s, dir)
-
-  private def cellX(lon: Column): Column =
-    greatest(lit(0L), least(lit(63L), floor((lon + 180.0) / 360.0 * 64.0).cast("long")))
-  private def cellY(lat: Column): Column =
-    greatest(lit(0L), least(lit(63L), floor((lat + 90.0) / 180.0 * 64.0).cast("long")))
 
   // q57: Z-order clustered spatial table, built once per (JVM, sfDir) from
   // the closed-form node layer; the query reads a bbox through the PRUNED
@@ -132,7 +128,7 @@ object SparkEntry {
 
     "q12_cell_assign" -> ((s, dir) =>
       ents(s, dir).select(col("url"), col("ent_idx").cast("long").as("ent_idx"),
-          cellX(col("lon")).as("cx"), cellY(col("lat")).as("cy"))
+          CellGrid.cellX(col("lon"), 6).as("cx"), CellGrid.cellY(col("lat"), 6).as("cy"))
         .withColumn("cell_id", lit(6L << 58) + col("cx") * lit(1L << 29) + col("cy"))),
 
     "q13_pip_join" -> ((s, dir) =>
@@ -222,7 +218,7 @@ object SparkEntry {
           col("tile_z").cast("long").as("tile_z"), col("tile_x"), col("tile_y"))),
 
     "q17_cell_counts" -> ((s, dir) =>
-      ents(s, dir).select(cellX(col("lon")).as("cx"), cellY(col("lat")).as("cy"))
+      ents(s, dir).select(CellGrid.cellX(col("lon"), 6).as("cx"), CellGrid.cellY(col("lat"), 6).as("cy"))
         .groupBy("cx", "cy").agg(count(lit(1)).as("n"))),
 
     // Bing-style quadkey tile address: prefix-encoded containment (a
@@ -239,7 +235,7 @@ object SparkEntry {
     // window, one partial-aggregating groupBy on the target cell
     "q81_focal_sum" -> ((s, dir) =>
       Raster.focalSum(
-        ents(s, dir).select(cellX(col("lon")).as("cx"), cellY(col("lat")).as("cy"))
+        ents(s, dir).select(CellGrid.cellX(col("lon"), 6).as("cx"), CellGrid.cellY(col("lat"), 6).as("cy"))
           .groupBy("cx", "cy").agg(count(lit(1)).as("n")))),
 
     // geohash base-32 cell address (closed-form Morton interleave + alphabet

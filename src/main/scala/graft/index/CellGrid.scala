@@ -1,5 +1,8 @@
 package graft.index
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{floor, greatest, least, lit}
+
 /** Hierarchical cell index over lon/lat (H3/S2-style generalization the
   * north rule asks for; the reference has no index — this is the scale
   * path for its per-feature pipeline).
@@ -13,13 +16,14 @@ package graft.index
   * variant is provided for locality-preserving range partitioning.
   *
   * The x/y arithmetic is deliberately a fixed IEEE op sequence
-  * `floor(((lon + 180.0) / 360.0) * 2^L)` so the DuckDB oracle can compute
-  * bit-identical values.
+  * `floor(((lon + 180.0) / 360.0) * 2^L)`, clamped to [0, 2^L - 1], so the
+  * DuckDB oracle can compute bit-identical values. The scalar and Column
+  * forms below are the only Scala copies of it: every Spark plan that keys
+  * on this grid (cells, packed ids, geohash axes, tile x) builds its
+  * columns with the Column overloads of `cellX`/`cellY`.
   */
 object CellGrid {
   val MaxLevel = 29
-
-  def numCells(level: Int): Long = 1L << level
 
   def cellX(lon: Double, level: Int): Long = {
     val n = (1L << level).toDouble
@@ -31,6 +35,18 @@ object CellGrid {
     val n = (1L << level).toDouble
     val raw = math.floor(((lat + 90.0) / 180.0) * n).toLong
     math.max(0L, math.min((1L << level) - 1, raw))
+  }
+
+  /** Column form of the scalar [[cellX]], same op order: scale, `floor`,
+    * `.cast("long")`, then `greatest(0, least(2^level - 1, _))`. */
+  def cellX(lon: Column, level: Int): Column = axis(lon, 180.0, 360.0, level)
+
+  /** Column form of the scalar [[cellY]]. */
+  def cellY(lat: Column, level: Int): Column = axis(lat, 90.0, 180.0, level)
+
+  private def axis(v: Column, off: Double, span: Double, level: Int): Column = {
+    val n = 1L << level
+    greatest(lit(0L), least(lit(n - 1), floor((v + off) / span * n.toDouble).cast("long")))
   }
 
   def pack(cx: Long, cy: Long, level: Int): Long = {

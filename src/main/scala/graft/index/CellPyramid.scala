@@ -35,14 +35,8 @@ import graft.geom.WkbCodec
 object CellPyramid {
 
   /** Packed cell id (same layout as [[CellGrid.pack]]) as column math. */
-  def cellCol(lon: Column, lat: Column, level: Int): Column = {
-    val n = (1L << level).toDouble
-    val nMax = (1L << level) - 1
-    def clamp(c: Column) = greatest(lit(0L), least(lit(nMax), c))
-    val cx = clamp(floor((lon + 180.0) / 360.0 * n).cast("long"))
-    val cy = clamp(floor((lat + 90.0) / 180.0 * n).cast("long"))
-    lit(level.toLong << 58) + shiftleft(cx, 29) + cy
-  }
+  def cellCol(lon: Column, lat: Column, level: Int): Column =
+    lit(level.toLong << 58) + shiftleft(CellGrid.cellX(lon, level), 29) + CellGrid.cellY(lat, level)
 
   /** Counts per cell at levels finest, finest-1, ..., finest-depth (the
     * packed id carries its level). One full-data aggregate at the finest

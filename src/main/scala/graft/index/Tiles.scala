@@ -7,25 +7,20 @@ package graft.index
   *
   * Formula kept as a fixed IEEE op sequence (matching the oracle SQL):
   *   n  = 2^z
-  *   tx = floor((lon + 180.0) / 360.0 * n)
+  *   tx = floor((lon + 180.0) / 360.0 * n)   ([[CellGrid.cellX]] at level z)
   *   ty = floor((1.0 - ln(tan(rad(lat)) + 1.0 / cos(rad(lat))) / pi) / 2.0 * n)
   */
 object Tiles {
-  def tileX(lon: Double, z: Int): Long = {
-    val n = (1L << z).toDouble
-    clamp(math.floor((lon + 180.0) / 360.0 * n).toLong, z)
-  }
+  def tileX(lon: Double, z: Int): Long = CellGrid.cellX(lon, z)
 
   def tileY(lat: Double, z: Int): Long = {
     val n = (1L << z).toDouble
     val r = math.toRadians(lat)
     val raw = math.floor((1.0 - math.log(math.tan(r) + 1.0 / math.cos(r)) / math.Pi) / 2.0 * n)
-    clamp(raw.toLong, z)
+    math.max(0L, math.min((1L << z) - 1, raw.toLong))
   }
 
   def tile(lon: Double, lat: Double, z: Int): (Long, Long) = (tileX(lon, z), tileY(lat, z))
-
-  private def clamp(v: Long, z: Int): Long = math.max(0L, math.min((1L << z) - 1, v))
 
   /** Tile bounds in lon/lat degrees: (minLon, minLat, maxLon, maxLat). */
   def bounds(z: Int, tx: Long, ty: Long): (Double, Double, Double, Double) = {

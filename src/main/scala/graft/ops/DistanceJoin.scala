@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.index.CellGrid
 
 /** Point–point distance join (`ST_DWithin` analog, the "range join" class):
   * all pairs (l, r) with euclidean distance <= d, without a cross join.
@@ -41,19 +42,15 @@ object DistanceJoin {
     val w = 360.0 / n; val h = 180.0 / n
     val nMax = (1L << level) - 1
 
-    def cellX(c: Column) = greatest(lit(0L), least(lit(nMax), floor((c + 180.0) / 360.0 * n).cast("long")))
-    def cellY(c: Column) = greatest(lit(0L), least(lit(nMax), floor((c + 90.0) / 180.0 * n).cast("long")))
-
-    val r = right
-      .withColumn("_cell", shiftleft(cellX(col(rx)), 32) + cellY(col(ry)))
+    val r = right.withColumn("_cell", PipJoin.pointCellKey(col(rx), col(ry), level))
 
     // 3x3 ring around the left point's cell, pre-filtered to rectangles the
     // radius-d disk can reach (pure column math, codegen'd before explode)
     val dxdy = array((for (dx <- -1 to 1; dy <- -1 to 1) yield
       struct(lit(dx.toLong).as("dx"), lit(dy.toLong).as("dy"))): _*)
     val l0 = left
-      .withColumn("_cx", cellX(col(lx)))
-      .withColumn("_cy", cellY(col(ly)))
+      .withColumn("_cx", CellGrid.cellX(col(lx), level))
+      .withColumn("_cy", CellGrid.cellY(col(ly), level))
       .withColumn("_nb", explode(dxdy))
       .withColumn("_nx", col("_cx") + col("_nb.dx"))
       .withColumn("_ny", col("_cy") + col("_nb.dy"))
@@ -103,11 +100,7 @@ object DistanceJoin {
     val sinA = math.sin(a)
     val havA = { val s = math.sin(a / 2); s * s }
 
-    def cellX(c: Column) = greatest(lit(0L), least(lit(nMax), floor((c + 180.0) / 360.0 * n).cast("long")))
-    def cellY(c: Column) = greatest(lit(0L), least(lit(nMax), floor((c + 90.0) / 180.0 * n).cast("long")))
-
-    val r = right
-      .withColumn("_cell", shiftleft(cellX(col(rx)), 32) + cellY(col(ry)))
+    val r = right.withColumn("_cell", PipJoin.pointCellKey(col(rx), col(ry), level))
 
     // per-row x half-span in cells: lon reach at the band's most poleward
     // latitude (|lat| + a + one cell of slack); beyond the polar cutoff the
@@ -127,8 +120,8 @@ object DistanceJoin {
     val sx = least(lit(nL / 2), ceil(reachDeg / w).cast("long") + 1)
 
     val l1 = left
-      .withColumn("_cx", cellX(col(lx)))
-      .withColumn("_cy", cellY(col(ly)))
+      .withColumn("_cx", CellGrid.cellX(col(lx), level))
+      .withColumn("_cy", CellGrid.cellY(col(ly), level))
       .withColumn("_sx", sx)
       .withColumn("_nx", explode(array_distinct(transform(
         sequence(-col("_sx"), col("_sx")), o => pmod(col("_cx") + o, lit(nL))))))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.sources.WebPagesSynth
 
 /** Web-page geo-entity extraction (north-rule operator, SURVEY.md §2b):
   * each page row yields 0..n entity points parsed from `GEO(<lonm>;<latm>)`
@@ -48,8 +49,8 @@ object EntityExtract {
         posexplode(GeoMentionsExpr.geoMentions(col("text"))).as(Seq("ent_idx", "m")))
       .withColumn("lonm", col("m.lonm"))
       .withColumn("latm", col("m.latm"))
-      .withColumn("lon", col("lonm") / 20.0 - 180.0)
-      .withColumn("lat", col("latm") / 20.0 - 70.0)
+      .withColumn("lon", WebPagesSynth.lonOf(col("lonm")))
+      .withColumn("lat", WebPagesSynth.latOf(col("latm")))
       .drop("m")
   }
 
@@ -63,8 +64,8 @@ object EntityExtract {
           .as(Seq("ent_idx", "mention")))
       .withColumn("lonm", regexp_extract(col("mention"), "GEO\\(([0-9]+);", 1).cast("long"))
       .withColumn("latm", regexp_extract(col("mention"), ";([0-9]+)\\)", 1).cast("long"))
-      .withColumn("lon", col("lonm") / 20.0 - 180.0)
-      .withColumn("lat", col("latm") / 20.0 - 70.0)
+      .withColumn("lon", WebPagesSynth.lonOf(col("lonm")))
+      .withColumn("lat", WebPagesSynth.latOf(col("latm")))
       .drop("mention")
   }
 }

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.index.CellGrid
 import graft.sources.WebPagesSynth
 
 /** Origin-destination flow aggregation (the flow-map / spatial-interaction
@@ -18,17 +19,14 @@ import graft.sources.WebPagesSynth
   * bounded by the 4096^2 cell-pair space regardless of edge count. */
 object FlowMap {
 
-  private def cell64(v: Column, off: Double, span: Double): Column =
-    greatest(lit(0L), least(lit(63L), floor((v + off) / span * 64.0).cast("long")))
-
   /** q129 entry: OD flows of the synthetic link graph over 64x64 cells.
     * Output: (scx, scy, dcx, dcy, flows), all BIGINT. */
   def odFlows(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val lon0 = WebPagesSynth.lonm(col("doc_id"), lit(0L)) / 20.0 - 180.0
-    val lat0 = WebPagesSynth.latm(col("doc_id"), lit(0L)) / 20.0 - 70.0
+    val lon0 = WebPagesSynth.lonOf(WebPagesSynth.lonm(col("doc_id"), lit(0L)))
+    val lat0 = WebPagesSynth.latOf(WebPagesSynth.latm(col("doc_id"), lit(0L)))
     val loc = docs.select(col("doc_id"),
-      cell64(lon0, 180.0, 360.0).as("cx"), cell64(lat0, 90.0, 180.0).as("cy"))
+      CellGrid.cellX(lon0, 6).as("cx"), CellGrid.cellY(lat0, 6).as("cy"))
     LinkGraph.synthEdges(docs)
       .join(loc.select(col("doc_id").as("src"), col("cx").as("scx"), col("cy").as("scy")), "src")
       .join(loc.select(col("doc_id").as("dst"), col("cx").as("dcx"), col("cy").as("dcy")), "dst")

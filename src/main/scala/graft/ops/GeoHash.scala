@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.index.CellGrid
 
 /** Geohash encoding (public Gustavo Niemeyer scheme): base-32 string cell
   * address with the prefix-containment property (a cell's geohash prefixes
@@ -31,8 +32,8 @@ object GeoHash {
     * even so lon/lat split the bits evenly (6 -> 15+15 bits). */
   def encode(lon: Column, lat: Column, chars: Int = 6): Column = {
     val nb = bitsPerAxis(chars)
-    val ix = clamp(floor((lon + 180.0) / 360.0 * (1L << nb).toDouble).cast("long"), nb)
-    val iy = clamp(floor((lat + 90.0) / 180.0 * (1L << nb).toDouble).cast("long"), nb)
+    val ix = CellGrid.cellX(lon, nb)
+    val iy = CellGrid.cellY(lat, nb)
     // Morton interleave, lon in the odd (higher) bit positions
     val g = (0 until nb).map { bit =>
       shiftleft(shiftright(ix, bit).bitwiseAND(lit(1L)), 2 * bit + 1)
@@ -43,9 +44,6 @@ object GeoHash {
       substr(lit(Alphabet), (shiftright(g, sh).bitwiseAND(lit(31L)) + 1).cast("int"), lit(1))
     }: _*)
   }
-
-  private def clamp(c: Column, nb: Int): Column =
-    greatest(lit(0L), least(lit((1L << nb) - 1), c))
 
   // ---- DuckDB replica, staged for CTE composition ----
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.index.CellGrid
 
 /** Grid-density spatial clustering — the distributed DBSCAN family
   * (grid-cell variant: STING / CLIQUE / GriT-DBSCAN shape). Points land in
@@ -53,11 +54,8 @@ object GridCluster {
               level: Int, minPts: Long): DataFrame = {
     require(level >= 1 && level <= 29, s"level out of range: $level")
     val n = 1L << level
-    val cx = greatest(lit(0L), least(lit(n - 1),
-      floor((col(lonCol) + 180.0) / 360.0 * n.toDouble).cast("long")))
-    val cy = greatest(lit(0L), least(lit(n - 1),
-      floor((col(latCol) + 90.0) / 180.0 * n.toDouble).cast("long")))
-    val pts = points.withColumn("_gkey", cx * n + cy)
+    val pts = points.withColumn("_gkey",
+      CellGrid.cellX(col(lonCol), level) * n + CellGrid.cellY(col(latCol), level))
 
     val dense = pts.groupBy("_gkey").agg(count(lit(1)).as("_cnt"))
       .filter(col("_cnt") >= minPts)

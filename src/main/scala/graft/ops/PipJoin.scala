@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.Point
 import graft.geom.WkbCodec
@@ -93,15 +93,9 @@ object PipJoin {
       .drop("cell", "salt", "geom", "cx", "cy", "r")
   }
 
-  def pointCellKey(lon: org.apache.spark.sql.Column, lat: org.apache.spark.sql.Column,
-                   level: Int): org.apache.spark.sql.Column = {
-    val n = (1L << level).toDouble
-    val cx = greatest(lit(0L), least(lit((1L << level) - 1),
-      floor((lon + 180.0) / 360.0 * n).cast("long")))
-    val cy = greatest(lit(0L), least(lit((1L << level) - 1),
-      floor((lat + 90.0) / 180.0 * n).cast("long")))
-    shiftleft(cx, 32) + cy
-  }
+  /** The one `(cx << 32) + cy` equi-join key of a point's grid cell. */
+  def pointCellKey(lon: Column, lat: Column, level: Int): Column =
+    shiftleft(CellGrid.cellX(lon, level), 32) + CellGrid.cellY(lat, level)
 
   /** Relative-threshold hot-cell sketch over an (already sampled) point set
     * carrying a `cell` column: per-cell counts partial-aggregate to

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.index.CellGrid
 
 /** Spatial autocorrelation — global Moran's I over the 64x64 cell lattice
   * (the ESDA hot-spot statistic: is the entity-density surface clustered,
@@ -27,13 +28,9 @@ import org.apache.spark.sql.functions._
   */
 object SpatialStats {
 
-  val Grid = 64
+  val Level = 6
+  val Grid: Int = 1 << Level
   val NCells: Long = (Grid * Grid).toLong
-
-  private def cellX(lon: Column): Column =
-    greatest(lit(0L), least(lit(Grid - 1L), floor((lon + 180.0) / 360.0 * Grid).cast("long")))
-  private def cellY(lat: Column): Column =
-    greatest(lit(0L), least(lit(Grid - 1L), floor((lat + 90.0) / 180.0 * Grid).cast("long")))
 
   /** One row: (n_cells, t, sum_z2, w_sum, sum_wzz) — all BIGINT, exact. */
   def moranNumerators(spark: SparkSession, ents: DataFrame): DataFrame = {
@@ -156,7 +153,8 @@ object SpatialStats {
     * to repeated subtrees). The checkpoint is lattice-sized regardless of
     * fact-table size, so it costs O(N) memory at any scale. */
   private def zCells(spark: SparkSession, ents: DataFrame): DataFrame = {
-    val counts = ents.select(cellX(col("lon")).as("cx"), cellY(col("lat")).as("cy"))
+    val counts = ents.select(CellGrid.cellX(col("lon"), Level).as("cx"),
+      CellGrid.cellY(col("lat"), Level).as("cy"))
       .groupBy("cx", "cy").agg(count(lit(1)).as("n"))
     val lattice = spark.range(NCells)
       .select((col("id") / Grid).cast("long").as("cx"), (col("id") % Grid).as("cy"))

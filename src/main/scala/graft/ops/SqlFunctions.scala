@@ -1,12 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftShim, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.SparkSessionExtensions
 import graft.geom.{GeoJsonDecode, Mercator, WkbCodec}
+import graft.index.CellGrid
 
 /** SQL function surface (`st_*`). Pure-math functions are built as
   * COMPOSITIONS of built-in Catalyst expressions — they constant-fold and
@@ -20,35 +21,13 @@ object SqlFunctions {
 
   // ---- pure-math builders (composed built-ins; full codegen) ----
   private def d(e: Expression) = Cast(e, DoubleType)
-  private def clamp(e: Expression, max: Long) =
-    Greatest(Seq(Literal(0L), Least(Seq(Literal(max), Cast(e, LongType)))))
-
-  /** floor((lon + 180) / 360 * 2^level), clamped — matches CellGrid.cellX. */
-  def cellX(lon: Expression, level: Int): Expression =
-    clamp(Floor(Multiply(Divide(Add(d(lon), Literal(180.0)), Literal(360.0)),
-      Literal((1L << level).toDouble))), (1L << level) - 1)
-
-  def cellY(lat: Expression, level: Int): Expression =
-    clamp(Floor(Multiply(Divide(Add(d(lat), Literal(90.0)), Literal(180.0)),
-      Literal((1L << level).toDouble))), (1L << level) - 1)
+  private def co(e: Expression): Column = GraftShim.column(e)
+  private def ex(c: Column): Expression = GraftShim.converted(c)
 
   def cellId(lon: Expression, lat: Expression, level: Int): Expression =
     Add(Add(Literal(level.toLong << 58),
-      Multiply(cellX(lon, level), Literal(1L << 29))), cellY(lat, level))
-
-  def tileX(lon: Expression, z: Int): Expression = cellXLike(lon, z)
-  private def cellXLike(lon: Expression, z: Int): Expression =
-    clamp(Floor(Multiply(Divide(Add(d(lon), Literal(180.0)), Literal(360.0)),
-      Literal((1L << z).toDouble))), (1L << z) - 1)
-
-  /** floor((1 - ln(tan(rad)+1/cos(rad))/pi)/2 * 2^z), clamped. */
-  def tileY(lat: Expression, z: Int): Expression = {
-    val r = Multiply(d(lat), Literal(math.Pi / 180.0))
-    val inner = Add(Tan(r), Divide(Literal(1.0), Cos(r)))
-    val merc = Divide(Log(inner), Literal(math.Pi))
-    clamp(Floor(Multiply(Divide(Subtract(Literal(1.0), merc), Literal(2.0)),
-      Literal((1L << z).toDouble))), (1L << z) - 1)
-  }
+      Multiply(ex(CellGrid.cellX(co(d(lon)), level)), Literal(1L << 29))),
+      ex(CellGrid.cellY(co(d(lat)), level)))
 
   def mercX(lon: Expression): Expression =
     Multiply(d(lon), Literal(Mercator.EarthRadius * math.Pi / 180.0))
@@ -85,24 +64,6 @@ object SqlFunctions {
       WkbCodec.write(GeoJsonDecode.parse(v.toString))
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
     override def prettyName: String = "st_geomfromgeojson"
-  }
-
-  case class StGeometryType(child: Expression) extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = StringType
-    override def nullSafeEval(v: Any): Any =
-      org.apache.spark.unsafe.types.UTF8String.fromString(
-        WkbCodec.read(v.asInstanceOf[Array[Byte]]).getGeometryType)
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-    override def prettyName: String = "st_geometrytype"
-  }
-
-  case class StAsText(child: Expression) extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = StringType
-    override def nullSafeEval(v: Any): Any =
-      org.apache.spark.unsafe.types.UTF8String.fromString(
-        WkbCodec.read(v.asInstanceOf[Array[Byte]]).toText)
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-    override def prettyName: String = "st_astext"
   }
 
   /** Per-coordinate Mercator reproject of a WKB geometry (P3 as a column
@@ -305,16 +266,16 @@ object SqlFunctions {
     "st_buffer" -> (es => StBuffer(es(0), es(1))),
     "st_clip_bbox" -> (es => StClipBbox(es)),
     "st_simplify" -> (es => StSimplify(es(0), es(1))),
-    "st_cell_x" -> (es => cellX(es(0), intArg(es(1), "level"))),
-    "st_cell_y" -> (es => cellY(es(0), intArg(es(1), "level"))),
+    "st_cell_x" -> (es => ex(CellGrid.cellX(co(d(es(0))), intArg(es(1), "level")))),
+    "st_cell_y" -> (es => ex(CellGrid.cellY(co(d(es(0))), intArg(es(1), "level")))),
     "st_cell_id" -> (es => cellId(es(0), es(1), intArg(es(2), "level"))),
-    "st_tile_x" -> (es => tileX(es(0), intArg(es(1), "zoom"))),
-    "st_tile_y" -> (es => tileY(es(0), intArg(es(1), "zoom"))),
+    "st_tile_x" -> (es => ex(TileAssign.tileX(co(d(es(0))), intArg(es(1), "zoom")))),
+    "st_tile_y" -> (es => ex(TileAssign.tileY(co(d(es(0))), intArg(es(1), "zoom")))),
     "st_merc_x" -> (es => mercX(es(0))),
     "st_merc_y" -> (es => mercY(es(0))),
     "st_geomfromgeojson" -> (es => StGeomFromGeoJson(es(0))),
-    "st_geometrytype" -> (es => StGeometryType(es(0))),
-    "st_astext" -> (es => StAsText(es(0))),
+    "st_geometrytype" -> (es => StUnaryGeom(es(0), "st_geometrytype", _.getGeometryType, StringType)),
+    "st_astext" -> (es => StUnaryGeom(es(0), "st_astext", _.toText, StringType)),
     "st_transform" -> (es => StTransform(es(0), es(1), es(2))),
     "st_contains" -> (es => StContains(es(0), es(1))),
     "st_point" -> (es => StPoint(es(0), es(1))),

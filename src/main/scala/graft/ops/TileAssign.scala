@@ -2,27 +2,25 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.index.CellGrid
 
 /** Raster<->vector tile assignment (north-rule operator): map points to
   * slippy-map Web-Mercator tiles (z, x, y). Pure native-function column
   * math (whole-stage codegen, no UDF), written as the exact IEEE op
   * sequence mirrored by the DuckDB oracle and by [[graft.index.Tiles]].
+  * Tile x is the equirectangular grid's x at level z
+  * ([[graft.index.CellGrid]]); tile y, the Mercator row, is defined here.
   */
 object TileAssign {
 
-  def tileX(lon: Column, z: Int): Column = {
-    val n = (1L << z).toDouble
-    clampTile(floor((lon + 180.0) / 360.0 * n).cast("long"), z)
-  }
+  def tileX(lon: Column, z: Int): Column = CellGrid.cellX(lon, z)
 
   def tileY(lat: Column, z: Int): Column = {
     val n = (1L << z).toDouble
     val r = radians(lat)
-    clampTile(floor((lit(1.0) - log(tan(r) + lit(1.0) / cos(r)) / math.Pi) / 2.0 * n).cast("long"), z)
+    greatest(lit(0L), least(lit((1L << z) - 1),
+      floor((lit(1.0) - log(tan(r) + lit(1.0) / cos(r)) / math.Pi) / 2.0 * n).cast("long")))
   }
-
-  private def clampTile(c: Column, z: Int): Column =
-    greatest(lit(0L), least(lit((1L << z) - 1), c))
 
   /** Adds tile_z/tile_x/tile_y columns to any frame with (lon, lat). */
   def assign(points: DataFrame, z: Int): DataFrame =

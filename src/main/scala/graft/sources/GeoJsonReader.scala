@@ -83,45 +83,16 @@ object GeoJsonReader {
     schemaFromFirstFeature(if (feats.size() > 0) Some(feats.get(0)) else None)
   }
 
-  /** Streaming schema inference: reads the token stream only as far as the
-    * FIRST feature (reference semantics), so inferring from a multi-GB file
-    * costs a few KB of I/O instead of a whole-file DOM. */
+  /** Streaming schema inference: the first element of [[featureStream]],
+    * so inferring from a multi-GB file costs a few KB of I/O instead of a
+    * whole-file DOM. Every stream `open` returns is closed before this
+    * returns, the DOM fallback's too. */
   def inferSchemaStream(open: () => java.io.InputStream): StructType = {
-    import com.fasterxml.jackson.core.{JsonParser, JsonToken}
-    val in = open()
-    val p: JsonParser = mapper.getFactory.createParser(in)
+    val opened = scala.collection.mutable.ArrayBuffer.empty[java.io.InputStream]
     try {
-      if (p.nextToken() != JsonToken.START_OBJECT) {
-        System.err.println("[geojson] not a FeatureCollection; empty schema")
-        return StructType(Seq(StructField("geom", BinaryType, nullable = true)))
-      }
-      var isFc = false
-      while (p.nextToken() == JsonToken.FIELD_NAME) {
-        p.currentName() match {
-          case "type" =>
-            p.nextToken()
-            if (p.getText != "FeatureCollection") {
-              System.err.println("[geojson] not a FeatureCollection; empty schema")
-              return StructType(Seq(StructField("geom", BinaryType, nullable = true)))
-            }
-            isFc = true
-          case "features" =>
-            if (!isFc) { // `type` after `features`: fall back to DOM
-              p.close(); in.close()
-              val src = scala.io.Source.fromInputStream(open(), "UTF-8")
-              val json = try src.mkString finally src.close()
-              return inferSchema(json)
-            }
-            if (p.nextToken() != JsonToken.START_ARRAY)
-              return schemaFromFirstFeature(None)
-            return schemaFromFirstFeature(
-              if (p.nextToken() == JsonToken.START_OBJECT) Some(mapper.readTree[JsonNode](p))
-              else None)
-          case _ => p.nextToken(); p.skipChildren()
-        }
-      }
-      schemaFromFirstFeature(None)
-    } finally { p.close(); in.close() }
+      val feats = featureStream { () => val in = open(); opened += in; in }
+      schemaFromFirstFeature(feats.nextOption())
+    } finally opened.foreach(_.close())
   }
 
   /** Executor-safe parse of one FeatureCollection string into Rows. */

@@ -4,6 +4,8 @@ import java.io.{InputStream, RandomAccessFile}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 
+import scala.util.Using
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.InputPartition
@@ -52,8 +54,10 @@ class ShapefileSource extends GeoFileSource[ShpSplit] {
   override protected def extensions: Seq[String] = Seq(".shp")
 
   override protected def inferSchema(files: Seq[String],
-                                     options: CaseInsensitiveStringMap): StructType =
-    ShapefileReader.inferSchema(Files.readAllBytes(Paths.get(dbfPath(files.head))))
+                                     options: CaseInsensitiveStringMap): StructType = {
+    val dbf = dbfPath(files.head)
+    Using.resource(new RandomAccessFile(dbf, "r"))(raf => ShapefileReader.inferSchema(dbfHeader(raf, dbf)._1))
+  }
 
   override protected[v2] def planSplits(files: Seq[String], options: CaseInsensitiveStringMap,
                                         scan: ScanOptions): Seq[ShpSplit] = files.flatMap { shp =>
@@ -83,12 +87,10 @@ class ShapefileSource extends GeoFileSource[ShpSplit] {
       val dbf = dbfPath(split.shpPath)
       val raf = new RandomAccessFile(dbf, "r")
       try {
-        val hb = ByteBuffer.wrap(readRange(raf, dbf, 0, 32)).order(ByteOrder.LITTLE_ENDIAN)
-        val headerSize = hb.getShort(8) & 0xffff
-        val recSize = hb.getShort(10) & 0xffff
-        val fields = ShapefileReader.dbfFields(readRange(raf, dbf, 0, headerSize))
+        val (header, recSize) = dbfHeader(raf, dbf)
+        val fields = ShapefileReader.dbfFields(header)
         val n = split.endRec - split.startRec
-        val buf = readRange(raf, dbf, headerSize.toLong + split.startRec.toLong * recSize, n * recSize)
+        val buf = readRange(raf, dbf, header.length.toLong + split.startRec.toLong * recSize, n * recSize)
         // a deleted record is null and is skipped with its shape
         (0 until n).map(i => ShapefileReader.dbfRecord(buf, i * recSize, fields))
       } finally raf.close()
@@ -143,6 +145,14 @@ private object ShapefileSource {
     val buf = new Array[Byte](len)
     raf.seek(start); raf.readFully(buf)
     buf
+  }
+
+  /** The `.dbf` header (the 32-byte prefix, then all `headerSize` bytes,
+    * field descriptors included) and the record size. Schema inference
+    * reads only this, never the records. */
+  def dbfHeader(raf: RandomAccessFile, dbf: String): (Array[Byte], Int) = {
+    val hb = ByteBuffer.wrap(readRange(raf, dbf, 0, 32)).order(ByteOrder.LITTLE_ENDIAN)
+    (readRange(raf, dbf, 0, hb.getShort(8) & 0xffff), hb.getShort(10) & 0xffff)
   }
 
   /** Per-record [contentOffsetBytes, contentLenBytes] from the `.shx`

@@ -35,16 +35,9 @@ object SpatialLayout {
   def mortonCol(cx: Column, cy: Column): Column =
     spreadCol(cx).bitwiseOR(shiftleft(spreadCol(cy), 1))
 
-  /** Morton cell id of (lon, lat) at `level` — same clamped floor math as
-    * [[CellGrid.cellX]]/[[CellGrid.cellY]]. */
-  def cellCol(lon: Column, lat: Column, level: Int): Column = {
-    val n = (1L << level).toDouble
-    val nMax = (1L << level) - 1
-    def clamp(c: Column) = greatest(lit(0L), least(lit(nMax), c))
-    val cx = clamp(floor((lon + 180.0) / 360.0 * n).cast("long"))
-    val cy = clamp(floor((lat + 90.0) / 180.0 * n).cast("long"))
-    mortonCol(cx, cy)
-  }
+  /** Morton id of the [[CellGrid]] cell holding (lon, lat) at `level`. */
+  def cellCol(lon: Column, lat: Column, level: Int): Column =
+    mortonCol(CellGrid.cellX(lon, level), CellGrid.cellY(lat, level))
 
   /** Merged inclusive Morton id ranges covering the bbox at `level`. */
   def mortonRanges(minLon: Double, minLat: Double,

@@ -8,4 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  /** `c` as a catalyst expression converted now: [[expression]] leaves the
+    * conversion to the Dataset that receives it, and a SQL function
+    * builder's result never passes through one. */
+  def converted(c: Column): Expression = classic.ColumnNodeToExpressionConverter(c.node)
 }

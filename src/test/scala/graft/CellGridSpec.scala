@@ -1,11 +1,14 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.col
 import graft.index.{CellGrid, Tiles}
+import graft.ops.TileAssign
 
 /** Property-style tests with a seeded generator (scalatestplus bridge is
   * not on the offline classpath, so sampling is hand-rolled). */
-class CellGridSpec extends AnyFunSuite {
+class CellGridSpec extends AnyFunSuite with SparkTest {
 
   private val rnd = new scala.util.Random(42)
   private def lon() = rnd.nextDouble() * 360.0 - 180.0
@@ -85,5 +88,23 @@ class CellGridSpec extends AnyFunSuite {
       assert(lo >= x0 - 1e-9 && lo <= x1 + 1e-9, s"($lo,$la,$z)")
       assert(la >= y0 - 1e-9 && la <= y1 + 1e-9, s"($lo,$la,$z)")
     }
+  }
+
+  test("Column cellX/cellY and TileAssign tile x/y equal the scalar forms") {
+    import spark.implicits._
+    val lons = Seq(-200.0, -180.0, -0.0, 0.0, math.nextDown(180.0), 180.0, 200.0)
+    val lats = Seq(-100.0, -90.0, 0.0, math.nextDown(90.0), 90.0, 100.0)
+    val tileLats = Seq(-89.9, -85.0511, 0.0, 85.0511, 89.9)
+    val levels = Seq(0, 1, 6, 8, 10, 15, 29, 30) // 30: a 12-char geohash axis
+    val zooms = Seq(0, 8, 13)
+    // (Column form, scalar form, the inputs it is checked on)
+    val forms: Seq[(Column, Double => Long, Seq[Double])] =
+      levels.flatMap(l => Seq((CellGrid.cellX(col("v"), l), CellGrid.cellX(_: Double, l), lons),
+        (CellGrid.cellY(col("v"), l), CellGrid.cellY(_: Double, l), lats))) ++
+      zooms.flatMap(z => Seq((TileAssign.tileX(col("v"), z), Tiles.tileX(_: Double, z), lons),
+        (TileAssign.tileY(col("v"), z), Tiles.tileY(_: Double, z), tileLats)))
+    val rows = (lons ++ lats ++ tileLats).toDF("v").select(col("v") +: forms.map(_._1): _*).collect()
+    for (r <- rows; ((_, scalar, inputs), i) <- forms.zipWithIndex; v = r.getDouble(0) if inputs.contains(v))
+      assert(r.getLong(i + 1) === scalar(v), s"v=$v form $i")
   }
 }

@@ -177,12 +177,16 @@ class SourcesV2Spec extends AnyFunSuite with SparkTest {
   }
 
   test("truncated .shp or .dbf fails the load with GraftError.Format naming the file") {
-    for (ext <- Seq("shp", "dbf")) {
+    // bytes kept: all but the last record's tail; for the .dbf also a cut
+    // inside its 32-byte prefix and one inside its first field descriptor
+    val cuts: Seq[(String, Array[Byte] => Int)] =
+      Seq(("shp", _.length - 3), ("dbf", _.length - 3), ("dbf", _ => 20), ("dbf", _ => 32 + 16))
+    for ((ext, keep) <- cuts) {
       val d = Files.createTempDirectory(s"graft-shp-cut-$ext").toString
       val shp = FileFixtures.writeShapefile(d)
       val part = Paths.get(s"$d/fix.$ext")
       val bytes = Files.readAllBytes(part)
-      Files.write(part, bytes.take(bytes.length - 3))
+      Files.write(part, bytes.take(keep(bytes)))
       val e = intercept[GraftError.Format](Main.run(spark, shp, s"$d/t"))
       assert(e.getMessage.contains(s"fix.$ext"), e.getMessage)
     }
