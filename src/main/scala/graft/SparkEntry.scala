@@ -23,7 +23,7 @@ object SparkEntry {
   /** Cell level for tile-content clipping (q64/q65): the deepest
     * equirectangular level whose cell bounds stay on the x80 integer
     * lattice in BOTH axes (180*80/2^L integer needs L <= 6), which is what
-    * keeps the Sutherland-Hodgman clip exact — see [[ops.TileClipExpr]]. */
+    * keeps the Sutherland-Hodgman clip exact — see [[ops.TileClip.clipCells]]. */
   val TileClipLevel = 6
 
   /** recall@5 floors for q76/q77 over the planted-neighborhood corpus
@@ -604,7 +604,7 @@ object SparkEntry {
     // co-started trails — start-block equi-join candidates over trail-array
     // dims (one collect_list exchange packs each trail into a flat BIGINT
     // array), both directed max-of-mins computed by the native
-    // HausdorffSqExpr in one CPU-local loop per pair (r5 re-plan; the old
+    // `hausdorff_sq` kernel in one CPU-local loop per pair (r5 re-plan; the old
     // side-tagged explode shuffled every point per pair)
     "q133_hausdorff_pairs" -> ((s, dir) =>
       TrajectorySim.hausdorffPairs(ents(s, dir).select("url", "ent_idx", "lonm", "latm"))),

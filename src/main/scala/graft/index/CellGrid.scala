@@ -1,7 +1,7 @@
 package graft.index
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{floor, greatest, least, lit}
+import org.apache.spark.sql.functions.{floor, greatest, least, lit, when}
 
 /** Hierarchical cell index over lon/lat (H3/S2-style generalization the
   * north rule asks for; the reference has no index — this is the scale
@@ -38,16 +38,21 @@ object CellGrid {
   }
 
   /** Column form of the scalar [[cellX]], same op order: scale, `floor`,
-    * `.cast("long")`, then `greatest(0, least(2^level - 1, _))`. */
+    * `.cast("long")`, then `greatest(0, least(2^level - 1, _))`. NULL for
+    * a NULL lon. */
   def cellX(lon: Column, level: Int): Column = axis(lon, 180.0, 360.0, level)
 
   /** Column form of the scalar [[cellY]]. */
   def cellY(lat: Column, level: Int): Column = axis(lat, 90.0, 180.0, level)
 
-  private def axis(v: Column, off: Double, span: Double, level: Int): Column = {
-    val n = 1L << level
-    greatest(lit(0L), least(lit(n - 1), floor((v + off) / span * n.toDouble).cast("long")))
-  }
+  private def axis(v: Column, off: Double, span: Double, level: Int): Column =
+    clamp(v, floor((v + off) / span * (1L << level).toDouble).cast("long"), level)
+
+  /** `raw` clamped to the axis [0, 2^level - 1], NULL where the input `v`
+    * is NULL: `greatest`/`least` skip a NULL argument, so without the
+    * guard a NULL coordinate would land in the last cell. */
+  private[graft] def clamp(v: Column, raw: Column, level: Int): Column =
+    when(v.isNotNull, greatest(lit(0L), least(lit((1L << level) - 1), raw)))
 
   def pack(cx: Long, cy: Long, level: Int): Long = {
     require(level >= 0 && level <= MaxLevel, s"level $level")

@@ -174,7 +174,7 @@ object Dedup {
 
   def shingled(corpus: DataFrame): DataFrame =
     // per-doc-distinct shingles computed INSIDE the row (native
-    // WordShingles): (doc_id, sh) rows are globally distinct by
+    // `word_shingles`): (doc_id, sh) rows are globally distinct by
     // construction (doc_id is in every row), so the old global
     // `.distinct()` — a full shuffle of the widest string stream in the
     // dedup suite, deduping only within-document repeats — is gone. This
@@ -197,7 +197,7 @@ object Dedup {
 
   /** Row-local production signature m0..m11: min_i over the doc's shingles
     * of `(xxhash64(sh) mod P * A_i + B_i) mod P`, computed INSIDE the row
-    * by the native [[MinhashSig]] expression — no explode, no distinct
+    * by the native [[MinhashExpressions.minhashSig]] kernel — no explode, no distinct
     * shuffle, no groupBy shuffle, no per-shingle allocation. min over the
     * shingle stream WITH duplicates == min over distinct shingles (min is
     * duplicate-insensitive), so this is bit-identical to
@@ -263,7 +263,7 @@ object Dedup {
   def simhash(corpus: DataFrame): DataFrame = {
     // same shared-subtree materialization as minhashPairs: toks feeds both
     // the vocab build and the join probe
-    // per-doc-distinct tokens row-locally (native WordShingles n=1): same
+    // per-doc-distinct tokens row-locally (native `word_shingles` n=1): same
     // rows as tokens().distinct() with no dedup shuffle
     val toks = corpus.select(col("doc_id"),
       explode(MinhashExpressions.distinctShingles(col("text"), 1)).as("tok"))

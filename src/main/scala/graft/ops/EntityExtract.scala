@@ -37,7 +37,7 @@ object EntityExtract {
     * (url, ent_idx int, lonm, latm long, lon, lat double, text, lang).
     * Marker order in text defines ent_idx.
     *
-    * r6: the marker scan is the native [[GeoMentionsExpr]] — one
+    * r6: the marker scan is the native [[GeoMentions]] — one
     * byte-level pass per page instead of three java.util.regex
     * evaluations and a mention string per match (extraction runs once per
     * page at 10^12 pages and inside the timed flagship pipeline).
@@ -46,7 +46,7 @@ object EntityExtract {
   def entities(pages: DataFrame): DataFrame = {
     pages
       .select(col("url"), col("text"), col("lang"),
-        posexplode(GeoMentionsExpr.geoMentions(col("text"))).as(Seq("ent_idx", "m")))
+        posexplode(GeoMentions.geoMentions(col("text"))).as(Seq("ent_idx", "m")))
       .withColumn("lonm", col("m.lonm"))
       .withColumn("latm", col("m.latm"))
       .withColumn("lon", WebPagesSynth.lonOf(col("lonm")))

@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.{GraftShim => ExpressionUtils}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types._
 import graft.index.CoverIndex
 import graft.geom.WkbCodec
 
@@ -17,9 +18,10 @@ import graft.geom.WkbCodec
   * fact row. At 10^12 rows that garbage is the scaling bottleneck (profiled
   * locally: worker JVMs burn ~half their CPU in GC). These expressions
   * return `UnsafeArrayData.fromPrimitiveArray` directly — one flat buffer,
-  * zero boxing. `CodegenFallback` is fine: the JTS/grid probe dominates,
-  * and fallback still runs inside the surrounding whole-stage-codegen'd
-  * projection.
+  * zero boxing. They close over a broadcast, so they still generate no
+  * code, and the projection that holds one runs interpreted, outside
+  * whole-stage codegen. The stateless kernels are plain methods on
+  * [[GeoExpressions]], called through [[Kernel]].
   */
 case class PolyContainsExpr(left: Expression, right: Expression,
                             bc: Broadcast[CoverIndex])
@@ -45,65 +47,6 @@ case class KnnPoisExpr(left: Expression, right: Expression,
   override def prettyName: String = "st_knn_pois"
 }
 
-/** Polygon cover cells for the SHUFFLE pip-join's dim side: WKB -> packed
-  * (cx<<32|cy) cell keys at `level` (bbox cover + exact JTS intersects
-  * refine, [[CoverIndex.coverCells]]). Promoted from the last `udf(` on a
-  * join input path (r5 verdict item 7): as a ScalaUDF every polygon's WKB
-  * was boxed through CatalystTypeConverters and the Long cells re-boxed
-  * into a GenericArrayData; this reads the bytes off the InternalRow and
-  * returns one flat primitive buffer. Dim-side (runs once per polygon, not
-  * per fact row), so the win is hygiene + symmetry with the native
-  * probe-side refine, not scaling. */
-case class CoverCellsExpr(child: Expression, level: Int)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(wkb: Any): Any = {
-    val cells = CoverIndex.coverCells(WkbCodec.read(wkb.asInstanceOf[Array[Byte]]), level)
-    val out = new Array[Long](cells.length)
-    var i = 0
-    cells.foreach { case (cx, cy) => out(i) = (cx << 32) | cy; i += 1 }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "st_cover_cells"
-}
-
-/** Way-geometry build (the tail of the J1 node↔way join): WKB from the
-  * sorted (pos, lon, lat) struct array + the closed flag. The previous
-  * ScalaUDF form converted the whole struct array to `Seq[Row]` per way
-  * via CatalystTypeConverters (one boxed Row + two boxed Doubles per
-  * vertex); this reads lon/lat straight out of the InternalRow buffers.
-  * Byte-identical WKB (same [[WkbCodec]] writer, same rules: closed →
-  * Polygon if the auto-closed ring has ≥ 4 points, else LineString if
-  * ≥ 2 points; under-resolved ways keep geom = null — reference F1,
-  * `/root/reference/src/format/osmpbf.rs:71-100`). */
-case class WayWkbExpr(left: Expression, right: Expression)
-  extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def nullSafeEval(closed: Any, pts: Any): Any = {
-    val arr = pts.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val coords = new Array[(Double, Double)](n)
-    var i = 0
-    while (i < n) {
-      val s = arr.getStruct(i, 3)
-      coords(i) = (s.getDouble(1), s.getDouble(2))
-      i += 1
-    }
-    val cs = scala.collection.immutable.ArraySeq.unsafeWrapArray(coords)
-    if (closed.asInstanceOf[Boolean]) {
-      val ringLen = if (n > 0 && coords(0) != coords(n - 1)) n + 1 else n
-      if (ringLen >= 4) WkbCodec.write(WkbCodec.polygon(cs)) else null
-    } else {
-      if (n >= 2) WkbCodec.write(WkbCodec.lineString(cs)) else null
-    }
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "way_wkb"
-}
-
 /** Compact broadcastable node-coordinate map: ids sorted, coords in
   * parallel arrays, binary-search probe — half the heap of a boxed
   * HashMap and no per-probe allocation. */
@@ -123,7 +66,7 @@ object NodeCoordMap {
 
 /** Whole way assembly inside the row: probe each raw ref against the
   * broadcast node map IN ORDER (misses skipped — the inner-join drop),
-  * then build the WKB with the same rules as [[WayWkbExpr]]. Output
+  * then build the WKB with [[GeoExpressions.wayGeom]]. Output
   * struct(closed, npts, geom); npts = 0 marks a way with no resolved ref,
   * which the join form drops entirely (caller filters). This replaces
   * posexplode(refs) -> join -> groupBy/sort_array for the broadcast case:
@@ -150,44 +93,15 @@ case class WayAssembleExpr(child: Expression, bc: Broadcast[NodeCoordMap])
       i += 1
     }
     val closed = n > 0 && refs.getLong(0) == refs.getLong(n - 1)
-    val k = coords.length
-    val geom: Array[Byte] =
-      if (closed) {
-        val ringLen = if (k > 0 && coords(0) != coords(k - 1)) k + 1 else k
-        if (ringLen >= 4) WkbCodec.write(WkbCodec.polygon(coords.toSeq)) else null
-      } else {
-        if (k >= 2) WkbCodec.write(WkbCodec.lineString(coords.toSeq)) else null
-      }
-    org.apache.spark.sql.catalyst.InternalRow(closed, k, geom)
+    org.apache.spark.sql.catalyst.InternalRow(closed, coords.length,
+      GeoExpressions.wayGeom(closed, coords.toSeq))
   }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "osm_way_assemble"
 }
 
-/** Prepared-geometry point-in-polygon refine for the SHUFFLE join path:
-  * (poly_id, wkb, lon, lat) -> boolean, the same [[graft.geom.PreparedCache]]
-  * the old ScalaUDF used. As an Expression it evaluates on InternalRow
-  * buffers — no CatalystTypeConverters boxing of the WKB byte array per
-  * candidate pair — and keeps the surrounding filter inside the
-  * whole-stage-codegen'd join stage (CodegenFallback: the JTS contains
-  * dominates the call). */
-case class PreparedContainsExpr(first: Expression, second: Expression,
-                                third: Expression, fourth: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression
-  with CodegenFallback {
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  override def nullSafeEval(id: Any, wkb: Any, lon: Any, lat: Any): Any =
-    graft.geom.PreparedCache.get(id.asInstanceOf[Long], wkb.asInstanceOf[Array[Byte]])
-      .contains(graft.geom.ProbePoint.at(
-        lon.asInstanceOf[Double], lat.asInstanceOf[Double]))
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression, q: Expression): Expression =
-    copy(first = f, second = s, third = t, fourth = q)
-  override def prettyName: String = "st_prepared_contains"
-}
-
-/** Same refine with the polygon bytes coming from a broadcast
-  * poly_id -> WKB map instead of a join column — the
+/** The [[GeoExpressions.preparedContains]] refine with the polygon bytes
+  * coming from a broadcast poly_id -> WKB map instead of a join column — the
   * [[graft.index.CellPyramid]] boundary probe, where shipping one WKB per
   * (poly, cell) pair was the round-3 scale-killer. */
 case class PreparedContainsMapExpr(first: Expression, second: Expression,
@@ -198,9 +112,8 @@ case class PreparedContainsMapExpr(first: Expression, second: Expression,
   override def dataType: DataType = org.apache.spark.sql.types.BooleanType
   override def nullSafeEval(id: Any, lon: Any, lat: Any): Any = {
     val polyId = id.asInstanceOf[Long]
-    graft.geom.PreparedCache.get(polyId, bc.value(polyId))
-      .contains(graft.geom.ProbePoint.at(
-        lon.asInstanceOf[Double], lat.asInstanceOf[Double]))
+    GeoExpressions.preparedContains(polyId, bc.value(polyId),
+      lon.asInstanceOf[Double], lat.asInstanceOf[Double])
   }
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): Expression =
@@ -210,11 +123,16 @@ case class PreparedContainsMapExpr(first: Expression, second: Expression,
 
 object GeoExpressions {
 
-  /** (poly_id, wkb, lon, lat) -> point-in-polygon boolean (shuffle refine). */
+  /** Prepared-geometry point-in-polygon refine for the SHUFFLE join path:
+    * (poly_id, wkb, lon, lat) -> boolean, through the per-thread
+    * [[graft.geom.PreparedCache]]. The WKB bytes come straight off the
+    * InternalRow — no CatalystTypeConverters boxing per candidate pair. */
+  def preparedContains(polyId: Long, wkb: Array[Byte], lon: Double, lat: Double): Boolean =
+    graft.geom.PreparedCache.get(polyId, wkb).contains(graft.geom.ProbePoint.at(lon, lat))
+
   def preparedContains(polyId: Column, wkb: Column, lon: Column, lat: Column): Column =
-    ExpressionUtils.column(PreparedContainsExpr(
-      ExpressionUtils.expression(polyId), ExpressionUtils.expression(wkb),
-      ExpressionUtils.expression(lon), ExpressionUtils.expression(lat)))
+    Kernel.column("st_prepared_contains", this, "preparedContains", BooleanType)(
+      polyId -> LongType, wkb -> BinaryType, lon -> DoubleType, lat -> DoubleType)
 
   /** (poly_id, lon, lat) -> point-in-polygon boolean, WKB from a broadcast
     * poly_id -> bytes map (pyramid boundary refine). */
@@ -224,14 +142,58 @@ object GeoExpressions {
       ExpressionUtils.expression(polyId), ExpressionUtils.expression(lon),
       ExpressionUtils.expression(lat), bc))
 
-  /** wkb -> array<long> of packed (cx<<32|cy) cover cells at `level`. */
+  /** Polygon cover cells for the SHUFFLE pip-join's dim side: WKB ->
+    * packed (cx<<32|cy) cell keys at `level` (bbox cover + exact JTS
+    * intersects refine, [[CoverIndex.coverCells]]), as one flat primitive
+    * buffer. */
+  def coverCells(wkb: Array[Byte], level: Int): ArrayData = {
+    val cells = CoverIndex.coverCells(WkbCodec.read(wkb), level)
+    val out = new Array[Long](cells.length)
+    var i = 0
+    cells.foreach { case (cx, cy) => out(i) = (cx << 32) | cy; i += 1 }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
   def coverCells(wkb: Column, level: Int): Column =
-    ExpressionUtils.column(CoverCellsExpr(ExpressionUtils.expression(wkb), level))
+    Kernel.column("st_cover_cells", this, "coverCells", ArrayType(LongType, containsNull = false))(
+      wkb -> BinaryType, lit(level) -> IntegerType)
+
+  /** An OSM way's WKB from its resolved vertices: closed → Polygon if the
+    * auto-closed ring has ≥ 4 points, else LineString if ≥ 2 points;
+    * under-resolved ways keep geom = null (the reference implementation's
+    * rule F1, its `src/format/osmpbf.rs:71-100`). */
+  def wayGeom(closed: Boolean, coords: Seq[(Double, Double)]): Array[Byte] = {
+    val n = coords.length
+    if (closed) {
+      val ringLen = if (n > 0 && coords(0) != coords(n - 1)) n + 1 else n
+      if (ringLen >= 4) WkbCodec.write(WkbCodec.polygon(coords)) else null
+    } else {
+      if (n >= 2) WkbCodec.write(WkbCodec.lineString(coords)) else null
+    }
+  }
+
+  /** Way-geometry build (the tail of the J1 node↔way join): [[wayGeom]]
+    * over the sorted (pos, lon, lat) struct array, read straight out of
+    * the InternalRow buffers. */
+  def wayWkb(closed: Boolean, pts: ArrayData): Array[Byte] = {
+    val n = pts.numElements()
+    val coords = new Array[(Double, Double)](n)
+    var i = 0
+    while (i < n) {
+      val s = pts.getStruct(i, 3)
+      coords(i) = (s.getDouble(1), s.getDouble(2))
+      i += 1
+    }
+    wayGeom(closed, scala.collection.immutable.ArraySeq.unsafeWrapArray(coords))
+  }
+
+  private val WayPoints = ArrayType(StructType(Seq(StructField("pos", IntegerType),
+    StructField("lon", DoubleType), StructField("lat", DoubleType))))
 
   /** (closed, pts) -> WKB geometry for an assembled OSM way. */
   def wayWkb(closed: Column, pts: Column): Column =
-    ExpressionUtils.column(
-      WayWkbExpr(ExpressionUtils.expression(closed), ExpressionUtils.expression(pts)))
+    Kernel.column("way_wkb", this, "wayWkb", BinaryType, returnsNull = true)(
+      closed -> BooleanType, pts -> WayPoints)
 
   /** refs -> struct(closed, npts, geom) via the broadcast node map. */
   def wayAssemble(refs: Column, bc: Broadcast[NodeCoordMap]): Column =

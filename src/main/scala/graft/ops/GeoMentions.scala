@@ -1,11 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.{GraftShim => ExpressionUtils}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -37,17 +34,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * Output: array<struct<lonm: bigint, latm: bigint>> in match order
   * (posexplode ordinal = ent_idx, as before).
   */
-case class GeoMentionsExpr(child: Expression)
-  extends UnaryExpression with CodegenFallback {
+object GeoMentions {
+  private val EmptyArray = new GenericArrayData(Array.empty[Any])
 
-  private val structType = StructType(Seq(
+  private val MentionsType = ArrayType(StructType(Seq(
     StructField("lonm", LongType, nullable = true),
-    StructField("latm", LongType, nullable = true)))
+    StructField("latm", LongType, nullable = true))), containsNull = false)
 
-  override def dataType: DataType = ArrayType(structType, containsNull = false)
+  /** text -> array<struct<lonm, latm>> of GEO(lonm;latm) mentions. */
+  def geoMentions(text: Column): Column =
+    Kernel.column("geo_mentions", this, "geoMentions", MentionsType)(text -> StringType)
 
-  override def nullSafeEval(textAny: Any): Any = {
-    val t = textAny.asInstanceOf[UTF8String]
+  def geoMentions(t: UTF8String): ArrayData = {
     val n = t.numBytes()
     var out: scala.collection.mutable.ArrayBuffer[InternalRow] = null
     var i = 0
@@ -87,18 +85,7 @@ case class GeoMentionsExpr(child: Expression)
         } else i += 1
       } else i += 1
     }
-    if (out == null) GeoMentionsExpr.EmptyArray
+    if (out == null) EmptyArray
     else new GenericArrayData(out.toArray[Any])
   }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "geo_mentions"
-}
-
-object GeoMentionsExpr {
-  private val EmptyArray = new GenericArrayData(Array.empty[Any])
-
-  /** text -> array<struct<lonm, latm>> of GEO(lonm;latm) mentions. */
-  def geoMentions(text: Column): Column =
-    ExpressionUtils.column(GeoMentionsExpr(ExpressionUtils.expression(text)))
 }

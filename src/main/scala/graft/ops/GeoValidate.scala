@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, GraftShim}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
@@ -34,7 +33,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * tests; it does NOT read the planted defect class).
   *
   * Scale shape: validation is pure row-local math — no join, no shuffle,
-  * no UDF boxing (native expression over one primitive Long array); at
+  * no UDF boxing (one kernel over one primitive Long array); at
   * 10^12 rings it rides the scan. The O(n_seg^2) segment test is the right
   * default for web-extracted rings (tens of vertices); a Bentley-Ottmann
   * sweep only pays past ~10^3 vertices per ring.
@@ -80,83 +79,26 @@ object GeoValidate {
 
   /** (poly_id, status, area2, winding) — one native pass per ring. */
   def validate(rings: DataFrame): DataFrame = {
-    val v = GraftShim.column(RingValidateExpr(GraftShim.expression(col("ring"))))
+    val v = ringValidate(col("ring"))
     rings.select(col("poly_id"), v.as("v"))
       .select(col("poly_id"), col("v.status").as("status"),
         col("v.area2").as("area2"), col("v.winding").as("winding"))
   }
 
-  // ---- DuckDB replica: independent verdicts from the same vertex table ----
-  private def vertSql(sel: ((Int, Int, Int)) => String): String = {
-    val arms = for {
-      m <- 0 to 6
-      (v, j) <- ringSpec(m).zipWithIndex
-    } yield s"WHEN m = $m AND j = $j THEN ${sel(v)}"
-    s"CASE ${arms.mkString(" ")} END"
-  }
-
-  /** Full-query SQL over `part`: vertex CASE generated from [[ringSpec]],
-    * then shoelace + closure + duplicate + proper-crossing tests in plain
-    * integer SQL with the same precedence. */
-  def validateSql: String = {
-    val xCase = vertSql { case (a, b @ _, c) => s"cx + ($a) * s + ($c)" }
-    val yCase = vertSql { case (a @ _, b, c @ _) => s"cy + ($b) * s" }
-    val nCase = "CASE p_partkey % 7 WHEN 2 THEN 3 WHEN 4 THEN 8 WHEN 5 THEN 5 ELSE 7 END"
-    s"""WITH rp AS (SELECT p_partkey AS id, p_partkey % 7 AS m, 1 + p_partkey % 3 AS s,
-       |   (p_partkey * 131) % 3600 AS cx, (p_partkey * 37) % 1400 AS cy, $nCase AS n FROM part),
-       | js AS (SELECT unnest(range(8)) AS j),
-       | verts AS (SELECT id, n, j, $xCase AS x, $yCase AS y FROM rp CROSS JOIN js WHERE j < n),
-       | segs AS (SELECT a.id, a.n, a.j, a.x AS x1, a.y AS y1, b.x AS x2, b.y AS y2
-       |   FROM verts a JOIN verts b ON a.id = b.id AND b.j = a.j + 1),
-       | agg AS (SELECT id, SUM(x1 * y2 - x2 * y1) AS area2,
-       |   bool_or(x1 = x2 AND y1 = y2) AS has_dup FROM segs GROUP BY 1),
-       | ends AS (SELECT v0.id, (v0.x = vl.x AND v0.y = vl.y) AS is_closed
-       |   FROM verts v0 JOIN verts vl ON v0.id = vl.id AND vl.j = vl.n - 1 WHERE v0.j = 0),
-       | xs AS (SELECT s1.id, bool_or(
-       |     sign((s1.x2 - s1.x1) * (s2.y1 - s1.y1) - (s1.y2 - s1.y1) * (s2.x1 - s1.x1)) *
-       |     sign((s1.x2 - s1.x1) * (s2.y2 - s1.y1) - (s1.y2 - s1.y1) * (s2.x2 - s1.x1)) < 0
-       |   AND
-       |     sign((s2.x2 - s2.x1) * (s1.y1 - s2.y1) - (s2.y2 - s2.y1) * (s1.x1 - s2.x1)) *
-       |     sign((s2.x2 - s2.x1) * (s1.y2 - s2.y1) - (s2.y2 - s2.y1) * (s1.x2 - s2.x1)) < 0) AS has_cross
-       |   FROM segs s1 JOIN segs s2 ON s1.id = s2.id AND s2.j > s1.j + 1
-       |     AND NOT (s1.j = 0 AND s2.j = s1.n - 2)
-       |   GROUP BY 1),
-       | res AS (SELECT r.id AS poly_id,
-       |   CASE WHEN r.n < 4 THEN 'TOO_FEW_POINTS'
-       |        WHEN NOT e.is_closed THEN 'UNCLOSED'
-       |        WHEN a.has_dup THEN 'DUPLICATE_POINT'
-       |        WHEN a.area2 = 0 THEN 'ZERO_AREA'
-       |        WHEN coalesce(x.has_cross, false) THEN 'SELF_INTERSECTION'
-       |        ELSE 'OK' END AS status,
-       |   a.area2 AS area2
-       |   FROM rp r JOIN ends e ON e.id = r.id JOIN agg a ON a.id = r.id
-       |   LEFT JOIN xs x ON x.id = r.id)
-       | SELECT poly_id, status, CAST(area2 AS BIGINT) AS area2,
-       |   CAST(CASE WHEN status = 'OK' THEN (CASE WHEN area2 > 0 THEN 1 ELSE -1 END)
-       |        ELSE 0 END AS BIGINT) AS winding
-       | FROM res""".stripMargin.replace("\n", " ")
-  }
-}
-
-/** Ring validator over one interleaved coordinate array [x0,y0,x1,y1,...]
-  * (integer lattice units). Returns struct(status, area2, winding) — see
-  * [[GeoValidate]] for the precedence contract. Native expression: one
-  * primitive-array pass, no boxing; CodegenFallback like [[MinhashSig]]
-  * (a branchy loop gains nothing from doGenCode and the eval allocates
-  * only the result row). */
-case class RingValidateExpr(child: Expression)
-  extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = StructType(Seq(
+  private val VerdictType = StructType(Seq(
     StructField("status", StringType, nullable = false),
     StructField("area2", LongType, nullable = false),
     StructField("winding", LongType, nullable = false)))
 
-  override protected def withNewChildInternal(newChild: Expression): RingValidateExpr =
-    copy(child = newChild)
+  /** ring array<bigint> -> struct(status, area2, winding). */
+  def ringValidate(ring: Column): Column =
+    Kernel.column("ring_validate", this, "ringValidate", VerdictType)(ring -> ArrayType(LongType))
 
-  override def nullSafeEval(in: Any): Any = {
-    val a = in.asInstanceOf[ArrayData].toLongArray()
+  /** Ring validator over one interleaved coordinate array [x0,y0,x1,y1,...]
+    * (integer lattice units): (status, area2, winding) under the precedence
+    * contract above, in one primitive-array pass. */
+  def ringValidate(ring: ArrayData): InternalRow = {
+    val a = ring.toLongArray()
     val n = a.length / 2
     @inline def X(i: Int): Long = a(2 * i)
     @inline def Y(i: Int): Long = a(2 * i + 1)
@@ -215,5 +157,56 @@ case class RingValidateExpr(child: Expression)
       else "OK"
     val winding = if (status == "OK") { if (area2 > 0) 1L else -1L } else 0L
     new GenericInternalRow(Array[Any](UTF8String.fromString(status), area2, winding))
+  }
+
+  // ---- DuckDB replica: independent verdicts from the same vertex table ----
+  private def vertSql(sel: ((Int, Int, Int)) => String): String = {
+    val arms = for {
+      m <- 0 to 6
+      (v, j) <- ringSpec(m).zipWithIndex
+    } yield s"WHEN m = $m AND j = $j THEN ${sel(v)}"
+    s"CASE ${arms.mkString(" ")} END"
+  }
+
+  /** Full-query SQL over `part`: vertex CASE generated from [[ringSpec]],
+    * then shoelace + closure + duplicate + proper-crossing tests in plain
+    * integer SQL with the same precedence. */
+  def validateSql: String = {
+    val xCase = vertSql { case (a, b @ _, c) => s"cx + ($a) * s + ($c)" }
+    val yCase = vertSql { case (a @ _, b, c @ _) => s"cy + ($b) * s" }
+    val nCase = "CASE p_partkey % 7 WHEN 2 THEN 3 WHEN 4 THEN 8 WHEN 5 THEN 5 ELSE 7 END"
+    s"""WITH rp AS (SELECT p_partkey AS id, p_partkey % 7 AS m, 1 + p_partkey % 3 AS s,
+       |   (p_partkey * 131) % 3600 AS cx, (p_partkey * 37) % 1400 AS cy, $nCase AS n FROM part),
+       | js AS (SELECT unnest(range(8)) AS j),
+       | verts AS (SELECT id, n, j, $xCase AS x, $yCase AS y FROM rp CROSS JOIN js WHERE j < n),
+       | segs AS (SELECT a.id, a.n, a.j, a.x AS x1, a.y AS y1, b.x AS x2, b.y AS y2
+       |   FROM verts a JOIN verts b ON a.id = b.id AND b.j = a.j + 1),
+       | agg AS (SELECT id, SUM(x1 * y2 - x2 * y1) AS area2,
+       |   bool_or(x1 = x2 AND y1 = y2) AS has_dup FROM segs GROUP BY 1),
+       | ends AS (SELECT v0.id, (v0.x = vl.x AND v0.y = vl.y) AS is_closed
+       |   FROM verts v0 JOIN verts vl ON v0.id = vl.id AND vl.j = vl.n - 1 WHERE v0.j = 0),
+       | xs AS (SELECT s1.id, bool_or(
+       |     sign((s1.x2 - s1.x1) * (s2.y1 - s1.y1) - (s1.y2 - s1.y1) * (s2.x1 - s1.x1)) *
+       |     sign((s1.x2 - s1.x1) * (s2.y2 - s1.y1) - (s1.y2 - s1.y1) * (s2.x2 - s1.x1)) < 0
+       |   AND
+       |     sign((s2.x2 - s2.x1) * (s1.y1 - s2.y1) - (s2.y2 - s2.y1) * (s1.x1 - s2.x1)) *
+       |     sign((s2.x2 - s2.x1) * (s1.y2 - s2.y1) - (s2.y2 - s2.y1) * (s1.x2 - s2.x1)) < 0) AS has_cross
+       |   FROM segs s1 JOIN segs s2 ON s1.id = s2.id AND s2.j > s1.j + 1
+       |     AND NOT (s1.j = 0 AND s2.j = s1.n - 2)
+       |   GROUP BY 1),
+       | res AS (SELECT r.id AS poly_id,
+       |   CASE WHEN r.n < 4 THEN 'TOO_FEW_POINTS'
+       |        WHEN NOT e.is_closed THEN 'UNCLOSED'
+       |        WHEN a.has_dup THEN 'DUPLICATE_POINT'
+       |        WHEN a.area2 = 0 THEN 'ZERO_AREA'
+       |        WHEN coalesce(x.has_cross, false) THEN 'SELF_INTERSECTION'
+       |        ELSE 'OK' END AS status,
+       |   a.area2 AS area2
+       |   FROM rp r JOIN ends e ON e.id = r.id JOIN agg a ON a.id = r.id
+       |   LEFT JOIN xs x ON x.id = r.id)
+       | SELECT poly_id, status, CAST(area2 AS BIGINT) AS area2,
+       |   CAST(CASE WHEN status = 'OK' THEN (CASE WHEN area2 > 0 THEN 1 ELSE -1 END)
+       |        ELSE 0 END AS BIGINT) AS winding
+       | FROM res""".stripMargin.replace("\n", " ")
   }
 }

@@ -37,7 +37,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * is `bit_count(h_a ^ h_b)` — both engines compute identical BIGINTs,
   * so pairs + distances hash-check.
   *
-  * Scale shape: shingling is row-local (native WordShingles); the vocab
+  * Scale shape: shingling is row-local (native `word_shingles`); the vocab
   * join is the [[Dedup]] dense-id discipline; the signature is ONE
   * map-side-combinable groupBy(doc_id); the collapse is ONE groupBy(h);
   * the pair join is a hash equi-join on (band, value) whose fan-out is

@@ -1,10 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, GraftShim}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** Hilbert-curve cell encoding — the locality-preserving alternative to
   * the engine's Morton/quadkey/geohash keys (all bit-interleave curves):
@@ -31,10 +29,10 @@ object HilbertCurve {
 
   /** Hilbert distance of lattice point (x, y), both in [0, 2^Order). */
   def hilbert(x: Column, y: Column): Column =
-    GraftShim.column(HilbertExpr(GraftShim.expression(x), GraftShim.expression(y)))
+    Kernel.column("hilbert", this, "xy2d", LongType)(x -> LongType, y -> LongType)
 
-  /** Reference Scala fold (specs + the expression share it). This is the
-    * REDUCED form of the canonical xy2d: coordinates are brought back to
+  /** The fold itself: the `hilbert` kernel, which the specs call too. It is
+    * the REDUCED form of the canonical xy2d: coordinates are brought back to
     * the quadrant-local range [0, s) each level before the rotate/reflect,
     * so every intermediate stays non-negative — identical output to the
     * two's-complement bit-test form (the bit at level s of the canonical
@@ -88,16 +86,4 @@ object HilbertCurve {
        | SELECT url, CAST(ent_idx AS BIGINT) AS ent_idx, CAST(d AS BIGINT) AS hd FROM l$Order"""
       .stripMargin.replace("\n", " ")
   }
-}
-
-/** Native xy2d: one 13-iteration integer loop per row (see
-  * [[HilbertCurve]] for why not unrolled columns). */
-case class HilbertExpr(left: Expression, right: Expression)
-  extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = LongType
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): HilbertExpr =
-    copy(left = newLeft, right = newRight)
-  override def nullSafeEval(x: Any, y: Any): Any =
-    HilbertCurve.xy2d(x.asInstanceOf[Long], y.asInstanceOf[Long])
 }

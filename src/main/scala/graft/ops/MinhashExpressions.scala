@@ -1,50 +1,51 @@
 package graft.ops
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.{GraftShim => ExpressionUtils}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** All 12 production MinHash signature values in ONE native pass over the
-  * document text: tokenize on single spaces (empties dropped), build each
-  * word-3-shingle's UTF-8 bytes in a reusable buffer, `xxhash64` it (seed
-  * 42 — the `functions.xxhash64` default), and fold the 12 affine mins
-  * `min_sh (pmod(h, P) * A_i + B_i) % P` as it goes.
-  *
-  * Why native: the column form needs 13 higher-order-function passes
-  * (`transform` + 12 `array_min(transform(...))`) and HOFs are
-  * CodegenFallback with per-element boxing — measured 2.4x the wall time of
-  * even the exploded shuffle form at sf0.1. This expression allocates
-  * nothing per shingle (one growable byte buffer + one 12-long accumulator
-  * per row) and the shingle bytes never leave the task — at 100 TB the
-  * exploded (doc, shingle) stream is the widest intermediate of the whole
-  * minhash pipeline, and this keeps it out of existence entirely.
-  *
-  * Parity (spec-pinned bit-equal to `minhashSig(shingledHashedIds(...))`):
-  *  - `split(text, ' ')` on the literal space byte — safe on UTF-8 (no
-  *    multibyte sequence contains 0x20), duplicates kept, empties dropped;
-  *  - shingle = tok_i ++ ' ' ++ tok_{i+1} ++ ' ' ++ tok_{i+2}, exactly
-  *    `concat_ws(" ", slice(toks, i+1, 3))`;
-  *  - hash = `XXH64.hashUnsafeBytes(..., 42)` — the same call Spark's
-  *    `xxhash64(string)` lowers to;
-  *  - arithmetic in non-negative Longs < 2^62: overflow-free under ANSI.
-  *
-  * Returns `array<bigint>` of length 12, or NULL when the doc has < 3
-  * tokens (no shingles — the callers' `m0 IS NOT NULL` filter drops it,
-  * matching the groupBy form where an empty group emits no row).
-  */
-case class MinhashSig(child: Expression)
-  extends UnaryExpression with CodegenFallback {
+/** Native text kernels of the dedup suite, each one plain method called
+  * through [[Kernel]]. */
+object MinhashExpressions {
+  private val Longs = ArrayType(LongType, containsNull = false)
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  /** All 12 production MinHash signature values in ONE native pass over the
+    * document text: tokenize on single spaces (empties dropped), build each
+    * word-3-shingle's UTF-8 bytes in a reusable buffer, `xxhash64` it (seed
+    * 42 — the `functions.xxhash64` default), and fold the 12 affine mins
+    * `min_sh (pmod(h, P) * A_i + B_i) % P` as it goes.
+    *
+    * Why native: the column form needs 13 higher-order-function passes
+    * (`transform` + 12 `array_min(transform(...))`) and HOFs are
+    * interpreted with per-element boxing — measured 2.4x the wall time of
+    * even the exploded shuffle form at sf0.1. This kernel allocates
+    * nothing per shingle (one growable byte buffer + one 12-long accumulator
+    * per row) and the shingle bytes never leave the task — at 100 TB the
+    * exploded (doc, shingle) stream is the widest intermediate of the whole
+    * minhash pipeline, and this keeps it out of existence entirely.
+    *
+    * Parity (spec-pinned bit-equal to `minhashSig(shingledHashedIds(...))`):
+    *  - `split(text, ' ')` on the literal space byte — safe on UTF-8 (no
+    *    multibyte sequence contains 0x20), duplicates kept, empties dropped;
+    *  - shingle = tok_i ++ ' ' ++ tok_{i+1} ++ ' ' ++ tok_{i+2}, exactly
+    *    `concat_ws(" ", slice(toks, i+1, 3))`;
+    *  - hash = `XXH64.hashUnsafeBytes(..., 42)` — the same call Spark's
+    *    `xxhash64(string)` lowers to;
+    *  - arithmetic in non-negative Longs < 2^62: overflow-free under ANSI.
+    *
+    * Returns `array<bigint>` of length 12, or NULL when the doc has < 3
+    * tokens (no shingles — the callers' `m0 IS NOT NULL` filter drops it,
+    * matching the groupBy form where an empty group emits no row).
+    */
+  def minhashSig(text: Column): Column =
+    Kernel.column("minhash_sig", this, "minhashSig", Longs, returnsNull = true)(text -> StringType)
 
-  override def nullSafeEval(t: Any): Any = {
-    val s = t.asInstanceOf[UTF8String]
-    val bytes = s.getBytes // one copy; token slices index into it
+  def minhashSig(text: UTF8String): ArrayData = {
+    val bytes = text.getBytes // one copy; token slices index into it
     val n = bytes.length
     // token boundaries (start, end) over maximal non-space runs
     var nTok = 0
@@ -95,36 +96,30 @@ case class MinhashSig(child: Expression)
     new GenericArrayData(mins)
   }
 
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "minhash_sig"
-}
+  /** Word n-shingles of a text as ONE native pass: tokenize on single
+    * spaces (empties dropped, duplicates kept) and emit each run of `n`
+    * consecutive tokens joined by a single space, keeping the first
+    * occurrence of each — `array<string>`, empty when the doc has fewer
+    * than `n` tokens (set semantics; order is irrelevant to every consumer
+    * — vocab ranks, joins, counts).
+    *
+    * Why native, and why distinct INSIDE the row: the column form
+    * (`transform(sequence(...), i -> concat_ws(" ", slice(toks, i, n)))`)
+    * is an interpreted HOF chain, and the global `.distinct()` it fed
+    * shuffled the full (doc_id, shingle) string stream — the widest
+    * intermediate of the dedup suite — only to drop rows that are
+    * duplicates WITHIN a single document. Per-doc dedup is row-local, so
+    * `explode(word_shingles(text))` yields an already-distinct (doc_id, sh)
+    * stream with NO exchange at all. `n = 1` gives distinct tokens (the
+    * SimHash input) with the same property. */
+  def distinctShingles(text: Column, n: Int = 3): Column = {
+    require(n >= 1, s"shingle width must be >= 1, got $n")
+    Kernel.column("word_shingles", this, "wordShingles", ArrayType(StringType, containsNull = false))(
+      text -> StringType, lit(n) -> IntegerType)
+  }
 
-/** Word n-shingles of a text as ONE native pass: tokenize on single
-  * spaces (empties dropped, duplicates kept) and emit each run of `n`
-  * consecutive tokens joined by a single space — `array<string>`, empty
-  * when the doc has fewer than `n` tokens. With `distinct = true` the
-  * first occurrence of each shingle is kept (set semantics; order is
-  * irrelevant to every consumer — vocab ranks, joins, counts).
-  *
-  * Why native, and why distinct INSIDE the row: the column form
-  * (`transform(sequence(...), i -> concat_ws(" ", slice(toks, i, n)))`)
-  * is an interpreted HOF chain, and the global `.distinct()` it fed
-  * shuffled the full (doc_id, shingle) string stream — the widest
-  * intermediate of the dedup suite — only to drop rows that are
-  * duplicates WITHIN a single document. Per-doc dedup is row-local, so
-  * `explode(word_shingles(text))` yields an already-distinct (doc_id, sh)
-  * stream with NO exchange at all. `n = 1` gives distinct tokens (the
-  * SimHash input) with the same property. */
-case class WordShingles(child: Expression, n: Int, distinct: Boolean)
-  extends UnaryExpression with CodegenFallback {
-
-  require(n >= 1, s"shingle width must be >= 1, got $n")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullSafeEval(t: Any): Any = {
-    val s = t.asInstanceOf[UTF8String]
-    val bytes = s.getBytes
+  def wordShingles(text: UTF8String, n: Int): ArrayData = {
+    val bytes = text.getBytes
     val len = bytes.length
     var nTok = 0
     var starts = new Array[Int](math.max(8, len / 4))
@@ -143,8 +138,7 @@ case class WordShingles(child: Expression, n: Int, distinct: Boolean)
       }
     }
     if (nTok < n) return new GenericArrayData(Array.empty[Any])
-    val seen = if (distinct) new java.util.LinkedHashSet[UTF8String]() else null
-    val out = if (distinct) null else new Array[Any](nTok - n + 1)
+    val seen = new java.util.LinkedHashSet[UTF8String]()
     var sh = 0
     while (sh + n <= nTok) {
       var l = n - 1
@@ -160,49 +154,41 @@ case class WordShingles(child: Expression, n: Int, distinct: Boolean)
         p += tl
         k += 1
       }
-      val u = UTF8String.fromBytes(buf)
-      if (distinct) seen.add(u) else out(sh) = u
+      seen.add(UTF8String.fromBytes(buf))
       sh += 1
     }
-    if (distinct) new GenericArrayData(seen.toArray(new Array[AnyRef](seen.size)))
-    else new GenericArrayData(out)
+    new GenericArrayData(seen.toArray(new Array[AnyRef](seen.size)))
   }
 
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "word_shingles"
-}
+  /** Winnowing fingerprints of a text as ONE native pass — the promoted form
+    * of the former `TextStats.fingerprints` ScalaUDF (the last per-row UDF
+    * feeding an explode on a fact path): tokenize on single spaces (empties
+    * dropped), hash each token by folding its Unicode code points through
+    * `(a * FpC + cp) mod FpP`, roll a width-`w` polynomial window hash over
+    * the token hashes, keep the min of every `g`-window band, and emit the
+    * distinct mins as `array<bigint>` (empty when the doc has < w tokens —
+    * the exploding caller drops it, matching the UDF's empty array).
+    *
+    * Code-point folding == the UDF's UTF-16 fold on BMP text and == the
+    * oracle SQL's `ord()` on ALL text (the UDF split supplementary chars
+    * into surrogate pairs; the oracle never did — the native form now sides
+    * with the oracle). The synthetic corpus is ASCII, where all three agree
+    * byte-for-byte; DedupAnnSpec pins the reimplementation equality.
+    *
+    * Why native: the ScalaUDF form paid CatalystTypeConverters boxing for
+    * the string in and the Array[Long] out on every row; this allocates one
+    * growable long buffer per row and hands Catalyst an unboxed
+    * GenericArrayData. All arithmetic stays below 2^62 (FpP < 2^31), exact
+    * int64 — the property that lets the DuckDB oracle replicate q26. */
+  def winnowFingerprints(text: Column, w: Int = 4, g: Int = 4): Column = {
+    require(w >= 1 && g >= 1, s"window sizes must be >= 1, got w=$w g=$g")
+    Kernel.column("winnow_fingerprints", this, "winnowFingerprints", Longs)(
+      text -> StringType, lit(w) -> IntegerType, lit(g) -> IntegerType)
+  }
 
-/** Winnowing fingerprints of a text as ONE native pass — the promoted form
-  * of the former `TextStats.fingerprints` ScalaUDF (the last per-row UDF
-  * feeding an explode on a fact path): tokenize on single spaces (empties
-  * dropped), hash each token by folding its Unicode code points through
-  * `(a * FpC + cp) mod FpP`, roll a width-`w` polynomial window hash over
-  * the token hashes, keep the min of every `g`-window band, and emit the
-  * distinct mins as `array<bigint>` (empty when the doc has < w tokens —
-  * the exploding caller drops it, matching the UDF's empty array).
-  *
-  * Code-point folding == the UDF's UTF-16 fold on BMP text and == the
-  * oracle SQL's `ord()` on ALL text (the UDF split supplementary chars
-  * into surrogate pairs; the oracle never did — the native form now sides
-  * with the oracle). The synthetic corpus is ASCII, where all three agree
-  * byte-for-byte; DedupAnnSpec pins the reimplementation equality.
-  *
-  * Why native: the ScalaUDF form paid CatalystTypeConverters boxing for
-  * the string in and the Array[Long] out on every row; this allocates one
-  * growable long buffer per row and hands Catalyst an unboxed
-  * GenericArrayData. All arithmetic stays below 2^62 (FpP < 2^31), exact
-  * int64 — the property that lets the DuckDB oracle replicate q26. */
-case class WinnowFingerprints(child: Expression, w: Int, g: Int)
-  extends UnaryExpression with CodegenFallback {
-
-  require(w >= 1 && g >= 1, s"window sizes must be >= 1, got w=$w g=$g")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  import TextStats.{FpB, FpC, FpP}
-
-  override def nullSafeEval(t: Any): Any = {
-    val bytes = t.asInstanceOf[UTF8String].getBytes
+  def winnowFingerprints(text: UTF8String, w: Int, g: Int): ArrayData = {
+    import TextStats.{FpB, FpC, FpP}
+    val bytes = text.getBytes
     val n = bytes.length
     // token hashes over maximal non-space runs, decoding UTF-8 inline
     var th = new Array[Long](math.max(8, n / 8))
@@ -251,20 +237,4 @@ case class WinnowFingerprints(child: Expression, w: Int, g: Int)
     }
     new GenericArrayData(seen.toArray(new Array[AnyRef](seen.size)))
   }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "winnow_fingerprints"
-}
-
-object MinhashExpressions {
-  def minhashSig(text: Column): Column =
-    ExpressionUtils.column(MinhashSig(ExpressionUtils.expression(text)))
-
-  /** Distinct word 3-shingles (set semantics, first-occurrence order). */
-  def distinctShingles(text: Column, n: Int = 3): Column =
-    ExpressionUtils.column(WordShingles(ExpressionUtils.expression(text), n, distinct = true))
-
-  /** Distinct winnowing fingerprints (w-token windows, g-window bands). */
-  def winnowFingerprints(text: Column, w: Int = 4, g: Int = 4): Column =
-    ExpressionUtils.column(WinnowFingerprints(ExpressionUtils.expression(text), w, g))
 }

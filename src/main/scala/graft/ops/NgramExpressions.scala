@@ -7,75 +7,14 @@ import org.apache.spark.sql.{GraftShim => ExpressionUtils}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Per-document top-N character-trigram rank profile as ONE native
-  * expression: `array<struct<g: string, r: int>>` with 1-based ranks by
-  * (count desc, gram binary asc).
-  *
-  * This replaces the distributed form
-  * `explode(trigrams) -> groupBy(doc_id, g).count -> row_number() OVER
-  * (PARTITION BY doc_id ORDER BY c DESC, g) <= N`, whose exploded trigram
-  * stream (one row per CHARACTER of every document) is the widest
-  * intermediate of the language-ID query — at 100 TB it shuffles the
-  * corpus ~an order of magnitude amplified, only to immediately collapse
-  * back to N rows per doc. The profile is a per-document-local
-  * computation, so it belongs inside the row: count in a local hash map,
-  * sort (count desc, gram asc), take N. Nothing but the N-row profile
-  * ever leaves the task.
-  *
-  * Parity: trigrams are `substring(i, 3)` by CODEPOINTS on the raw
-  * [[UTF8String]] (same semantics as the SQL `substr` the previous plan
-  * and the DuckDB oracle use) and the tie-break compares UTF8Strings —
-  * binary UTF-8 order, identical to Spark's `ORDER BY g` and DuckDB's
-  * string collation. Integer counts, deterministic end to end; the q37
-  * oracle SQL is unchanged and stays hash-green.
-  */
-case class TrigramTopN(child: Expression, topN: Int)
-  extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("g", StringType), StructField("r", IntegerType))),
-    containsNull = false)
-
-  override def nullSafeEval(t: Any): Any = {
-    val s = t.asInstanceOf[UTF8String]
-    val n = s.numChars()
-    if (n < 3) return new GenericArrayData(Array.empty[Any])
-    val counts = new java.util.HashMap[UTF8String, Integer]()
-    var i = 0
-    while (i + 3 <= n) {
-      counts.merge(s.substring(i, i + 3), Integer.valueOf(1),
-        (a: Integer, b: Integer) => Integer.valueOf(a.intValue + b.intValue))
-      i += 1
-    }
-    val entries = new java.util.ArrayList[java.util.Map.Entry[UTF8String, Integer]](counts.entrySet())
-    entries.sort(new Comparator[java.util.Map.Entry[UTF8String, Integer]] {
-      override def compare(a: java.util.Map.Entry[UTF8String, Integer],
-                           b: java.util.Map.Entry[UTF8String, Integer]): Int = {
-        val c = java.lang.Integer.compare(b.getValue.intValue, a.getValue.intValue) // count desc
-        if (c != 0) c else a.getKey.compareTo(b.getKey)           // gram binary asc
-      }
-    })
-    val m = math.min(topN, entries.size())
-    val out = new Array[Any](m)
-    var r = 0
-    while (r < m) {
-      out(r) = InternalRow(entries.get(r).getKey, r + 1)
-      r += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "trigram_topn"
-}
-
 /** Cavnar–Trenkle out-of-place scoring against a STATIC profile table,
   * baked into the expression: input is the per-doc
-  * `array<struct<g,r>>` rank profile (from [[TrigramTopN]]), output is
+  * `array<struct<g,r>>` rank profile (from [[NgramExpressions.trigramTopN]]), output is
   * `struct<pred_lang: string, dist: long>` — the argmin language (tie:
   * lang asc) under dist = TopN² − Σ_match (TopN − |r − pr|).
   *
@@ -144,27 +83,89 @@ case class CtBestLang(child: Expression, profiles: Seq[(String, String, Int)], t
   override def prettyName: String = "ct_best_lang"
 }
 
-/** One-pass word-repetition profile (the Gopher/Dolma-style "fraction of
-  * characters in the most frequent word n-gram" quality signals, n = 1, 2):
-  * `struct<n_words, top1_cnt, top1_len, top2_cnt, top2_len>` — counts and
-  * CHAR lengths as integers so the downstream fraction is the caller's
-  * division and the whole row is DuckDB-hash-checkable. Split is by the
-  * single 0x20 byte (UTF-8-safe: the space byte never occurs inside a
-  * multibyte sequence), empties kept — same semantics as DuckDB
-  * `string_split(text, ' ')`. Ties: (count desc, gram binary asc). Docs
-  * with < 2 words report top2 = (0, 0). Row-local; zero exchanges.
-  */
-case class TopWordNgrams(child: Expression)
-  extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StructType(Seq(
+object NgramExpressions {
+  private val ProfileType = ArrayType(
+    StructType(Seq(StructField("g", StringType), StructField("r", IntegerType))),
+    containsNull = false)
+
+  private val RepetitionType = StructType(Seq(
     StructField("n_words", LongType, nullable = false),
     StructField("top1_cnt", LongType, nullable = false),
     StructField("top1_len", LongType, nullable = false),
     StructField("top2_cnt", LongType, nullable = false),
     StructField("top2_len", LongType, nullable = false)))
 
-  override def nullSafeEval(t: Any): Any = {
-    val s = t.asInstanceOf[UTF8String]
+  def ctBestLang(topn: Column, profiles: Seq[(String, String, Int)], topN: Int): Column =
+    ExpressionUtils.column(CtBestLang(ExpressionUtils.expression(topn), profiles, topN))
+
+  def trigramTopN(text: Column, topN: Int): Column =
+    Kernel.column("trigram_topn", this, "trigramTopN", ProfileType)(
+      text -> StringType, lit(topN) -> IntegerType)
+
+  /** Per-document top-N character-trigram rank profile as ONE native
+    * kernel: `array<struct<g: string, r: int>>` with 1-based ranks by
+    * (count desc, gram binary asc).
+    *
+    * This replaces the distributed form
+    * `explode(trigrams) -> groupBy(doc_id, g).count -> row_number() OVER
+    * (PARTITION BY doc_id ORDER BY c DESC, g) <= N`, whose exploded trigram
+    * stream (one row per CHARACTER of every document) is the widest
+    * intermediate of the language-ID query — at 100 TB it shuffles the
+    * corpus ~an order of magnitude amplified, only to immediately collapse
+    * back to N rows per doc. The profile is a per-document-local
+    * computation, so it belongs inside the row: count in a local hash map,
+    * sort (count desc, gram asc), take N. Nothing but the N-row profile
+    * ever leaves the task.
+    *
+    * Parity: trigrams are `substring(i, 3)` by CODEPOINTS on the raw
+    * [[UTF8String]] (same semantics as the SQL `substr` the previous plan
+    * and the DuckDB oracle use) and the tie-break compares UTF8Strings —
+    * binary UTF-8 order, identical to Spark's `ORDER BY g` and DuckDB's
+    * string collation. Integer counts, deterministic end to end; the q37
+    * oracle SQL is unchanged and stays hash-green.
+    */
+  def trigramTopN(s: UTF8String, topN: Int): ArrayData = {
+    val n = s.numChars()
+    if (n < 3) return new GenericArrayData(Array.empty[Any])
+    val counts = new java.util.HashMap[UTF8String, Integer]()
+    var i = 0
+    while (i + 3 <= n) {
+      counts.merge(s.substring(i, i + 3), Integer.valueOf(1),
+        (a: Integer, b: Integer) => Integer.valueOf(a.intValue + b.intValue))
+      i += 1
+    }
+    val entries = new java.util.ArrayList[java.util.Map.Entry[UTF8String, Integer]](counts.entrySet())
+    entries.sort(new Comparator[java.util.Map.Entry[UTF8String, Integer]] {
+      override def compare(a: java.util.Map.Entry[UTF8String, Integer],
+                           b: java.util.Map.Entry[UTF8String, Integer]): Int = {
+        val c = java.lang.Integer.compare(b.getValue.intValue, a.getValue.intValue) // count desc
+        if (c != 0) c else a.getKey.compareTo(b.getKey)           // gram binary asc
+      }
+    })
+    val m = math.min(topN, entries.size())
+    val out = new Array[Any](m)
+    var r = 0
+    while (r < m) {
+      out(r) = InternalRow(entries.get(r).getKey, r + 1)
+      r += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  def topWordNgrams(text: Column): Column =
+    Kernel.column("top_word_ngrams", this, "topWordNgrams", RepetitionType)(text -> StringType)
+
+  /** One-pass word-repetition profile (the Gopher/Dolma-style "fraction of
+    * characters in the most frequent word n-gram" quality signals, n = 1, 2):
+    * `struct<n_words, top1_cnt, top1_len, top2_cnt, top2_len>` — counts and
+    * CHAR lengths as integers so the downstream fraction is the caller's
+    * division and the whole row is DuckDB-hash-checkable. Split is by the
+    * single 0x20 byte (UTF-8-safe: the space byte never occurs inside a
+    * multibyte sequence), empties kept — same semantics as DuckDB
+    * `string_split(text, ' ')`. Ties: (count desc, gram binary asc). Docs
+    * with < 2 words report top2 = (0, 0). Row-local; zero exchanges.
+    */
+  def topWordNgrams(s: UTF8String): InternalRow = {
     val words = s.split(UTF8String.fromString(" "), -1)
     val n = words.length
     def top(grams: Iterator[UTF8String]): (Long, Long) = {
@@ -186,18 +187,4 @@ case class TopWordNgrams(child: Expression)
       UTF8String.concat(words(i), UTF8String.fromString(" "), words(i + 1))))
     InternalRow(n.toLong, c1, l1, c2, l2)
   }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "top_word_ngrams"
-}
-
-object NgramExpressions {
-  def ctBestLang(topn: Column, profiles: Seq[(String, String, Int)], topN: Int): Column =
-    ExpressionUtils.column(CtBestLang(ExpressionUtils.expression(topn), profiles, topN))
-
-  def trigramTopN(text: Column, topN: Int): Column =
-    ExpressionUtils.column(TrigramTopN(ExpressionUtils.expression(text), topN))
-
-  def topWordNgrams(text: Column): Column =
-    ExpressionUtils.column(TopWordNgrams(ExpressionUtils.expression(text)))
 }

@@ -29,15 +29,11 @@ object OverlayJoin {
   private def ex(c: Column) = GraftShim.expression(c)
   private def co(e: org.apache.spark.sql.catalyst.expressions.Expression) = GraftShim.column(e)
 
-  private def xmin(g: Column) = co(SqlFunctions.StUnaryGeom(ex(g), "st_xmin", _.getEnvelopeInternal.getMinX,
-    org.apache.spark.sql.types.DoubleType))
-  private def ymin(g: Column) = co(SqlFunctions.StUnaryGeom(ex(g), "st_ymin", _.getEnvelopeInternal.getMinY,
-    org.apache.spark.sql.types.DoubleType))
-  private def bboxCells(g: Column, level: Int) = co(SqlFunctions.StBboxCells(ex(g), ex(lit(level))))
+  private def xmin(g: Column) = SqlFunctions.call("st_xmin", g)
+  private def ymin(g: Column) = SqlFunctions.call("st_ymin", g)
+  private def bboxCells(g: Column, level: Int) = SqlFunctions.call("st_bbox_cells", g, lit(level))
   private def cellAt(x: Column, y: Column, level: Int) = co(SqlFunctions.cellId(ex(x), ex(y), level))
-  private def intersects(a: Column, b: Column) =
-    co(SqlFunctions.StBinaryGeomPred(ex(a), ex(b), "st_intersects", (x, y) => x.intersects(y),
-      org.apache.spark.sql.types.BooleanType))
+  private def intersects(a: Column, b: Column) = SqlFunctions.call("st_intersects", a, b)
 
   // ---- ST_Intersection + ST_Area for the diamond layers, closed form ----
   // Under the 45-degree map (u, v) = (x + y, x - y) an L1 ball |x-cx|+|y-cy|

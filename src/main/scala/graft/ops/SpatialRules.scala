@@ -10,7 +10,7 @@ import graft.geom.WkbCodec
   * pre-filter on the raw lon/lat expressions.
   *
   * `st_contains(<literal wkb>, st_point(lon, lat))` is opaque to the scan:
-  * a CodegenFallback JTS expression evaluated per row AFTER reading. The
+  * an interpreted JTS expression evaluated per row AFTER reading. The
   * rewrite
   * {{{
   *   lon >= minX AND lon <= maxX AND lat >= minY AND lat <= maxY

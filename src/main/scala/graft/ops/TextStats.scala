@@ -95,7 +95,7 @@ object TextStats {
     * the DuckDB oracle ([[langIdNgramSql]]) agrees bit-for-bit.
     *
     * Plan shape: the per-doc top-TopN trigram rank profile is computed
-    * INSIDE the row by the native [[TrigramTopN]] expression (the profile
+    * INSIDE the row by the native [[NgramExpressions.trigramTopN]] kernel (the profile
     * is document-local — counting and ranking trigrams needs nothing from
     * any other row), then only the <= TopN profile rows per doc explode
     * into the broadcast join against the tiny language-profile table and
@@ -108,7 +108,7 @@ object TextStats {
     * DuckDB oracle SQL keeps the declarative window form. */
   def langIdNgram(docs: DataFrame): DataFrame =
     // fully row-local: the per-doc rank profile is computed inside the row
-    // (TrigramTopN) and scored against the static profile table inside the
+    // (`trigram_topn`) and scored against the static profile table inside the
     // row (CtBestLang) — ZERO exchanges; the previous broadcast-join +
     // (doc,lang) aggregate + argmin form shuffled the corpus three times
     // to compare each doc against 160 constants. coalesce('') keeps the
@@ -376,7 +376,7 @@ object TextStats {
 
   def fingerprints(docs: DataFrame, w: Int = 4, g: Int = 4): DataFrame =
     // native one-pass expression (no ScalaUDF boxing on the fact path) —
-    // see [[MinhashExpressions.winnowFingerprints]] / WinnowFingerprints
+    // see [[MinhashExpressions.winnowFingerprints]]
     docs.select(col("doc_id"),
       explode(MinhashExpressions.winnowFingerprints(col("text"), w, g)).as("fp"))
 

@@ -15,11 +15,12 @@ object TileAssign {
 
   def tileX(lon: Column, z: Int): Column = CellGrid.cellX(lon, z)
 
+  /** NULL for a NULL lat. */
   def tileY(lat: Column, z: Int): Column = {
     val n = (1L << z).toDouble
     val r = radians(lat)
-    greatest(lit(0L), least(lit((1L << z) - 1),
-      floor((lit(1.0) - log(tan(r) + lit(1.0) / cos(r)) / math.Pi) / 2.0 * n).cast("long")))
+    val raw = floor((lit(1.0) - log(tan(r) + lit(1.0) / cos(r)) / math.Pi) / 2.0 * n).cast("long")
+    CellGrid.clamp(lat, raw, z)
   }
 
   /** Adds tile_z/tile_x/tile_y columns to any frame with (lon, lat). */

@@ -2,11 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{GraftShim => ExpressionUtils}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.locationtech.jts.geom.Polygon
 
@@ -45,7 +42,65 @@ object TileClip {
         col("c.nvert").as("nvert"), col("c.area2x").as("area2x"), col("c.geom").as("geom"))
 
   def clipCells(geom: Column, level: Int, snapScale: Option[Double]): Column =
-    ExpressionUtils.column(TileClipExpr(ExpressionUtils.expression(geom), level, snapScale))
+    Kernel.column("tile_clip", this, "clipCells", PiecesType)(geom -> BinaryType,
+      lit(level) -> IntegerType, lit(snapScale.getOrElse(1.0)) -> DoubleType,
+      lit(snapScale.isDefined) -> BooleanType)
+
+  private val PiecesType = ArrayType(StructType(Seq(
+    StructField("cell_x", LongType, nullable = false),
+    StructField("cell_y", LongType, nullable = false),
+    StructField("nvert", IntegerType, nullable = false),
+    StructField("area2x", LongType, nullable = false),
+    StructField("geom", BinaryType, nullable = true))), containsNull = false)
+
+  /** The pieces of one polygon, one per covering cell at `level` with a
+    * non-zero clipped area; vertices are scaled by `scale` and, when
+    * `snap`, rounded to the integer lattice. Not a polygon: no pieces. */
+  def clipCells(wkb: Array[Byte], level: Int, scale: Double, snap: Boolean): ArrayData = {
+    def toRing(cs: Array[org.locationtech.jts.geom.Coordinate]): Array[Double] = {
+      // drop the closing duplicate; snap to the integer lattice when exact
+      val n = cs.length - 1
+      val out = new Array[Double](2 * n)
+      var i = 0
+      while (i < n) {
+        val x = cs(i).x * scale; val y = cs(i).y * scale
+        out(2 * i) = if (snap) math.rint(x) else x
+        out(2 * i + 1) = if (snap) math.rint(y) else y
+        i += 1
+      }
+      out
+    }
+    val g = WkbCodec.read(wkb)
+    if (!g.isInstanceOf[Polygon]) return new GenericArrayData(Array.empty[Any])
+    val poly = g.asInstanceOf[Polygon]
+    val shell = toRing(poly.getExteriorRing.getCoordinates)
+    val holes = (0 until poly.getNumInteriorRing)
+      .map(i => toRing(poly.getInteriorRingN(i).getCoordinates)).toArray
+    val env = poly.getEnvelopeInternal
+    val cells = CellGrid.coverBBox(env.getMinX, env.getMinY, env.getMaxX, env.getMaxY, level)
+    val out = new scala.collection.mutable.ArrayBuffer[Any](cells.size)
+    cells.foreach { case (cx, cy) =>
+      val (bx0, by0, bx1, by1) = CellGrid.bounds(CellGrid.pack(cx, cy, level))
+      val (sx0, sy0, sx1, sy1) =
+        (math.rint(bx0 * scale), math.rint(by0 * scale), math.rint(bx1 * scale), math.rint(by1 * scale))
+      val cs = ClipRect.clip(shell, sx0, sy0, sx1, sy1)
+      val aShell = math.abs(ClipRect.area2x(cs))
+      if (aShell > 0) {
+        val ch = holes.map(h => ClipRect.clip(h, sx0, sy0, sx1, sy1)).filter(_.length >= 6)
+        val a = aShell - ch.map(h => math.abs(ClipRect.area2x(h))).sum
+        val shellD = ClipRect.dedupeRing(cs)
+        val piece: Array[Byte] =
+          if (shellD.length >= 6) {
+            def unscaled(r: Array[Double]): Seq[(Double, Double)] =
+              r.grouped(2).map(p => (p(0) / scale, p(1) / scale)).toSeq
+            WkbCodec.write(WkbCodec.polygon(unscaled(shellD),
+              ch.map(ClipRect.dedupeRing).filter(_.length >= 6).map(unscaled).toSeq))
+          } else null
+        out += InternalRow(cx, cy, shellD.length / 2, math.rint(a).toLong, piece)
+      }
+    }
+    new GenericArrayData(out.toArray)
+  }
 
   /** Scalar double-precision clip of a JTS polygon to a rectangle: shell
     * and holes each Sutherland–Hodgman'd, consecutive duplicates dropped;
@@ -70,66 +125,4 @@ object TileClip {
       Some(WkbCodec.polygon(pts(shell), holes.map(pts).toSeq))
     }
   }
-}
-
-case class TileClipExpr(child: Expression, level: Int, snapScale: Option[Double])
-  extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("cell_x", LongType, nullable = false),
-    StructField("cell_y", LongType, nullable = false),
-    StructField("nvert", IntegerType, nullable = false),
-    StructField("area2x", LongType, nullable = false),
-    StructField("geom", BinaryType, nullable = true))), containsNull = false)
-
-  private val scale = snapScale.getOrElse(1.0)
-  private def toRing(cs: Array[org.locationtech.jts.geom.Coordinate]): Array[Double] = {
-    // drop the closing duplicate; snap to the integer lattice when exact
-    val n = cs.length - 1
-    val out = new Array[Double](2 * n)
-    var i = 0
-    while (i < n) {
-      val x = cs(i).x * scale; val y = cs(i).y * scale
-      out(2 * i) = if (snapScale.isDefined) math.rint(x) else x
-      out(2 * i + 1) = if (snapScale.isDefined) math.rint(y) else y
-      i += 1
-    }
-    out
-  }
-
-  override def nullSafeEval(wkbAny: Any): Any = {
-    val g = WkbCodec.read(wkbAny.asInstanceOf[Array[Byte]])
-    if (!g.isInstanceOf[Polygon]) return new GenericArrayData(Array.empty[Any])
-    val poly = g.asInstanceOf[Polygon]
-    val shell = toRing(poly.getExteriorRing.getCoordinates)
-    val holes = (0 until poly.getNumInteriorRing)
-      .map(i => toRing(poly.getInteriorRingN(i).getCoordinates)).toArray
-    val env = poly.getEnvelopeInternal
-    val cells = CellGrid.coverBBox(env.getMinX, env.getMinY, env.getMaxX, env.getMaxY, level)
-    val out = new scala.collection.mutable.ArrayBuffer[Any](cells.size)
-    cells.foreach { case (cx, cy) =>
-      val (bx0, by0, bx1, by1) = CellGrid.bounds(CellGrid.pack(cx, cy, level))
-      val (sx0, sy0, sx1, sy1) =
-        (math.rint(bx0 * scale), math.rint(by0 * scale), math.rint(bx1 * scale), math.rint(by1 * scale))
-      val cs = ClipRect.clip(shell, sx0, sy0, sx1, sy1)
-      val aShell = math.abs(ClipRect.area2x(cs))
-      if (aShell > 0) {
-        val ch = holes.map(h => ClipRect.clip(h, sx0, sy0, sx1, sy1)).filter(_.length >= 6)
-        val a = aShell - ch.map(h => math.abs(ClipRect.area2x(h))).sum
-        val shellD = ClipRect.dedupeRing(cs)
-        val wkb: Array[Byte] =
-          if (shellD.length >= 6) {
-            def unscaled(r: Array[Double]): Seq[(Double, Double)] =
-              r.grouped(2).map(p => (p(0) / scale, p(1) / scale)).toSeq
-            WkbCodec.write(WkbCodec.polygon(unscaled(shellD),
-              ch.map(ClipRect.dedupeRing).filter(_.length >= 6).map(unscaled).toSeq))
-          } else null
-        out += InternalRow(cx, cy, shellD.length / 2, math.rint(a).toLong, wkb)
-      }
-    }
-    new GenericArrayData(out.toArray)
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "tile_clip"
 }

@@ -1,11 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType}
-import org.apache.spark.sql.{GraftShim => ExpressionUtils}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 import org.apache.spark.sql.functions._
 
 /** Trajectory similarity join — discrete symmetric Hausdorff distance
@@ -25,7 +22,7 @@ import org.apache.spark.sql.functions._
   * pairs table joins that dim twice — so the shuffle carries one row per
   * trail plus one row per pair, never the (pairs × |A| × |B|)
   * point-point stream. The quadratic work still exists, but it runs
-  * CPU-local inside [[HausdorffSqExpr]]'s single O(|A|·|B|) loop over two
+  * CPU-local inside [[hausdorffSq]]'s single O(|A|·|B|) loop over two
   * flat long arrays (both directed maxes in one pass, no allocation per
   * candidate), instead of materializing quadratically many rows through
   * an explode and two aggregate exchanges. Trails are bounded (points
@@ -42,51 +39,42 @@ object TrajectorySim {
     * |x|,|y| < 2^31 (lattice coords here are < 10^4). One fused loop
     * computes max_a min_b directly and folds min_a d(a,b) per b on the
     * way, so the b->a direction costs no second pass. */
-  case class HausdorffSqExpr(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(aAny: Any, bAny: Any): Any = {
-      val a = aAny.asInstanceOf[ArrayData]
-      val b = bAny.asInstanceOf[ArrayData]
-      val n = a.numElements(); val m = b.numElements()
-      val bx = new Array[Long](m); val by = new Array[Long](m)
-      val minB = new Array[Long](m)
-      var j = 0
+  def hausdorffSq(a: ArrayData, b: ArrayData): Long = {
+    val n = a.numElements(); val m = b.numElements()
+    val bx = new Array[Long](m); val by = new Array[Long](m)
+    val minB = new Array[Long](m)
+    var j = 0
+    while (j < m) {
+      val p = b.getLong(j)
+      bx(j) = p >> 32; by(j) = (p << 32) >> 32
+      minB(j) = Long.MaxValue
+      j += 1
+    }
+    var h = 0L
+    var i = 0
+    while (i < n) {
+      val p = a.getLong(i)
+      val ax = p >> 32; val ay = (p << 32) >> 32
+      var mn = Long.MaxValue
+      j = 0
       while (j < m) {
-        val p = b.getLong(j)
-        bx(j) = p >> 32; by(j) = (p << 32) >> 32
-        minB(j) = Long.MaxValue
+        val dx = ax - bx(j); val dy = ay - by(j)
+        val d = dx * dx + dy * dy
+        if (d < mn) mn = d
+        if (d < minB(j)) minB(j) = d
         j += 1
       }
-      var h = 0L
-      var i = 0
-      while (i < n) {
-        val p = a.getLong(i)
-        val ax = p >> 32; val ay = (p << 32) >> 32
-        var mn = Long.MaxValue
-        j = 0
-        while (j < m) {
-          val dx = ax - bx(j); val dy = ay - by(j)
-          val d = dx * dx + dy * dy
-          if (d < mn) mn = d
-          if (d < minB(j)) minB(j) = d
-          j += 1
-        }
-        if (mn > h) h = mn
-        i += 1
-      }
-      j = 0
-      while (j < m) { if (minB(j) > h) h = minB(j); j += 1 }
-      h
+      if (mn > h) h = mn
+      i += 1
     }
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-    override def prettyName: String = "hausdorff_sq"
+    j = 0
+    while (j < m) { if (minB(j) > h) h = minB(j); j += 1 }
+    h
   }
 
   private def hausdorffSq(a: Column, b: Column): Column =
-    ExpressionUtils.column(HausdorffSqExpr(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+    Kernel.column("hausdorff_sq", this, "hausdorffSq", LongType)(
+      a -> ArrayType(LongType), b -> ArrayType(LongType))
 
   /** @param pts rows of (`keyCol`, `seqCol`, lonm, latm) — integer lattice
     *            coordinates, `seqCol` = 0 marks the trail start.

@@ -1,60 +1,43 @@
 package graft.ops
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.{GraftShim => ExpressionUtils}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 
-/** Native dot-product expressions for the ANN hot path. The composable
+/** Native vector kernels for the ANN and dedup hot paths. The composable
   * alternative — `aggregate(zip_with(a, b, _*_), 0, _+_)` — materializes an
   * intermediate array and evaluates two interpreted higher-order lambdas
   * PER CANDIDATE PAIR; these walk the two UnsafeArrayData buffers in one
-  * primitive loop, no allocation. Each implements `doGenCode` (the same
-  * loop emitted as Java), so the expression stays INSIDE whole-stage
-  * codegen rather than forcing a CodegenFallback interpretive island; the
-  * interpreted `nullSafeEval` remains as the non-codegen path and is
-  * unit-tested equal. Exactness unchanged (same integer / IEEE double op
-  * sequence), so oracle hashes are unaffected.
+  * primitive loop, no allocation. Each is one plain method called through
+  * [[Kernel]], so whole-stage codegen emits a direct static call to it.
+  * Exactness unchanged (same integer / IEEE double op sequence), so oracle
+  * hashes are unaffected.
   */
-case class LongDot(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
+object VectorExpressions {
+  private val Longs: DataType = ArrayType(LongType)
+  private val Doubles: DataType = ArrayType(DoubleType)
+
+  def longDot(x: ArrayData, y: ArrayData): Long = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0L
     var i = 0
     while (i < n) { acc += x.getLong(i) * y.getLong(i); i += 1 }
     acc
   }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i"); val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) { $acc += $a.getLong($i) * $b.getLong($i); }
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "long_dot"
-}
 
-/** All hyperplane sign bits in ONE pass over the quantized vector. Plane
-  * j's weight for 0-based element i is ((i+1)*(j+3)) % 3 - 1 ∈ {-1,0,1}
-  * (same formula as [[Ann.NumPlanes]]'s per-plane `zip_with` form and the
-  * generated DuckDB oracle SQL — identical integer math, identical bucket
-  * values); bit j of the result is set iff the projection is > 0. The
-  * composable form re-walked the 64-element array once per plane through
-  * two interpreted lambdas each — this walks it once total.
-  */
-case class HyperplaneBucket(child: Expression, planes: Int) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  def longDot(a: Column, b: Column): Column =
+    Kernel.column("long_dot", this, "longDot", LongType)(a -> Longs, b -> Longs)
+
+  /** All hyperplane sign bits in ONE pass over the quantized vector. Plane
+    * j's weight for 0-based element i is ((i+1)*(j+3)) % 3 - 1 ∈ {-1,0,1}
+    * (same formula as [[Ann.NumPlanes]]'s per-plane `zip_with` form and the
+    * generated DuckDB oracle SQL — identical integer math, identical bucket
+    * values); bit j of the result is set iff the projection is > 0. The
+    * composable form re-walked the 64-element array once per plane through
+    * two interpreted lambdas each — this walks it once total.
+    */
+  def hyperplaneBucket(x: ArrayData, planes: Int): Long = {
     val n = x.numElements()
     val acc = new Array[Long](planes)
     var i = 0
@@ -69,89 +52,45 @@ case class HyperplaneBucket(child: Expression, planes: Int) extends UnaryExpress
     while (j < planes) { if (acc(j) > 0) b |= 1L << j; j += 1 }
     b
   }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val acc = ctx.freshName("acc"); val v = ctx.freshName("v"); val b = ctx.freshName("b")
-      s"""
-         |int $n = $a.numElements();
-         |long[] $acc = new long[$planes];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $v = $a.getLong($i);
-         |  for (int $j = 0; $j < $planes; $j++) {
-         |    $acc[$j] += $v * ((($i + 1) * ($j + 3)) % 3 - 1);
-         |  }
-         |}
-         |long $b = 0L;
-         |for (int $j = 0; $j < $planes; $j++) { if ($acc[$j] > 0) $b |= 1L << $j; }
-         |${ev.value} = $b;
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "hyperplane_bucket"
-}
 
-case class DoubleDot(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
+  def hyperplaneBucket(q: Column, planes: Int): Column =
+    Kernel.column("hyperplane_bucket", this, "hyperplaneBucket", LongType)(
+      q -> Longs, lit(planes) -> IntegerType)
+
+  def doubleDot(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0.0
     var i = 0
     while (i < n) { acc += x.getDouble(i) * y.getDouble(i); i += 1 }
     acc
   }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i"); val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) { $acc += $a.getDouble($i) * $b.getDouble($i); }
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "double_dot"
-}
 
-/** Order-preserving double -> long key for [[TopKByScore]] over POSITIVE
-  * doubles: the IEEE-754 bit pattern of non-negative doubles is
-  * order-isomorphic to their numeric order, so ranking by `double_bits`
-  * equals ranking by the double itself — which lets grouped top-N over a
-  * double measure use the bounded-heap partial aggregate instead of a
-  * window sort. Callers must guarantee non-negative input (asserted here:
-  * negative input raises, rather than silently mis-ranking). */
-case class DoubleBits(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(a: Any): Any = {
-    val d = a.asInstanceOf[Double]
+  def doubleDot(a: Column, b: Column): Column =
+    Kernel.column("double_dot", this, "doubleDot", DoubleType)(a -> Doubles, b -> Doubles)
+
+  /** Order-preserving double -> long key for [[TopKByScore]] over POSITIVE
+    * doubles: the IEEE-754 bit pattern of non-negative doubles is
+    * order-isomorphic to their numeric order, so ranking by `double_bits`
+    * equals ranking by the double itself — which lets grouped top-N over a
+    * double measure use the bounded-heap partial aggregate instead of a
+    * window sort. Callers must guarantee non-negative input (asserted here:
+    * negative input raises, rather than silently mis-ranking). */
+  def doubleBits(d: Double): Long = {
     if (d < 0) throw new IllegalArgumentException(s"double_bits requires non-negative input, got $d")
     java.lang.Double.doubleToRawLongBits(d)
   }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |if ($a < 0) throw new IllegalArgumentException("double_bits requires non-negative input, got " + $a);
-         |${ev.value} = java.lang.Double.doubleToRawLongBits($a);
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "double_bits"
-}
 
-/** |a ∩ b| for two ASCENDING-sorted long arrays with distinct elements —
-  * one merge walk, no per-row hash set or intermediate array (the
-  * `size(array_intersect(a, b))` composition it replaces allocates both,
-  * measured at ~4x the whole verify stage of the q23 prefix-filter plan).
-  * Caller contract: both inputs sorted ascending and duplicate-free
-  * (the jaccardPairs array build sorts its distinct-by-construction tids).
-  */
-case class SortedInterCount(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
+  def doubleBits(a: Column): Column =
+    Kernel.column("double_bits", this, "doubleBits", LongType)(a -> DoubleType)
+
+  /** |a ∩ b| for two ASCENDING-sorted long arrays with distinct elements —
+    * one merge walk, no per-row hash set or intermediate array (the
+    * `size(array_intersect(a, b))` composition it replaces allocates both,
+    * measured at ~4x the whole verify stage of the q23 prefix-filter plan).
+    * Caller contract: both inputs sorted ascending and duplicate-free
+    * (the jaccardPairs array build sorts its distinct-by-construction tids).
+    */
+  def sortedInterCount(x: ArrayData, y: ArrayData): Long = {
     val nx = x.numElements(); val ny = y.numElements()
     var i = 0; var j = 0; var acc = 0L
     while (i < nx && j < ny) {
@@ -162,36 +101,7 @@ case class SortedInterCount(left: Expression, right: Expression) extends BinaryE
     }
     acc
   }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val nx = ctx.freshName("nx"); val ny = ctx.freshName("ny")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val acc = ctx.freshName("acc"); val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-      s"""
-         |int $nx = $a.numElements(); int $ny = $b.numElements();
-         |int $i = 0; int $j = 0; long $acc = 0L;
-         |while ($i < $nx && $j < $ny) {
-         |  long $xv = $a.getLong($i); long $yv = $b.getLong($j);
-         |  if ($xv == $yv) { $acc++; $i++; $j++; }
-         |  else if ($xv < $yv) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "sorted_inter_count"
-}
 
-object VectorExpressions {
-  def doubleBits(a: Column): Column =
-    ExpressionUtils.column(DoubleBits(ExpressionUtils.expression(a)))
   def sortedInterCount(a: Column, b: Column): Column =
-    ExpressionUtils.column(SortedInterCount(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-  def longDot(a: Column, b: Column): Column =
-    ExpressionUtils.column(LongDot(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-  def doubleDot(a: Column, b: Column): Column =
-    ExpressionUtils.column(DoubleDot(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-  def hyperplaneBucket(q: Column, planes: Int): Column =
-    ExpressionUtils.column(HyperplaneBucket(ExpressionUtils.expression(q), planes))
+    Kernel.column("sorted_inter_count", this, "sortedInterCount", LongType)(a -> Longs, b -> Longs)
 }

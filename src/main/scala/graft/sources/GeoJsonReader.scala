@@ -38,11 +38,8 @@ object GeoJsonReader {
   private val mapper = new ObjectMapper()
 
   /** Column function: GeoJSON geometry string -> WKB binary (distributed
-    * path for geometry columns in big tables). Backed by the native
-    * Catalyst expression (no ScalaUDF conversion layer). */
-  def geomFromGeoJson(c: Column): Column =
-    org.apache.spark.sql.GraftShim.column(
-      graft.ops.SqlFunctions.StGeomFromGeoJson(org.apache.spark.sql.GraftShim.expression(c)))
+    * path for geometry columns in big tables): `st_geomfromgeojson`. */
+  def geomFromGeoJson(c: Column): Column = graft.ops.SqlFunctions.call("st_geomfromgeojson", c)
 
   /** Schema fields from the FIRST feature's properties (geojson.rs:29-33).
     * Shared with the ndjson DSV2 source ([[graft.sources.v2.GeoJsonlSource]])

@@ -12,4 +12,7 @@ object GraftShim {
     * conversion to the Dataset that receives it, and a SQL function
     * builder's result never passes through one. */
   def converted(c: Column): Expression = classic.ColumnNodeToExpressionConverter(c.node)
+  /** Spark's `WRONG_NUM_ARGS` analysis error for a call of `name`. */
+  def wrongNumArgs(name: String, expected: Int, actual: Int): Throwable =
+    errors.QueryCompilationErrors.wrongNumArgsError(name, Seq(expected), actual)
 }

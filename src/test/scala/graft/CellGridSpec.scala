@@ -107,4 +107,16 @@ class CellGridSpec extends AnyFunSuite with SparkTest {
     for (r <- rows; ((_, scalar, inputs), i) <- forms.zipWithIndex; v = r.getDouble(0) if inputs.contains(v))
       assert(r.getLong(i + 1) === scalar(v), s"v=$v form $i")
   }
+
+  test("a NULL coordinate gets a NULL cell, tile and cell key, not the last cell") {
+    import spark.implicits._
+    val df = Seq[(Option[Double], Option[Double])]((None, None), (None, Some(0.5)), (Some(20.5), None))
+      .toDF("lon", "lat")
+    val r = df.select(CellGrid.cellX(col("lon"), 6), CellGrid.cellY(col("lat"), 6),
+      TileAssign.tileY(col("lat"), 8), graft.ops.PipJoin.pointCellKey(col("lon"), col("lat"), 6)).collect()
+    assert(r(0).toSeq === Seq(null, null, null, null))
+    assert(r(1).isNullAt(0) && r(1).getLong(1) === CellGrid.cellY(0.5, 6) && r(1).isNullAt(3))
+    assert(r(2).getLong(0) === CellGrid.cellX(20.5, 6) && r(2).isNullAt(1) && r(2).isNullAt(2))
+    assert(r(2).isNullAt(3))
+  }
 }

@@ -299,29 +299,36 @@ class DedupAnnSpec extends AnyFunSuite with SparkTest {
   }
 
   test("native vector expressions: generated Java compiles and equals interpreted eval") {
+    import org.apache.spark.sql.{Column, GraftShim}
     import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
     import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
     import org.apache.spark.sql.catalyst.util.ArrayData
     import org.apache.spark.sql.types._
-    import graft.ops.{DoubleDot, HyperplaneBucket, LongDot}
-    val la = BoundReference(0, ArrayType(LongType, containsNull = false), nullable = true)
-    val lb = BoundReference(1, ArrayType(LongType, containsNull = false), nullable = true)
-    val da = BoundReference(2, ArrayType(DoubleType, containsNull = false), nullable = true)
-    // generate() throws on janino errors — an eager check that doGenCode is
-    // valid Java (a broken codegen would otherwise silently fall back)
-    val proj = GenerateUnsafeProjection.generate(Seq(
-      LongDot(la, lb), HyperplaneBucket(la, 12), DoubleDot(da, da)))
+    import graft.ops.{Kernel, VectorExpressions}
+    val la = GraftShim.column(BoundReference(0, ArrayType(LongType, containsNull = false), nullable = true))
+    val lb = GraftShim.column(BoundReference(1, ArrayType(LongType, containsNull = false), nullable = true))
+    val da = GraftShim.column(BoundReference(2, ArrayType(DoubleType, containsNull = false), nullable = true))
+    // the kernel's StaticInvoke, as the optimizer leaves it in a plan
+    def invoke(c: Column): Expression = GraftShim.converted(c) match {
+      case Kernel(_, _, s: StaticInvoke) => s
+    }
+    val exprs = Seq(VectorExpressions.longDot(la, lb), VectorExpressions.hyperplaneBucket(la, 12),
+      VectorExpressions.doubleDot(da, da)).map(invoke)
+    // generate() throws on janino errors — an eager check that the static
+    // call is valid Java (a broken one would otherwise silently fall back)
+    val proj = GenerateUnsafeProjection.generate(exprs)
     val xs = ArrayData.toArrayData(Array(3L, -2L, 7L))
     val ys = ArrayData.toArrayData(Array(10L, 100L, 1000L))
     val ds = ArrayData.toArrayData(Array(0.5, -1.25, 2.0))
     val row = InternalRow(xs, ys, ds)
     val out = proj(row)
     assert(out.getLong(0) === 3L * 10 - 2L * 100 + 7L * 1000)
-    assert(out.getLong(0) === LongDot(la, lb).eval(row))
-    assert(out.getLong(1) === HyperplaneBucket(la, 12).eval(row))
+    assert(out.getLong(0) === exprs(0).eval(row))
+    assert(out.getLong(1) === exprs(1).eval(row))
     assert(out.getDouble(2) === 0.5 * 0.5 + 1.25 * 1.25 + 4.0)
-    assert(out.getDouble(2) === DoubleDot(da, da).eval(row))
+    assert(out.getDouble(2) === exprs(2).eval(row))
   }
 
   test("native hyperplane bucket == composable per-plane reference form") {

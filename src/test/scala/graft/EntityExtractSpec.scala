@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.EntityExtract
 
 /** Reimplementation equality for the r6 native GEO-mention scanner: the
-  * byte-level [[graft.ops.GeoMentionsExpr]] plan must produce EXACTLY the
+  * byte-level [[graft.ops.GeoMentions]] plan must produce EXACTLY the
   * rows of the regex plan it replaced — on the real fixture corpus and on
   * adversarial strings exercising every divergence candidate (failed
   * candidates, overlap-ish prefixes, overflow digits, multibyte context,

@@ -2,8 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{GeoValidate, RingValidateExpr}
-import org.apache.spark.sql.GraftShim
+import graft.ops.GeoValidate
 
 class GeoValidateSpec extends AnyFunSuite with SparkTest {
 
@@ -11,7 +10,7 @@ class GeoValidateSpec extends AnyFunSuite with SparkTest {
     import spark.implicits._
     val flat = pts.flatMap { case (x, y) => Seq(x, y) }
     val df = Seq(Tuple1(flat)).toDF("ring")
-    val v = GraftShim.column(RingValidateExpr(GraftShim.expression(col("ring"))))
+    val v = GeoValidate.ringValidate(col("ring"))
     val r = df.select(v.as("v")).select("v.status", "v.area2", "v.winding")
       .as[(String, Long, Long)].head()
     r

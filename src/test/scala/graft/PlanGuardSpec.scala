@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window => LogicalWindow}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
@@ -148,10 +150,20 @@ class PlanGuardSpec extends AnyFunSuite with SparkTest {
         "shingles are row-local; a global distinct shuffles the widest string stream")
   }
 
+  // the graft expressions that may still be CodegenFallback classes: they
+  // close over a broadcast or a Scala object, or SpatialFilterPushdown
+  // matches them by class after the optimizer has replaced every Kernel
+  private val keptFallbacks: Set[String] = Set(
+    classOf[graft.ops.PolyContainsExpr], classOf[graft.ops.KnnPoisExpr],
+    classOf[graft.ops.WayAssembleExpr], classOf[graft.ops.PreparedContainsMapExpr],
+    classOf[graft.ops.StrPartitionExpr], classOf[graft.ops.CtBestLang],
+    classOf[graft.ops.SqlFunctions.StContains], classOf[graft.ops.SqlFunctions.StContainsExact],
+    classOf[graft.ops.SqlFunctions.StPoint]).map(_.getName)
+
   test("no non-baseline query plan contains a cartesian or nested-loop join") {
     SparkEntry.queries.foreach { case (name, fn) =>
+      val df = fn(spark, Sf)
       if (!bruteForceBaselines.contains(name)) {
-        val df = fn(spark, Sf)
         val bad = physical(df).collect {
           case j: BroadcastNestedLoopJoinExec => j.nodeName
           case j: CartesianProductExec => j.nodeName
@@ -159,17 +171,46 @@ class PlanGuardSpec extends AnyFunSuite with SparkTest {
         assert(bad.isEmpty,
           s"$name plan contains ${bad.mkString(", ")} — all-pairs candidate generation")
       }
+      // graft expressions (aggregate functions aside: Spark's own
+      // imperative aggregates are CodegenFallback too) must print the same
+      // in every run — no Scala lambda with its object hash — and must not
+      // take their operator out of whole-stage codegen
+      val graftExprs = df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case e if e.getClass.getName.startsWith("graft.") && !e.isInstanceOf[AggregateFunction] => e
+      }))
+      val lambdas = graftExprs.map(_.toString).filter(_.contains("$Lambda"))
+      assert(lambdas.isEmpty, s"$name plan prints Scala lambdas: $lambdas")
+      val stray = graftExprs.collect {
+        case e: CodegenFallback if !keptFallbacks(e.getClass.getName) => e.getClass.getName
+      }.distinct
+      assert(stray.isEmpty, s"$name plan holds CodegenFallback classes outside the keep list: $stray")
+    }
+  }
+
+  test("q13, q14 and q55: the operators that call the kernel run in whole-stage codegen") {
+    // a CodegenFallback expression takes its whole operator out of codegen;
+    // a Kernel's StaticInvoke is one static call inside the generated code.
+    // q13's posexplode Generate, q14's refine (a Filter, or the join
+    // condition the optimizer folds it into) and q55's intersects refine
+    for ((q, kernel) <- Seq("q13_pip_join" -> "geoMentions",
+        "q14_pip_join_salted" -> "preparedContains", "q55_overlay_join" -> "intersects")) {
+      val (all, fused) = Probes.codegenSplit(SparkEntry.queries(q)(spark, Sf))
+      val calling = all.filter(_.expressions.exists(Probes.callsKernel(_, kernel)))
+      assert(calling.nonEmpty, s"$q: no operator calls kernel $kernel")
+      val outside = calling.filterNot(o => fused.exists(_ eq o))
+      assert(outside.isEmpty,
+        s"$q: ${outside.map(_.nodeName).mkString(", ")} calling $kernel run outside whole-stage codegen")
     }
   }
 
   test("q14 salted-shuffle PIP: no ScalaUDF in the refine path") {
-    // the prepared-contains refine is a native Expression
-    // (GeoExpressions.PreparedContainsExpr); a ScalaUDF reappearing here
+    // the prepared-contains refine is a native kernel
+    // (GeoExpressions.preparedContains); a ScalaUDF reappearing here
     // means CatalystTypeConverters boxing of the WKB per candidate pair
     val df = SparkEntry.queries("q14_pip_join_salted")(spark, Sf)
     val hasNative = df.queryExecution.optimizedPlan.exists(
-      _.expressions.exists(_.exists(_.isInstanceOf[graft.ops.PreparedContainsExpr])))
-    assert(hasNative, "q14 refine must be the native PreparedContainsExpr")
+      _.expressions.exists(Probes.callsKernel(_, "preparedContains")))
+    assert(hasNative, "q14 refine must be the native preparedContains kernel")
     // dim-side UDFs (polygon synth, cover-cell explode) run once per
     // POLYGON and are fine; what must never come back is a ScalaUDF over
     // the point-side columns — that's a per-candidate-pair boxing cost
@@ -181,12 +222,12 @@ class PlanGuardSpec extends AnyFunSuite with SparkTest {
     }.flatten
     assert(pairUdfs.isEmpty, s"ScalaUDF over point columns in q14 plan: $pairUdfs")
     // r6 (verdict item 7): the polygon cover explode is the native
-    // CoverCellsExpr — no ScalaUDF over the WKB geom column either (the
+    // coverCells kernel — no ScalaUDF over the WKB geom column either (the
     // only remaining ScalaUDFs are the closed-form fixture synthesizers
     // over (cx, cy, r) scalars)
     val hasCover = df.queryExecution.optimizedPlan.exists(
-      _.expressions.exists(_.exists(_.isInstanceOf[graft.ops.CoverCellsExpr])))
-    assert(hasCover, "q14 cover must be the native CoverCellsExpr")
+      _.expressions.exists(Probes.callsKernel(_, "coverCells")))
+    assert(hasCover, "q14 cover must be the native coverCells kernel")
     val geomUdfs = df.queryExecution.optimizedPlan.collect {
       case p => p.expressions.flatMap(_.collect {
         case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF
@@ -199,8 +240,8 @@ class PlanGuardSpec extends AnyFunSuite with SparkTest {
   test("q26 fingerprints: native expression, no ScalaUDF on the fact path") {
     val df = SparkEntry.queries("q26_fingerprint")(spark, Sf)
     val hasNative = df.queryExecution.optimizedPlan.exists(
-      _.expressions.exists(_.exists(_.isInstanceOf[graft.ops.WinnowFingerprints])))
-    assert(hasNative, "q26 must fingerprint via the native WinnowFingerprints")
+      _.expressions.exists(Probes.callsKernel(_, "winnowFingerprints")))
+    assert(hasNative, "q26 must fingerprint via the native winnowFingerprints kernel")
     val udfs = df.queryExecution.optimizedPlan.collect {
       case p => p.expressions.flatMap(_.collect {
         case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u.toString

@@ -8,13 +8,15 @@ import scala.util.{Try, Using}
 import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 /** Probes shared by the suites: Spark jobs started, file descriptors held
-  * open, and what a physical plan shuffles. */
+  * open, what a physical plan shuffles, and which kernels it calls where. */
 object Probes {
 
   /** Every node of `df`'s executed plan. A plain `executedPlan.collect`
@@ -30,6 +32,24 @@ object Probes {
       case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
       case _ => Nil
     }
+  }
+
+  /** Whether `e` calls the kernel method `name`: the `StaticInvoke` the
+    * optimizer leaves in place of a [[graft.ops.Kernel]]. */
+  def callsKernel(e: Expression, name: String): Boolean =
+    e.exists { case s: StaticInvoke => s.functionName == name; case _ => false }
+
+  /** Every node of `df`'s final plan, and those of them that run inside a
+    * whole-stage-codegen stage. Runs `df` first: adaptive execution plans
+    * each stage, and collapses it into codegen, only as it runs it. */
+  def codegenSplit(df: DataFrame): (Seq[SparkPlan], Seq[SparkPlan]) = {
+    df.queryExecution.toRdd.count()
+    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(stage)
+    }
+    val all = planNodes(df)
+    (all, all.collect { case w: WholeStageCodegenExec => stage(w.child) }.flatten)
   }
 
   /** Number of Spark jobs `body` starts on the calling thread (counted by

@@ -50,6 +50,28 @@ class SqlFunctionsSpec extends AnyFunSuite with SparkTest {
     assert(r.getBoolean(3) === true && r.getBoolean(4) === false)
   }
 
+  test("st_* builders check their arity: a wrong count is WRONG_NUM_ARGS") {
+    assert(registered)
+    // too many (the extra argument must not be dropped) and too few (no
+    // IndexOutOfBoundsException), on a kernel and on a composed builder
+    for (q <- Seq("SELECT st_area(st_point(1.0, 2.0), 5)", "SELECT st_area()",
+        "SELECT st_cell_x(20.5)", "SELECT st_point(1.0, 2.0, 3.0)")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(q).collect())
+      assert(e.getCondition.startsWith("WRONG_NUM_ARGS"), s"$q: ${e.getMessage}")
+    }
+  }
+
+  test("st_* kernels cast their arguments: integer literals where doubles and ints are due") {
+    assert(registered)
+    val r = spark.sql(
+      """SELECT st_astext(st_buffer(st_point(0, 0), 1)) IS NOT NULL AS b,
+        |       st_astext(st_transform(st_point(1, 2), CAST(4326 AS BIGINT), 3857)) AS t,
+        |       size(st_bbox_cells(st_point(1.0, 2.0), CAST(6 AS BIGINT))) AS n""".stripMargin).collect()(0)
+    assert(r.getBoolean(0))
+    assert(r.getString(1).startsWith("POINT (111319.49"))
+    assert(r.getInt(2) === 1)
+  }
+
   test("st_* available through the extensions injection point") {
     // verify the class wires up without error (full two-session test would
     // need a second SparkContext; the builder path is exercised here)
