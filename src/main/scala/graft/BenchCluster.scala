@@ -70,7 +70,7 @@ object BenchClusterWorker {
       }
       d
     }
-    val ents = spark.read.parquet(dirs: _*)
+    val ents = TableMemo.parquet(spark, dirs: _*)
     val feats = ents.count()
     val matSec = (System.nanoTime() - tMat0) / 1e9
     def job() = Pipeline.enrichPrebuilt(ents, containing, knn)

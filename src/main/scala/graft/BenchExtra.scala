@@ -63,7 +63,7 @@ object BenchExtra {
       .filter { case (n, _) => filter.forall(_.contains(n)) }
 
     // session warmup (same discipline as Bench)
-    try force(spark.read.parquet(s"$sfDir/lineitem.parquet")
+    try force(TableMemo.parquet(spark, s"$sfDir/lineitem.parquet")
       .limit(1000).groupBy("l_returnflag").count())
     catch { case _: Throwable => () }
 

@@ -74,7 +74,7 @@ object Pipeline {
     * executor processes partition the same logical input disjointly. */
   def entitiesAmplifiedRange(spark: SparkSession, sfDir: String,
                              repFrom: Int, repTo: Int, repTotal: Int): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = TableMemo.parquet(spark, s"$sfDir/documents.parquet")
     // Repartition the SMALL side BEFORE the fan-out: the source parquet is
     // one input split, so exploding first would run the whole rep-fold
     // amplification (and its shuffle write) in a single task. Shuffling

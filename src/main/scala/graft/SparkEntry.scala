@@ -34,42 +34,51 @@ object SparkEntry {
   val CosineRecallFloorPct = 80
 
   private def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    TableMemo.parquet(spark, s"$sfDir/$name.parquet")
 
   private def ents(s: SparkSession, dir: String): DataFrame = Pipeline.entities(s, dir)
 
-  // q57: Z-order clustered spatial table, built once per (JVM, sfDir) from
-  // the closed-form node layer; the query reads a bbox through the PRUNED
-  // path (manifest cell stats skip buckets, parquet stats skip row groups)
-  // and refines exactly — the oracle replays only the exact bbox filter,
-  // so a pruning bug that loses rows hash-mismatches
-  private val clusteredTables = scala.collection.concurrent.TrieMap.empty[String, String]
+  // q57: Z-order clustered spatial table, built once per version of the
+  // customer table from the closed-form node layer; the query reads a bbox
+  // through the PRUNED path (manifest cell stats skip buckets, parquet
+  // stats skip row groups) and refines exactly — the oracle replays only
+  // the exact bbox filter, so a pruning bug that loses rows hash-mismatches
+  private val clusteredTables = scala.collection.concurrent.TrieMap.empty[String, (TableMemo.Fingerprint, String)]
   // q74: base+append TableLog table for the incremental-pyramid query,
-  // built once per (JVM, sfDir) — same memo pattern as q57
-  private val pyramidTables = scala.collection.concurrent.TrieMap.empty[String, String]
+  // built once per version of the documents table — same memo as q57
+  private val pyramidTables = scala.collection.concurrent.TrieMap.empty[String, (TableMemo.Fingerprint, String)]
 
-  /** Build-once-per-(JVM, sfDir) temp TableLog table: tmpdir sits on
-    * tmpfs, so an abandoned copy per JVM is leaked RAM — delete on exit
-    * (same pattern as FileFixtures.fixtureDir). `build` receives the
-    * table path and writes it. */
-  private def memoTempTable(memo: scala.collection.concurrent.TrieMap[String, String],
-                            prefix: String, dir: String)(build: String => Unit): String =
-    memo.getOrElseUpdate(dir, {
-      val tmp = java.nio.file.Files.createTempDirectory(prefix)
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete(); ()
-        }
-        try rm(tmp.toFile) catch { case _: Throwable => () }
-      }))
-      val t = tmp.toString + "/t"
-      build(t)
-      t
-    })
+  private def rmTree(f: java.io.File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(rmTree)
+    f.delete(); ()
+  }
+
+  /** Temp TableLog table built once per (JVM, sfDir, version of the table
+    * `source` reads, by [[TableMemo.fingerprint]]): a rewritten source
+    * rebuilds it and deletes the stale copy. tmpdir sits on tmpfs, so an
+    * abandoned copy is leaked RAM — delete on exit too (same pattern as
+    * FileFixtures.fixtureDir). `build` receives the table path and writes
+    * it. */
+  private def memoTempTable(memo: scala.collection.concurrent.TrieMap[String, (TableMemo.Fingerprint, String)],
+                            prefix: String, dir: String, source: DataFrame)(build: String => Unit): String =
+    memo.synchronized {
+      val fp = TableMemo.fingerprint(source).getOrElse(Nil)
+      memo.get(dir) match {
+        case Some((built, t)) if built == fp => t
+        case stale =>
+          stale.foreach { case (_, t) => rmTree(new java.io.File(t).getParentFile) }
+          val tmp = java.nio.file.Files.createTempDirectory(prefix)
+          Runtime.getRuntime.addShutdownHook(new Thread(() =>
+            try rmTree(tmp.toFile) catch { case _: Throwable => () }))
+          val t = tmp.toString + "/t"
+          build(t)
+          memo(dir) = (fp, t)
+          t
+      }
+    }
 
   private def clusteredNodes(s: SparkSession, dir: String): String =
-    memoTempTable(clusteredTables, "graft_q57", dir) { t =>
+    memoTempTable(clusteredTables, "graft_q57", dir, t(s, dir, "customer")) { t =>
       val pts = OsmElements.nodes(s, dir).select(col("node_id"), col("lon"), col("lat"))
         .withColumn("cell", graft.table.SpatialLayout.cellCol(col("lon"), col("lat"), level = 8))
       graft.table.TableLog.writeClustered(pts, t, "overwrite", srid = 4326,
@@ -740,7 +749,7 @@ object SparkEntry {
     // v1 and folded forward with ONLY readChanges(v1, v2) — the oracle
     // histogram over ALL points proves incremental == full rebuild
     "q74_pyramid_incremental" -> ((s, dir) => {
-      val table = memoTempTable(pyramidTables, "graft_q74", dir) { t =>
+      val table = memoTempTable(pyramidTables, "graft_q74", dir, t(s, dir, "documents")) { t =>
         // only lon/lat are consumed downstream — the split key (ent_idx)
         // is applied BEFORE the write, so neither it nor url hits parquet
         val pts = ents(s, dir).select(col("ent_idx"), col("lon"), col("lat"))

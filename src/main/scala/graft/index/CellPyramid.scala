@@ -1,10 +1,13 @@
 package graft.index
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.locationtech.jts.geom.{Coordinate, GeometryFactory, Polygon}
 import org.locationtech.jts.geom.prep.PreparedGeometryFactory
 
+import graft.TableMemo
 import graft.geom.WkbCodec
 
 /** GeoBlocks-style pre-aggregated cell pyramid (EDBT'21 "GeoBlocks: a
@@ -192,6 +195,49 @@ object CellPyramid {
     * deep boundary shells the pair table stops being a dim. */
   private[graft] val BroadcastPairLimit = 2000000
 
+  /** The polygon side of [[polygonCounts]]: the classified pair table, its
+    * interior and boundary row counts, and the boundary polygons' WKB by
+    * poly_id as a broadcast when the boundary side is broadcast. */
+  private final case class PolygonSide(pairs: DataFrame, nInterior: Long, nBoundary: Long,
+                                       wkbByPoly: Option[Broadcast[Map[Long, Array[Byte]]]])
+
+  /** Classification runs ON EXECUTORS (flatMap over the polygon dim): the
+    * quadtree descent is the query's dominant CPU cost and must not
+    * serialize on the driver — a real polygon layer can be millions of rows.
+    * The pair table NEVER funnels through the driver as a whole: it
+    * materializes once as executor blocks (classify runs exactly once; one
+    * aggregate job counts both sides), the broadcast-vs-shuffle decision is
+    * made on counts alone, and only the one-WKB-per-polygon slice is ever
+    * collected (for the broadcast-map refine, below the limit).
+    *
+    * Built once per polygon layer version ([[graft.TableMemo]]). A kept pair
+    * table outlives the query, so it is persisted with its lineage (a lost
+    * block recomputes) rather than checkpointed; a layer the memo cannot key
+    * gets a local checkpoint, the query's own intermediate. */
+  private def polygonSide(spark: SparkSession, polygons: DataFrame, finest: Int, depth: Int,
+                          broadcastPairLimit: Long): PolygonSide =
+    TableMemo.derived(spark, "pyramidPairs", polygons, finest, depth, broadcastPairLimit) {
+      import spark.implicits._
+      val classified = polygons.select(col("poly_id"), col("geom"))
+        .as[(Long, Array[Byte])]
+        .flatMap { case (id, wkb) => pairRowsFor(id, wkb, finest, depth) }
+        .toDF("poly_id", "cell", "interior", "wkb")
+      val kept = TableMemo.fingerprint(polygons).isDefined
+      val pairs =
+        if (kept) classified.persist(StorageLevel.MEMORY_AND_DISK) else classified.localCheckpoint(false)
+      val n = pairs.agg(count(when(col("interior"), 1)), count(when(!col("interior"), 1)),
+        coalesce(sum(length(col("wkb"))).cast("long"), lit(0L))).head()
+      val (nInterior, nBoundary, wkbBytes) = (n.getLong(0), n.getLong(1), n.getLong(2))
+      // dim-sized shell: the polygon bytes ride ONCE per polygon in a
+      // broadcast VARIABLE (torrent-distributed per executor)
+      val wkbByPoly = if (nBoundary > broadcastPairLimit) None else Some(spark.sparkContext.broadcast(
+        pairs.filter(col("wkb").isNotNull).select("poly_id", "wkb")
+          .as[(Long, Array[Byte])].collect().toMap))
+      TableMemo.Held(PolygonSide(pairs, nInterior, nBoundary, wkbByPoly),
+        bytes = (nInterior + nBoundary) * 24 + wkbBytes * (if (wkbByPoly.isDefined) 2 else 1),
+        release = () => { if (kept) pairs.unpersist(); wkbByPoly.foreach(_.destroy()) })
+    }
+
   /** Exact per-polygon point counts answered from the pyramid + a boundary
     * refine. `polygons` = (poly_id, geom WKB) dim; output
     * (poly_id, n_points), polygons with zero points omitted (inner-join
@@ -204,54 +250,35 @@ object CellPyramid {
                     points: DataFrame, lonCol: String, latCol: String,
                     polygons: DataFrame, finest: Int, depth: Int,
                     broadcastPairLimit: Long = BroadcastPairLimit): DataFrame = {
-    import spark.implicits._
-    // classification runs ON EXECUTORS (flatMap over the polygon dim):
-    // the quadtree descent is the query's dominant CPU cost and must not
-    // serialize on the driver — a real polygon layer can be millions of
-    // rows. The pair table NEVER funnels through the driver as a whole:
-    // it materializes once as executor blocks (eager localCheckpoint —
-    // classify runs exactly once; the counts below read block stats), the
-    // broadcast-vs-shuffle decision is made on counts alone, and only the
-    // one-WKB-per-polygon slice is ever collected (for the broadcast-map
-    // refine, below the limit)
-    val pairs = polygons.select(col("poly_id"), col("geom"))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, wkb) => pairRowsFor(id, wkb, finest, depth) }
-      .toDF("poly_id", "cell", "interior", "wkb")
-      .localCheckpoint(false)
-    val interiorPairs = pairs.filter(col("interior")).select("poly_id", "cell")
-    val boundaryPairs = pairs.filter(!col("interior")).select("poly_id", "cell")
-    val nInterior = interiorPairs.count()
-    val nBoundary = boundaryPairs.count()
-    def maybeBroadcast(df: DataFrame, n: Long): DataFrame =
-      if (n <= broadcastPairLimit) broadcast(df) else df
+    val side = polygonSide(spark, polygons, finest, depth, broadcastPairLimit)
+    val interiorPairs = side.pairs.filter(col("interior")).select("poly_id", "cell")
+    val boundaryPairs = side.pairs.filter(!col("interior")).select("poly_id", "cell")
     val interiorCounts = pyramid
-      .join(maybeBroadcast(interiorPairs, nInterior), Seq("cell"))
+      .join(if (side.nInterior <= broadcastPairLimit) broadcast(interiorPairs) else interiorPairs,
+        Seq("cell"))
       .groupBy("poly_id").agg(sum("cnt").as("n"))
     // boundary refine: equi-join on the finest cell, then the SAME native
     // prepared-geometry contains as the PIP join's shuffle refine
     val ptsCells = points
       .withColumn("cell", cellCol(col(lonCol), col(latCol), finest))
-    val wkbRows = pairs.filter(col("wkb").isNotNull).select("poly_id", "wkb")
-    val boundaryCounts = (if (nBoundary <= broadcastPairLimit) {
-      // dim-sized shell: bare (poly, cell) pairs broadcast into the probe;
-      // the polygon bytes ride ONCE per polygon in a broadcast VARIABLE
-      // (torrent-distributed per executor), keyed by poly_id in the refine
-      val wkbByPoly = spark.sparkContext.broadcast(
-        wkbRows.as[(Long, Array[Byte])].collect().toMap)
-      ptsCells.join(broadcast(boundaryPairs), Seq("cell"))
-        .filter(graft.ops.GeoExpressions.preparedContainsBc(
-          col("poly_id"), col(lonCol), col(latCol), wkbByPoly))
-    } else {
-      // scale path — NOTHING through the driver: reattach the WKB with an
-      // equi-join on poly_id (one WKB row per polygon; the per-cell
-      // re-expansion happens executor-side inside the exchange, the shape
-      // every distributed spatial join pays), then shuffle equi-join on
-      // the cell key and refine with the join-column variant
-      val withWkb = boundaryPairs.join(wkbRows, Seq("poly_id"))
-      ptsCells.join(withWkb, Seq("cell"))
-        .filter(graft.ops.GeoExpressions.preparedContains(
-          col("poly_id"), col("wkb"), col(lonCol), col(latCol)))
+    val boundaryCounts = (side.wkbByPoly match {
+      case Some(wkbByPoly) =>
+        // bare (poly, cell) pairs broadcast into the probe; the refine
+        // reads the polygon from the broadcast map by poly_id
+        ptsCells.join(broadcast(boundaryPairs), Seq("cell"))
+          .filter(graft.ops.GeoExpressions.preparedContainsBc(
+            col("poly_id"), col(lonCol), col(latCol), wkbByPoly))
+      case None =>
+        // scale path — NOTHING through the driver: reattach the WKB with an
+        // equi-join on poly_id (one WKB row per polygon; the per-cell
+        // re-expansion happens executor-side inside the exchange, the shape
+        // every distributed spatial join pays), then shuffle equi-join on
+        // the cell key and refine with the join-column variant
+        val wkbRows = side.pairs.filter(col("wkb").isNotNull).select("poly_id", "wkb")
+        val withWkb = boundaryPairs.join(wkbRows, Seq("poly_id"))
+        ptsCells.join(withWkb, Seq("cell"))
+          .filter(graft.ops.GeoExpressions.preparedContains(
+            col("poly_id"), col("wkb"), col(lonCol), col(latCol)))
     }).groupBy("poly_id").agg(count(lit(1)).as("n"))
     interiorCounts.unionAll(boundaryCounts)
       .groupBy("poly_id").agg(sum("n").as("n_points"))

@@ -13,9 +13,15 @@ package graft.index
 object Tiles {
   def tileX(lon: Double, z: Int): Long = CellGrid.cellX(lon, z)
 
+  /** Web Mercator's latitude limit, atan(sinh(pi)) in degrees (85.0511...):
+    * the edge of rows 0 and 2^z - 1. */
+  val MaxLat: Double = math.toDegrees(math.atan(math.sinh(math.Pi)))
+
+  /** Latitudes past [[MaxLat]] (and so ±90, where the formula has no
+    * value) take the edge row. */
   def tileY(lat: Double, z: Int): Long = {
     val n = (1L << z).toDouble
-    val r = math.toRadians(lat)
+    val r = math.toRadians(math.max(-MaxLat, math.min(MaxLat, lat)))
     val raw = math.floor((1.0 - math.log(math.tan(r) + 1.0 / math.cos(r)) / math.Pi) / 2.0 * n)
     math.max(0L, math.min((1L << z) - 1, raw.toLong))
   }

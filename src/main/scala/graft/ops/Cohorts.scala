@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.TableMemo
 
 /** Cohort retention — the product-analytics triangle: users are grouped
   * by FIRST-activity day (their cohort), and for every (cohort, day
@@ -20,7 +21,7 @@ object Cohorts {
 
   /** @return (cohort_day, day_offset, n_users): BIGINT triangle rows */
   def retention(spark: SparkSession, sfDir: String): DataFrame = {
-    val act = spark.read.parquet(s"$sfDir/events.parquet")
+    val act = TableMemo.parquet(spark, s"$sfDir/events.parquet")
       .select(col("user_id"),
         expr(s"unix_micros(CAST(ts AS TIMESTAMP)) div ${SpaceTime.DayUs}L").as("day"))
       .groupBy("user_id", "day").agg(count(lit(1)).as("n_ev"))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.TableMemo
 
 /** Space-time contact / companion join — the co-movement primitive
   * (contact tracing, travel-companion detection, co-location pattern
@@ -39,7 +40,7 @@ object ContactJoin {
   /** Distinct (user_id, cx, cy, day) visits. Jitter keeps every
     * coordinate on the integer lattice; clamping keeps it in-world. */
   def visits(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/events.parquet")
+    TableMemo.parquet(spark, s"$sfDir/events.parquet")
       .select(col("user_id"),
         expr(s"greatest(0L, least(7199L, (user_id * 467 + 3) % 7200 + event_id % 1201 - 600))")
           .as("x"),

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.TableMemo
 
 /** Training-data deduplication suite over the `documents` table: exact
   * (hash groupBy), MinHash+LSH (shingle -> minhash -> band -> bucket join),
@@ -21,7 +22,7 @@ object Dedup {
   /** Corpus with planted exact duplicates: every doc_id % 3 == 0 document
     * is mirrored at doc_id + 1000000 (documents themselves are unique). */
   def corpus(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+    val d = TableMemo.parquet(spark, s"$sfDir/documents.parquet").select("doc_id", "text")
     d.unionAll(d.filter(col("doc_id") % 3 === 0)
       .select((col("doc_id") + 1000000).as("doc_id"), col("text")))
   }
@@ -36,7 +37,7 @@ object Dedup {
     * union is dominated by the original), i.e. invisible to the q23
     * near-dup test by construction. */
   def quoteCorpus(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+    val d = TableMemo.parquet(spark, s"$sfDir/documents.parquet").select("doc_id", "text")
     val quotes = d.filter(col("doc_id") % 5 === 0)
       .withColumn("a", filter(split(col("text"), " "), t => t =!= ""))
       .select((col("doc_id") + 2000000).as("doc_id"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.index.CellGrid
 import graft.sources.WebPagesSynth
+import graft.TableMemo
 
 /** Origin-destination flow aggregation (the flow-map / spatial-interaction
   * primitive): each link-graph edge becomes a (source cell -> destination
@@ -22,7 +23,7 @@ object FlowMap {
   /** q129 entry: OD flows of the synthetic link graph over 64x64 cells.
     * Output: (scx, scy, dcx, dcy, flows), all BIGINT. */
   def odFlows(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = TableMemo.parquet(spark, s"$sfDir/documents.parquet")
     val lon0 = WebPagesSynth.lonOf(WebPagesSynth.lonm(col("doc_id"), lit(0L)))
     val lat0 = WebPagesSynth.latOf(WebPagesSynth.latm(col("doc_id"), lit(0L)))
     val loc = docs.select(col("doc_id"),

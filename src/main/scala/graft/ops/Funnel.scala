@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.TableMemo
 
 /** Funnel analysis — the product-analytics sequence statistic ("of the
   * users who viewed, how many later clicked, and then purchased?"),
@@ -29,7 +30,7 @@ object Funnel {
 
   /** @return (user_id, depth): deepest funnel stage reached, 0..3 */
   def depth(spark: SparkSession, sfDir: String): DataFrame =
-    depthOf(spark.read.parquet(s"$sfDir/events.parquet")
+    depthOf(TableMemo.parquet(spark, s"$sfDir/events.parquet")
       .select(col("user_id"), col("event_id"),
         expr("unix_micros(CAST(ts AS TIMESTAMP))").as("us"), col("event_type")))
 

@@ -8,6 +8,7 @@ import org.apache.spark.sql.{GraftShim => ExpressionUtils}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
+import graft.TableMemo
 import graft.index.CoverIndex
 import graft.geom.WkbCodec
 
@@ -200,25 +201,28 @@ object GeoExpressions {
     ExpressionUtils.column(WayAssembleExpr(ExpressionUtils.expression(refs), bc))
 
   /** (lon, lat) -> array<long> of containing polygon ids; polygon layer
-    * collected + broadcast once. */
+    * collected + broadcast once per layer version ([[graft.TableMemo]]). */
   def containingCol(spark: SparkSession, polygons: DataFrame, level: Int): (Column, Column) => Column = {
-    val collected = polygons.select("poly_id", "geom").collect()
-    val idx = CoverIndex.build(
-      collected.map(_.getLong(0)), collected.map(_.getAs[Array[Byte]](1)), level)
-    val bc = spark.sparkContext.broadcast(idx)
+    val bc = TableMemo.derived(spark, "containingCol", polygons, level) {
+      val collected = polygons.select("poly_id", "geom").collect()
+      TableMemo.Held.broadcast(spark.sparkContext.broadcast(CoverIndex.build(
+        collected.map(_.getLong(0)), collected.map(_.getAs[Array[Byte]](1)), level)))
+    }
     (lon, lat) => ExpressionUtils.column(
       PolyContainsExpr(ExpressionUtils.expression(lon), ExpressionUtils.expression(lat), bc))
   }
 
   /** (lon, lat) -> array<long> of the k nearest poi ids, ordered.
     * `geodesic = true` ranks by great-circle distance (haversine) instead
-    * of planar degrees — see [[PoiGrid]]. */
+    * of planar degrees — see [[PoiGrid]]. The grid is built and broadcast
+    * once per layer version ([[graft.TableMemo]]). */
   def knnCol(spark: SparkSession, pois: DataFrame, k: Int, level: Int,
              geodesic: Boolean = false): (Column, Column) => Column = {
-    val rows = pois.select("poi_id", "px", "py").collect()
-    val grid = new PoiGrid(level, rows.map(_.getLong(0)),
-      rows.map(_.getDouble(1)), rows.map(_.getDouble(2)), geodesic)
-    val bc = spark.sparkContext.broadcast(grid)
+    val bc = TableMemo.derived(spark, "knnCol", pois, level, geodesic) {
+      val rows = pois.select("poi_id", "px", "py").collect()
+      TableMemo.Held.broadcast(spark.sparkContext.broadcast(new PoiGrid(level,
+        rows.map(_.getLong(0)), rows.map(_.getDouble(1)), rows.map(_.getDouble(2)), geodesic)))
+    }
     (lon, lat) => ExpressionUtils.column(
       KnnPoisExpr(ExpressionUtils.expression(lon), ExpressionUtils.expression(lat), bc, k))
   }

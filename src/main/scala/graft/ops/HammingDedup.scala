@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType}
+import graft.TableMemo
 
 /** SimHash Hamming near-dup join — the Manku / Jain / Sarma WWW'07
   * production web-dedup design ("Detecting Near-Duplicates for Web
@@ -69,7 +70,7 @@ object HammingDedup {
     * Spark and oracle sides, or the planted semantics silently corrupt
     * (the oracle mirrors the same formula, so hash checks would pass). */
   def editedCorpus(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+    val d = TableMemo.parquet(spark, s"$sfDir/documents.parquet").select("doc_id", "text")
     d.unionAll(d.filter(col("doc_id") % 4 === 0)
       .select((col("doc_id") + 2000000L).as("doc_id"),
         concat(col("text"), lit(" zz"), (col("doc_id") % 7).cast("string")).as("text")))

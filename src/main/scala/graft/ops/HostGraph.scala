@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.TableMemo
 
 /** Host-graph contraction — the standard first reduction of a web crawl's
   * page-level link graph (the Common Crawl host/PLD graph pipeline):
@@ -39,7 +40,7 @@ object HostGraph {
 
   /** q154 entry: host graph of the synthetic page-level link graph. */
   def docHostGraph(spark: SparkSession, sfDir: String): DataFrame =
-    contract(LinkGraph.synthEdges(spark.read.parquet(s"$sfDir/documents.parquet")))
+    contract(LinkGraph.synthEdges(TableMemo.parquet(spark, s"$sfDir/documents.parquet")))
 
   /** DuckDB replica of [[docHostGraph]]. */
   def hostGraphSql(): String =
@@ -98,7 +99,7 @@ object HostGraph {
 
   /** q158 entry: link delta between the synthetic crawl snapshots. */
   def docLinkDelta(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = TableMemo.parquet(spark, s"$sfDir/documents.parquet")
     val e1 = LinkGraph.synthEdges(docs).localCheckpoint(false)
     linkDelta(e1, edgesT2(docs, e1))
   }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.TableMemo
 
 /** HyperANF (Boldi, Rosa & Vigna, WWW 2011) — the neighborhood-function
   * sketch: after r rounds each node holds an HLL register vector of the
@@ -72,7 +73,7 @@ object HyperAnf {
 
   /** q152 entry: HyperANF over the synthetic link graph of `documents`. */
   def docAnf(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = TableMemo.parquet(spark, s"$sfDir/documents.parquet")
     anf(docs.select("doc_id"), LinkGraph.synthEdges(docs))
   }
 

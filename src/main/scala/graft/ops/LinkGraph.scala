@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.TableMemo
 
 /** Link-graph analysis over the document corpus — PageRank, the canonical
   * web-scale quality prior for training-data curation.
@@ -72,7 +73,7 @@ object LinkGraph {
 
   /** q86 entry: PageRank over the synthetic link graph of `documents`. */
   def docPageRank(spark: SparkSession, sfDir: String, iters: Int = 5): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = TableMemo.parquet(spark, s"$sfDir/documents.parquet")
     pageRank(docs.select("doc_id"), synthEdges(docs), iters)
   }
 
@@ -113,7 +114,7 @@ object LinkGraph {
     * e1 feeding 2 rounds on e2). */
   def docPageRankIncremental(spark: SparkSession, sfDir: String,
                              repairIters: Int = 2): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = TableMemo.parquet(spark, s"$sfDir/documents.parquet")
     val nodes = docs.select("doc_id")
     val e1 = synthEdges(docs).localCheckpoint(false)
     val old = pageRank(nodes, e1, 5).localCheckpoint(false)
@@ -222,7 +223,7 @@ object LinkGraph {
 
   /** q103 entry: triangle counts over the synthetic link graph. */
   def docTriangles(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = TableMemo.parquet(spark, s"$sfDir/documents.parquet")
     triangles(docs.select("doc_id"), synthEdges(docs))
   }
 
@@ -279,7 +280,7 @@ object LinkGraph {
   /** q108 entry: hop distance from the % [[BfsSeedMod]] seed set over the
     * synthetic link graph. */
   def docBfsHops(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = TableMemo.parquet(spark, s"$sfDir/documents.parquet")
     bfsHops(docs.select("doc_id"), synthEdges(docs),
       docs.filter(col("doc_id") % BfsSeedMod === 0).select("doc_id"))
   }
@@ -339,7 +340,7 @@ object LinkGraph {
   /** q120 entry: weighted shortest path from the % [[BfsSeedMod]] seed
     * set over the synthetic link graph. */
   def docSssp(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = TableMemo.parquet(spark, s"$sfDir/documents.parquet")
     sssp(docs.select("doc_id"), synthEdges(docs),
       docs.filter(col("doc_id") % BfsSeedMod === 0).select("doc_id"))
   }
@@ -513,7 +514,7 @@ object LinkGraph {
 
   /** q146 entry: HITS over the synthetic link graph of `documents`. */
   def docHits(spark: SparkSession, sfDir: String, iters: Int = 3): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = TableMemo.parquet(spark, s"$sfDir/documents.parquet")
     hits(docs.select("doc_id"), synthEdges(docs), iters)
   }
 
@@ -595,7 +596,7 @@ object LinkGraph {
   /** q147 entry: TrustRank over the synthetic link graph of `documents`,
     * seeds = every [[TrustSeedMod]]-th doc. */
   def docTrustRank(spark: SparkSession, sfDir: String, iters: Int = 5): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = TableMemo.parquet(spark, s"$sfDir/documents.parquet")
     trustRank(docs.select("doc_id"), synthEdges(docs),
       docs.select("doc_id").filter(col("doc_id") % TrustSeedMod === 0), iters)
   }
@@ -654,7 +655,7 @@ object LinkGraph {
 
   /** q148 entry: assortativity over the synthetic link graph. */
   def docAssortativity(spark: SparkSession, sfDir: String): DataFrame =
-    assortativity(synthEdges(spark.read.parquet(s"$sfDir/documents.parquet")))
+    assortativity(synthEdges(TableMemo.parquet(spark, s"$sfDir/documents.parquet")))
 
   /** DuckDB replica of [[docAssortativity]]. */
   def assortativitySql(): String =
@@ -708,7 +709,7 @@ object LinkGraph {
 
   /** q149 entry: co-citation pairs over the synthetic link graph. */
   def docCoCitation(spark: SparkSession, sfDir: String): DataFrame =
-    coCitation(synthEdges(spark.read.parquet(s"$sfDir/documents.parquet")))
+    coCitation(synthEdges(TableMemo.parquet(spark, s"$sfDir/documents.parquet")))
 
   /** DuckDB replica of [[docCoCitation]]. */
   def coCitationSql(): String =
@@ -764,7 +765,7 @@ object LinkGraph {
 
   /** q150 entry: SALSA over the synthetic link graph of `documents`. */
   def docSalsa(spark: SparkSession, sfDir: String, iters: Int = 3): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = TableMemo.parquet(spark, s"$sfDir/documents.parquet")
     salsa(docs.select("doc_id"), synthEdges(docs), iters)
   }
 
@@ -840,7 +841,7 @@ object LinkGraph {
     * graph ⇒ everything "core"); the sparse subgraph exposes all four
     * regions, which is what the operator exists to measure. */
   def docBowTie(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = TableMemo.parquet(spark, s"$sfDir/documents.parquet")
     bowTie(docs.select("doc_id"),
       synthEdges(docs).filter((col("src") + col("dst")) % 3 === 0),
       docs.filter(col("doc_id") === 0L).select("doc_id"))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.TableMemo
 
 /** Temperature-based language resampling (the mT5 / XLM-R corpus-mixing
   * primitive; Conneau et al. 2020 §3.1, Xue et al. 2021 §3.2): a raw web
@@ -46,7 +47,7 @@ object Mixing {
 
   /** q161 entry: temperature sample of the documents corpus. */
   def docTemperatureSample(spark: SparkSession, sfDir: String): DataFrame =
-    temperatureSample(spark.read.parquet(s"$sfDir/documents.parquet"))
+    temperatureSample(TableMemo.parquet(spark, s"$sfDir/documents.parquet"))
 
   /** DuckDB replica of [[docTemperatureSample]]. */
   def temperatureSampleSql(): String =

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.TableMemo
 
 
 /** OSM node<->way resolution — the reference's one real dataflow join (J1,
@@ -39,11 +40,14 @@ object OsmWayAssembly {
     * way's tags per ref only to rebuild an order the row already had.
     * Zero exchanges; output identical to [[assembleShuffle]] (parity
     * spec-tested): ways with no resolved ref are dropped, matching the
-    * inner join. */
+    * inner join. The node map is collected and broadcast once per node
+    * layer version ([[graft.TableMemo]]). */
   private def assembleBroadcast(spark: SparkSession, nodes: DataFrame,
                                 ways: DataFrame): DataFrame = {
-    val rows = nodes.select(col("node_id"), col("lon"), col("lat")).collect()
-    val bc = spark.sparkContext.broadcast(NodeCoordMap.fromRows(rows))
+    val bc = TableMemo.derived(spark, "nodeCoordMap", nodes) {
+      val rows = nodes.select(col("node_id"), col("lon"), col("lat")).collect()
+      TableMemo.Held.broadcast(spark.sparkContext.broadcast(NodeCoordMap.fromRows(rows)))
+    }
     ways.select(col("way_id"), col("tags"),
         GeoExpressions.wayAssemble(col("refs"), bc).as("a"))
       .filter(col("a.npts") > 0)

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.TableMemo
 
 /** Vector<->raster operators over the 0.05-degree pixel lattice (the same
   * lattice the synthetic points live on, so the layer's boundary-gap
@@ -226,7 +227,7 @@ object IdwSurface {
 
   /** q157 entry: IDW surface of event values at user home points. */
   def docIdw(spark: SparkSession, sfDir: String): DataFrame =
-    surface(spark.read.parquet(s"$sfDir/events.parquet")
+    surface(TableMemo.parquet(spark, s"$sfDir/events.parquet")
       .filter(col("value").isNotNull)
       .select(expr("(user_id * 467 + 3) % 7200").as("lonm"),
         expr("(user_id * 911 + 5) % 2800").as("latm"),

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.TableMemo
 
 /** Robots-rule URL filtering with LONGEST-MATCH semantics (the
   * Google/RFC 9309 rule: the most specific matching path prefix wins,
@@ -67,7 +68,7 @@ object Robots {
 
   /** q159 entry: robots verdicts for every synthetic page. */
   def docVerdicts(spark: SparkSession, sfDir: String): DataFrame = {
-    val pages = spark.read.parquet(s"$sfDir/documents.parquet")
+    val pages = TableMemo.parquet(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id"), HostGraph.hostOf(col("doc_id")).as("host"),
         concat(lit("/page/"), col("doc_id").cast("string")).as("path"))
     verdicts(pages, rules(spark))

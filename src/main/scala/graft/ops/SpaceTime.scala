@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.TableMemo
 
 /** Space-time cube trend analysis — the "emerging hot spot" statistic
   * (ArcGIS emerging-hot-spot / Mann-Kendall trend test, Kendall 1975):
@@ -33,7 +34,7 @@ object SpaceTime {
   def mannKendall(spark: SparkSession, sfDir: String): DataFrame = {
     // integer `div` end to end — Column./ is double division and would
     // put a float in the op sequence the oracle must mirror exactly
-    val ev = spark.read.parquet(s"$sfDir/events.parquet")
+    val ev = TableMemo.parquet(spark, s"$sfDir/events.parquet")
       .select(
         expr("(((user_id * 467 + 3) % 7200) * 64) div 7200").as("cx"),
         expr("(((user_id * 911 + 5) % 2800) * 64) div 2800").as("cy"),
@@ -80,7 +81,7 @@ object SpaceTime {
     * every day, so restricting the lag join to occupied cells is exact,
     * not an approximation. */
   def spatialMarkov(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$sfDir/events.parquet")
+    val ev = TableMemo.parquet(spark, s"$sfDir/events.parquet")
       .select(
         expr("(((user_id * 467 + 3) % 7200) * 64) div 7200").as("cx"),
         expr("(((user_id * 911 + 5) % 2800) * 64) div 2800").as("cy"),

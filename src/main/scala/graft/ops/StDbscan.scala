@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.TableMemo
 
 /** ST-DBSCAN (Birant & Kut 2007) — spatio-temporal density clustering of
   * the event stream: neighbors must be close in BOTH space (L2 <= eps1)
@@ -41,7 +42,7 @@ object StDbscan {
   val DayMul = 1000000L
 
   private[graft] def evCoords(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/events.parquet").select(
+    TableMemo.parquet(spark, s"$sfDir/events.parquet").select(
       expr("(user_id * 467 + 3) % 7200").as("x"),
       expr("(user_id * 911 + 5) % 2800").as("y"),
       expr(s"unix_micros(CAST(ts AS TIMESTAMP)) div ${SpaceTime.DayUs}L").as("day"))

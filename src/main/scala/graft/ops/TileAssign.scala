@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.index.CellGrid
+import graft.index.{CellGrid, Tiles}
 
 /** Raster<->vector tile assignment (north-rule operator): map points to
   * slippy-map Web-Mercator tiles (z, x, y). Pure native-function column
@@ -15,10 +15,11 @@ object TileAssign {
 
   def tileX(lon: Column, z: Int): Column = CellGrid.cellX(lon, z)
 
-  /** NULL for a NULL lat. */
+  /** NULL for a NULL lat; a lat past Web Mercator's limit takes the edge
+    * row, as in [[graft.index.Tiles.tileY]]. */
   def tileY(lat: Column, z: Int): Column = {
     val n = (1L << z).toDouble
-    val r = radians(lat)
+    val r = radians(greatest(lit(-Tiles.MaxLat), least(lit(Tiles.MaxLat), lat)))
     val raw = floor((lit(1.0) - log(tan(r) + lit(1.0) / cos(r)) / math.Pi) / 2.0 * n).cast("long")
     CellGrid.clamp(lat, raw, z)
   }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.TableMemo
 
 /** URL canonicalization for web-corpus dedup: the same document is
   * typically crawled under many spellings of one address (case-variant
@@ -55,7 +56,7 @@ object UrlOps {
     * == 0 three planted spellings of the same address (uppercased
     * authority, tracking params + fragment, trailing slash). */
   def urlVariants(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = spark.read.parquet(s"$sfDir/documents.parquet")
+    val base = TableMemo.parquet(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id"), graft.sources.WebPagesSynth.urlOf(col("doc_id")).as("url"))
     val planted = base.filter(col("doc_id") % 5 === 0)
     val head = regexp_extract(col("url"), "^(https://[^/]*)", 1)

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.geom.WkbCodec
+import graft.TableMemo
 
 /** Deterministic vector layers derived from the read-only TPC-H-ish dim
   * tables: an admin-like polygon layer (diamonds, incl. overlapping dense
@@ -47,7 +48,7 @@ object Layers {
   /** (poly_id long, cx, cy, r double, geom binary WKB) — the geom column is
     * real JTS-built WKB; downstream spatial ops consume only the WKB. */
   def polygons(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = spark.read.parquet(s"$sfDir/part.parquet")
+    val p = TableMemo.parquet(spark, s"$sfDir/part.parquet")
     val pk = col("p_partkey")
     val mkDiamond = udf((cx: Double, cy: Double, r: Double) =>
       WkbCodec.write(WkbCodec.diamond(cx, cy, r)))
@@ -79,7 +80,7 @@ object Layers {
 
   /** (polyb_id long, cx, cy, r double, geom binary WKB). */
   def polygonsB(spark: SparkSession, sfDir: String): DataFrame = {
-    val c = spark.read.parquet(s"$sfDir/customer.parquet")
+    val c = TableMemo.parquet(spark, s"$sfDir/customer.parquet")
     val ck = col("c_custkey")
     val mkDiamond = udf((cx: Double, cy: Double, r: Double) =>
       WkbCodec.write(WkbCodec.diamond(cx, cy, r)))
@@ -95,7 +96,7 @@ object Layers {
 
   /** (poi_id long, px, py double, geom binary WKB point). */
   def pois(spark: SparkSession, sfDir: String): DataFrame = {
-    val s = spark.read.parquet(s"$sfDir/supplier.parquet")
+    val s = TableMemo.parquet(spark, s"$sfDir/supplier.parquet")
     val sk = col("s_suppkey")
     val mkPoint = udf((x: Double, y: Double) => WkbCodec.write(WkbCodec.point(x, y)))
     s.select(sk.as("poi_id"), poiX(sk).as("px"), poiY(sk).as("py"))

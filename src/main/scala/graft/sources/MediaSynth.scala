@@ -6,6 +6,7 @@ import java.util.zip.{CRC32, Deflater}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.TableMemo
 
 /** Deterministic binary media fixtures for the multimodal-column suite:
   * REAL file formats (spec-complete PNGs that `javax.imageio` decodes, and
@@ -90,7 +91,7 @@ object MediaSynth {
   def blobs(spark: SparkSession, sfDir: String): DataFrame = {
     val mk = udf((d: Long) =>
       if (d % 2 == 0) png(width(d), height(d)) else jpeg(width(d), height(d)))
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    TableMemo.parquet(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id"), mk(col("doc_id")).as("payload"))
   }
 
@@ -120,7 +121,7 @@ object MediaSynth {
   /** (doc_id, payload binary) — one WAV per document. */
   def audioBlobs(spark: SparkSession, sfDir: String): DataFrame = {
     val mk = udf((d: Long) => wav(chans(d), sampleRate(d), nFrames(d)))
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    TableMemo.parquet(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id"), mk(col("doc_id")).as("payload"))
   }
 
@@ -196,7 +197,7 @@ object MediaSynth {
   /** (doc_id, payload binary) — one MJPEG AVI per document. */
   def videoBlobs(spark: SparkSession, sfDir: String): DataFrame = {
     val mk = udf((d: Long) => avi(vWidth(d), vHeight(d), vFrames(d)))
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    TableMemo.parquet(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id"), mk(col("doc_id")).as("payload"))
   }
 

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.TableMemo
 
 /** Deterministic OSM-style element tables (FIXTURES.md §4): nodes and ways
   * with the decoded shape of the reference's PBF scan output
@@ -20,7 +21,7 @@ import org.apache.spark.sql.functions._
 object OsmElements {
 
   def nodes(spark: SparkSession, sfDir: String): DataFrame = {
-    val c = spark.read.parquet(s"$sfDir/customer.parquet")
+    val c = TableMemo.parquet(spark, s"$sfDir/customer.parquet")
     c.select(
       col("c_custkey").as("node_id"),
       (((col("c_custkey") * 61) % 7200) / 20.0 - 180.0).as("lon"),
@@ -28,14 +29,12 @@ object OsmElements {
       array(concat(lit("name="), col("c_name"))).as("tags"))
   }
 
-  // customer count drives the ref modulus; cache it per sfDir so repeated
-  // ways() calls (entry + queries in one session) don't re-run a count job
-  private val ncustCache = scala.collection.concurrent.TrieMap.empty[String, Long]
-
   def ways(spark: SparkSession, sfDir: String): DataFrame = {
-    val o = spark.read.parquet(s"$sfDir/orders.parquet")
-    val ncust = ncustCache.getOrElseUpdate(sfDir,
-      spark.read.parquet(s"$sfDir/customer.parquet").count())
+    val o = TableMemo.parquet(spark, s"$sfDir/orders.parquet")
+    // the customer count drives the ref modulus: counted once per version
+    // of the customer table, so repeated ways() calls run no count job
+    val c = TableMemo.parquet(spark, s"$sfDir/customer.parquet")
+    val ncust = TableMemo.derived(spark, "rowCount", c)(TableMemo.Held(c.count(), 0L, () => ()))
     val w = col("o_orderkey")
     val nrefs = lit(4) + (w % 5)
     val refAt = (i: org.apache.spark.sql.Column) =>

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.TableMemo
 
 /** Deterministic Common-Crawl-style web-pages table (the north-rule
   * input_hint shape: url, warc_ts, html binary, text, lang), synthesized
@@ -76,7 +77,7 @@ object WebPagesSynth {
     * BEFORE page synthesis means a sketch pass over 5% of pages costs 5%
     * of a scan, not a second full synthesis+extraction pass. */
   def pages(spark: SparkSession, sfDir: String, sample: Option[Double]): DataFrame = {
-    val base = spark.read.parquet(s"$sfDir/documents.parquet")
+    val base = TableMemo.parquet(spark, s"$sfDir/documents.parquet")
     val docs = sample.map(f => base.sample(f, 42)).getOrElse(base)
     val d = col("doc_id")
     val markers = concat_ws(" ",

@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.ops.Dedup
+import graft.TableMemo
 
 /** Deterministic batch replays of the streaming operators, shaped for the
   * driver's DuckDB oracle (r4 verdict item 1: the streaming families were
@@ -114,7 +115,7 @@ object StreamReplay {
                  lookback: String = "6 hours"): DataFrame = {
     import s.implicits._
     implicit val ctx: SQLContext = s.sqlContext
-    val ev = s.read.parquet(s"$dir/events.parquet")
+    val ev = TableMemo.parquet(s, s"$dir/events.parquet")
     def side(kind: String) = ev.filter(col("event_type") === kind)
       .selectExpr("event_id", "user_id", "CAST(ts AS TIMESTAMP) AS ts")
       .as[(Long, Long, Timestamp)].collect().toSeq
@@ -154,7 +155,7 @@ object StreamReplay {
                 depth: Int = 4, width: Int = 64): DataFrame = {
     import s.implicits._
     implicit val ctx: SQLContext = s.sqlContext
-    val rows = s.read.parquet(s"$dir/events.parquet")
+    val rows = TableMemo.parquet(s, s"$dir/events.parquet")
       .selectExpr("CAST(ts AS TIMESTAMP) AS ts", "user_id")
       .as[(Timestamp, Long)].collect().toSeq
       .sortBy(r => (r._1.getTime, r._2))
@@ -197,7 +198,7 @@ object StreamReplay {
   def sessionizeReplay(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     implicit val ctx: SQLContext = s.sqlContext
-    val rows = s.read.parquet(s"$dir/events.parquet")
+    val rows = TableMemo.parquet(s, s"$dir/events.parquet")
       .selectExpr("user_id", "event_id", "CAST(ts AS TIMESTAMP) AS ts")
       .as[(Long, Long, Timestamp)].collect().toSeq
       .sortBy(r => (r._3.getTime, r._2))
@@ -243,7 +244,7 @@ object StreamReplay {
       watermark = "365 days", maxPerBucket = 1 << 22)
     val pairs = drain(out.toDF(), 2) { i => in.addData(chunks(i): _*); () }
       .select("doc_a", "doc_b").distinct()
-    val planted = s.read.parquet(s"$dir/documents.parquet")
+    val planted = TableMemo.parquet(s, s"$dir/documents.parquet")
       .filter(col("doc_id") % 3 === 0)
       .select(col("doc_id").as("doc_a"), (col("doc_id") + 1000000).as("doc_b"))
     planted.join(pairs, Seq("doc_a", "doc_b"))
@@ -272,7 +273,7 @@ object StreamReplay {
     // this query RESUME against that run's (deleted) stage files — a
     // counter collides, the temp-dir name does not
     val ckpt = s"${graft.Scratch.dir}/ckpt_${tmp.getFileName}"
-    val ev = s.read.parquet(s"$dir/events.parquet")
+    val ev = TableMemo.parquet(s, s"$dir/events.parquet")
       .select(col("event_id"), col("user_id"),
         floor(col("value") * 1000).cast("long").as("v"))
     ev.repartitionByRange(4, col("event_id")).write.parquet(stage)

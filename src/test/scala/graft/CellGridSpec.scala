@@ -108,6 +108,20 @@ class CellGridSpec extends AnyFunSuite with SparkTest {
       assert(r.getLong(i + 1) === scalar(v), s"v=$v form $i")
   }
 
+  test("tile y past Web Mercator's latitude limit is the edge row in both forms") {
+    import spark.implicits._
+    val lats = Seq(200.0, 90.0, -90.0, -200.0)
+    val zooms = Seq(0, 8, 20)
+    val rows = lats.toDF("lat").select(col("lat") +: zooms.map(z => TileAssign.tileY(col("lat"), z)): _*)
+      .collect()
+    for (r <- rows; (z, i) <- zooms.zipWithIndex) {
+      val lat = r.getDouble(0)
+      val want = if (lat > 0) 0L else (1L << z) - 1
+      assert(Tiles.tileY(lat, z) === want, s"scalar lat=$lat z=$z")
+      assert(r.getLong(i + 1) === want, s"Column lat=$lat z=$z")
+    }
+  }
+
   test("a NULL coordinate gets a NULL cell, tile and cell key, not the last cell") {
     import spark.implicits._
     val df = Seq[(Option[Double], Option[Double])]((None, None), (None, Some(0.5)), (Some(20.5), None))

@@ -2,9 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (sbt forks one test JVM). */
+/** One shared local session for all suites (sbt forks one test JVM). A
+  * suite that stops it leaves the next suite a new one. */
 object SparkTest {
-  lazy val session: SparkSession = {
+  private var current: SparkSession = _
+
+  def session: SparkSession = synchronized {
+    if (current == null || current.sparkContext.isStopped) current = build()
+    current
+  }
+
+  private def build(): SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")

@@ -24,6 +24,11 @@ pairs (ties count for neither side) and the medians differ by more than the
 parent's interquartile range. `bound` is FAIL when the change's median is
 worse than the parent's by more than the metric's relative bound.
 
+Each run also records its per-operation medians (`op_p50_by_name` from
+that side's `.bench_build/last-WORKLOAD-trace0.json`), and the summary ends
+with a table of them, parent against change, so a query-mix comparison
+shows which queries moved.
+
 Exit status is 1 when a run failed, reported `correct: false`, or had an
 `op_ok_share` below 1; otherwise 0.
 """
@@ -63,9 +68,20 @@ def export_rev(rev, dest):
     return sha
 
 
+def op_p50_by_name(root, workload, since):
+    """Per-operation median seconds of the run that wrote `root`'s last
+    untraced result for `workload` at or after `since`, or None."""
+    path = os.path.join(root, ".bench_build", f"last-{workload}-trace0.json")
+    if not os.path.exists(path) or os.path.getmtime(path) < since:
+        return None
+    with open(path) as fh:
+        return json.load(fh).get("op_p50_by_name")
+
+
 def run_side(root, workload, seed, seconds):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds)]
+    start = time.time()
     p = subprocess.run(cmd, cwd=root, capture_output=True, text=True)
     result = None
     for line in reversed(p.stdout.strip().splitlines()):
@@ -75,6 +91,7 @@ def run_side(root, workload, seed, seconds):
         except ValueError:
             continue
     return {"rc": p.returncode, "result": result,
+            "op_p50_by_name": op_p50_by_name(root, workload, start),
             "stderr_tail": None if p.returncode == 0 else p.stderr[-2000:]}
 
 
@@ -140,7 +157,27 @@ def summarize(records, spec):
         print(f"  {name:14s} {parent:>30s} {change:>30s} {((pq3 - pq1) / pm if pm else 0.0):>9.3f}"
               f" {wins:>3d}/{len(pairs):<2d} {(cm / pm if pm else float('nan')):>7.3f}"
               f" {bound:>11s} {'gain' if gain else '-'}")
+    summarize_ops(records, pairs)
     return 1 if bad else 0
+
+
+def summarize_ops(records, pairs):
+    """Per-operation median of each side's per-run medians, over the
+    complete pairs whose runs recorded them."""
+    ops = {}
+    for r in records:
+        if r["seed"] in pairs and run_ok(r) and r.get("op_p50_by_name"):
+            for op, sec in r["op_p50_by_name"].items():
+                ops.setdefault(op, {s: [] for s in SIDES})[r["side"]].append(sec)
+    if not ops:
+        return
+    print(f"  {'operation (median of per-run p50, s)':40s} {'parent':>9s} {'change':>9s} {'ratio':>7s} {'runs':>7s}")
+    for op in sorted(ops):
+        p, c = ops[op]["parent"], ops[op]["change"]
+        if not p or not c:
+            continue
+        pm, cm = statistics.median(p), statistics.median(c)
+        print(f"  {op:40s} {pm:>9.4g} {cm:>9.4g} {(cm / pm if pm else float('nan')):>7.3f} {len(p):>3d}/{len(c):<3d}")
 
 
 def read_log(path):
