@@ -30,10 +30,11 @@ import graft.geom.WkbCodec
   * the brute-force `JOIN ... ON pip GROUP BY` DuckDB oracle.
   *
   * Scale shape: the pyramid build is one groupBy(cell) count at the finest
-  * level (map-side combinable) plus rollups over the already-tiny counts
-  * table; the query-side classification runs distributed over the POLYGON
-  * dim (flatMap on executors), producing two small (poly, cell) pair
-  * tables; both probe joins are broadcast equi-joins on the cell key.
+  * level (map-side combinable) plus one rollup of the already-tiny counts
+  * table into every coarser level; the query-side classification runs
+  * distributed over the POLYGON dim (flatMap on executors), producing two
+  * small (poly, cell) pair tables; both probe joins are broadcast
+  * equi-joins on the cell key.
   */
 object CellPyramid {
 
@@ -42,32 +43,27 @@ object CellPyramid {
     lit(level.toLong << 58) + shiftleft(CellGrid.cellX(lon, level), 29) + CellGrid.cellY(lat, level)
 
   /** Counts per cell at levels finest, finest-1, ..., finest-depth (the
-    * packed id carries its level). One full-data aggregate at the finest
-    * level; every rollup re-aggregates the counts TABLE (cells, not
-    * points): parent id = same bit layout with halved coordinates. */
+    * packed id carries its level), in ONE rollup (GeoBlocks pre-aggregates
+    * every level from the finest counts, not level from level): one
+    * full-data aggregate at the finest level, then each finest cell
+    * explodes into its depth+1 ancestor ids and one sum(cnt) aggregate
+    * over that cell-count-sized table gives every level at once. The
+    * ancestor k levels up of (level, x, y) is (level-k, x>>k, y>>k),
+    * rebuilt from the packed id's shifted fields — pure int64 column math.
+    * Two exchanges whatever the depth, and nothing materialized. */
   def build(points: DataFrame, lonCol: String, latCol: String,
             finest: Int, depth: Int): DataFrame = {
     require(depth >= 0 && finest - depth >= 0, s"bad pyramid $finest/$depth")
-    // materialize the finest level ONCE (r6): every coarser level derives
-    // from it and the final union reads it depth+1 times — without the cut
-    // each level re-executes the full point scan + groupBy (for the entity
-    // layer: a page-synthesis + extraction pass per level). Cell-count
-    // sized (bounded by the finest grid), never point-sized.
-    val base = points
+    val x = shiftright(col("cell"), 29).bitwiseAND(lit(0x1fffffffL))
+    val y = col("cell").bitwiseAND(lit(0x1fffffffL))
+    val ancestors = (0 to depth).map { k =>
+      lit((finest - k).toLong << 58) + shiftleft(shiftright(x, k), 29) + shiftright(y, k)
+    }
+    points
       .groupBy(cellCol(col(lonCol), col(latCol), finest).as("cell"))
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false)
-    val levels = Iterator.iterate(base) { cur =>
-      // parent of (level, x, y) is (level-1, x/2, y/2): rebuild the packed
-      // id from shifted fields — pure int64 column math
-      val l = shiftright(col("cell"), 58).bitwiseAND(lit(0x1fL))
-      val x = shiftright(col("cell"), 29).bitwiseAND(lit(0x1fffffffL))
-      val y = col("cell").bitwiseAND(lit(0x1fffffffL))
-      cur.select((shiftleft(l - 1, 58) + shiftleft(shiftright(x, 1), 29)
-          + shiftright(y, 1)).as("cell"), col("cnt"))
-        .groupBy("cell").agg(sum("cnt").as("cnt"))
-    }.take(depth + 1).toSeq
-    levels.reduce(_ unionAll _)
+      .select(explode(array(ancestors: _*)).as("cell"), col("cnt"))
+      .groupBy("cell").agg(sum("cnt").as("cnt"))
   }
 
   /** Incremental maintenance: counts are additive, so appending a batch of
@@ -253,15 +249,17 @@ object CellPyramid {
     val side = polygonSide(spark, polygons, finest, depth, broadcastPairLimit)
     val interiorPairs = side.pairs.filter(col("interior")).select("poly_id", "cell")
     val boundaryPairs = side.pairs.filter(!col("interior")).select("poly_id", "cell")
-    val interiorCounts = pyramid
+    // each side contributes (poly_id, n) rows — an interior cell's count,
+    // or 1 per refined boundary point — and ONE groupBy sums both
+    val interiorRows = pyramid
       .join(if (side.nInterior <= broadcastPairLimit) broadcast(interiorPairs) else interiorPairs,
         Seq("cell"))
-      .groupBy("poly_id").agg(sum("cnt").as("n"))
+      .select(col("poly_id"), col("cnt").as("n"))
     // boundary refine: equi-join on the finest cell, then the SAME native
     // prepared-geometry contains as the PIP join's shuffle refine
     val ptsCells = points
       .withColumn("cell", cellCol(col(lonCol), col(latCol), finest))
-    val boundaryCounts = (side.wkbByPoly match {
+    val boundaryRows = (side.wkbByPoly match {
       case Some(wkbByPoly) =>
         // bare (poly, cell) pairs broadcast into the probe; the refine
         // reads the polygon from the broadcast map by poly_id
@@ -279,8 +277,8 @@ object CellPyramid {
         ptsCells.join(withWkb, Seq("cell"))
           .filter(graft.ops.GeoExpressions.preparedContains(
             col("poly_id"), col("wkb"), col(lonCol), col(latCol)))
-    }).groupBy("poly_id").agg(count(lit(1)).as("n"))
-    interiorCounts.unionAll(boundaryCounts)
+    }).select(col("poly_id"), lit(1L).as("n"))
+    interiorRows.unionAll(boundaryRows)
       .groupBy("poly_id").agg(sum("n").as("n_points"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.TableMemo
 
@@ -18,11 +19,11 @@ import graft.TableMemo
   *
   * Shape per iteration (the canonical distributed PageRank): contributions
   * = one equi-join of the rank vector with the edge list on src (edges
-  * pre-partitioned once, ranks re-shuffled per round), then one
-  * partial-aggregating groupBy on dst. Nothing driver-side, no adjacency
-  * materialized per node. Fixed iteration count keeps the lineage shallow
-  * (5 rounds); at larger R cut it with localCheckpoint like
-  * [[Dedup.components]] does per round.
+  * materialized once), then one partial-aggregating groupBy on the target
+  * that also gives every node its rank ([[pageRankFrom]]): one exchange
+  * per round. Nothing driver-side, no adjacency materialized per node.
+  * Fixed iteration count keeps the lineage shallow (5 rounds); at larger R
+  * cut it with localCheckpoint like [[Dedup.components]] does per round.
   *
   * The synthetic edge list is closed-form from doc_id (deterministic k-out
   * graph, self-loops removed, duplicates deduped) so the oracle re-derives
@@ -35,41 +36,32 @@ object LinkGraph {
   /** Damping 0.85 as (teleport, damp) integer/double pair. */
   val Teleport = 150000L // floor(0.15 * Scale)
 
+  /** Most targets a doc links to: j runs over 0..2 + i % 3. */
+  private val MaxOut = 5
+
   /** Closed-form k-out link graph over the documents table:
     * doc i links to (i * 31 + j * 17 + 7) % N for j in 0..2 + i % 3,
-    * self-loops dropped, duplicate targets deduped. */
+    * self-loops dropped, duplicate targets deduped. A duplicate (src, dst)
+    * can only come from one doc's own targets, so each doc's target array
+    * is deduped in its row (`array_distinct`) and exploded: no exchange,
+    * given unique doc_id. Array functions, no lambda, so the row work
+    * stays in whole-stage codegen. N is counted once per version of the
+    * documents table ([[TableMemo]]). */
   def synthEdges(docs: DataFrame): DataFrame = {
-    val n = docs.agg(count(lit(1)).as("n_docs"))
-    Scalars.join(docs.select(col("doc_id")), n)
-      .select(col("doc_id").as("src"),
-        explode(sequence(lit(0L), lit(2L) + col("doc_id") % 3)).as("j"),
-        col("n_docs"))
-      .select(col("src"), ((col("src") * 31 + col("j") * 17 + 7) % col("n_docs")).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
+    val n = TableMemo.derived(docs.sparkSession, "rowCount", docs)(
+      TableMemo.Held(docs.count(), 0L, () => ()))
+    val src = col("doc_id")
+    val targets = array((0 until MaxOut).map(j => (src * 31 + j * 17 + 7) % n): _*)
+    docs.select(src.as("src"), explode(array_distinct(array_remove(
+      slice(targets, lit(1), (lit(3L) + src % 3).cast("int")), src))).as("dst"))
   }
 
-  /** `iters` rounds of integer PageRank over (src, dst) edges; every node
-    * in `nodes` gets a rank (teleport-only if nothing links to it).
+  /** `iters` rounds of integer PageRank over (src, dst) edges from the
+    * uniform start (every node at [[Scale]]); every node in `nodes` gets
+    * a rank (teleport-only if nothing links to it).
     * Output: (doc_id, pr) — BIGINT scaled by [[Scale]]. */
-  def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int = 5): DataFrame = {
-    val outdeg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    // materialize the (src, dst, deg) table once: every iteration probes
-    // it, and without the cut the edge synthesis + degree groupBy replay
-    // `iters` times (lineage also stays flat across rounds)
-    val e = edges.join(outdeg, "src").localCheckpoint(false)
-    var pr = nodes.select(col("doc_id"), lit(Scale).as("pr"))
-    for (_ <- 1 to iters) {
-      val sums = e.join(pr, e("src") === pr("doc_id"))
-        .select(col("dst"), floor(col("pr") / col("deg")).cast("long").as("c"))
-        .groupBy("dst").agg(sum("c").as("s"))
-      pr = nodes.select(col("doc_id"))
-        .join(sums, nodes("doc_id") === sums("dst"), "left")
-        .select(col("doc_id"),
-          (lit(Teleport) + floor(lit(0.85) * coalesce(col("s"), lit(0L))).cast("long")).as("pr"))
-    }
-    pr
-  }
+  def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int = 5): DataFrame =
+    pageRankFrom(nodes, edges, nodes.select(col("doc_id"), lit(Scale).as("pr")), iters)
 
   /** q86 entry: PageRank over the synthetic link graph of `documents`. */
   def docPageRank(spark: SparkSession, sfDir: String, iters: Int = 5): DataFrame = {
@@ -78,20 +70,39 @@ object LinkGraph {
   }
 
   /** [[pageRank]]'s iterate with an EXPLICIT starting vector — the
-    * warm-start primitive for incremental maintenance. */
+    * warm-start primitive for incremental maintenance.
+    *
+    * One exchange per round: a round is
+    * `(e ⋈ pr → (dst AS doc_id, c)) ∪ (nodes → (doc_id, 0))` under one
+    * groupBy(doc_id).sum(c), then the teleport formula. The zero rows give
+    * every node a rank and alone set `node`, so the groups of targets
+    * outside `nodes` drop after the sum. The rows are those of
+    * `nodes LEFT JOIN sums`, given unique doc_id, without a second join.
+    * The degree window leaves `e` partitioned on src and the aggregate
+    * leaves the rank vector partitioned on doc_id, so the next round's
+    * join shuffles neither. */
   def pageRankFrom(nodes: DataFrame, edges: DataFrame, start: DataFrame,
                    iters: Int): DataFrame = {
-    val outdeg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val e = edges.join(outdeg, "src").localCheckpoint(false)
+    // materialize the (src, dst, deg) table once: every iteration probes
+    // it, and without the cut the edge synthesis + degree window replay
+    // `iters` times (lineage also stays flat across rounds)
+    val e = edges
+      .select(col("src"), col("dst"), count(lit(1)).over(Window.partitionBy("src")).as("deg"))
+      .localCheckpoint(false)
+      // a NULL target reaches no node, as in a LEFT JOIN from `nodes`;
+      // saying so here, not by inference from the next round's join, keeps
+      // every round's `e` one plan, so one broadcast of it serves them all
+      .filter(col("dst").isNotNull)
+    val zeros = nodes.select(col("doc_id"), lit(0L).as("c"), lit(true).as("node"))
     var pr = start.select(col("doc_id"), col("pr"))
     for (_ <- 1 to iters) {
-      val sums = e.join(pr, e("src") === pr("doc_id"))
-        .select(col("dst"), floor(col("pr") / col("deg")).cast("long").as("c"))
-        .groupBy("dst").agg(sum("c").as("s"))
-      pr = nodes.select(col("doc_id"))
-        .join(sums, nodes("doc_id") === sums("dst"), "left")
-        .select(col("doc_id"),
-          (lit(Teleport) + floor(lit(0.85) * coalesce(col("s"), lit(0L))).cast("long")).as("pr"))
+      pr = e.join(pr, col("src") === col("doc_id"))
+        .select(col("dst").as("doc_id"), floor(col("pr") / col("deg")).cast("long").as("c"),
+          lit(false).as("node"))
+        .unionAll(zeros)
+        .groupBy("doc_id").agg(sum("c").as("s"), max("node").as("node"))
+        .filter(col("node"))
+        .select(col("doc_id"), (lit(Teleport) + floor(lit(0.85) * col("s")).cast("long")).as("pr"))
     }
     pr
   }

@@ -82,7 +82,9 @@ object SpatialStats {
     val zOnly = cells.select(col("cx"), col("cy"), col("z"))
     val lag = neighborPairs(zOnly)
       .groupBy("cx", "cy").agg(sum("zi").as("sum_wz"))
-    cells.join(lag, Seq("cx", "cy"), "left").na.fill(0L, Seq("sum_wz"))
+    // the lag has <= N rows by construction: broadcast it, so the lattice
+    // is not shuffled for a join AQE would turn into a broadcast anyway
+    cells.join(broadcast(lag), Seq("cx", "cy"), "left").na.fill(0L, Seq("sum_wz"))
       .select(col("cx"), col("cy"), col("z"), col("sum_wz"),
         when(col("z") > 0 && col("sum_wz") > 0, "HH")
           .when(col("z") < 0 && col("sum_wz") < 0, "LL")
@@ -142,7 +144,12 @@ object SpatialStats {
   }
 
   /** Lattice cells with raw count `n`, total `t`, and scaled deviation
-    * `z = N*n - t` — the shared first stage (ONE fact-table exchange).
+    * `z = N*n - t` — the shared first stage: ONE fact-table exchange for
+    * the counts, and the total as a second count over the points that
+    * runs beside it. Summing the counts saves that pass (given null-safe
+    * lattice keys, else the join's inferred isnotnull filter splits the
+    * subtree again) but waits for the exchange; q118 measured slower that
+    * way in the 8-query mix at sf0.01.
     *
     * Materialized once (`localCheckpoint(false)`, <= N rows): every
     * consumer in this family reads the lattice 2-3 times (pair/lag side

@@ -31,6 +31,31 @@ class CellPyramidSpec extends AnyFunSuite with SparkTest {
     }
   }
 
+  test("build: the one rollup equals a level-by-level union of point histograms") {
+    import spark.implicits._
+    // the grid's edges: lon ±180 and lat ±90 clamp into the last cells
+    val corners = Seq((-180.0, -90.0), (180.0, 90.0), (180.0, -90.0), (-180.0, 90.0),
+      (0.0, 90.0), (180.0, 0.0), (-180.0, 0.0), (0.0, -90.0), (180.0, 90.0))
+      .zipWithIndex.map { case ((x, y), i) => (100000L + i, x, y) }.toDF("id", "lon", "lat")
+    val p = pts(2000).unionAll(corners)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    for (depth <- Seq(0, 3)) {
+      val reference = (10 - depth to 10)
+        .map(l => p.groupBy(CellPyramid.cellCol(col("lon"), col("lat"), l).as("cell"))
+          .agg(count(lit(1)).as("cnt")))
+        .reduce(_ unionAll _)
+      val got = rows(CellPyramid.build(p, "lon", "lat", finest = 10, depth = depth))
+      assert(got === rows(reference), s"depth $depth")
+      assert(got.map(r => CellGrid.unpackLevel(r._1)).distinct.sorted === (10 - depth to 10))
+      // (180, 90) twice: the last cell of every level holds both
+      (10 - depth to 10).foreach { l =>
+        val last = CellGrid.pack((1L << l) - 1, (1L << l) - 1, l)
+        assert(got.toMap.get(last) === Some(2L), s"level $l corner cell")
+      }
+    }
+  }
+
   test("classify: interior + boundary tile the polygon's cover, big diamond has interior") {
     val wkb = WkbCodec.write(WkbCodec.diamond(10.0, 20.0, 2.0))
     val (interior, boundary) = CellPyramid.classify(wkb, finest = 10, depth = 3)

@@ -36,6 +36,49 @@ class LinkGraphSpec extends AnyFunSuite with SparkTest {
     assert(total > 0.9 && total < 1.01, s"mass $total")
   }
 
+  test("pageRank on a hand graph == the Scala fixpoint: dangling ids, no in-links, a duplicate edge") {
+    import spark.implicits._
+    import graft.ops.LinkGraph.{Scale, Teleport}
+    val nodes = (0L to 5L)
+    // (2, 9): dst outside nodes, still counted in 2's out-degree;
+    // (7, 3): src outside nodes, never ranked; 5 has no in-link;
+    // (0, 1) twice: both copies count and contribute
+    val edges = Seq((0L, 1L), (0L, 1L), (0L, 2L), (1L, 2L), (1L, 4L), (2L, 0L), (2L, 9L),
+      (7L, 3L), (3L, 4L), (4L, 0L), (5L, 1L))
+    val deg = edges.groupBy(_._1).map { case (src, es) => src -> es.size.toLong }
+    var pr = nodes.map(_ -> Scale).toMap
+    for (_ <- 1 to 5) {
+      pr = nodes.map { d =>
+        val s = edges.collect { case (src, `d`) if pr.contains(src) => math.floor(pr(src).toDouble / deg(src)).toLong }.sum
+        d -> (Teleport + math.floor(0.85 * s).toLong)
+      }.toMap
+    }
+    val got = graft.ops.LinkGraph.pageRank(nodes.toDF("doc_id"), edges.toDF("src", "dst"))
+      .as[(Long, Long)].collect()
+    assert(got.length === nodes.size, "one row per node")
+    assert(got.toMap === pr)
+    assert(pr(5L) === Teleport && pr(3L) === Teleport, "no in-link from a ranked node")
+  }
+
+  test("synthEdges == the closed form deduped by a global distinct") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    def distinctForm(docs: org.apache.spark.sql.DataFrame) = {
+      val n = docs.count()
+      docs.select(col("doc_id").as("src"), explode(sequence(lit(0L), lit(2L) + col("doc_id") % 3)).as("j"))
+        .select(col("src"), ((col("src") * 31 + col("j") * 17 + 7) % n).as("dst"))
+        .filter(col("src") =!= col("dst")).distinct()
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long)].collect().sorted.toSeq
+    // 17 docs: j * 17 vanishes mod N, so each doc's targets all coincide
+    for (docs <- Seq(spark.read.parquet(s"$Sf/documents.parquet"), (0L until 17L).toDF("doc_id"))) {
+      val got = rows(graft.ops.LinkGraph.synthEdges(docs))
+      assert(got.nonEmpty)
+      assert(got === rows(distinctForm(docs)))
+    }
+  }
+
   test("triangles == brute-force per-node count; orientation emits each once") {
     import spark.implicits._
     val docs = spark.read.parquet(s"$Sf/documents.parquet")

@@ -24,10 +24,13 @@ pairs (ties count for neither side) and the medians differ by more than the
 parent's interquartile range. `bound` is FAIL when the change's median is
 worse than the parent's by more than the metric's relative bound.
 
-Each run also records its per-operation medians (`op_p50_by_name` from
-that side's `.bench_build/last-WORKLOAD-trace0.json`), and the summary ends
-with a table of them, parent against change, so a query-mix comparison
-shows which queries moved.
+Each run also records, from that side's
+`.bench_build/last-WORKLOAD-trace0.json`, its per-operation medians
+(`op_p50_by_name`) and its Spark jobs per operation (the window's
+`spark.jobs` over its sampled operations). The summary prints the jobs per
+operation of each side under the end-to-end metrics, and ends with a table
+of the per-operation medians, parent against change, so a query-mix
+comparison shows which queries moved.
 
 Exit status is 1 when a run failed, reported `correct: false`, or had an
 `op_ok_share` below 1; otherwise 0.
@@ -68,14 +71,21 @@ def export_rev(rev, dest):
     return sha
 
 
-def op_p50_by_name(root, workload, since):
-    """Per-operation median seconds of the run that wrote `root`'s last
-    untraced result for `workload` at or after `since`, or None."""
+def trace0_record(root, workload, since):
+    """The untraced result record `root` last wrote for `workload`, if it
+    was written at or after `since`; else an empty dict."""
     path = os.path.join(root, ".bench_build", f"last-{workload}-trace0.json")
     if not os.path.exists(path) or os.path.getmtime(path) < since:
-        return None
+        return {}
     with open(path) as fh:
-        return json.load(fh).get("op_p50_by_name")
+        return json.load(fh)
+
+
+def jobs_per_op(record):
+    """Spark jobs started in the timed window per sampled operation, or None."""
+    jobs = record.get("window_engine", {}).get("spark.jobs")
+    ops = record.get("samples", {}).get("ops")
+    return jobs / ops if jobs is not None and ops else None
 
 
 def run_side(root, workload, seed, seconds):
@@ -90,8 +100,10 @@ def run_side(root, workload, seed, seconds):
             break
         except ValueError:
             continue
+    record = trace0_record(root, workload, start)
     return {"rc": p.returncode, "result": result,
-            "op_p50_by_name": op_p50_by_name(root, workload, start),
+            "op_p50_by_name": record.get("op_p50_by_name"),
+            "jobs_per_op": jobs_per_op(record),
             "stderr_tail": None if p.returncode == 0 else p.stderr[-2000:]}
 
 
@@ -157,8 +169,21 @@ def summarize(records, spec):
         print(f"  {name:14s} {parent:>30s} {change:>30s} {((pq3 - pq1) / pm if pm else 0.0):>9.3f}"
               f" {wins:>3d}/{len(pairs):<2d} {(cm / pm if pm else float('nan')):>7.3f}"
               f" {bound:>11s} {'gain' if gain else '-'}")
+    summarize_jobs(records, pairs)
     summarize_ops(records, pairs)
     return 1 if bad else 0
+
+
+def summarize_jobs(records, pairs):
+    """Each side's median and quartiles of jobs per operation, over the
+    complete pairs whose runs recorded it."""
+    jobs = {s: [r["jobs_per_op"] for r in records if r["seed"] in pairs and r["side"] == s
+                and run_ok(r) and r.get("jobs_per_op") is not None] for s in SIDES}
+    if not all(jobs.values()):
+        return
+    parent, change = (f"{m:.4g} [{q1:.4g}, {q3:.4g}]" for q1, m, q3 in
+                      (quartiles(jobs["parent"]), quartiles(jobs["change"])))
+    print(f"  {'jobs_per_op':14s} {parent:>30s} {change:>30s}")
 
 
 def summarize_ops(records, pairs):
