@@ -3,11 +3,11 @@ package graft.geom
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
 
 /** Per-thread LRU cache of JTS [[PreparedGeometry]] for shuffle-side PIP
-  * refines (the broadcast path gets this for free from
-  * [[graft.index.CoverIndex]], which prepares each polygon once at index
-  * build). On the shuffle path a dense cell delivers the same polygon to
-  * the refine predicate thousands of times per task; parsing + preparing
-  * the WKB per candidate pair dominates the join cost (round-2 review).
+  * refines (the broadcast path refines with [[graft.index.CoverIndex]]'s
+  * own ring arrays, built once per executor). On the shuffle path a dense
+  * cell delivers the same polygon to the refine predicate thousands of
+  * times per task; parsing + preparing the WKB per candidate pair
+  * dominates the join cost (round-2 review).
   *
   * Keyed by (poly_id, wkb.length, Arrays.hashCode(wkb)): the id alone is
   * not safe — the same JVM runs many queries over different polygon layers

@@ -185,15 +185,15 @@ object CellPyramid {
       }
   }
 
-  /** Past this many (poly, cell) pairs on one side, probe via a shuffle
-    * equi-join on the cell key instead of a broadcast build: a broadcast
+  /** Past this many (poly, cell) pairs, probe via shuffle equi-joins on
+    * the cell key instead of one broadcast of the pair table: a broadcast
     * holds every pair on every executor, and at millions of polygons ×
     * deep boundary shells the pair table stops being a dim. */
   private[graft] val BroadcastPairLimit = 2000000
 
   /** The polygon side of [[polygonCounts]]: the classified pair table, its
     * interior and boundary row counts, and the boundary polygons' WKB by
-    * poly_id as a broadcast when the boundary side is broadcast. */
+    * poly_id as a broadcast when the pair table is broadcast. */
   private final case class PolygonSide(pairs: DataFrame, nInterior: Long, nBoundary: Long,
                                        wkbByPoly: Option[Broadcast[Map[Long, Array[Byte]]]])
 
@@ -226,7 +226,7 @@ object CellPyramid {
       val (nInterior, nBoundary, wkbBytes) = (n.getLong(0), n.getLong(1), n.getLong(2))
       // dim-sized shell: the polygon bytes ride ONCE per polygon in a
       // broadcast VARIABLE (torrent-distributed per executor)
-      val wkbByPoly = if (nBoundary > broadcastPairLimit) None else Some(spark.sparkContext.broadcast(
+      val wkbByPoly = if (nInterior + nBoundary > broadcastPairLimit) None else Some(spark.sparkContext.broadcast(
         pairs.filter(col("wkb").isNotNull).select("poly_id", "wkb")
           .as[(Long, Array[Byte])].collect().toMap))
       TableMemo.Held(PolygonSide(pairs, nInterior, nBoundary, wkbByPoly),
@@ -247,38 +247,44 @@ object CellPyramid {
                     polygons: DataFrame, finest: Int, depth: Int,
                     broadcastPairLimit: Long = BroadcastPairLimit): DataFrame = {
     val side = polygonSide(spark, polygons, finest, depth, broadcastPairLimit)
-    val interiorPairs = side.pairs.filter(col("interior")).select("poly_id", "cell")
-    val boundaryPairs = side.pairs.filter(!col("interior")).select("poly_id", "cell")
-    // each side contributes (poly_id, n) rows — an interior cell's count,
-    // or 1 per refined boundary point — and ONE groupBy sums both
-    val interiorRows = pyramid
-      .join(if (side.nInterior <= broadcastPairLimit) broadcast(interiorPairs) else interiorPairs,
-        Seq("cell"))
-      .select(col("poly_id"), col("cnt").as("n"))
-    // boundary refine: equi-join on the finest cell, then the SAME native
-    // prepared-geometry contains as the PIP join's shuffle refine
     val ptsCells = points
       .withColumn("cell", cellCol(col(lonCol), col(latCol), finest))
-    val boundaryRows = (side.wkbByPoly match {
+    // each side contributes (poly_id, n) rows — an interior cell's count,
+    // or 1 per refined boundary point — and ONE groupBy sums both
+    val rows: DataFrame = side.wkbByPoly match {
       case Some(wkbByPoly) =>
-        // bare (poly, cell) pairs broadcast into the probe; the refine
-        // reads the polygon from the broadcast map by poly_id
-        ptsCells.join(broadcast(boundaryPairs), Seq("cell"))
-          .filter(graft.ops.GeoExpressions.preparedContainsBc(
-            col("poly_id"), col(lonCol), col(latCol), wkbByPoly))
+        // dim-sized pair table: ONE broadcast join of (poly_id, cell,
+        // interior) serves both sides. The pyramid's (cell, cnt) rows and
+        // the points' (cell, lon, lat) rows probe it as one union: a
+        // pyramid row keeps its interior pairs, a point row the boundary
+        // pairs whose polygon (read from the broadcast map by poly_id)
+        // contains it. Two joins would plan two broadcasts of the one
+        // cached table, and adaptive execution reuses neither
+        val probes = pyramid
+          .select(col("cell"), col("cnt"), lit(null).cast("double").as("lon"),
+            lit(null).cast("double").as("lat"))
+          .unionAll(ptsCells.select(col("cell"), lit(null).cast("long").as("cnt"),
+            col(lonCol).as("lon"), col(latCol).as("lat")))
+        probes.join(broadcast(side.pairs.select("poly_id", "cell", "interior")), Seq("cell"))
+          .filter(when(col("interior"), col("cnt").isNotNull).otherwise(col("cnt").isNull &&
+            graft.ops.GeoExpressions.preparedContainsBc(col("poly_id"), col("lon"), col("lat"), wkbByPoly)))
+          .select(col("poly_id"), coalesce(col("cnt"), lit(1L)).as("n"))
       case None =>
-        // scale path — NOTHING through the driver: reattach the WKB with an
+        // scale path — NOTHING through the driver: shuffle equi-joins on
+        // the cell key; the boundary side reattaches the WKB with an
         // equi-join on poly_id (one WKB row per polygon; the per-cell
         // re-expansion happens executor-side inside the exchange, the shape
-        // every distributed spatial join pays), then shuffle equi-join on
-        // the cell key and refine with the join-column variant
+        // every distributed spatial join pays) and refines with the
+        // join-column variant
         val wkbRows = side.pairs.filter(col("wkb").isNotNull).select("poly_id", "wkb")
-        val withWkb = boundaryPairs.join(wkbRows, Seq("poly_id"))
-        ptsCells.join(withWkb, Seq("cell"))
-          .filter(graft.ops.GeoExpressions.preparedContains(
-            col("poly_id"), col("wkb"), col(lonCol), col(latCol)))
-    }).select(col("poly_id"), lit(1L).as("n"))
-    interiorRows.unionAll(boundaryRows)
-      .groupBy("poly_id").agg(sum("n").as("n_points"))
+        val boundaryPairs = side.pairs.filter(!col("interior")).select("poly_id", "cell")
+        pyramid.join(side.pairs.filter(col("interior")).select("poly_id", "cell"), Seq("cell"))
+          .select(col("poly_id"), col("cnt").as("n"))
+          .unionAll(ptsCells.join(boundaryPairs.join(wkbRows, Seq("poly_id")), Seq("cell"))
+            .filter(graft.ops.GeoExpressions.preparedContains(
+              col("poly_id"), col("wkb"), col(lonCol), col(latCol)))
+            .select(col("poly_id"), lit(1L).as("n")))
+    }
+    rows.groupBy("poly_id").agg(sum("n").as("n_points"))
   }
 }

@@ -1,8 +1,10 @@
 package graft.index
 
-import org.locationtech.jts.geom.{Envelope, Geometry}
-import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
+import org.locationtech.jts.algorithm.CGAlgorithmsDD
+import org.locationtech.jts.geom.{Envelope, Geometry, LinearRing, MultiPolygon, Polygon}
+import org.locationtech.jts.geom.prep.PreparedGeometryFactory
 import org.locationtech.jts.index.strtree.STRtree
+import graft.GraftError
 import graft.geom.WkbCodec
 
 import scala.collection.mutable
@@ -10,11 +12,12 @@ import scala.collection.mutable
 /** Broadcastable polygon covering index (north-rule operator): each polygon
   * is covered by the grid cells (at `level`) its envelope intersects,
   * refined by an exact JTS intersection test; point lookups probe the
-  * point's cell then refine with `PreparedGeometry.contains`. Dense cells
-  * (many candidate polygons — the skewed "urban" case) get a per-cell
-  * STRtree so a lookup is O(log n) in candidates, not O(n).
+  * point's cell, then refine each candidate with the flat ray-crossing
+  * kernel of [[CoverIndex.Rings]]. Dense cells (many candidate polygons —
+  * the skewed "urban" case) get a per-cell STRtree so a lookup is
+  * O(log n) in candidates, not O(n).
   *
-  * Ships WKB over the wire (serializable, compact); prepared geometries and
+  * Ships WKB over the wire (serializable, compact); the ring arrays and
   * trees are rebuilt lazily once per executor JVM (`@transient lazy val`).
   * This is the scale path for the reference's per-feature geometry pipeline
   * (`/root/reference/src/format/geo.rs:5-48`): the polygon side is the
@@ -28,11 +31,8 @@ class CoverIndex(
     val denseThreshold: Int = 16
 ) extends Serializable {
 
-  @transient private lazy val geoms: Array[Geometry] = polyWkbs.map(WkbCodec.read)
-  @transient private lazy val prepared: Array[PreparedGeometry] = {
-    val pf = new PreparedGeometryFactory
-    geoms.map(pf.create)
-  }
+  @transient private lazy val rings: CoverIndex.Rings =
+    CoverIndex.Rings(polyIds, polyWkbs.map(WkbCodec.read))
   /** Primitive probe index (r6): the per-row cell lookup through
     * `Map[Long, _]` boxed the packed key on EVERY fact-row probe (plus a
     * second boxed lookup for the dense-tree map). Rebuilt per executor
@@ -43,8 +43,10 @@ class CoverIndex(
   @transient private lazy val probeVals: Array[Array[Int]] = probeKeys.map(cellToPolys)
   @transient private lazy val probeTrees: Array[STRtree] = probeVals.map { idxs =>
     if (idxs.length >= denseThreshold) {
+      val r = rings
       val t = new STRtree()
-      idxs.foreach(i => t.insert(geoms(i).getEnvelopeInternal, Integer.valueOf(i)))
+      idxs.foreach(i => t.insert(new Envelope(r.minX(i), r.maxX(i), r.minY(i), r.maxY(i)),
+        Integer.valueOf(i)))
       t.build()
       t
     } else null
@@ -57,15 +59,16 @@ class CoverIndex(
   /** Polygon ids exactly containing the point (JTS `contains`: boundary
     * excluded — the synthetic layers keep points off boundaries), sorted.
     * Allocation-light: runs once per fact row (10^12 times), so per-probe
-    * garbage is a GC/scaling tax — the probe Point and dense-tree query
-    * Envelope are per-thread mutables ([[graft.geom.ProbePoint]], r6), and
-    * the result copy is skipped when every candidate matched. */
+    * garbage is a GC/scaling tax — the dense-tree query Envelope is a
+    * per-thread mutable ([[graft.geom.ProbePoint]], r6), and the result
+    * copy is skipped when every candidate matched. */
   def containing(lon: Double, lat: Double): Array[Long] = {
     val key = cellKey(CellGrid.cellX(lon, level), CellGrid.cellY(lat, level))
     val slot = java.util.Arrays.binarySearch(probeKeys, key)
     if (slot < 0) return empty
-    val idxs = probeVals(slot)
-    val pt = graft.geom.ProbePoint.at(lon, lat)
+    val r = rings
+    var cands = probeVals(slot)
+    var nc = cands.length
     val tree = probeTrees(slot)
     if (tree != null) {
       // reusable visitor: STRtree.query(env) allocates an ArrayList per
@@ -73,30 +76,18 @@ class CoverIndex(
       val vis = CoverIndex.visitor.get()
       vis.reset()
       tree.query(graft.geom.ProbePoint.envelope(lon, lat), vis)
-      val cands = vis.buf
-      val nc = vis.size
-      val out = new Array[Long](nc)
-      var m = 0; var j = 0
-      while (j < nc) {
-        val i = cands(j)
-        if (prepared(i).contains(pt)) { out(m) = polyIds(i); m += 1 }
-        j += 1
-      }
-      val res = if (m == out.length) out else java.util.Arrays.copyOf(out, m)
-      java.util.Arrays.sort(res)
-      res
-    } else {
-      val out = new Array[Long](idxs.length)
-      var m = 0; var j = 0
-      while (j < idxs.length) {
-        val i = idxs(j)
-        if (prepared(i).contains(pt)) { out(m) = polyIds(i); m += 1 }
-        j += 1
-      }
-      val res = if (m == out.length) out else java.util.Arrays.copyOf(out, m)
-      java.util.Arrays.sort(res)
-      res
+      cands = vis.buf; nc = vis.size
     }
+    val out = new Array[Long](nc)
+    var m = 0; var j = 0
+    while (j < nc) {
+      val i = cands(j)
+      if (r.contains(i, lon, lat)) { out(m) = polyIds(i); m += 1 }
+      j += 1
+    }
+    val res = if (m == out.length) out else java.util.Arrays.copyOf(out, m)
+    java.util.Arrays.sort(res)
+    res
   }
 
   def candidateCount(lon: Double, lat: Double): Int = {
@@ -123,12 +114,138 @@ object CoverIndex {
     override def initialValue(): IntVisitor = new IntVisitor
   }
 
+  /** Every ring segment of every polygon, as flat immutable arrays, and the
+    * point-in-polygon refine over them. Polygon `i` has an envelope, the
+    * segments of the shell and holes of all its components, and the
+    * y-bands `bandStart(i) until bandStart(i + 1)`: its envelope's height
+    * cut into equal bands, band `b` listing in `bandSegs(bandOff(b) until
+    * bandOff(b + 1))` (CSR form) every segment whose y-range meets it.
+    *
+    * [[contains]] is JTS `PreparedGeometry.contains` for a point, bit for
+    * bit: the closed envelope covers the point, and the
+    * `RayCrossingCounter` rule over the segments of its band says
+    * INTERIOR — the location `IndexedPointInAreaLocator` computes over all
+    * segments whose y-range holds the point (a band holds all of those
+    * and maybe more, and a segment whose y-range misses the point never
+    * counts a crossing or a touch). A point on any segment is not
+    * contained. Nothing here is mutable or locked: JTS's prepared polygon
+    * enters two `synchronized` methods on every refine, on polygon
+    * objects every task thread of an executor shares, and locates each
+    * point twice. */
+  final class Rings private (
+      val minX: Array[Double], val maxX: Array[Double],
+      val minY: Array[Double], val maxY: Array[Double],
+      segX0: Array[Double], segY0: Array[Double], segX1: Array[Double], segY1: Array[Double],
+      bandStart: Array[Int], bandScale: Array[Double],
+      bandOff: Array[Int], bandSegs: Array[Int]) {
+
+    def contains(i: Int, x: Double, y: Double): Boolean = {
+      if (!(x >= minX(i) && x <= maxX(i) && y >= minY(i) && y <= maxY(i))) return false
+      val b0 = bandStart(i)
+      val b = b0 + math.min((bandStart(i + 1) - b0) - 1, ((y - minY(i)) * bandScale(i)).toInt)
+      var crossings = 0
+      var j = bandOff(b)
+      val end = bandOff(b + 1)
+      while (j < end) {
+        val s = bandSegs(j)
+        val x0 = segX0(s); val y0 = segY0(s); val x1 = segX1(s); val y1 = segY1(s)
+        if (!(x0 < x && x1 < x)) {
+          if (x == x1 && y == y1) return false
+          if (y0 == y && y1 == y) {
+            if (x >= math.min(x0, x1) && x <= math.max(x0, x1)) return false
+          } else if ((y0 > y && y1 <= y) || (y1 > y && y0 <= y)) {
+            val orient = CGAlgorithmsDD.orientationIndex(x0, y0, x1, y1, x, y)
+            if (orient == 0) return false
+            // the segment re-oriented upwards crosses the ray iff the
+            // point lies to its left
+            if ((if (y1 < y0) -orient else orient) > 0) crossings += 1
+          }
+        }
+        j += 1
+      }
+      (crossings & 1) == 1
+    }
+  }
+
+  object Rings {
+
+    /** Flattens polygonal geometries; a geometry that is neither a Polygon
+      * nor a MultiPolygon fails with its id. */
+    def apply(ids: Array[Long], geoms: Array[Geometry]): Rings = {
+      val n = geoms.length
+      val ringsOf = Array.tabulate(n)(i => polygonalRings(ids(i), geoms(i)))
+      val segStart = ringsOf.map(_.map(r => math.max(0, r.getNumPoints - 1)).sum).scanLeft(0)(_ + _)
+      val sx0 = new Array[Double](segStart(n)); val sy0 = new Array[Double](segStart(n))
+      val sx1 = new Array[Double](segStart(n)); val sy1 = new Array[Double](segStart(n))
+      val minX = Array.fill(n)(Double.PositiveInfinity); val maxX = Array.fill(n)(Double.NegativeInfinity)
+      val minY = Array.fill(n)(Double.PositiveInfinity); val maxY = Array.fill(n)(Double.NegativeInfinity)
+      val bandStart = new Array[Int](n + 1)
+      val bandScale = new Array[Double](n)
+      val bandOff = Array.newBuilder[Int]
+      val bandSegs = Array.newBuilder[Int]
+      var nEntries = 0
+      var i = 0
+      while (i < n) {
+        var s = segStart(i)
+        ringsOf(i).foreach { ring =>
+          val cs = ring.getCoordinateSequence
+          var k = 1
+          while (k < cs.size()) {
+            sx0(s) = cs.getX(k - 1); sy0(s) = cs.getY(k - 1); sx1(s) = cs.getX(k); sy1(s) = cs.getY(k)
+            k += 1; s += 1
+          }
+        }
+        if (!geoms(i).isEmpty) {
+          val env = geoms(i).getEnvelopeInternal
+          minX(i) = env.getMinX; maxX(i) = env.getMaxX; minY(i) = env.getMinY; maxY(i) = env.getMaxY
+        }
+        // about 4 segments a band, but at most 4 index entries a segment
+        // beyond the 2 any segment may take at band edges: a tall segment
+        // spans many bands
+        val (first, end) = (segStart(i), segStart(i + 1))
+        val m = end - first
+        val height = maxY(i) - minY(i)
+        val spanned = (first until end).map(s => math.abs(sy1(s) - sy0(s))).sum
+        val nBands =
+          if (m == 0 || !(height > 0)) 1
+          else math.max(1, math.min(m / 4, (4.0 * m * height / spanned).toInt))
+        bandScale(i) = if (height > 0) nBands / height else 0.0
+        // the probe's band function; monotone in v, so a segment listed in
+        // the bands of its two end y's is in the band of every y between
+        def band(v: Double): Int = math.min(nBands - 1, ((v - minY(i)) * bandScale(i)).toInt)
+        val lists = Array.fill(nBands)(Array.newBuilder[Int])
+        for (s <- first until end; b <- band(math.min(sy0(s), sy1(s))) to band(math.max(sy0(s), sy1(s))))
+          lists(b) += s
+        lists.foreach { l =>
+          val segs = l.result()
+          bandOff += nEntries; bandSegs ++= segs; nEntries += segs.length
+        }
+        bandStart(i + 1) = bandStart(i) + nBands
+        i += 1
+      }
+      bandOff += nEntries
+      new Rings(minX, maxX, minY, maxY, sx0, sy0, sx1, sy1,
+        bandStart, bandScale, bandOff.result(), bandSegs.result())
+    }
+
+    /** The shell and hole rings of every component of a polygonal geometry;
+      * any other geometry fails with its id. */
+    private[CoverIndex] def polygonalRings(id: Long, g: Geometry): Seq[LinearRing] = g match {
+      case p: Polygon => p.getExteriorRing +: (0 until p.getNumInteriorRing).map(p.getInteriorRingN)
+      case mp: MultiPolygon =>
+        (0 until mp.getNumGeometries).flatMap(k => polygonalRings(id, mp.getGeometryN(k)))
+      case other => throw GraftError.FailedValidation(
+        s"CoverIndex: poly_id $id is a ${other.getGeometryType}, not a Polygon or MultiPolygon")
+    }
+  }
+
   /** Build on the driver from a collected (small/dim) polygon layer. */
   def build(polyIds: Array[Long], polyWkbs: Array[Array[Byte]], level: Int): CoverIndex = {
     val cellMap = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Int]]
     var i = 0
     while (i < polyIds.length) {
       val g = WkbCodec.read(polyWkbs(i))
+      Rings.polygonalRings(polyIds(i), g) // fails a non-polygonal geometry here, on the driver
       coverCells(g, level).foreach { case (cx, cy) =>
         cellMap.getOrElseUpdate((cx << 32) | cy, mutable.ArrayBuffer.empty) += i
       }

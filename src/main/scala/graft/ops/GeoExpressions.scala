@@ -23,6 +23,10 @@ import graft.geom.WkbCodec
   * code, and the projection that holds one runs interpreted, outside
   * whole-stage codegen. The stateless kernels are plain methods on
   * [[GeoExpressions]], called through [[Kernel]].
+  *
+  * `st_containing_polys` calls [[CoverIndex.containing]] per row: the
+  * point's cell candidates, refined by the index's flat ray-crossing
+  * kernel (no JTS geometry and no lock on the row path).
   */
 case class PolyContainsExpr(left: Expression, right: Expression,
                             bc: Broadcast[CoverIndex])
@@ -36,6 +40,8 @@ case class PolyContainsExpr(left: Expression, right: Expression,
   override def prettyName: String = "st_containing_polys"
 }
 
+/** `st_knn_pois`: per row, [[PoiGrid.knn]] — exact ring expansion over the
+  * grid's dense cell table. */
 case class KnnPoisExpr(left: Expression, right: Expression,
                        bc: Broadcast[PoiGrid], k: Int)
   extends BinaryExpression with CodegenFallback {

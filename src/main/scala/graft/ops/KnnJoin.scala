@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.index.CellGrid
 
-import scala.collection.mutable
-
 /** kNN join via cell-ring expansion (north-rule operator, SURVEY.md §2b):
   * k nearest POIs per point. Two metrics:
   *
@@ -29,10 +27,17 @@ import scala.collection.mutable
   * found AND the k-th distance is <= the minimum possible distance to any
   * unvisited cell (exact termination bound, so results equal a full scan).
   * Ties broken by poi_id, making the top-k a total order.
+  *
+  * The cell table is dense: `4^level + 1` ints of offsets per executor,
+  * so `level` is at most [[PoiGrid.MaxLevel]] (4 MiB of offsets); a higher
+  * level fails construction with `GraftError.FailedValidation`.
   */
 class PoiGrid(val level: Int, val ids: Array[Long], val xs: Array[Double],
               val ys: Array[Double], val geodesic: Boolean = false)
     extends Serializable {
+  if (level < 0 || level > PoiGrid.MaxLevel)
+    throw graft.GraftError.FailedValidation(
+      s"PoiGrid: level $level outside 0..${PoiGrid.MaxLevel} (the cell table holds 4^level + 1 ints)")
   val n: Long = 1L << level
   val cellW: Double = 360.0 / n.toDouble
   val cellH: Double = 180.0 / n.toDouble
@@ -45,24 +50,10 @@ class PoiGrid(val level: Int, val ids: Array[Long], val xs: Array[Double],
       math.cos(math.toRadians(lat1)) * math.cos(math.toRadians(lat2)) * sdLon * sdLon
   }
 
-  @transient lazy val byCell: Map[Long, Array[Int]] = {
-    val m = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Int]]
-    var i = 0
-    while (i < ids.length) {
-      val key = (CellGrid.cellX(xs(i), level) << 32) | CellGrid.cellY(ys(i), level)
-      m.getOrElseUpdate(key, mutable.ArrayBuffer.empty) += i
-      i += 1
-    }
-    m.view.mapValues(_.toArray).toMap
-  }
-
-  /** Primitive probe index over [[byCell]] (r6): the ring expansion looks
-    * up ~(2r+1)^2 cells per fact row, and each `Map[Long, _]` lookup boxes
-    * the packed key — at 10^12 rows that garbage is a measurable GC tax.
-    * Sorted keys + parallel values make a probe one allocation-free
-    * binary search (same discipline as CoverIndex.probeKeys). */
-  @transient private lazy val cellKeys: Array[Long] = byCell.keys.toArray.sorted
-  @transient private lazy val cellVals: Array[Array[Int]] = cellKeys.map(byCell)
+  /** Built once per executor JVM. The ring expansion visits ~(2r+1)^2
+    * cells per fact row, and each visit reads two offsets: no key boxing,
+    * no binary search. */
+  @transient private lazy val table: PoiGrid.CellTable = PoiGrid.CellTable(level, xs, ys)
 
   /** Ordered (by dist2 asc, poi_id asc) ids of the k nearest POIs.
     * Allocation-light (primitive insertion buffers): this runs 10^12 times
@@ -71,6 +62,7 @@ class PoiGrid(val level: Int, val ids: Array[Long], val xs: Array[Double],
     if (ids.isEmpty || k <= 0) return Array.empty
     val cx = CellGrid.cellX(px, level); val cy = CellGrid.cellY(py, level)
     val maxC = n - 1
+    val start = table.start; val order = table.order
     val kk = math.min(k, ids.length)
     val bd = new Array[Double](kk) // ascending (dist2, id) insertion buffers
     val bi = new Array[Long](kk)
@@ -102,11 +94,9 @@ class PoiGrid(val level: Int, val ids: Array[Long], val xs: Array[Double],
       // planar metric has no wrap, matching its oracle).
       val xw = if (geodesic) ((x % n) + n) % n else x
       if (xw >= 0 && xw <= maxC && y >= 0 && y <= maxC) {
-        val slot = java.util.Arrays.binarySearch(cellKeys, (xw << 32) | y)
-        if (slot >= 0) {
-          val arr = cellVals(slot)
-          var i = 0; while (i < arr.length) { consider(arr(i)); i += 1 }
-        }
+        val c = (xw * n + y).toInt
+        var j = start(c); val end = start(c + 1)
+        while (j < end) { consider(order(j)); j += 1 }
       }
     }
 
@@ -151,6 +141,34 @@ class PoiGrid(val level: Int, val ids: Array[Long], val xs: Array[Double],
       }
     }
     java.util.Arrays.copyOf(bi, size)
+  }
+}
+
+object PoiGrid {
+
+  /** The highest grid level whose dense cell table (4^level + 1 ints,
+    * 4 MiB at level 10) a PoiGrid builds. */
+  val MaxLevel = 10
+
+  /** POI indices grouped by cell (a counting sort, stable in index order):
+    * cell `c = cx * 2^level + cy` holds `order(start(c) until start(c + 1))`. */
+  final class CellTable(val start: Array[Int], val order: Array[Int])
+
+  object CellTable {
+    def apply(level: Int, xs: Array[Double], ys: Array[Double]): CellTable = {
+      val n = 1L << level
+      val cell = Array.tabulate(xs.length)(i =>
+        (CellGrid.cellX(xs(i), level) * n + CellGrid.cellY(ys(i), level)).toInt)
+      val start = new Array[Int]((n * n).toInt + 1)
+      cell.foreach(c => start(c + 1) += 1)
+      var c = 0
+      while (c < start.length - 1) { start(c + 1) += start(c); c += 1 }
+      val next = java.util.Arrays.copyOf(start, start.length - 1)
+      val order = new Array[Int](xs.length)
+      var i = 0
+      while (i < xs.length) { order(next(cell(i))) = i; next(cell(i)) += 1; i += 1 }
+      new CellTable(start, order)
+    }
   }
 }
 

@@ -161,8 +161,8 @@ class CellPyramidSpec extends AnyFunSuite with SparkTest {
     }.filter(_._2 > 0).toMap
     assert(got === want)
     assert(want.values.sum > 0, "vacuous fixture")
-    // plan shape: both probes are broadcast equi-joins on the cell key —
-    // no cartesian, no shuffled join against the point table
+    // plan shape: both sides probe one broadcast equi-join on the cell
+    // key — no cartesian, no shuffled join against the point table
     val counts = CellPyramid.polygonCounts(spark, pyr, p, "lon", "lat", polyDf,
       finest = 10, depth = 3)
     val plan = counts.queryExecution.executedPlan.toString

@@ -26,9 +26,11 @@ worse than the parent's by more than the metric's relative bound.
 
 Each run also records, from that side's
 `.bench_build/last-WORKLOAD-trace0.json`, its per-operation medians
-(`op_p50_by_name`) and its Spark jobs per operation (the window's
-`spark.jobs` over its sampled operations). The summary prints the jobs per
-operation of each side under the end-to-end metrics, and ends with a table
+(`op_p50_by_name`), its Spark jobs per operation (`jobs_per_op`: the
+window's `spark.jobs` over its sampled operations) and its executor task
+seconds per operation (`task_s_per_op`: the window's `spark.task_s` over
+them). The summary prints both per-operation figures of each side under the
+end-to-end metrics, and ends with a table
 of the per-operation medians, parent against change, so a query-mix
 comparison shows which queries moved.
 
@@ -81,11 +83,16 @@ def trace0_record(root, workload, since):
         return json.load(fh)
 
 
-def jobs_per_op(record):
-    """Spark jobs started in the timed window per sampled operation, or None."""
-    jobs = record.get("window_engine", {}).get("spark.jobs")
+# per-operation figures a run records: its field name and the timed
+# window's `window_engine` counter it divides by the sampled operations
+PER_OP = (("jobs_per_op", "spark.jobs"), ("task_s_per_op", "spark.task_s"))
+
+
+def per_op(record, counter):
+    """The timed window's `counter` per sampled operation, or None."""
+    total = record.get("window_engine", {}).get(counter)
     ops = record.get("samples", {}).get("ops")
-    return jobs / ops if jobs is not None and ops else None
+    return total / ops if total is not None and ops else None
 
 
 def run_side(root, workload, seed, seconds):
@@ -101,10 +108,10 @@ def run_side(root, workload, seed, seconds):
         except ValueError:
             continue
     record = trace0_record(root, workload, start)
-    return {"rc": p.returncode, "result": result,
-            "op_p50_by_name": record.get("op_p50_by_name"),
-            "jobs_per_op": jobs_per_op(record),
-            "stderr_tail": None if p.returncode == 0 else p.stderr[-2000:]}
+    rec = {"rc": p.returncode, "result": result, "op_p50_by_name": record.get("op_p50_by_name")}
+    rec.update({name: per_op(record, counter) for name, counter in PER_OP})
+    rec["stderr_tail"] = None if p.returncode == 0 else p.stderr[-2000:]
+    return rec
 
 
 def run_ok(rec):
@@ -169,21 +176,22 @@ def summarize(records, spec):
         print(f"  {name:14s} {parent:>30s} {change:>30s} {((pq3 - pq1) / pm if pm else 0.0):>9.3f}"
               f" {wins:>3d}/{len(pairs):<2d} {(cm / pm if pm else float('nan')):>7.3f}"
               f" {bound:>11s} {'gain' if gain else '-'}")
-    summarize_jobs(records, pairs)
+    for name, _ in PER_OP:
+        summarize_per_op(records, pairs, name)
     summarize_ops(records, pairs)
     return 1 if bad else 0
 
 
-def summarize_jobs(records, pairs):
-    """Each side's median and quartiles of jobs per operation, over the
-    complete pairs whose runs recorded it."""
-    jobs = {s: [r["jobs_per_op"] for r in records if r["seed"] in pairs and r["side"] == s
-                and run_ok(r) and r.get("jobs_per_op") is not None] for s in SIDES}
-    if not all(jobs.values()):
+def summarize_per_op(records, pairs, name):
+    """Each side's median and quartiles of the per-operation figure `name`,
+    over the complete pairs whose runs recorded it."""
+    vals = {s: [r[name] for r in records if r["seed"] in pairs and r["side"] == s
+                and run_ok(r) and r.get(name) is not None] for s in SIDES}
+    if not all(vals.values()):
         return
     parent, change = (f"{m:.4g} [{q1:.4g}, {q3:.4g}]" for q1, m, q3 in
-                      (quartiles(jobs["parent"]), quartiles(jobs["change"])))
-    print(f"  {'jobs_per_op':14s} {parent:>30s} {change:>30s}")
+                      (quartiles(vals["parent"]), quartiles(vals["change"])))
+    print(f"  {name:14s} {parent:>30s} {change:>30s}")
 
 
 def summarize_ops(records, pairs):
