@@ -3,19 +3,44 @@ package graft.index
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType}
 import org.apache.spark.storage.StorageLevel
 import org.locationtech.jts.geom.{Coordinate, GeometryFactory, Polygon}
 import org.locationtech.jts.geom.prep.PreparedGeometryFactory
 
 import graft.TableMemo
 import graft.geom.WkbCodec
+import graft.ops.Kernel
+
+/** The boundary polygons of a pyramid's pair table, broadcast for the
+  * boundary refine: ids sorted, WKB beside them. The ring arrays of
+  * [[CoverIndex.Rings]] are built from the WKB lazily, once per executor
+  * JVM, and a refine finds its polygon by binary search on the id: the
+  * same flat, lock-free point-in-polygon test as the flagship probe, and
+  * the same answer as JTS `PreparedGeometry.contains`. */
+final class BoundaryPolygons private (val ids: Array[Long], wkbs: Array[Array[Byte]])
+  extends Serializable {
+  @transient private lazy val rings: CoverIndex.Rings = CoverIndex.Rings(ids, wkbs.map(WkbCodec.read))
+
+  def contains(polyId: Long, lon: Double, lat: Double): Boolean =
+    rings.contains(java.util.Arrays.binarySearch(ids, polyId), lon, lat)
+}
+
+object BoundaryPolygons {
+  /** From ids in ascending order and their WKB; a geometry that is neither
+    * a Polygon nor a MultiPolygon fails here, on the driver, with its id. */
+  def apply(ids: Array[Long], wkbs: Array[Array[Byte]]): BoundaryPolygons = {
+    ids.indices.foreach(i => CoverIndex.Rings.polygonalRings(ids(i), WkbCodec.read(wkbs(i))))
+    new BoundaryPolygons(ids, wkbs)
+  }
+}
 
 /** GeoBlocks-style pre-aggregated cell pyramid (EDBT'21 "GeoBlocks: a
   * query-cache accelerated data structure for spatial aggregation over
   * polygons"): per-cell point counts at levels finest..finest-depth, so an
   * arbitrary polygon-region count is answered from
   *
-  *  - pre-aggregated counts of the cells FULLY INSIDE the polygon (taken
+  *  - pre-aggregated counts of the cells in the polygon's INTERIOR (taken
   *    as coarse as the pyramid allows — a greedy quadtree descent), plus
   *  - an exact point-in-polygon refine over ONLY the boundary cells'
   *    points.
@@ -24,10 +49,13 @@ import graft.geom.WkbCodec
   * the point rows of the boundary shell alone — the interior, which is
   * almost all of the data for a large region, is never rescanned. The
   * result is EXACT (not an approximation): interior cells contribute their
-  * full pre-aggregated count (every point in a covered cell is in the
-  * polygon by definition of covers), boundary points are individually
-  * tested with the same JTS predicate as the PIP join, so q72 hash-matches
-  * the brute-force `JOIN ... ON pip GROUP BY` DuckDB oracle.
+  * full pre-aggregated count (a cell whose closed rectangle lies in the
+  * polygon's interior holds no point the polygon fails to contain; a cell
+  * that merely touches the boundary is a boundary cell), and boundary
+  * points are individually tested with the PIP join's point-in-polygon
+  * rule ([[BoundaryPolygons]] on the broadcast path, JTS prepared geometry
+  * on the scale path), so q72 hash-matches the brute-force
+  * `JOIN ... ON pip GROUP BY` DuckDB oracle.
   *
   * Scale shape: the pyramid build is one groupBy(cell) count at the finest
   * level (map-side combinable) plus one rollup of the already-tiny counts
@@ -138,8 +166,8 @@ object CellPyramid {
     }.mkString(" UNION ALL ")
 
   /** Greedy quadtree classification of one polygon against the pyramid's
-    * levels: covered cells are taken at the coarsest level where they are
-    * fully inside; cells still intersecting at the finest level form the
+    * levels: interior cells are taken at the coarsest level where they are
+    * properly inside; cells still intersecting at the finest level form the
     * boundary shell. Pure function of one polygon (prepared geometry,
     * ≤ 4^depth × coverBBox(coarsest) JTS calls) — run on executors via
     * flatMap over the polygon dim in [[polygonCounts]]. */
@@ -158,7 +186,10 @@ object CellPyramid {
     val boundary = Seq.newBuilder[Long]
     def walk(id: Long): Unit = {
       val r = rect(id)
-      if (poly.covers(r)) interior += id
+      // a cell touching the boundary is refined: a point on the polygon's
+      // boundary lies in a half-open cell whose closed rectangle the
+      // polygon covers, and `contains` excludes it
+      if (poly.containsProperly(r)) interior += id
       else if (poly.intersects(r)) {
         if (CellGrid.unpackLevel(id) == finest) boundary += id
         else CellGrid.children(id).foreach(walk)
@@ -192,10 +223,15 @@ object CellPyramid {
   private[graft] val BroadcastPairLimit = 2000000
 
   /** The polygon side of [[polygonCounts]]: the classified pair table, its
-    * interior and boundary row counts, and the boundary polygons' WKB by
-    * poly_id as a broadcast when the pair table is broadcast. */
+    * interior and boundary row counts, and the boundary polygons as a
+    * broadcast when the pair table is broadcast. */
   private final case class PolygonSide(pairs: DataFrame, nInterior: Long, nBoundary: Long,
-                                       wkbByPoly: Option[Broadcast[Map[Long, Array[Byte]]]])
+                                       boundary: Option[Broadcast[BoundaryPolygons]])
+
+  /** The pyramid's boundary refine: whether the boundary polygon `polyId`
+    * of the broadcast set contains (lon, lat). */
+  def boundaryContains(bc: Broadcast[BoundaryPolygons], polyId: Long, lon: Double, lat: Double): Boolean =
+    bc.value.contains(polyId, lon, lat)
 
   /** Classification runs ON EXECUTORS (flatMap over the polygon dim): the
     * quadtree descent is the query's dominant CPU cost and must not
@@ -204,7 +240,7 @@ object CellPyramid {
     * materializes once as executor blocks (classify runs exactly once; one
     * aggregate job counts both sides), the broadcast-vs-shuffle decision is
     * made on counts alone, and only the one-WKB-per-polygon slice is ever
-    * collected (for the broadcast-map refine, below the limit).
+    * collected (the [[BoundaryPolygons]] broadcast, below the limit).
     *
     * Built once per polygon layer version ([[graft.TableMemo]]). A kept pair
     * table outlives the query, so it is persisted with its lineage (a lost
@@ -226,12 +262,17 @@ object CellPyramid {
       val (nInterior, nBoundary, wkbBytes) = (n.getLong(0), n.getLong(1), n.getLong(2))
       // dim-sized shell: the polygon bytes ride ONCE per polygon in a
       // broadcast VARIABLE (torrent-distributed per executor)
-      val wkbByPoly = if (nInterior + nBoundary > broadcastPairLimit) None else Some(spark.sparkContext.broadcast(
-        pairs.filter(col("wkb").isNotNull).select("poly_id", "wkb")
-          .as[(Long, Array[Byte])].collect().toMap))
-      TableMemo.Held(PolygonSide(pairs, nInterior, nBoundary, wkbByPoly),
-        bytes = (nInterior + nBoundary) * 24 + wkbBytes * (if (wkbByPoly.isDefined) 2 else 1),
-        release = () => { if (kept) pairs.unpersist(); wkbByPoly.foreach(_.destroy()) })
+      val boundary = if (nInterior + nBoundary > broadcastPairLimit) None else {
+        val wkbs = pairs.filter(col("wkb").isNotNull).select("poly_id", "wkb")
+          .as[(Long, Array[Byte])].collect().sortBy(_._1)
+        Some(spark.sparkContext.broadcast(BoundaryPolygons(wkbs.map(_._1), wkbs.map(_._2))))
+      }
+      // the pair table holds the WKB once; a broadcast holds it again, with
+      // an id per polygon
+      val broadcastBytes = boundary.fold(0L)(b => b.value.ids.length * 8L + wkbBytes)
+      TableMemo.Held(PolygonSide(pairs, nInterior, nBoundary, boundary),
+        bytes = (nInterior + nBoundary) * 24 + wkbBytes + broadcastBytes,
+        release = () => { if (kept) pairs.unpersist(); boundary.foreach(_.destroy()) })
     }
 
   /** Exact per-polygon point counts answered from the pyramid + a boundary
@@ -251,13 +292,13 @@ object CellPyramid {
       .withColumn("cell", cellCol(col(lonCol), col(latCol), finest))
     // each side contributes (poly_id, n) rows — an interior cell's count,
     // or 1 per refined boundary point — and ONE groupBy sums both
-    val rows: DataFrame = side.wkbByPoly match {
-      case Some(wkbByPoly) =>
+    val rows: DataFrame = side.boundary match {
+      case Some(boundary) =>
         // dim-sized pair table: ONE broadcast join of (poly_id, cell,
         // interior) serves both sides. The pyramid's (cell, cnt) rows and
         // the points' (cell, lon, lat) rows probe it as one union: a
         // pyramid row keeps its interior pairs, a point row the boundary
-        // pairs whose polygon (read from the broadcast map by poly_id)
+        // pairs whose polygon (found in the broadcast set by poly_id)
         // contains it. Two joins would plan two broadcasts of the one
         // cached table, and adaptive execution reuses neither
         val probes = pyramid
@@ -267,7 +308,9 @@ object CellPyramid {
             col(lonCol).as("lon"), col(latCol).as("lat")))
         probes.join(broadcast(side.pairs.select("poly_id", "cell", "interior")), Seq("cell"))
           .filter(when(col("interior"), col("cnt").isNotNull).otherwise(col("cnt").isNull &&
-            graft.ops.GeoExpressions.preparedContainsBc(col("poly_id"), col("lon"), col("lat"), wkbByPoly)))
+            Kernel.column("st_boundary_contains", this, "boundaryContains", BooleanType)(
+              Kernel.constant(boundary), col("poly_id") -> LongType, col("lon") -> DoubleType,
+              col("lat") -> DoubleType)))
           .select(col("poly_id"), coalesce(col("cnt"), lit(1L)).as("n"))
       case None =>
         // scale path — NOTHING through the driver: shuffle equi-joins on

@@ -230,7 +230,7 @@ object CoverIndex {
 
     /** The shell and hole rings of every component of a polygonal geometry;
       * any other geometry fails with its id. */
-    private[CoverIndex] def polygonalRings(id: Long, g: Geometry): Seq[LinearRing] = g match {
+    private[index] def polygonalRings(id: Long, g: Geometry): Seq[LinearRing] = g match {
       case p: Polygon => p.getExteriorRing +: (0 until p.getNumInteriorRing).map(p.getInteriorRingN)
       case mp: MultiPolygon =>
         (0 until mp.getNumGeometries).flatMap(k => polygonalRings(id, mp.getGeometryN(k)))

@@ -3,44 +3,36 @@ package graft.ops
 import java.util.Comparator
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.{GraftShim => ExpressionUtils}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Cavnar–Trenkle out-of-place scoring against a STATIC profile table,
-  * baked into the expression: input is the per-doc
-  * `array<struct<g,r>>` rank profile (from [[NgramExpressions.trigramTopN]]), output is
-  * `struct<pred_lang: string, dist: long>` — the argmin language (tie:
-  * lang asc) under dist = TopN² − Σ_match (TopN − |r − pr|).
+/** Cavnar–Trenkle out-of-place scoring against a STATIC profile table of
+  * (lang, gram, rank) rows: [[bestLang]] takes the per-doc
+  * `array<struct<g,r>>` rank profile (from [[NgramExpressions.trigramTopN]])
+  * and gives `struct<pred_lang: string, dist: long>`, the argmin language
+  * (tie: lang asc) under dist = TopN² − Σ_match (TopN − |r − pr|).
   *
-  * The profile table is a compile-time constant (a few langs × TopN
-  * grams), so scoring is a per-row lookup loop — no broadcast join, no
-  * (doc, lang) credit shuffle, no final argmin exchange. The previous
-  * distributed form moved ≤ TopN rows per document through THREE
-  * exchanges just to compare them against 160 constants; at 10^12
-  * documents that is three full shuffles of a derivation the row already
-  * contains. Output is bit-identical (same integer math, same tie-break),
-  * so the DuckDB oracle SQL is unchanged.
+  * The profile table is a constant (a few langs × TopN grams) that rides
+  * in the plan as the kernel's object argument, so scoring is a per-row
+  * lookup loop: no broadcast join, no (doc, lang) credit shuffle, no final
+  * argmin exchange. The previous distributed form moved ≤ TopN rows per
+  * document through THREE exchanges just to compare them against 160
+  * constants; at 10^12 documents that is three full shuffles of a
+  * derivation the row already contains. Output is bit-identical (same
+  * integer math, same tie-break), so the DuckDB oracle SQL is unchanged.
+  * The lookup maps are rebuilt wherever the table is deserialized.
   */
-case class CtBestLang(child: Expression, profiles: Seq[(String, String, Int)], topN: Int)
-  extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("pred_lang", StringType, nullable = false),
-    StructField("dist", LongType, nullable = false)))
+final class LangProfiles(profiles: Seq[(String, String, Int)], topN: Int) extends Serializable {
 
   // langs sorted asc so index order = tie-break order
   @transient private lazy val langs: Array[UTF8String] =
     profiles.map(_._1).distinct.sorted.map(UTF8String.fromString).toArray
-  @transient private lazy val langIdx: Map[String, Int] =
-    profiles.map(_._1).distinct.sorted.zipWithIndex.toMap
   // gram -> packed (langIdx, profileRank) entries
   @transient private lazy val gramEntries: java.util.HashMap[UTF8String, Array[Long]] = {
+    val langIdx = profiles.map(_._1).distinct.sorted.zipWithIndex.toMap
     val m = new java.util.HashMap[UTF8String, Array[Long]]()
     profiles.groupBy(_._2).foreach { case (g, rows) =>
       m.put(UTF8String.fromString(g),
@@ -49,8 +41,7 @@ case class CtBestLang(child: Expression, profiles: Seq[(String, String, Int)], t
     m
   }
 
-  override def nullSafeEval(t: Any): Any = {
-    val arr = t.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+  def bestLang(arr: ArrayData): InternalRow = {
     val credit = new Array[Long](langs.length)
     var i = 0
     while (i < arr.numElements()) {
@@ -79,8 +70,7 @@ case class CtBestLang(child: Expression, profiles: Seq[(String, String, Int)], t
     InternalRow(langs(best), maxDist - credit(best))
   }
 
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "ct_best_lang"
+  override def toString: String = s"LangProfiles(${profiles.size} rows, top $topN)"
 }
 
 object NgramExpressions {
@@ -95,8 +85,16 @@ object NgramExpressions {
     StructField("top2_cnt", LongType, nullable = false),
     StructField("top2_len", LongType, nullable = false)))
 
-  def ctBestLang(topn: Column, profiles: Seq[(String, String, Int)], topN: Int): Column =
-    ExpressionUtils.column(CtBestLang(ExpressionUtils.expression(topn), profiles, topN))
+  private val BestLangType = StructType(Seq(
+    StructField("pred_lang", StringType, nullable = false),
+    StructField("dist", LongType, nullable = false)))
+
+  /** `ct_best_lang` kernel: [[LangProfiles.bestLang]]. */
+  def ctBestLang(profiles: LangProfiles, topn: ArrayData): InternalRow = profiles.bestLang(topn)
+
+  def ctBestLang(topn: Column, profiles: LangProfiles): Column =
+    Kernel.column("ct_best_lang", this, "ctBestLang", BestLangType)(
+      Kernel.constant(profiles), topn -> ProfileType)
 
   def trigramTopN(text: Column, topN: Int): Column =
     Kernel.column("trigram_topn", this, "trigramTopN", ProfileType)(

@@ -12,11 +12,12 @@ import graft.index.{CellGrid, CoverIndex}
   *
   *  - [[broadcastJoin]] (default): the polygon layer is collected to a
   *    [[CoverIndex]] and broadcast; points stream through ONE narrow map
-  *    (cell probe -> prepared-geometry refine -> explode matches). Zero
-  *    shuffle — skewed point cells cost nothing because nothing is
-  *    repartitioned by cell. This is the right plan whenever the polygon
-  *    layer is a dim table (admin boundaries, etc.), which is the common
-  *    100 TB case: 10^12 points x 10^5 polygons.
+  *    (cell probe -> the index's ray-crossing refine -> explode matches),
+  *    inside whole-stage codegen. Zero shuffle — skewed point cells cost
+  *    nothing because nothing is repartitioned by cell. This is the right
+  *    plan whenever the polygon layer is a dim table (admin boundaries,
+  *    etc.), which is the common 100 TB case: 10^12 points x 10^5
+  *    polygons.
   *
   *  - [[shuffleJoin]]: for polygon layers too big to broadcast. Polygons
   *    explode to (cell, poly) cover rows, points shuffle on their cell,

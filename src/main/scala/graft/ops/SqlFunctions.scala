@@ -2,12 +2,11 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, GraftShim, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.locationtech.jts.geom.{Coordinate, Geometry, LineString, LinearRing, Point, Polygon}
-import graft.geom.{GeoJsonDecode, Mercator, Simplify, WkbCodec}
+import graft.geom.{GeoJsonDecode, Mercator, ProbePoint, Simplify, WkbCodec}
 import graft.index.CellGrid
 
 /** SQL function surface (`st_*`). Pure-math functions are built as
@@ -69,6 +68,10 @@ object SqlFunctions {
   def intersects(a: Array[Byte], b: Array[Byte]): Boolean = geom(a).intersects(geom(b))
   def within(a: Array[Byte], b: Array[Byte]): Boolean = geom(a).within(geom(b))
   def contains(a: Array[Byte], b: Array[Byte]): Boolean = geom(a).contains(geom(b))
+  /** [[contains]] of the point (x, y), without the point's WKB: what
+    * [[SpatialFilterPushdown]] leaves of `st_contains(wkb, st_point(x, y))`. */
+  def containsPoint(wkb: Array[Byte], x: Double, y: Double): Boolean =
+    geom(wkb).contains(ProbePoint.at(x, y))
   def point(x: Double, y: Double): Array[Byte] = WkbCodec.write(WkbCodec.point(x, y))
   def buffer(wkb: Array[Byte], dist: Double): Array[Byte] = WkbCodec.write(geom(wkb).buffer(dist))
   def geomFromGeoJson(json: UTF8String): Array[Byte] =
@@ -136,42 +139,6 @@ object SqlFunctions {
         .map { case (x, y) => CellGrid.pack(x, y, level) }.toArray)
   }
 
-  // StContains/StContainsExact/StPoint stay classes: SpatialFilterPushdown
-  // matches them by class, after the optimizer has replaced every Kernel.
-  case class StContains(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-    override def dataType: DataType = BooleanType
-    override def nullSafeEval(a: Any, b: Any): Any =
-      SqlFunctions.contains(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-    override def prettyName: String = "st_contains"
-  }
-
-  /** Same semantics as [[StContains]]; produced by
-    * [[SpatialFilterPushdown]] AFTER the bbox pre-filter is injected, and
-    * deliberately not matched by that rule (fixed-point idempotence). */
-  case class StContainsExact(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-    override def dataType: DataType = BooleanType
-    override def nullSafeEval(a: Any, b: Any): Any =
-      SqlFunctions.contains(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-    override def prettyName: String = "st_contains_exact"
-  }
-
-  /** (x, y) -> WKB point; both children DOUBLE (the SQL builder casts). */
-  case class StPoint(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-    override def dataType: DataType = BinaryType
-    override def nullSafeEval(x: Any, y: Any): Any =
-      SqlFunctions.point(x.asInstanceOf[Double], y.asInstanceOf[Double])
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-    override def prettyName: String = "st_point"
-  }
-
   private type Builder = Seq[Expression] => Expression
 
   /** `name` as a [[Kernel]] call of `method` on this object, one argument
@@ -206,6 +173,8 @@ object SqlFunctions {
     geom2("st_distance", "distance", DoubleType),
     geom2("st_intersects", "intersects", BooleanType),
     geom2("st_within", "within", BooleanType),
+    geom2("st_contains", "contains", BooleanType),
+    kernel("st_point", "point", BinaryType, DoubleType, DoubleType)(),
     kernel("st_buffer", "buffer", BinaryType, BinaryType, DoubleType)(),
     kernel("st_clip_bbox", "clipBbox", BinaryType,
       BinaryType, DoubleType, DoubleType, DoubleType, DoubleType)(returnsNull = true),
@@ -219,8 +188,6 @@ object SqlFunctions {
     ("st_merc_y", 1, es => mercY(es(0))),
     kernel("st_geomfromgeojson", "geomFromGeoJson", BinaryType, StringType)(),
     kernel("st_transform", "transform", BinaryType, BinaryType, IntegerType, IntegerType)(),
-    ("st_contains", 2, es => StContains(es(0), es(1))),
-    ("st_point", 2, es => StPoint(d(es(0)), d(es(1)))),
     // aggregate: bbox union per group (PostGIS ST_Extent)
     ("st_extent", 1, es => ExtentAgg(es(0)).toAggregateExpression())
   )

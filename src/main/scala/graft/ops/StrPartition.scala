@@ -2,11 +2,8 @@ package graft.ops
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.{GraftShim => ExpressionUtils}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType}
 import graft.geom.WkbCodec
 
 /** Sample-based STR (Sort-Tile-Recursive) spatial partitioner.
@@ -87,22 +84,14 @@ final class StrBounds(val xCuts: Array[Double],
   }
 }
 
-/** (lon, lat) -> STR partition id over the broadcast cut arrays. Native
-  * (not ScalaUDF) for the same reason as [[PolyContainsExpr]]: this runs
-  * once per fact row on the 10^12-point side, and the two binary searches
-  * must read doubles straight off the InternalRow — no boxing. */
-case class StrPartitionExpr(left: Expression, right: Expression,
-                            bc: Broadcast[StrBounds])
-  extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(lon: Any, lat: Any): Any =
-    bc.value.partitionOf(lon.asInstanceOf[Double], lat.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "str_partition"
-}
-
 object StrPartition {
+
+  /** (lon, lat) -> STR partition id over the broadcast cut arrays. A kernel
+    * (not a ScalaUDF) because it runs once per fact row on the 10^12-point
+    * side, and the two binary searches must read doubles straight off the
+    * row, with no boxing. */
+  def partitionOf(bc: Broadcast[StrBounds], lon: Double, lat: Double): Int =
+    bc.value.partitionOf(lon, lat)
 
   /** Classic STR fit: sort by x, cut into ceil(sqrt(p)) equal-count slabs;
     * within each slab (membership by the fitted x-bounds, so cuts match
@@ -184,9 +173,8 @@ object StrPartition {
       .select(col("poly_id"), col("geom"), explode(col("_e._1")).as("_part"),
         col("_e._2").as("_minx"), col("_e._3").as("_miny"),
         col("_e._4").as("_maxx"), col("_e._5").as("_maxy"))
-    val pts = points.withColumn("_part",
-      ExpressionUtils.column(StrPartitionExpr(
-        ExpressionUtils.expression(col(lonCol)), ExpressionUtils.expression(col(latCol)), bc)))
+    val pts = points.withColumn("_part", Kernel.column("str_partition", this, "partitionOf",
+      IntegerType)(Kernel.constant(bc), col(lonCol) -> DoubleType, col(latCol) -> DoubleType))
     // shuffle_hash: both sides exchange on _part (the STR partitioning) and
     // join in place — the plan the partitioner exists to produce; without
     // the hint a small polygon side would broadcast and bypass it

@@ -87,6 +87,9 @@ object TextStats {
     LangSeeds.flatMap { case (l, s) => trigramProfile(s).map { case (g, r) => (l, g, r) } }
   }
 
+  /** [[Profiles]] as the scoring table the `ct_best_lang` kernel reads. */
+  val ProfileTable: LangProfiles = new LangProfiles(Profiles, TopN)
+
   /** Cavnar–Trenkle rank-order classification ("N-Gram-Based Text
     * Categorization", SDAIR'94): per doc, rank its top-TopN character
     * trigrams; distance to a language = out-of-place distance between rank
@@ -97,9 +100,9 @@ object TextStats {
     * Plan shape: the per-doc top-TopN trigram rank profile is computed
     * INSIDE the row by the native [[NgramExpressions.trigramTopN]] kernel (the profile
     * is document-local — counting and ranking trigrams needs nothing from
-    * any other row), then only the <= TopN profile rows per doc explode
-    * into the broadcast join against the tiny language-profile table and
-    * the per-doc argmin via min(struct). The previous distributed form
+    * any other row), then scored inside the row as well, against the
+    * constant [[ProfileTable]] that rides in the plan as the `ct_best_lang`
+    * kernel's object argument ([[LangProfiles]]). The previous distributed form
     * (trigram explode -> groupBy(doc, gram) -> per-doc window rank)
     * shuffled one row per CHARACTER of the corpus — the widest
     * intermediate of the whole text suite — only to collapse straight
@@ -109,7 +112,7 @@ object TextStats {
   def langIdNgram(docs: DataFrame): DataFrame =
     // fully row-local: the per-doc rank profile is computed inside the row
     // (`trigram_topn`) and scored against the static profile table inside the
-    // row (CtBestLang) — ZERO exchanges; the previous broadcast-join +
+    // row (`ct_best_lang`) — ZERO exchanges; the previous broadcast-join +
     // (doc,lang) aggregate + argmin form shuffled the corpus three times
     // to compare each doc against 160 constants. coalesce('') keeps the
     // no-text row semantics of the old outer form: empty profile => every
@@ -117,7 +120,7 @@ object TextStats {
     docs.select(col("doc_id"),
       NgramExpressions.ctBestLang(
         NgramExpressions.trigramTopN(coalesce(col("text"), lit("")), TopN),
-        Profiles, TopN).as("m"))
+        ProfileTable).as("m"))
       .select(col("doc_id"), col("m.pred_lang").as("pred_lang"), col("m.dist").as("dist"))
 
   def langIdNgramSql: String = {

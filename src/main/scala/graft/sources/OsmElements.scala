@@ -1,8 +1,12 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 import graft.TableMemo
+import graft.ops.Kernel
 
 /** Deterministic OSM-style element tables (FIXTURES.md §4): nodes and ways
   * with the decoded shape of the reference's PBF scan output
@@ -36,16 +40,20 @@ object OsmElements {
     val c = TableMemo.parquet(spark, s"$sfDir/customer.parquet")
     val ncust = TableMemo.derived(spark, "rowCount", c)(TableMemo.Held(c.count(), 0L, () => ()))
     val w = col("o_orderkey")
-    val nrefs = lit(4) + (w % 5)
-    val refAt = (i: org.apache.spark.sql.Column) =>
-      lit(1) + (w * 31 + i * 17) % (ncust + ncust / 5)
-    val rawRefs = transform(sequence(lit(0), nrefs - 1), i => refAt(i))
-    // closed ways: replace the last ref with the first
-    val refs = when(w % 3 === 0,
-      concat(slice(rawRefs, lit(1), size(rawRefs) - 1), slice(rawRefs, lit(1), lit(1))))
-      .otherwise(rawRefs)
+    val refs = Kernel.column("way_refs", this, "wayRefs", ArrayType(LongType, containsNull = false))(
+      w -> LongType, lit(ncust + ncust / 5) -> LongType)
     o.select(w.as("way_id"), refs.as("refs"),
       array(concat(lit("order="), col("o_orderstatus"))).as("tags"))
+  }
+
+  /** The refs of way `wayId` for the ref modulus `m` (the rule above): one
+    * kernel call, where a `transform` lambda would take the operator that
+    * builds the refs, and the way assembly fused with it, out of
+    * whole-stage codegen. */
+  def wayRefs(wayId: Long, m: Long): ArrayData = {
+    val refs = Array.tabulate((4 + wayId % 5).toInt)(i => 1 + (wayId * 31 + i * 17) % m)
+    if (wayId % 3 == 0) refs(refs.length - 1) = refs(0)
+    UnsafeArrayData.fromPrimitiveArray(refs)
   }
 
   // ---- DuckDB oracle fragments ----

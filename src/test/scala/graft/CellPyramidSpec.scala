@@ -187,4 +187,36 @@ class CellPyramidSpec extends AnyFunSuite with SparkTest {
     assert(!scaledPlan.contains("CartesianProduct"), s"plan:\n$scaledPlan")
     assert(!scaledPlan.contains("BroadcastNestedLoopJoin"), s"plan:\n$scaledPlan")
   }
+
+  test("polygonCounts on vertices, edges and cell corners: broadcast == scale path == brute force") {
+    import spark.implicits._
+    val (dx, dy) = (360.0 / 1024, 180.0 / 1024) // a level-10 cell
+    // the first diamond cuts cells anywhere; the second one's center and
+    // radius sit on level-10 cell corners, so its vertices and edges pass
+    // through cell corners. Every coordinate is dyadic, so the brute force
+    // below is exact
+    val diamonds = Seq((1L, 10.0, 20.0, 2.0), (2L, -180 + 540 * dx, -90 + 626 * dy, 8 * dy))
+    val onShapes = diamonds.flatMap { case (_, cx, cy, r) =>
+      val vertices = Seq((cx + r, cy), (cx, cy + r), (cx - r, cy), (cx, cy - r))
+      val edges = for (k <- 1 until 8; (sx, sy) <- Seq((1, 1), (-1, 1), (-1, -1), (1, -1)))
+        yield (cx + sx * r * k / 8, cy + sy * r * (8 - k) / 8)
+      (cx, cy) +: (vertices ++ edges)
+    }
+    val corners = for (i <- 530 until 550; j <- 610 until 640) yield (-180 + i * dx, -90 + j * dy)
+    val pts = (onShapes ++ corners).zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
+    val p = pts.toDF("id", "lon", "lat")
+    val polyDf = diamonds.map { case (id, cx, cy, r) => (id, WkbCodec.write(WkbCodec.diamond(cx, cy, r))) }
+      .toDF("poly_id", "geom").coalesce(1)
+    val want = diamonds.map { case (id, cx, cy, r) =>
+      id -> pts.count { case (_, x, y) => math.abs(x - cx) + math.abs(y - cy) < r }.toLong
+    }.toMap
+    val (_, cx2, cy2, r2) = diamonds(1)
+    assert(want.values.forall(_ > 0) && corners.exists { case (x, y) =>
+      math.abs(x - cx2) + math.abs(y - cy2) == r2 }, "vacuous fixture")
+    val pyr = CellPyramid.build(p, "lon", "lat", finest = 10, depth = 3)
+    def counts(limit: Long) = CellPyramid.polygonCounts(spark, pyr, p, "lon", "lat", polyDf,
+      finest = 10, depth = 3, broadcastPairLimit = limit).as[(Long, Long)].collect().toMap
+    assert(counts(CellPyramid.BroadcastPairLimit) === want, "broadcast path")
+    assert(counts(0L) === want, "scale path")
+  }
 }

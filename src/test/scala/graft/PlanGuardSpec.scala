@@ -150,16 +150,6 @@ class PlanGuardSpec extends AnyFunSuite with SparkTest {
         "shingles are row-local; a global distinct shuffles the widest string stream")
   }
 
-  // the graft expressions that may still be CodegenFallback classes: they
-  // close over a broadcast or a Scala object, or SpatialFilterPushdown
-  // matches them by class after the optimizer has replaced every Kernel
-  private val keptFallbacks: Set[String] = Set(
-    classOf[graft.ops.PolyContainsExpr], classOf[graft.ops.KnnPoisExpr],
-    classOf[graft.ops.WayAssembleExpr], classOf[graft.ops.PreparedContainsMapExpr],
-    classOf[graft.ops.StrPartitionExpr], classOf[graft.ops.CtBestLang],
-    classOf[graft.ops.SqlFunctions.StContains], classOf[graft.ops.SqlFunctions.StContainsExact],
-    classOf[graft.ops.SqlFunctions.StPoint]).map(_.getName)
-
   test("no non-baseline query plan contains a cartesian or nested-loop join") {
     SparkEntry.queries.foreach { case (name, fn) =>
       val df = fn(spark, Sf)
@@ -180,26 +170,37 @@ class PlanGuardSpec extends AnyFunSuite with SparkTest {
       }))
       val lambdas = graftExprs.map(_.toString).filter(_.contains("$Lambda"))
       assert(lambdas.isEmpty, s"$name plan prints Scala lambdas: $lambdas")
-      val stray = graftExprs.collect {
-        case e: CodegenFallback if !keptFallbacks(e.getClass.getName) => e.getClass.getName
-      }.distinct
-      assert(stray.isEmpty, s"$name plan holds CodegenFallback classes outside the keep list: $stray")
+      val fallbacks = graftExprs.collect { case e: CodegenFallback => e.getClass.getName }.distinct
+      assert(fallbacks.isEmpty, s"$name plan holds CodegenFallback classes: $fallbacks")
     }
   }
 
-  test("q13, q14 and q55: the operators that call the kernel run in whole-stage codegen") {
+  test("the operators that call a kernel run in whole-stage codegen") {
     // a CodegenFallback expression takes its whole operator out of codegen;
-    // a Kernel's StaticInvoke is one static call inside the generated code.
-    // q13's posexplode Generate, q14's refine (a Filter, or the join
-    // condition the optimizer folds it into) and q55's intersects refine
-    for ((q, kernel) <- Seq("q13_pip_join" -> "geoMentions",
-        "q14_pip_join_salted" -> "preparedContains", "q55_overlay_join" -> "intersects")) {
-      val (all, fused) = Probes.codegenSplit(SparkEntry.queries(q)(spark, Sf))
-      val calling = all.filter(_.expressions.exists(Probes.callsKernel(_, kernel)))
-      assert(calling.nonEmpty, s"$q: no operator calls kernel $kernel")
-      val outside = calling.filterNot(o => fused.exists(_ eq o))
-      assert(outside.isEmpty,
-        s"$q: ${outside.map(_.nodeName).mkString(", ")} calling $kernel run outside whole-stage codegen")
+    // a Kernel's StaticInvoke is one static call inside the generated code,
+    // also when it takes a broadcast as an object argument. q13's posexplode
+    // and probe Generates, q14's refine (a Filter, or the join condition the
+    // optimizer folds it into), q55's intersects refine, the flagship's two
+    // probe projections, q18's way assembly, q72's boundary refine, q37's
+    // lang id and q105's STR partition
+    def query(q: String) = SparkEntry.queries(q)(spark, Sf)
+    for ((what, df, kernels) <- Seq(
+        ("q13", query("q13_pip_join"), Seq("geoMentions", "containing")),
+        ("q14", query("q14_pip_join_salted"), Seq("preparedContains")),
+        ("q55", query("q55_overlay_join"), Seq("intersects")),
+        ("Pipeline.run", Pipeline.run(spark, Sf), Seq("containing", "knn")),
+        ("q18", query("q18_osm_ways"), Seq("wayAssemble")),
+        ("q72", query("q72_pyramid_count"), Seq("boundaryContains")),
+        ("q37", query("q37_langid_ngram"), Seq("ctBestLang")),
+        ("q105", query("q105_pip_str"), Seq("partitionOf")))) {
+      val (all, fused) = Probes.codegenSplit(df)
+      for (kernel <- kernels) {
+        val calling = Probes.kernelCallers(all, kernel)
+        assert(calling.nonEmpty, s"$what: no operator calls kernel $kernel")
+        val outside = calling.filterNot(o => fused.exists(_ eq o))
+        assert(outside.isEmpty,
+          s"$what: ${outside.map(_.nodeName).mkString(", ")} calling $kernel run outside whole-stage codegen")
+      }
     }
   }
 

@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
@@ -38,6 +38,15 @@ object Probes {
     * optimizer leaves in place of a [[graft.ops.Kernel]]. */
   def callsKernel(e: Expression, name: String): Boolean =
     e.exists { case s: StaticInvoke => s.functionName == name; case _ => false }
+
+  /** The nodes of `plan` that evaluate the kernel method `name`. A file
+    * scan lists the filters above it as its data filters, but only pushes
+    * the ones a source can translate and evaluates none, so it is no
+    * caller. */
+  def kernelCallers(plan: Seq[SparkPlan], name: String): Seq[SparkPlan] = plan.filter {
+    case _: FileSourceScanExec => false
+    case p => p.expressions.exists(callsKernel(_, name))
+  }
 
   /** Every node of `df`'s final plan, and those of them that run inside a
     * whole-stage-codegen stage. Runs `df` first: adaptive execution plans

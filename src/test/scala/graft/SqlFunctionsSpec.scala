@@ -105,10 +105,9 @@ class SqlFunctionsSpec extends AnyFunSuite with SparkTest {
   }
 
   test("SpatialFilterPushdown: constant-polygon filter pushes a bbox into the parquet scan") {
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.{GraftShim => GS}
-    import graft.ops.{SpatialFilterPushdown, SqlFunctions}
+    assert(registered)
+    import org.apache.spark.sql.functions.expr
+    import graft.ops.SpatialFilterPushdown
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-pushdown").toString
     (1 to 1000).map(i => (i.toLong, (i % 20) - 5.0, ((i * 7) % 20) - 5.0))
@@ -116,20 +115,34 @@ class SqlFunctionsSpec extends AnyFunSuite with SparkTest {
     val pts = spark.read.parquet(s"$dir/pts")
     val polyWkb = WkbCodec.write(WkbCodec.polygon(
       Seq((0.0, 0.0), (0.0, 10.0), (10.0, 10.0), (10.0, 0.0), (0.0, 0.0))))
-    def containsCol = GS.column(SqlFunctions.StContains(Literal(polyWkb),
-      SqlFunctions.StPoint(GS.expression(col("lon")), GS.expression(col("lat")))))
-    val baseline = pts.filter(containsCol).select("id").as[Long].collect().sorted
+    val polyHex = polyWkb.map("%02X".format(_)).mkString
+    // through the registered functions, as a SQL caller writes it
+    def filtered = pts.filter(expr(s"st_contains(X'$polyHex', st_point(lon, lat))"))
+    val plain = filtered
+    assert(plain.queryExecution.optimizedPlan.expressions.exists(Probes.callsKernel(_, "contains")))
+    val baseline = plain.select("id").as[Long].collect().sorted
     val had = spark.experimental.extraOptimizations
     spark.experimental.extraOptimizations = had :+ SpatialFilterPushdown
     try {
-      val q = pts.filter(containsCol)
+      val q = filtered
       val plan = q.queryExecution.executedPlan.toString
-      // (the PushedFilters list is truncated in toString — assert the
-      // leading entries plus the per-column DataFilters)
-      assert(plan.contains("GreaterThanOrEqual(lon,0.0)") && plan.contains("LessThanOrEqual(lon,10.0)")
-        && plan.contains("GreaterThanOrEqual(lat,0.0)"),
-        s"bbox not pushed to scan:\n$plan")
-      assert(plan.contains("st_contains_exact"), "exact JTS check must remain")
+      // (the plan's text truncates the PushedFilters list; the scan's
+      // metadata holds all of it)
+      val pushed = Probes.planNodes(q).collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metadata("PushedFilters") }
+      assert(pushed.nonEmpty && Seq("GreaterThanOrEqual(lon,0.0)", "LessThanOrEqual(lon,10.0)",
+        "GreaterThanOrEqual(lat,0.0)", "LessThanOrEqual(lat,10.0)").forall(f => pushed.forall(_.contains(f))),
+        s"bbox not pushed to scan: $pushed\n$plan")
+      // the exact check remains, as the point kernel, inside codegen
+      val (all, fused) = Probes.codegenSplit(q)
+      val exact = Probes.kernelCallers(all, "containsPoint")
+      assert(exact.nonEmpty, s"exact JTS check must remain:\n$plan")
+      assert(exact.forall(o => fused.exists(_ eq o)), s"the filter must run in whole-stage codegen:\n$plan")
+      assert(Probes.kernelCallers(all, "point").isEmpty,
+        "the point must not be encoded per row")
+      // idempotent: the rule leaves its own output as it is
+      val optimized = q.queryExecution.optimizedPlan
+      assert(SpatialFilterPushdown(optimized) fastEquals optimized)
       assert(q.select("id").as[Long].collect().sorted.toSeq === baseline.toSeq)
       assert(baseline.nonEmpty) // the test must actually select something
     } finally spark.experimental.extraOptimizations = had

@@ -85,7 +85,10 @@ class StrPartitionSpec extends AnyFunSuite with SparkTest {
     val df = StrPartition.pipJoin(spark, ents, Layers.polygons(spark, Sf), bounds)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("ShuffledHashJoin"), plan.take(800))
-    assert(plan.contains("str_partition"), plan.take(800))
+    // the partition id is the partitionOf kernel (plans print the
+    // StaticInvoke the optimizer leaves of its `str_partition` call)
+    assert(df.queryExecution.optimizedPlan.exists(
+      _.expressions.exists(Probes.callsKernel(_, "partitionOf"))), plan.take(800))
     // the only ScalaUDF is the polygon-side envelope cover (dim side);
     // the point side must stay native end to end
     val pointSide = df.queryExecution.optimizedPlan.collectLeaves().head.toString

@@ -22,7 +22,11 @@ would make so.
 A gain is shown as `gain` when the change wins at least nine tenths of the
 pairs (ties count for neither side) and the medians differ by more than the
 parent's interquartile range. `bound` is FAIL when the change's median is
-worse than the parent's by more than the metric's relative bound.
+worse than the parent's by more than the metric's relative bound. Otherwise
+it is `unresolved` when the parent's own spread (interquartile range over
+median, the `p.iqr/med` column) is wider than the bound, so the runs cannot
+tell a change within the bound from one beyond it, unless every run of the
+change is better than every run of the parent; and `ok` when neither holds.
 
 Each run also records, from that side's
 `.bench_build/last-WORKLOAD-trace0.json`, its per-operation medians
@@ -158,7 +162,7 @@ def summarize(records, spec):
     wl = records[0]["workload"] if records else "-"
     print(f"== {wl}: {len(pairs)} complete pairs, {len(bad)} bad runs")
     print(f"  {'metric':14s} {'parent med [q1, q3]':>30s} {'change med [q1, q3]':>30s} "
-          f"{'p.iqr/med':>9s} {'wins':>6s} {'ratio':>7s} {'bound':>11s} claim")
+          f"{'p.iqr/med':>9s} {'wins':>6s} {'ratio':>7s} {'bound':>15s} claim")
     for m in spec["end_to_end"]:
         name, lower = m["name"], m["better"] == "lower"
         vals = {s: [by[p][s][name]["value"] for p in pairs if name in by[p][s]] for s in SIDES}
@@ -169,13 +173,18 @@ def summarize(records, spec):
                    if (by[p]["change"][name]["value"] < by[p]["parent"][name]["value"]) == lower
                    and by[p]["change"][name]["value"] != by[p]["parent"][name]["value"])
         worse = (cm - pm if lower else pm - cm) / abs(pm) if pm else 0.0
-        bound = f"{'FAIL' if worse > m['bound'] else 'ok'} {m['bound']:.2f}"
+        spread = (pq3 - pq1) / abs(pm) if pm else 0.0
+        dominates = (max(vals["change"]) < min(vals["parent"]) if lower
+                     else min(vals["change"]) > max(vals["parent"]))
+        status = ("FAIL" if worse > m["bound"] else
+                  "unresolved" if spread > m["bound"] and not dominates else "ok")
+        bound = f"{status} {m['bound']:.2f}"
         gain = wins >= 0.9 * len(pairs) and -worse * abs(pm) > (pq3 - pq1)
         parent, change = (f"{m:.4g} [{q1:.4g}, {q3:.4g}]" for q1, m, q3 in
                           ((pq1, pm, pq3), (cq1, cm, cq3)))
-        print(f"  {name:14s} {parent:>30s} {change:>30s} {((pq3 - pq1) / pm if pm else 0.0):>9.3f}"
+        print(f"  {name:14s} {parent:>30s} {change:>30s} {spread:>9.3f}"
               f" {wins:>3d}/{len(pairs):<2d} {(cm / pm if pm else float('nan')):>7.3f}"
-              f" {bound:>11s} {'gain' if gain else '-'}")
+              f" {bound:>15s} {'gain' if gain else '-'}")
     for name, _ in PER_OP:
         summarize_per_op(records, pairs, name)
     summarize_ops(records, pairs)
