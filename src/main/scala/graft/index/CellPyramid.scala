@@ -12,29 +12,6 @@ import graft.TableMemo
 import graft.geom.WkbCodec
 import graft.ops.Kernel
 
-/** The boundary polygons of a pyramid's pair table, broadcast for the
-  * boundary refine: ids sorted, WKB beside them. The ring arrays of
-  * [[CoverIndex.Rings]] are built from the WKB lazily, once per executor
-  * JVM, and a refine finds its polygon by binary search on the id: the
-  * same flat, lock-free point-in-polygon test as the flagship probe, and
-  * the same answer as JTS `PreparedGeometry.contains`. */
-final class BoundaryPolygons private (val ids: Array[Long], wkbs: Array[Array[Byte]])
-  extends Serializable {
-  @transient private lazy val rings: CoverIndex.Rings = CoverIndex.Rings(ids, wkbs.map(WkbCodec.read))
-
-  def contains(polyId: Long, lon: Double, lat: Double): Boolean =
-    rings.contains(java.util.Arrays.binarySearch(ids, polyId), lon, lat)
-}
-
-object BoundaryPolygons {
-  /** From ids in ascending order and their WKB; a geometry that is neither
-    * a Polygon nor a MultiPolygon fails here, on the driver, with its id. */
-  def apply(ids: Array[Long], wkbs: Array[Array[Byte]]): BoundaryPolygons = {
-    ids.indices.foreach(i => CoverIndex.Rings.polygonalRings(ids(i), WkbCodec.read(wkbs(i))))
-    new BoundaryPolygons(ids, wkbs)
-  }
-}
-
 /** GeoBlocks-style pre-aggregated cell pyramid (EDBT'21 "GeoBlocks: a
   * query-cache accelerated data structure for spatial aggregation over
   * polygons"): per-cell point counts at levels finest..finest-depth, so an
@@ -52,9 +29,10 @@ object BoundaryPolygons {
   * full pre-aggregated count (a cell whose closed rectangle lies in the
   * polygon's interior holds no point the polygon fails to contain; a cell
   * that merely touches the boundary is a boundary cell), and boundary
-  * points are individually tested with the PIP join's point-in-polygon
-  * rule ([[BoundaryPolygons]] on the broadcast path, JTS prepared geometry
-  * on the scale path), so q72 hash-matches the brute-force
+  * points are individually tested with the PIP join's one point-in-polygon
+  * test, [[CoverIndex.Rings]] (from the broadcast boundary
+  * [[CoverIndex.Polygons]], or from [[CoverIndex.Rings.cached]] on the
+  * scale path), so q72 hash-matches the brute-force
   * `JOIN ... ON pip GROUP BY` DuckDB oracle.
   *
   * Scale shape: the pyramid build is one groupBy(cell) count at the finest
@@ -226,11 +204,11 @@ object CellPyramid {
     * interior and boundary row counts, and the boundary polygons as a
     * broadcast when the pair table is broadcast. */
   private final case class PolygonSide(pairs: DataFrame, nInterior: Long, nBoundary: Long,
-                                       boundary: Option[Broadcast[BoundaryPolygons]])
+                                       boundary: Option[Broadcast[CoverIndex.Polygons]])
 
   /** The pyramid's boundary refine: whether the boundary polygon `polyId`
     * of the broadcast set contains (lon, lat). */
-  def boundaryContains(bc: Broadcast[BoundaryPolygons], polyId: Long, lon: Double, lat: Double): Boolean =
+  def boundaryContains(bc: Broadcast[CoverIndex.Polygons], polyId: Long, lon: Double, lat: Double): Boolean =
     bc.value.contains(polyId, lon, lat)
 
   /** Classification runs ON EXECUTORS (flatMap over the polygon dim): the
@@ -240,7 +218,8 @@ object CellPyramid {
     * materializes once as executor blocks (classify runs exactly once; one
     * aggregate job counts both sides), the broadcast-vs-shuffle decision is
     * made on counts alone, and only the one-WKB-per-polygon slice is ever
-    * collected (the [[BoundaryPolygons]] broadcast, below the limit).
+    * collected (the boundary [[CoverIndex.Polygons]] broadcast, below the
+    * limit).
     *
     * Built once per polygon layer version ([[graft.TableMemo]]). A kept pair
     * table outlives the query, so it is persisted with its lineage (a lost
@@ -264,8 +243,8 @@ object CellPyramid {
       // broadcast VARIABLE (torrent-distributed per executor)
       val boundary = if (nInterior + nBoundary > broadcastPairLimit) None else {
         val wkbs = pairs.filter(col("wkb").isNotNull).select("poly_id", "wkb")
-          .as[(Long, Array[Byte])].collect().sortBy(_._1)
-        Some(spark.sparkContext.broadcast(BoundaryPolygons(wkbs.map(_._1), wkbs.map(_._2))))
+          .as[(Long, Array[Byte])].collect()
+        Some(spark.sparkContext.broadcast(CoverIndex.Polygons(wkbs.map(_._1), wkbs.map(_._2))))
       }
       // the pair table holds the WKB once; a broadcast holds it again, with
       // an id per polygon
@@ -318,13 +297,13 @@ object CellPyramid {
         // equi-join on poly_id (one WKB row per polygon; the per-cell
         // re-expansion happens executor-side inside the exchange, the shape
         // every distributed spatial join pays) and refines with the
-        // join-column variant
+        // shuffle joins' per-pair kernel
         val wkbRows = side.pairs.filter(col("wkb").isNotNull).select("poly_id", "wkb")
         val boundaryPairs = side.pairs.filter(!col("interior")).select("poly_id", "cell")
         pyramid.join(side.pairs.filter(col("interior")).select("poly_id", "cell"), Seq("cell"))
           .select(col("poly_id"), col("cnt").as("n"))
           .unionAll(ptsCells.join(boundaryPairs.join(wkbRows, Seq("poly_id")), Seq("cell"))
-            .filter(graft.ops.GeoExpressions.preparedContains(
+            .filter(graft.ops.GeoExpressions.polygonContains(
               col("poly_id"), col("wkb"), col(lonCol), col(latCol)))
             .select(col("poly_id"), lit(1L).as("n")))
     }

@@ -17,22 +17,21 @@ import scala.collection.mutable
   * the skewed "urban" case) get a per-cell STRtree so a lookup is
   * O(log n) in candidates, not O(n).
   *
-  * Ships WKB over the wire (serializable, compact); the ring arrays and
-  * trees are rebuilt lazily once per executor JVM (`@transient lazy val`).
+  * Ships the layer as [[CoverIndex.Polygons]] (ids and WKB: serializable,
+  * compact); the ring arrays and trees are rebuilt lazily once per
+  * executor JVM (`@transient lazy val`). Cell candidates are positions in
+  * `polygons`.
   * This is the scale path for the reference's per-feature geometry pipeline
   * (`/root/reference/src/format/geo.rs:5-48`): the polygon side is the
   * broadcast dim, the point side streams through a narrow map — no shuffle.
   */
 class CoverIndex(
     val level: Int,
-    val polyIds: Array[Long],
-    val polyWkbs: Array[Array[Byte]],
+    val polygons: CoverIndex.Polygons,
     val cellToPolys: Map[Long, Array[Int]],
     val denseThreshold: Int = 16
 ) extends Serializable {
 
-  @transient private lazy val rings: CoverIndex.Rings =
-    CoverIndex.Rings(polyIds, polyWkbs.map(WkbCodec.read))
   /** Primitive probe index (r6): the per-row cell lookup through
     * `Map[Long, _]` boxed the packed key on EVERY fact-row probe (plus a
     * second boxed lookup for the dense-tree map). Rebuilt per executor
@@ -43,7 +42,7 @@ class CoverIndex(
   @transient private lazy val probeVals: Array[Array[Int]] = probeKeys.map(cellToPolys)
   @transient private lazy val probeTrees: Array[STRtree] = probeVals.map { idxs =>
     if (idxs.length >= denseThreshold) {
-      val r = rings
+      val r = polygons.rings
       val t = new STRtree()
       idxs.foreach(i => t.insert(new Envelope(r.minX(i), r.maxX(i), r.minY(i), r.maxY(i)),
         Integer.valueOf(i)))
@@ -59,14 +58,14 @@ class CoverIndex(
   /** Polygon ids exactly containing the point (JTS `contains`: boundary
     * excluded — the synthetic layers keep points off boundaries), sorted.
     * Allocation-light: runs once per fact row (10^12 times), so per-probe
-    * garbage is a GC/scaling tax — the dense-tree query Envelope is a
-    * per-thread mutable ([[graft.geom.ProbePoint]], r6), and the result
-    * copy is skipped when every candidate matched. */
+    * garbage is a GC/scaling tax — the dense-tree query envelope and
+    * candidate buffer are per-thread ([[CoverIndex.IntVisitor]], r6), and
+    * the result copy is skipped when every candidate matched. */
   def containing(lon: Double, lat: Double): Array[Long] = {
     val key = cellKey(CellGrid.cellX(lon, level), CellGrid.cellY(lat, level))
     val slot = java.util.Arrays.binarySearch(probeKeys, key)
     if (slot < 0) return empty
-    val r = rings
+    val r = polygons.rings
     var cands = probeVals(slot)
     var nc = cands.length
     val tree = probeTrees(slot)
@@ -75,14 +74,15 @@ class CoverIndex(
       // probe; the visitor form accumulates into a per-thread int buffer
       val vis = CoverIndex.visitor.get()
       vis.reset()
-      tree.query(graft.geom.ProbePoint.envelope(lon, lat), vis)
+      vis.env.init(lon, lon, lat, lat)
+      tree.query(vis.env, vis)
       cands = vis.buf; nc = vis.size
     }
     val out = new Array[Long](nc)
     var m = 0; var j = 0
     while (j < nc) {
       val i = cands(j)
-      if (r.contains(i, lon, lat)) { out(m) = polyIds(i); m += 1 }
+      if (r.contains(i, lon, lat)) { out(m) = polygons.ids(i); m += 1 }
       j += 1
     }
     val res = if (m == out.length) out else java.util.Arrays.copyOf(out, m)
@@ -98,9 +98,11 @@ class CoverIndex(
 
 object CoverIndex {
 
-  /** Growable per-thread candidate collector for the dense-cell STRtree
-    * probe (r6) — `query(env)` allocates a fresh ArrayList per call. */
+  /** Per-thread state of the dense-cell STRtree probe (r6): the point's
+    * degenerate query envelope, and a growable candidate collector —
+    * `query(env)` allocates a fresh ArrayList per call. */
   final class IntVisitor extends org.locationtech.jts.index.ItemVisitor {
+    val env: Envelope = new Envelope()
     var buf: Array[Int] = new Array[Int](64)
     var size: Int = 0
     def reset(): Unit = size = 0
@@ -169,6 +171,43 @@ object CoverIndex {
 
   object Rings {
 
+    private final case class Key(id: Long, len: Int, hash: Int)
+
+    private final class Entry(val wkb: Array[Byte], val rings: Rings)
+
+    private val MaxEntries = 4096
+
+    private val cache: ThreadLocal[java.util.LinkedHashMap[Key, Entry]] =
+      ThreadLocal.withInitial { () =>
+        new java.util.LinkedHashMap[Key, Entry](64, 0.75f, true) {
+          override def removeEldestEntry(e: java.util.Map.Entry[Key, Entry]): Boolean =
+            size() > MaxEntries
+        }
+      }
+
+    /** The one-polygon Rings of polygon `id` with WKB `wkb`, for the
+      * shuffle-side refines, where a dense cell delivers the same polygon
+      * to the refine thousands of times per task: from the calling
+      * thread's bounded LRU, built on a miss.
+      *
+      * Keyed by (id, wkb.length, Arrays.hashCode(wkb)): the id alone is
+      * not safe, because one JVM runs many queries over polygon layers
+      * that can reuse ids. A hit also compares the stored bytes with
+      * `Arrays.equals`, so a reused id with equal-length, hash-colliding
+      * WKB never gets another polygon's answer. Per thread because the LRU
+      * order is mutable; bounded so a huge layer cannot pin unbounded heap
+      * per thread. */
+    def cached(id: Long, wkb: Array[Byte]): Rings = {
+      val key = Key(id, wkb.length, java.util.Arrays.hashCode(wkb))
+      val m = cache.get()
+      var e = m.get(key)
+      if (e == null || !java.util.Arrays.equals(e.wkb, wkb)) {
+        e = new Entry(wkb.clone(), Rings(Array(id), Array(WkbCodec.read(wkb))))
+        m.put(key, e)
+      }
+      e.rings
+    }
+
     /** Flattens polygonal geometries; a geometry that is neither a Polygon
       * nor a MultiPolygon fails with its id. */
     def apply(ids: Array[Long], geoms: Array[Geometry]): Rings = {
@@ -230,7 +269,7 @@ object CoverIndex {
 
     /** The shell and hole rings of every component of a polygonal geometry;
       * any other geometry fails with its id. */
-    private[index] def polygonalRings(id: Long, g: Geometry): Seq[LinearRing] = g match {
+    private def polygonalRings(id: Long, g: Geometry): Seq[LinearRing] = g match {
       case p: Polygon => p.getExteriorRing +: (0 until p.getNumInteriorRing).map(p.getInteriorRingN)
       case mp: MultiPolygon =>
         (0 until mp.getNumGeometries).flatMap(k => polygonalRings(id, mp.getGeometryN(k)))
@@ -239,19 +278,43 @@ object CoverIndex {
     }
   }
 
+  /** A polygon layer as it ships: ids ascending, the WKB beside them, and
+    * their [[Rings]], built from the WKB lazily, once per JVM. A geometry
+    * that is neither a Polygon nor a MultiPolygon fails where the layer is
+    * made, on the driver, with its id. Polygon `i` of `rings` is `ids(i)`. */
+  final class Polygons private (val ids: Array[Long], val wkbs: Array[Array[Byte]])
+    extends Serializable {
+    @transient lazy val rings: Rings = Rings(ids, wkbs.map(WkbCodec.read))
+
+    /** Whether the polygon `polyId` of this layer contains (x, y). */
+    def contains(polyId: Long, x: Double, y: Double): Boolean =
+      rings.contains(java.util.Arrays.binarySearch(ids, polyId), x, y)
+
+    // a plan that holds the layer as a kernel constant prints this
+    override def toString: String = s"Polygons(${ids.length})"
+  }
+
+  object Polygons {
+    def apply(ids: Array[Long], wkbs: Array[Array[Byte]]): Polygons = {
+      val order = ids.indices.sortBy(ids(_)).toArray
+      val p = new Polygons(order.map(ids), order.map(wkbs))
+      p.rings // fails a non-polygonal geometry here, on the driver
+      p
+    }
+  }
+
   /** Build on the driver from a collected (small/dim) polygon layer. */
   def build(polyIds: Array[Long], polyWkbs: Array[Array[Byte]], level: Int): CoverIndex = {
+    val polygons = Polygons(polyIds, polyWkbs)
     val cellMap = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Int]]
     var i = 0
-    while (i < polyIds.length) {
-      val g = WkbCodec.read(polyWkbs(i))
-      Rings.polygonalRings(polyIds(i), g) // fails a non-polygonal geometry here, on the driver
-      coverCells(g, level).foreach { case (cx, cy) =>
+    while (i < polygons.ids.length) {
+      coverCells(WkbCodec.read(polygons.wkbs(i)), level).foreach { case (cx, cy) =>
         cellMap.getOrElseUpdate((cx << 32) | cy, mutable.ArrayBuffer.empty) += i
       }
       i += 1
     }
-    new CoverIndex(level, polyIds, polyWkbs, cellMap.view.mapValues(_.toArray).toMap)
+    new CoverIndex(level, polygons, cellMap.view.mapValues(_.toArray).toMap)
   }
 
   /** Cells at `level` whose rectangle intersects the geometry (bbox cover +

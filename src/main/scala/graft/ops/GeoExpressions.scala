@@ -4,7 +4,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import graft.TableMemo
@@ -41,7 +41,9 @@ object NodeCoordMap {
   *
   * `st_containing_polys` calls [[CoverIndex.containing]] per row: the
   * point's cell candidates, refined by the index's flat ray-crossing
-  * kernel (no JTS geometry and no lock on the row path).
+  * kernel (no JTS geometry and no lock on the row path). The shuffle
+  * joins refine each candidate pair with the same kernel
+  * ([[polygonContains]]).
   */
 object GeoExpressions {
 
@@ -57,15 +59,17 @@ object GeoExpressions {
   def knn(bc: Broadcast[PoiGrid], lon: Double, lat: Double, k: Int): ArrayData =
     UnsafeArrayData.fromPrimitiveArray(bc.value.knn(lon, lat, k))
 
-  /** Prepared-geometry point-in-polygon refine for the SHUFFLE join path:
-    * (poly_id, wkb, lon, lat) -> boolean, through the per-thread
-    * [[graft.geom.PreparedCache]]. The WKB bytes come straight off the
-    * InternalRow — no CatalystTypeConverters boxing per candidate pair. */
-  def preparedContains(polyId: Long, wkb: Array[Byte], lon: Double, lat: Double): Boolean =
-    graft.geom.PreparedCache.get(polyId, wkb).contains(graft.geom.ProbePoint.at(lon, lat))
+  /** The shuffle joins' point-in-polygon refine: whether polygon `polyId`,
+    * with WKB `wkb`, contains (lon, lat), tested by its one-polygon
+    * [[CoverIndex.Rings]] from the calling thread's cache
+    * ([[CoverIndex.Rings.cached]]). A candidate pair carries its polygon's
+    * WKB, read straight off the InternalRow; a polygon that is neither a
+    * Polygon nor a MultiPolygon fails with its id. */
+  def polygonContains(polyId: Long, wkb: Array[Byte], lon: Double, lat: Double): Boolean =
+    CoverIndex.Rings.cached(polyId, wkb).contains(0, lon, lat)
 
-  def preparedContains(polyId: Column, wkb: Column, lon: Column, lat: Column): Column =
-    Kernel.column("st_prepared_contains", this, "preparedContains", BooleanType)(
+  def polygonContains(polyId: Column, wkb: Column, lon: Column, lat: Column): Column =
+    Kernel.column("st_polygon_contains", this, "polygonContains", BooleanType)(
       polyId -> LongType, wkb -> BinaryType, lon -> DoubleType, lat -> DoubleType)
 
   /** Polygon cover cells for the SHUFFLE pip-join's dim side: WKB ->
@@ -128,14 +132,17 @@ object GeoExpressions {
 
   /** Whole way assembly inside the row: probe each raw ref against the
     * broadcast node map IN ORDER (misses skipped: the inner-join drop),
-    * then build the WKB with [[wayGeom]]. Output struct(closed, npts,
-    * geom); npts = 0 marks a way with no resolved ref, which the join form
-    * drops entirely (caller filters). This replaces posexplode(refs) ->
-    * join -> groupBy/sort_array for the broadcast case: the explode and
-    * regroup shuffled every vertex (plus the way's tags, duplicated per
-    * ref) only to reassemble an order the refs array already had. The
-    * declarative join path remains for node sets too big to broadcast. */
-  def wayAssemble(bc: Broadcast[NodeCoordMap], refs: ArrayData): InternalRow = {
+    * then build the WKB with [[wayGeom]]. Output an array of one
+    * struct(closed, npts, geom), or of none for a way with no resolved ref,
+    * which the join form drops entirely: `inline` over it drops the way
+    * with no filter, which the optimizer would push below the projection
+    * and evaluate the assembly for a second time. This replaces
+    * posexplode(refs) -> join -> groupBy/sort_array for the broadcast
+    * case: the explode and regroup shuffled every vertex (plus the way's
+    * tags, duplicated per ref) only to reassemble an order the refs array
+    * already had. The declarative join path remains for node sets too big
+    * to broadcast. */
+  def wayAssemble(bc: Broadcast[NodeCoordMap], refs: ArrayData): ArrayData = {
     val n = refs.numElements()
     val m = bc.value
     val coords = new scala.collection.mutable.ArrayBuffer[(Double, Double)](n)
@@ -145,13 +152,17 @@ object GeoExpressions {
       if (idx >= 0) coords += ((m.lons(idx), m.lats(idx)))
       i += 1
     }
-    val closed = n > 0 && refs.getLong(0) == refs.getLong(n - 1)
-    InternalRow(closed, coords.length, wayGeom(closed, coords.toSeq))
+    if (coords.isEmpty) new GenericArrayData(Array.empty[Any])
+    else {
+      val closed = n > 0 && refs.getLong(0) == refs.getLong(n - 1)
+      new GenericArrayData(Array[Any](InternalRow(closed, coords.length, wayGeom(closed, coords.toSeq))))
+    }
   }
 
-  /** refs -> struct(closed, npts, geom) via the broadcast node map. */
+  /** refs -> zero or one struct(closed, npts, geom) via the broadcast node
+    * map. */
   def wayAssemble(refs: Column, bc: Broadcast[NodeCoordMap]): Column =
-    Kernel.column("osm_way_assemble", this, "wayAssemble", WayAssembly)(
+    Kernel.column("osm_way_assemble", this, "wayAssemble", ArrayType(WayAssembly, containsNull = false))(
       Kernel.constant(bc), refs -> ArrayType(LongType))
 
   /** (lon, lat) -> array<long> of containing polygon ids; polygon layer

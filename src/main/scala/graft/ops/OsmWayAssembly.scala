@@ -48,15 +48,13 @@ object OsmWayAssembly {
       val rows = nodes.select(col("node_id"), col("lon"), col("lat")).collect()
       TableMemo.Held.broadcast(spark.sparkContext.broadcast(NodeCoordMap.fromRows(rows)))
     }
-    ways.select(col("way_id"), col("tags"),
-        GeoExpressions.wayAssemble(col("refs"), bc).as("a"))
-      .filter(col("a.npts") > 0)
+    ways.select(col("way_id"), col("tags"), inline(GeoExpressions.wayAssemble(col("refs"), bc)))
       .select(
         col("way_id"),
         col("tags"),
-        when(col("a.closed"), "Polygon").otherwise("LineString").as("kind"),
-        col("a.npts").as("npts"),
-        col("a.geom").as("geom"))
+        when(col("closed"), "Polygon").otherwise("LineString").as("kind"),
+        col("npts"),
+        col("geom"))
   }
 
   /** Shuffle path for node sets too big to broadcast: the declarative

@@ -21,11 +21,11 @@ import graft.index.{CellGrid, CoverIndex}
   *
   *  - [[shuffleJoin]]: for polygon layers too big to broadcast. Polygons
   *    explode to (cell, poly) cover rows, points shuffle on their cell,
-  *    equi-join on cell, exact JTS refine after. Hot cells (dense urban
-  *    polygons) are salted: cover rows for hot cells are replicated
-  *    `saltFactor` ways and points pick a deterministic salt, so one hot
-  *    cell spreads over `saltFactor` reducers. AQE skew-join remains on as
-  *    backstop.
+  *    equi-join on cell, the same ray-crossing refine after. Hot cells
+  *    (dense urban polygons) are salted: cover rows for hot cells are
+  *    replicated `saltFactor` ways and points pick a deterministic salt,
+  *    so one hot cell spreads over `saltFactor` reducers. AQE skew-join
+  *    remains on as backstop.
   *
   * Both return the point rows + `poly_id`, text columns untouched.
   */
@@ -83,13 +83,8 @@ object PipJoin {
           .otherwise(lit(0)))
       .drop("hot_cell")
 
-    // prepared-geometry refine (native Expression over the per-thread LRU
-    // in PreparedCache): a dense cell delivers the same polygon to the
-    // refine thousands of times; without the cache the WKB parse + prepare
-    // per candidate pair dominates the join. Native (not ScalaUDF) so the
-    // WKB bytes are read straight off the InternalRow — no boxing per pair
     saltedPts.join(saltedCover, Seq("cell", "salt"))
-      .filter(GeoExpressions.preparedContains(
+      .filter(GeoExpressions.polygonContains(
         col("poly_id"), col("geom"), col("lon"), col("lat")))
       .drop("cell", "salt", "geom", "cx", "cy", "r")
   }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.locationtech.jts.geom.{Coordinate, Geometry, LineString, LinearRing, Point, Polygon}
-import graft.geom.{GeoJsonDecode, Mercator, ProbePoint, Simplify, WkbCodec}
-import graft.index.CellGrid
+import graft.geom.{GeoJsonDecode, Mercator, Simplify, WkbCodec}
+import graft.index.{CellGrid, CoverIndex}
 
 /** SQL function surface (`st_*`). Pure-math functions are built as
   * COMPOSITIONS of built-in Catalyst expressions — they constant-fold and
@@ -68,10 +68,11 @@ object SqlFunctions {
   def intersects(a: Array[Byte], b: Array[Byte]): Boolean = geom(a).intersects(geom(b))
   def within(a: Array[Byte], b: Array[Byte]): Boolean = geom(a).within(geom(b))
   def contains(a: Array[Byte], b: Array[Byte]): Boolean = geom(a).contains(geom(b))
-  /** [[contains]] of the point (x, y), without the point's WKB: what
-    * [[SpatialFilterPushdown]] leaves of `st_contains(wkb, st_point(x, y))`. */
-  def containsPoint(wkb: Array[Byte], x: Double, y: Double): Boolean =
-    geom(wkb).contains(ProbePoint.at(x, y))
+  /** [[contains]] of the point (x, y) by a polygonal literal decoded once,
+    * at plan time: what [[SpatialFilterPushdown]] leaves of
+    * `st_contains(<polygon wkb>, st_point(x, y))`. */
+  def literalContains(p: CoverIndex.Polygons, x: Double, y: Double): Boolean =
+    p.rings.contains(0, x, y)
   def point(x: Double, y: Double): Array[Byte] = WkbCodec.write(WkbCodec.point(x, y))
   def buffer(wkb: Array[Byte], dist: Double): Array[Byte] = WkbCodec.write(geom(wkb).buffer(dist))
   def geomFromGeoJson(json: UTF8String): Array[Byte] =

@@ -182,17 +182,17 @@ class PlanGuardSpec extends AnyFunSuite with SparkTest {
     // and probe Generates, q14's refine (a Filter, or the join condition the
     // optimizer folds it into), q55's intersects refine, the flagship's two
     // probe projections, q18's way assembly, q72's boundary refine, q37's
-    // lang id and q105's STR partition
+    // lang id and q105's STR partition and refine
     def query(q: String) = SparkEntry.queries(q)(spark, Sf)
     for ((what, df, kernels) <- Seq(
         ("q13", query("q13_pip_join"), Seq("geoMentions", "containing")),
-        ("q14", query("q14_pip_join_salted"), Seq("preparedContains")),
+        ("q14", query("q14_pip_join_salted"), Seq("polygonContains")),
         ("q55", query("q55_overlay_join"), Seq("intersects")),
         ("Pipeline.run", Pipeline.run(spark, Sf), Seq("containing", "knn")),
         ("q18", query("q18_osm_ways"), Seq("wayAssemble")),
         ("q72", query("q72_pyramid_count"), Seq("boundaryContains")),
         ("q37", query("q37_langid_ngram"), Seq("ctBestLang")),
-        ("q105", query("q105_pip_str"), Seq("partitionOf")))) {
+        ("q105", query("q105_pip_str"), Seq("partitionOf", "polygonContains")))) {
       val (all, fused) = Probes.codegenSplit(df)
       for (kernel <- kernels) {
         val calling = Probes.kernelCallers(all, kernel)
@@ -204,14 +204,26 @@ class PlanGuardSpec extends AnyFunSuite with SparkTest {
     }
   }
 
+  test("q18 assembles each way once: one wayAssemble call in the executed plan") {
+    // a filter on the assembly's output would be pushed below the
+    // projection with the call inlined, so both would assemble every way
+    val nodes = Probes.planNodes(SparkEntry.queries("q18_osm_ways")(spark, Sf))
+    for (kernel <- Seq("wayAssemble", "wayRefs")) {
+      val calls = nodes.flatMap(_.expressions.flatMap(_.collect {
+        case s: org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+            if s.functionName == kernel => s }))
+      assert(calls.size === 1, s"q18 calls $kernel ${calls.size} times")
+    }
+  }
+
   test("q14 salted-shuffle PIP: no ScalaUDF in the refine path") {
-    // the prepared-contains refine is a native kernel
-    // (GeoExpressions.preparedContains); a ScalaUDF reappearing here
-    // means CatalystTypeConverters boxing of the WKB per candidate pair
+    // the refine is a native kernel (GeoExpressions.polygonContains); a
+    // ScalaUDF reappearing here means CatalystTypeConverters boxing of the
+    // WKB per candidate pair
     val df = SparkEntry.queries("q14_pip_join_salted")(spark, Sf)
     val hasNative = df.queryExecution.optimizedPlan.exists(
-      _.expressions.exists(Probes.callsKernel(_, "preparedContains")))
-    assert(hasNative, "q14 refine must be the native preparedContains kernel")
+      _.expressions.exists(Probes.callsKernel(_, "polygonContains")))
+    assert(hasNative, "q14 refine must be the native polygonContains kernel")
     // dim-side UDFs (polygon synth, cover-cell explode) run once per
     // POLYGON and are fine; what must never come back is a ScalaUDF over
     // the point-side columns — that's a per-candidate-pair boxing cost

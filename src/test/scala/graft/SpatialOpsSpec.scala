@@ -1,10 +1,14 @@
 package graft
 
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.locationtech.jts.geom.prep.PreparedGeometryFactory
 import graft.geom.WkbCodec
-import graft.index.CoverIndex
-import graft.ops.{KnnJoin, PipJoin, PoiGrid}
+import graft.index.{CellPyramid, CoverIndex}
+import graft.ops.{KnnJoin, PipJoin, PoiGrid, StrPartition}
 import graft.sources.Layers
 
 class SpatialOpsSpec extends AnyFunSuite with SparkTest {
@@ -115,15 +119,24 @@ class SpatialOpsSpec extends AnyFunSuite with SparkTest {
     }
   }
 
+  /** The (url, ent_idx, poly_id) matches of the broadcast PIP join, after
+    * checking that the salted shuffle join and the STR join give the same. */
+  private def pipJoins(pts: DataFrame, polys: DataFrame): Set[(String, Int, Long)] = {
+    import spark.implicits._
+    val bounds = StrPartition.fitFromSample(pts, "lon", "lat", targetPartitions = 16)
+    val Seq(byBroadcast, bySalt, byStr) = Seq(PipJoin.broadcastJoin(spark, pts, polys, 6),
+      PipJoin.shuffleJoin(spark, pts, polys, 6), StrPartition.pipJoin(spark, pts, polys, bounds))
+      .map(_.select("url", "ent_idx", "poly_id").as[(String, Int, Long)].collect().toSet)
+    assert(byBroadcast === bySalt, "salted shuffle join")
+    assert(byBroadcast === byStr, "STR join")
+    byBroadcast
+  }
+
   test("broadcast PIP join == salted shuffle PIP join == oracle arithmetic") {
     import spark.implicits._
     val ents = Pipeline.entities(spark, Sf)
     val polys = Layers.polygons(spark, Sf)
-    val a = PipJoin.broadcastJoin(spark, ents, polys, 6)
-      .select("url", "ent_idx", "poly_id").as[(String, Int, Long)].collect().toSet
-    val b = PipJoin.shuffleJoin(spark, ents, polys, 6)
-      .select("url", "ent_idx", "poly_id").as[(String, Int, Long)].collect().toSet
-    assert(a === b)
+    val a = pipJoins(ents, polys)
     // arithmetic oracle on the diamond definition
     val pts = ents.select("url", "ent_idx", "lon", "lat").as[(String, Int, Double, Double)].collect()
     val ps = polys.select("poly_id", "cx", "cy", "r").as[(Long, Double, Double, Double)].collect()
@@ -133,6 +146,45 @@ class SpatialOpsSpec extends AnyFunSuite with SparkTest {
       if math.abs(lon - cx) + math.abs(lat - cy) < r
     } yield (url, k, pid)).toSet
     assert(a === expected)
+    // a layer with holes and multipolygons, probed on its vertices, edges
+    // and hole boundaries: against JTS prepared contains
+    val shapes = Seq(LatticeShapes.genHoles, LatticeShapes.genMulti)
+      .flatMap(g => Gen.listOfN(4, g).pureApply(Gen.Parameters.default, Seed(11L)))
+    val layer = shapes.zipWithIndex.map { case (g, i) => (i + 1L, g) }
+    val probes = shapes.flatMap(LatticeShapes.probes).distinct.zipWithIndex
+      .map { case ((x, y), i) => (s"p$i", 0, x, y) }
+    val prepared = layer.map { case (id, g) => (id, PreparedGeometryFactory.prepare(g)) }
+    val want = (for {
+      (url, k, x, y) <- probes
+      (id, g) <- prepared
+      if g.contains(WkbCodec.point(x, y))
+    } yield (url, k, id)).toSet
+    assert(want.nonEmpty)
+    assert(pipJoins(probes.toDF("url", "ent_idx", "lon", "lat"),
+      layer.map { case (id, g) => (id, WkbCodec.write(g)) }.toDF("poly_id", "geom")) === want)
+  }
+
+  test("a non-polygonal row fails every PIP path with FailedValidation naming its poly_id") {
+    import spark.implicits._
+    val polys = Seq((1L, WkbCodec.write(WkbCodec.diamond(0.5, 0.5, 0.5))),
+      (4242L, WkbCodec.write(WkbCodec.lineString(Seq((0.0, 0.0), (1.0, 1.0)))))).toDF("poly_id", "geom")
+    val pts = (0 until 100).map(i => (s"p$i", 0, (i % 10) / 10.0 + 0.05, (i / 10) / 10.0 + 0.05))
+      .toDF("url", "ent_idx", "lon", "lat")
+    val bounds = StrPartition.fitFromSample(pts, "lon", "lat", targetPartitions = 4, fraction = 1.0)
+    val pyramid = CellPyramid.build(pts, "lon", "lat", finest = 10, depth = 3)
+    def pyramidCounts(limit: Long) = CellPyramid.polygonCounts(spark, pyramid, pts, "lon", "lat",
+      polys, finest = 10, depth = 3, broadcastPairLimit = limit)
+    for ((path, run) <- Seq[(String, () => DataFrame)](
+        "broadcast" -> (() => PipJoin.broadcastJoin(spark, pts, polys, 6)),
+        "salted shuffle" -> (() => PipJoin.shuffleJoin(spark, pts, polys, 6)),
+        "STR" -> (() => StrPartition.pipJoin(spark, pts, polys, bounds)),
+        "pyramid broadcast" -> (() => pyramidCounts(CellPyramid.BroadcastPairLimit)),
+        "pyramid scale" -> (() => pyramidCounts(0)))) {
+      val e = intercept[Exception](run().collect())
+      val typed = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case v: GraftError.FailedValidation => v }
+      assert(typed.exists(_.getMessage.contains("4242")), s"$path: $e")
+    }
   }
 
   test("PoiGrid ring-expansion kNN == brute force, all ks, incl. k > n") {

@@ -113,38 +113,52 @@ class SqlFunctionsSpec extends AnyFunSuite with SparkTest {
     (1 to 1000).map(i => (i.toLong, (i % 20) - 5.0, ((i * 7) % 20) - 5.0))
       .toDF("id", "lon", "lat").write.mode("overwrite").parquet(s"$dir/pts")
     val pts = spark.read.parquet(s"$dir/pts")
-    val polyWkb = WkbCodec.write(WkbCodec.polygon(
-      Seq((0.0, 0.0), (0.0, 10.0), (10.0, 10.0), (10.0, 0.0), (0.0, 0.0))))
-    val polyHex = polyWkb.map("%02X".format(_)).mkString
-    // through the registered functions, as a SQL caller writes it
-    def filtered = pts.filter(expr(s"st_contains(X'$polyHex', st_point(lon, lat))"))
-    val plain = filtered
-    assert(plain.queryExecution.optimizedPlan.expressions.exists(Probes.callsKernel(_, "contains")))
-    val baseline = plain.select("id").as[Long].collect().sorted
-    val had = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = had :+ SpatialFilterPushdown
-    try {
-      val q = filtered
-      val plan = q.queryExecution.executedPlan.toString
-      // (the plan's text truncates the PushedFilters list; the scan's
-      // metadata holds all of it)
-      val pushed = Probes.planNodes(q).collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metadata("PushedFilters") }
-      assert(pushed.nonEmpty && Seq("GreaterThanOrEqual(lon,0.0)", "LessThanOrEqual(lon,10.0)",
-        "GreaterThanOrEqual(lat,0.0)", "LessThanOrEqual(lat,10.0)").forall(f => pushed.forall(_.contains(f))),
-        s"bbox not pushed to scan: $pushed\n$plan")
-      // the exact check remains, as the point kernel, inside codegen
-      val (all, fused) = Probes.codegenSplit(q)
-      val exact = Probes.kernelCallers(all, "containsPoint")
-      assert(exact.nonEmpty, s"exact JTS check must remain:\n$plan")
-      assert(exact.forall(o => fused.exists(_ eq o)), s"the filter must run in whole-stage codegen:\n$plan")
-      assert(Probes.kernelCallers(all, "point").isEmpty,
-        "the point must not be encoded per row")
-      // idempotent: the rule leaves its own output as it is
-      val optimized = q.queryExecution.optimizedPlan
-      assert(SpatialFilterPushdown(optimized) fastEquals optimized)
-      assert(q.select("id").as[Long].collect().sorted.toSeq === baseline.toSeq)
-      assert(baseline.nonEmpty) // the test must actually select something
-    } finally spark.experimental.extraOptimizations = had
+    def square(x0: Double, y0: Double, x1: Double, y1: Double) =
+      Seq((x0, y0), (x0, y1), (x1, y1), (x1, y0), (x0, y0))
+    // on the points' integer lattice: points fall on vertices, edges and
+    // hole boundaries. A polygonal literal runs the ray-crossing kernel;
+    // any other keeps the generic contains kernel
+    val literals = Seq(
+      (WkbCodec.polygon(square(0, 0, 10, 10)), "literalContains"),
+      (WkbCodec.polygon(square(-3, -3, 11, 11), Seq(square(2, 2, 6, 6))), "literalContains"),
+      (WkbCodec.multiPolygon(Seq(WkbCodec.polygon(square(-4, -4, 0, 0)),
+        WkbCodec.polygon(square(2, 2, 12, 9), Seq(square(4, 4, 6, 6))))), "literalContains"),
+      (WkbCodec.lineString(Seq((0.0, 0.0), (10.0, 10.0))), "contains"))
+    for ((g, kernel) <- literals) {
+      val polyHex = WkbCodec.write(g).map("%02X".format(_)).mkString
+      // through the registered functions, as a SQL caller writes it
+      def filtered = pts.filter(expr(s"st_contains(X'$polyHex', st_point(lon, lat))"))
+      val plain = filtered
+      assert(plain.queryExecution.optimizedPlan.expressions.exists(Probes.callsKernel(_, "contains")))
+      val baseline = plain.select("id").as[Long].collect().sorted
+      val had = spark.experimental.extraOptimizations
+      spark.experimental.extraOptimizations = had :+ SpatialFilterPushdown
+      try {
+        val q = filtered
+        val plan = q.queryExecution.executedPlan.toString
+        // (the plan's text truncates the PushedFilters list; the scan's
+        // metadata holds all of it)
+        val pushed = Probes.planNodes(q).collect {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metadata("PushedFilters") }
+        val env = g.getEnvelopeInternal
+        assert(pushed.nonEmpty && Seq(s"GreaterThanOrEqual(lon,${env.getMinX})",
+          s"LessThanOrEqual(lon,${env.getMaxX})", s"GreaterThanOrEqual(lat,${env.getMinY})",
+          s"LessThanOrEqual(lat,${env.getMaxY})").forall(f => pushed.forall(_.contains(f))),
+          s"${g.getGeometryType}: bbox not pushed to scan: $pushed\n$plan")
+        // the exact check remains, inside codegen
+        val (all, fused) = Probes.codegenSplit(q)
+        val exact = Probes.kernelCallers(all, kernel)
+        assert(exact.nonEmpty, s"${g.getGeometryType}: exact check $kernel must remain:\n$plan")
+        assert(exact.forall(o => fused.exists(_ eq o)), s"the filter must run in whole-stage codegen:\n$plan")
+        if (kernel == "literalContains")
+          assert(Probes.kernelCallers(all, "point").isEmpty && Probes.kernelCallers(all, "contains").isEmpty,
+            s"${g.getGeometryType}: no WKB may be encoded or decoded per row:\n$plan")
+        // idempotent: the rule leaves its own output as it is
+        val optimized = q.queryExecution.optimizedPlan
+        assert(SpatialFilterPushdown(optimized) fastEquals optimized)
+        assert(q.select("id").as[Long].collect().sorted.toSeq === baseline.toSeq, g.getGeometryType)
+        assert(baseline.nonEmpty) // the test must actually select something
+      } finally spark.experimental.extraOptimizations = had
+    }
   }
 }
