@@ -269,7 +269,7 @@ object CoverIndex {
 
     /** The shell and hole rings of every component of a polygonal geometry;
       * any other geometry fails with its id. */
-    private def polygonalRings(id: Long, g: Geometry): Seq[LinearRing] = g match {
+    private[index] def polygonalRings(id: Long, g: Geometry): Seq[LinearRing] = g match {
       case p: Polygon => p.getExteriorRing +: (0 until p.getNumInteriorRing).map(p.getInteriorRingN)
       case mp: MultiPolygon =>
         (0 until mp.getNumGeometries).flatMap(k => polygonalRings(id, mp.getGeometryN(k)))
@@ -279,9 +279,10 @@ object CoverIndex {
   }
 
   /** A polygon layer as it ships: ids ascending, the WKB beside them, and
-    * their [[Rings]], built from the WKB lazily, once per JVM. A geometry
-    * that is neither a Polygon nor a MultiPolygon fails where the layer is
-    * made, on the driver, with its id. Polygon `i` of `rings` is `ids(i)`. */
+    * their [[Rings]], built from the WKB lazily, where a refine first needs
+    * them, once per JVM. A geometry that is neither a Polygon nor a
+    * MultiPolygon fails where the layer is made, on the driver, with its
+    * id. Polygon `i` of `rings` is `ids(i)`. */
   final class Polygons private (val ids: Array[Long], val wkbs: Array[Array[Byte]])
     extends Serializable {
     @transient lazy val rings: Rings = Rings(ids, wkbs.map(WkbCodec.read))
@@ -295,21 +296,28 @@ object CoverIndex {
   }
 
   object Polygons {
-    def apply(ids: Array[Long], wkbs: Array[Array[Byte]]): Polygons = {
+    def apply(ids: Array[Long], wkbs: Array[Array[Byte]]): Polygons = decoded(ids, wkbs)._1
+
+    /** The layer, with its geometries decoded once, in its order. Only the
+      * geometry type is checked here: the flat [[Rings]] wait for a refine. */
+    private[index] def decoded(ids: Array[Long], wkbs: Array[Array[Byte]]): (Polygons, Array[Geometry]) = {
       val order = ids.indices.sortBy(ids(_)).toArray
       val p = new Polygons(order.map(ids), order.map(wkbs))
-      p.rings // fails a non-polygonal geometry here, on the driver
-      p
+      (p, Array.tabulate(order.length) { i =>
+        val g = WkbCodec.read(p.wkbs(i))
+        Rings.polygonalRings(p.ids(i), g)
+        g
+      })
     }
   }
 
   /** Build on the driver from a collected (small/dim) polygon layer. */
   def build(polyIds: Array[Long], polyWkbs: Array[Array[Byte]], level: Int): CoverIndex = {
-    val polygons = Polygons(polyIds, polyWkbs)
+    val (polygons, geoms) = Polygons.decoded(polyIds, polyWkbs)
     val cellMap = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Int]]
     var i = 0
-    while (i < polygons.ids.length) {
-      coverCells(WkbCodec.read(polygons.wkbs(i)), level).foreach { case (cx, cy) =>
+    while (i < geoms.length) {
+      coverCells(geoms(i), level).foreach { case (cx, cy) =>
         cellMap.getOrElseUpdate((cx << 32) | cy, mutable.ArrayBuffer.empty) += i
       }
       i += 1

@@ -23,21 +23,20 @@ import graft.index.CoverIndex
   * scan (`PushedFilters` + min/max row-group pruning) — at 100 TB a
   * region-restricted query then skips whole files instead of decoding
   * every row to throw it away. The exact check remains (bbox is a
-  * superset), as [[SqlFunctions.literalContains]]: a valid Polygon or
+  * superset), as [[SqlFunctions.literalContains]]: a Polygon or
   * MultiPolygon literal is decoded once, here, into the kernel's constant
   * [[CoverIndex.Polygons]], and each row runs the PIP joins' ray-crossing
   * test on its lon/lat, with no WKB decoded or encoded per row. That is
-  * JTS `contains` on a valid polygon, but for points within rounding
-  * distance of an edge, where it gives the PIP joins' answer. Any other
-  * literal keeps the generic `contains` kernel under the bbox: on an
-  * invalid polygon (self-crossing, overlapping components) JTS's own
-  * prepared and unprepared tests differ.
+  * the answer [[SqlFunctions.contains]] gives a polygon and a point, so
+  * the rewrite keeps every row the plain filter keeps. Any other literal
+  * keeps the generic `contains` kernel under the bbox.
   *
   * The rule runs after the optimizer's `ReplaceExpressions`, so it matches
   * the `StaticInvoke`s that the two [[Kernel]] calls became. It does not
-  * match the polygon kernel it emits, and adds the bbox in front of a
-  * generic kernel only once, so it is idempotent under the optimizer's
-  * fixed-point batches.
+  * match the polygon kernel it emits, and leaves a generic call that is
+  * already a conjunct beside its own four bounds, under an `Or` or a
+  * `Not` too, so it is idempotent under the optimizer's fixed-point
+  * batches.
   *
   * Register per session with
   * `spark.experimental.extraOptimizations ++= Seq(SpatialFilterPushdown)`
@@ -55,6 +54,8 @@ object SpatialFilterPushdown extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case f @ Filter(cond, _) =>
+      // a generic call that one of these holds beside its own bbox is left as it is
+      val conjunctions = cond.collect { case a: And => splitConjunctivePredicates(a) }
       // bottom-up, so a rewrite that wraps the call is not visited again
       val rewritten = cond.transformUp {
         // guard on DoubleType inputs: the optimizer does not re-run the
@@ -68,11 +69,11 @@ object SpatialFilterPushdown extends Rule[LogicalPlan] with PredicateHelper {
                 GreaterThanOrEqual(lon, Literal(env.getMinX)), LessThanOrEqual(lon, Literal(env.getMaxX)),
                 GreaterThanOrEqual(lat, Literal(env.getMinY)), LessThanOrEqual(lat, Literal(env.getMaxY)))
               g match {
-                case _: Polygon | _: MultiPolygon if g.isValid =>
+                case _: Polygon | _: MultiPolygon =>
                   val (polygons, t) = Kernel.constant(CoverIndex.Polygons(Array(0L), Array(wkb)))
                   And(bounds.reduce(And), Kernel.call("st_contains", SqlFunctions, "literalContains", BooleanType)(
                     GraftShim.expression(polygons) -> t, lon -> DoubleType, lat -> DoubleType).replacement)
-                case _ if bounds.forall(b => splitConjunctivePredicates(cond).exists(_.semanticEquals(b))) => e
+                case _ if conjunctions.exists(cs => (e +: bounds).forall(x => cs.exists(_.semanticEquals(x)))) => e
                 case _ => And(bounds.reduce(And), e)
               }
             case None => e // undecodable literal: left for the row-level kernel to report

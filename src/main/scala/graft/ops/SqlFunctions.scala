@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.locationtech.jts.geom.{Coordinate, Geometry, LineString, LinearRing, Point, Polygon}
+import org.locationtech.jts.geom.{Coordinate, Geometry, LineString, LinearRing, MultiPolygon, Point, Polygon}
 import graft.geom.{GeoJsonDecode, Mercator, Simplify, WkbCodec}
 import graft.index.{CellGrid, CoverIndex}
 
@@ -66,8 +66,17 @@ object SqlFunctions {
   def asText(wkb: Array[Byte]): UTF8String = UTF8String.fromString(geom(wkb).toText)
   def distance(a: Array[Byte], b: Array[Byte]): Double = geom(a).distance(geom(b))
   def intersects(a: Array[Byte], b: Array[Byte]): Boolean = geom(a).intersects(geom(b))
-  def within(a: Array[Byte], b: Array[Byte]): Boolean = geom(a).within(geom(b))
-  def contains(a: Array[Byte], b: Array[Byte]): Boolean = geom(a).contains(geom(b))
+  def within(a: Array[Byte], b: Array[Byte]): Boolean = contains(b, a)
+  /** JTS `contains`, but a polygonal geometry and a point take the PIP
+    * joins' ray-crossing test ([[CoverIndex.Rings]], JTS prepared
+    * `contains`): JTS's unprepared answer differs from it on some points
+    * within rounding distance of an edge, and the answer must not depend
+    * on whether [[SpatialFilterPushdown]] rewrote the call. */
+  def contains(a: Array[Byte], b: Array[Byte]): Boolean = (geom(a), geom(b)) match {
+    case (g @ (_: Polygon | _: MultiPolygon), p: Point) =>
+      !p.isEmpty && CoverIndex.Rings(Array(0L), Array(g)).contains(0, p.getX, p.getY)
+    case (g, h) => g.contains(h)
+  }
   /** [[contains]] of the point (x, y) by a polygonal literal decoded once,
     * at plan time: what [[SpatialFilterPushdown]] leaves of
     * `st_contains(<polygon wkb>, st_point(x, y))`. */

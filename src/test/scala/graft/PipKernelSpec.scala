@@ -10,14 +10,13 @@ import graft.geom.WkbCodec
 import graft.index.CoverIndex
 
 /** Parity of the flat ray-crossing refine ([[CoverIndex.Rings]]) with JTS
-  * `PreparedGeometry.contains`, which it replaces on the PIP probe paths,
-  * and, for valid geometries, with the unprepared `Geometry.contains`,
-  * which it replaces in the constant-polygon filter
-  * ([[graft.ops.SpatialFilterPushdown]] keeps that for invalid literals:
-  * on a self-crossing ring or overlapping components the two JTS answers
-  * differ, or the unprepared one throws). JTS's two answers also differ
-  * on some points within rounding distance of an edge (its unprepared
-  * ring scan runs each segment backwards, and the double-double
+  * `PreparedGeometry.contains`, which it replaces on the PIP probe paths
+  * and in `st_contains` of a polygon and a point, and, for valid
+  * geometries, with the unprepared `Geometry.contains`, that function's
+  * old answer (on a self-crossing ring or overlapping components the two
+  * JTS answers differ, or the unprepared one throws). JTS's two answers
+  * also differ on some points within rounding distance of an edge (its
+  * unprepared ring scan runs each segment backwards, and the double-double
   * orientation is not exactly antisymmetric), and there the kernel gives
   * the prepared answer. Shapes are [[LatticeShapes]]. */
 class PipKernelSpec extends AnyFunSuite {

@@ -161,4 +161,75 @@ class SqlFunctionsSpec extends AnyFunSuite with SparkTest {
       } finally spark.experimental.extraOptimizations = had
     }
   }
+
+  test("SpatialFilterPushdown: a generic contains under an Or or a Not gets its bbox once") {
+    assert(registered)
+    import org.apache.spark.sql.functions.expr
+    import org.apache.spark.sql.catalyst.expressions.{LessThanOrEqual, Literal}
+    import graft.ops.SpatialFilterPushdown
+    import spark.implicits._
+    // not a local relation, which the optimizer would filter before the rule ran
+    val pts = spark.sparkContext.parallelize(0 to 200, 2)
+      .map(i => (i.toLong, (i % 15) - 2.0, (i % 15) - 2.0 + (i % 2))).toDF("id", "lon", "lat")
+    val lineHex = WkbCodec.write(WkbCodec.lineString(Seq((0.0, 0.0), (10.0, 10.0))))
+      .map("%02X".format(_)).mkString
+    val call = s"st_contains(X'$lineHex', st_point(lon, lat))"
+    for (cond <- Seq(s"$call OR id > 195", s"NOT $call AND id < 40", s"($call OR id > 195) AND lon >= 1")) {
+      val baseline = pts.filter(expr(cond)).select("id").as[Long].collect().sorted.toSeq
+      val had = spark.experimental.extraOptimizations
+      spark.experimental.extraOptimizations = had :+ SpatialFilterPushdown
+      try {
+        val q = pts.filter(expr(cond))
+        val optimized = q.queryExecution.optimizedPlan
+        assert(SpatialFilterPushdown(optimized) fastEquals optimized, s"$cond:\n$optimized")
+        val bounds = optimized.flatMap(_.expressions).flatMap(_.collect {
+          case LessThanOrEqual(_, l: Literal) if l.value == 10.0 => l })
+        assert(bounds.size == 2, s"$cond: the bbox (two of its bounds are <= 10) must be there once:\n$optimized")
+        assert(q.select("id").as[Long].collect().sorted.toSeq === baseline, cond)
+      } finally spark.experimental.extraOptimizations = had
+      assert(baseline.exists(_ <= 195) && baseline.size < 201, s"$cond selects $baseline")
+    }
+  }
+
+  test("st_contains of a polygon and a point: pushed == plain near edges, where JTS's unprepared contains differs") {
+    assert(registered)
+    import org.apache.spark.sql.functions.expr
+    import org.locationtech.jts.geom.Coordinate
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import graft.index.CoverIndex
+    import graft.ops.SpatialFilterPushdown
+    import spark.implicits._
+    import LatticeShapes._
+    // lattice shapes with probe points on which JTS's prepared and
+    // unprepared contains disagree (rounding on a sloped edge)
+    // (on an invalid ring JTS's unprepared contains may throw)
+    val shapes = Iterator.from(0).take(400)
+      .map(i => genConcave.pureApply(Gen.Parameters.default, Seed(i.toLong))).filter(_.isValid)
+    val hard = shapes.flatMap { g =>
+      val rings = CoverIndex.Rings(Array(1L), Array(g))
+      val differ = probes(g).filter { case (x, y) =>
+        rings.contains(0, x, y) != g.contains(gf.createPoint(new Coordinate(x, y))) }
+      if (differ.isEmpty) None else Some((g, differ, probes(g)))
+    }.take(2).toSeq
+    assert(hard.nonEmpty, "no lattice shape where JTS's two contains answers differ")
+    for ((g, differ, all) <- hard) {
+      val rings = CoverIndex.Rings(Array(1L), Array(g))
+      val hex = WkbCodec.write(g).map("%02X".format(_)).mkString
+      val pts = spark.sparkContext.parallelize(all.zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }, 2)
+        .toDF("id", "lon", "lat")
+      def filtered = pts.filter(expr(s"st_contains(X'$hex', st_point(lon, lat))"))
+      def ids(q: org.apache.spark.sql.DataFrame) = q.select("id").as[Long].collect().sorted.toSeq
+      val want = all.indices.filter(i => rings.contains(0, all(i)._1, all(i)._2)).map(_.toLong)
+      val plain = ids(filtered)
+      assert(plain === want, s"plain st_contains must answer as the PIP joins do on $g")
+      val had = spark.experimental.extraOptimizations
+      spark.experimental.extraOptimizations = had :+ SpatialFilterPushdown
+      try {
+        val q = filtered
+        assert(q.queryExecution.optimizedPlan.flatMap(_.expressions).exists(Probes.callsKernel(_, "literalContains")))
+        assert(ids(q) === plain, s"pushed != plain on $g near $differ")
+      } finally spark.experimental.extraOptimizations = had
+    }
+  }
 }
