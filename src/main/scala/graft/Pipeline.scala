@@ -16,10 +16,11 @@ object Pipeline {
   val TileZ = 8
   val K = 3
 
-  /** Finer grid for the SHUFFLE pip-join path: the broadcast path refines
-    * a dense cell through its per-cell STRtree, but the shuffle path meets
-    * every polygon covering the point's cell, so candidate count per point
-    * is the cell's polygon density — at level 6 the urban cell holds the
+  /** Finer grid for the SHUFFLE pip-join path: the broadcast path's
+    * quadtree cover splits a dense cell until few boundary polygons are
+    * left, but the shuffle path meets every polygon covering the point's
+    * fixed-level cell, so candidate count per point is the cell's polygon
+    * density — at level 6 the urban cell holds the
     * whole 2k-polygon square (quadratic blowup, measured 4s of refine at
     * sf0.1). Level 10 cells (0.35 x 0.175 deg) cut candidates ~20x for a
     * ~20-cell cover duplication of the big rural diamonds — the standard
@@ -86,13 +87,9 @@ object Pipeline {
       .withColumn("doc_id", col("doc_id") * repTotal + col("rep"))
       .drop("rep")
     val d = col("doc_id")
-    val markers = concat_ws(" ",
-      transform(sequence(lit(0), WebPagesSynth.nEnts(d) - 1), k =>
-        concat(lit("GEO("), WebPagesSynth.lonm(d, k).cast("string"), lit(";"),
-          WebPagesSynth.latm(d, k).cast("string"), lit(")"))))
     val pages = amplified.select(
       WebPagesSynth.urlOf(d).as("url"),
-      concat(col("text"), lit(" "), markers).as("text"),
+      WebPagesSynth.pageText(col("text"), d).as("text"),
       col("lang"))
     EntityExtract.entities(pages)
   }

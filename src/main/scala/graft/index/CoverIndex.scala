@@ -1,120 +1,52 @@
 package graft.index
 
 import org.locationtech.jts.algorithm.CGAlgorithmsDD
-import org.locationtech.jts.geom.{Envelope, Geometry, LinearRing, MultiPolygon, Polygon}
+import org.locationtech.jts.geom.{Geometry, LinearRing, MultiPolygon, Polygon}
 import org.locationtech.jts.geom.prep.PreparedGeometryFactory
-import org.locationtech.jts.index.strtree.STRtree
 import graft.GraftError
 import graft.geom.WkbCodec
 
 import scala.collection.mutable
 
-/** Broadcastable polygon covering index (north-rule operator): each polygon
-  * is covered by the grid cells (at `level`) its envelope intersects,
-  * refined by an exact JTS intersection test; point lookups probe the
-  * point's cell, then refine each candidate with the flat ray-crossing
-  * kernel of [[CoverIndex.Rings]]. Dense cells (many candidate polygons —
-  * the skewed "urban" case) get a per-cell STRtree so a lookup is
-  * O(log n) in candidates, not O(n).
+/** Broadcastable polygon covering index (north-rule operator): a quadtree
+  * cover of the polygon layer, derived from the data as in GeoBlocks
+  * (EDBT'21) and Raptor (VLDB'19), so that most point lookups resolve
+  * with no geometry test at all.
+  *
+  * The cover's roots are the cells at `level` that a polygon's boundary
+  * meets (a coarser cell that none meets is a leaf already); a root
+  * splits into its four children while it holds more than
+  * [[CoverIndex.SplitAbove]] boundary polygons and is above
+  * [[CoverIndex.MaxLevel]]. Each leaf keeps two lists of positions in
+  * `polygons`, both ascending: the polygons that contain the whole cell
+  * (hits with no refine) and the polygons whose boundary meets it
+  * (refined by the flat ray-crossing kernel of [[CoverIndex.Rings]]). See
+  * [[CoverIndex.Cover]] for why the interior lists are exact.
   *
   * Ships the layer as [[CoverIndex.Polygons]] (ids and WKB: serializable,
-  * compact); the ring arrays and trees are rebuilt lazily once per
-  * executor JVM (`@transient lazy val`). Cell candidates are positions in
-  * `polygons`.
+  * compact); the ring arrays and the cover are built lazily once per
+  * executor JVM (`@transient lazy val`).
   * This is the scale path for the reference's per-feature geometry pipeline
   * (`/root/reference/src/format/geo.rs:5-48`): the polygon side is the
   * broadcast dim, the point side streams through a narrow map — no shuffle.
   */
-class CoverIndex(
-    val level: Int,
-    val polygons: CoverIndex.Polygons,
-    val cellToPolys: Map[Long, Array[Int]],
-    val denseThreshold: Int = 16
-) extends Serializable {
+class CoverIndex(val level: Int, val polygons: CoverIndex.Polygons) extends Serializable {
 
-  /** Primitive probe index (r6): the per-row cell lookup through
-    * `Map[Long, _]` boxed the packed key on EVERY fact-row probe (plus a
-    * second boxed lookup for the dense-tree map). Rebuilt per executor
-    * JVM as three parallel arrays — sorted keys, candidate lists, and the
-    * STRtree for cells above denseThreshold (null below) — so a probe is
-    * one allocation-free binary search. */
-  @transient private lazy val probeKeys: Array[Long] = cellToPolys.keys.toArray.sorted
-  @transient private lazy val probeVals: Array[Array[Int]] = probeKeys.map(cellToPolys)
-  @transient private lazy val probeTrees: Array[STRtree] = probeVals.map { idxs =>
-    if (idxs.length >= denseThreshold) {
-      val r = polygons.rings
-      val t = new STRtree()
-      idxs.foreach(i => t.insert(new Envelope(r.minX(i), r.maxX(i), r.minY(i), r.maxY(i)),
-        Integer.valueOf(i)))
-      t.build()
-      t
-    } else null
-  }
-
-  def cellKey(cx: Long, cy: Long): Long = (cx << 32) | cy
-
-  private val empty = Array.empty[Long]
+  @transient private lazy val cover: CoverIndex.Cover = CoverIndex.Cover(polygons, level)
 
   /** Polygon ids exactly containing the point (JTS `contains`: boundary
-    * excluded — the synthetic layers keep points off boundaries), sorted.
-    * Allocation-light: runs once per fact row (10^12 times), so per-probe
-    * garbage is a GC/scaling tax — the dense-tree query envelope and
-    * candidate buffer are per-thread ([[CoverIndex.IntVisitor]], r6), and
-    * the result copy is skipped when every candidate matched. */
-  def containing(lon: Double, lat: Double): Array[Long] = {
-    val key = cellKey(CellGrid.cellX(lon, level), CellGrid.cellY(lat, level))
-    val slot = java.util.Arrays.binarySearch(probeKeys, key)
-    if (slot < 0) return empty
-    val r = polygons.rings
-    var cands = probeVals(slot)
-    var nc = cands.length
-    val tree = probeTrees(slot)
-    if (tree != null) {
-      // reusable visitor: STRtree.query(env) allocates an ArrayList per
-      // probe; the visitor form accumulates into a per-thread int buffer
-      val vis = CoverIndex.visitor.get()
-      vis.reset()
-      vis.env.init(lon, lon, lat, lat)
-      tree.query(vis.env, vis)
-      cands = vis.buf; nc = vis.size
-    }
-    val out = new Array[Long](nc)
-    var m = 0; var j = 0
-    while (j < nc) {
-      val i = cands(j)
-      if (r.contains(i, lon, lat)) { out(m) = polygons.ids(i); m += 1 }
-      j += 1
-    }
-    val res = if (m == out.length) out else java.util.Arrays.copyOf(out, m)
-    java.util.Arrays.sort(res)
-    res
-  }
+    * excluded), ascending. One binary search finds the point's leaf; its
+    * interior list is merged with the boundary polygons that contain the
+    * point. Allocates only the result: it runs once per fact row. */
+  def containing(lon: Double, lat: Double): Array[Long] = cover.containing(lon, lat)
 
-  def candidateCount(lon: Double, lat: Double): Int = {
-    val key = cellKey(CellGrid.cellX(lon, level), CellGrid.cellY(lat, level))
-    cellToPolys.get(key).map(_.length).getOrElse(0)
-  }
+  /** The refines a probe of (lon, lat) makes: the length of its leaf's
+    * boundary list. Interior hits need no refine, so hits per candidate
+    * can exceed 1. */
+  def candidateCount(lon: Double, lat: Double): Int = cover.boundaryCount(lon, lat)
 }
 
 object CoverIndex {
-
-  /** Per-thread state of the dense-cell STRtree probe (r6): the point's
-    * degenerate query envelope, and a growable candidate collector —
-    * `query(env)` allocates a fresh ArrayList per call. */
-  final class IntVisitor extends org.locationtech.jts.index.ItemVisitor {
-    val env: Envelope = new Envelope()
-    var buf: Array[Int] = new Array[Int](64)
-    var size: Int = 0
-    def reset(): Unit = size = 0
-    override def visitItem(item: AnyRef): Unit = {
-      if (size == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
-      buf(size) = item.asInstanceOf[Integer].intValue()
-      size += 1
-    }
-  }
-  private[index] val visitor: ThreadLocal[IntVisitor] = new ThreadLocal[IntVisitor] {
-    override def initialValue(): IntVisitor = new IntVisitor
-  }
 
   /** Every ring segment of every polygon, as flat immutable arrays, and the
     * point-in-polygon refine over them. Polygon `i` has an envelope, the
@@ -137,6 +69,7 @@ object CoverIndex {
   final class Rings private (
       val minX: Array[Double], val maxX: Array[Double],
       val minY: Array[Double], val maxY: Array[Double],
+      private[index] val segStart: Array[Int],
       segX0: Array[Double], segY0: Array[Double], segX1: Array[Double], segY1: Array[Double],
       bandStart: Array[Int], bandScale: Array[Double],
       bandOff: Array[Int], bandSegs: Array[Int]) {
@@ -166,6 +99,24 @@ object CoverIndex {
         j += 1
       }
       (crossings & 1) == 1
+    }
+
+    /** Whether segment `s` meets the closed rectangle [x0, x1] x [y0, y1],
+      * tested exactly by the separating-axis test: bounding boxes, then
+      * whether all four corners lie strictly on one side of the segment's
+      * line. Orientation grows with a corner's projection on the line's
+      * left normal (-dy, dx), whose signs are exact, so the corners of
+      * least and greatest projection decide that. Polygon `i`'s segments
+      * are `segStart(i) until segStart(i + 1)`. */
+    private[index] def segmentMeets(s: Int, x0: Double, y0: Double, x1: Double, y1: Double): Boolean = {
+      val ax = segX0(s); val ay = segY0(s); val bx = segX1(s); val by = segY1(s)
+      if (math.max(ax, bx) < x0 || math.min(ax, bx) > x1 || math.max(ay, by) < y0 || math.min(ay, by) > y1) false
+      else if (ax >= x0 && ax <= x1 && ay >= y0 && ay <= y1) true
+      else {
+        val right = by < ay; val up = bx > ax
+        CGAlgorithmsDD.orientationIndex(ax, ay, bx, by, if (right) x1 else x0, if (up) y1 else y0) >= 0 &&
+          CGAlgorithmsDD.orientationIndex(ax, ay, bx, by, if (right) x0 else x1, if (up) y0 else y1) <= 0
+      }
     }
   }
 
@@ -263,7 +214,7 @@ object CoverIndex {
         i += 1
       }
       bandOff += nEntries
-      new Rings(minX, maxX, minY, maxY, sx0, sy0, sx1, sy1,
+      new Rings(minX, maxX, minY, maxY, segStart, sx0, sy0, sx1, sy1,
         bandStart, bandScale, bandOff.result(), bandSegs.result())
     }
 
@@ -296,33 +247,202 @@ object CoverIndex {
   }
 
   object Polygons {
-    def apply(ids: Array[Long], wkbs: Array[Array[Byte]]): Polygons = decoded(ids, wkbs)._1
-
-    /** The layer, with its geometries decoded once, in its order. Only the
-      * geometry type is checked here: the flat [[Rings]] wait for a refine. */
-    private[index] def decoded(ids: Array[Long], wkbs: Array[Array[Byte]]): (Polygons, Array[Geometry]) = {
+    /** The layer in id order. Only the geometry type is checked here: the
+      * flat [[Rings]] wait for a refine. */
+    def apply(ids: Array[Long], wkbs: Array[Array[Byte]]): Polygons = {
       val order = ids.indices.sortBy(ids(_)).toArray
       val p = new Polygons(order.map(ids), order.map(wkbs))
-      (p, Array.tabulate(order.length) { i =>
-        val g = WkbCodec.read(p.wkbs(i))
-        Rings.polygonalRings(p.ids(i), g)
-        g
-      })
+      var i = 0
+      while (i < order.length) { Rings.polygonalRings(p.ids(i), WkbCodec.read(p.wkbs(i))); i += 1 }
+      p
     }
   }
 
-  /** Build on the driver from a collected (small/dim) polygon layer. */
+  /** Cells split while they hold more than this many boundary polygons. */
+  val SplitAbove = 8
+
+  /** No cell splits below this level (or below the root level, if that is
+    * finer): at 16 a cell is 0.0055 x 0.0027 degrees. */
+  val MaxLevel = 16
+
+  /** A polygon layer on the driver, from a collected (small/dim) layer: its
+    * ids, WKB and geometry type check. The cover is built on first probe. */
   def build(polyIds: Array[Long], polyWkbs: Array[Array[Byte]], level: Int): CoverIndex = {
-    val (polygons, geoms) = Polygons.decoded(polyIds, polyWkbs)
-    val cellMap = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Int]]
-    var i = 0
-    while (i < geoms.length) {
-      coverCells(geoms(i), level).foreach { case (cx, cy) =>
-        cellMap.getOrElseUpdate((cx << 32) | cy, mutable.ArrayBuffer.empty) += i
-      }
-      i += 1
+    if (level < 0 || level > CellGrid.MaxLevel)
+      throw GraftError.FailedValidation(s"CoverIndex: level $level outside 0..${CellGrid.MaxLevel}")
+    new CoverIndex(level, Polygons(polyIds, polyWkbs))
+  }
+
+  /** The quadtree cover of a layer: leaves sorted by the Morton key, at
+    * the cover's finest level `maxLevel`, of their first cell, and a pool
+    * of distinct ascending position lists (CSR: list `l` is
+    * `items(listOff(l) until listOff(l + 1))`) that each leaf's interior
+    * and boundary lists point into. The leaves tile the whole grid: cells
+    * that meet no polygon are leaves with two empty lists.
+    *
+    * A point belongs to the leaf of its `CellGrid.cellX`/`cellY` cell at
+    * `maxLevel`, and the rounding of those formulas can put a point a few
+    * ulps of 360 degrees outside the cell's exact rectangle. So every
+    * classification tests the cell's closed rectangle widened by
+    * [[Margin]], and an edge cell, to which the grid's clamp sends every
+    * point beyond it, is widened past every polygon on that side. A polygon
+    * is boundary in a cell if one of its segments meets that rectangle.
+    * Otherwise the rectangle lies in one connected region of the plane
+    * minus all ring segments, where the ray-crossing parity of
+    * [[Rings.contains]] is constant, so one test at the cell's centre
+    * decides interior (every point of the cell is strictly inside) or
+    * disjoint. An interior hit is therefore the answer `Rings.contains`
+    * would give, bit for bit. */
+  final class Cover private (
+      rings: Rings, ids: Array[Long], maxLevel: Int,
+      leafStart: Array[Long], leafInterior: Array[Int], leafBoundary: Array[Int],
+      listOff: Array[Int], items: Array[Int]) {
+
+    private def leaf(lon: Double, lat: Double): Int = {
+      val key = CellGrid.morton(CellGrid.cellX(lon, maxLevel), CellGrid.cellY(lat, maxLevel))
+      val s = java.util.Arrays.binarySearch(leafStart, key)
+      if (s >= 0) s else -s - 2
     }
-    new CoverIndex(level, polygons, cellMap.view.mapValues(_.toArray).toMap)
+
+    def boundaryCount(lon: Double, lat: Double): Int = {
+      val l = leafBoundary(leaf(lon, lat))
+      listOff(l + 1) - listOff(l)
+    }
+
+    /** The leaf's interior ids merged with its boundary polygons that
+      * contain the point: positions ascend in both lists and ids ascend
+      * with positions, so the result is sorted with no sort. */
+    def containing(lon: Double, lat: Double): Array[Long] = {
+      val f = leaf(lon, lat)
+      var a = listOff(leafInterior(f)); val aEnd = listOff(leafInterior(f) + 1)
+      var b = listOff(leafBoundary(f)); val bEnd = listOff(leafBoundary(f) + 1)
+      val n = (aEnd - a) + (bEnd - b)
+      if (n == 0) return Cover.empty
+      val out = new Array[Long](n)
+      var m = 0
+      while (a < aEnd || b < bEnd) {
+        if (b == bEnd || (a < aEnd && items(a) < items(b))) {
+          out(m) = ids(items(a)); m += 1; a += 1
+        } else {
+          val i = items(b)
+          if (rings.contains(i, lon, lat)) { out(m) = ids(i); m += 1 }
+          b += 1
+        }
+      }
+      if (m == n) out else java.util.Arrays.copyOf(out, m)
+    }
+  }
+
+  /** Widening of each cell rectangle: it bounds how far the rounding in
+    * `CellGrid.cellX`/`cellY` can place a point outside its cell. */
+  private val Margin = 8 * math.ulp(360.0)
+
+  object Cover {
+    private val empty = Array.empty[Long]
+
+    /** Depth first from the world cell, children in Morton order, so the
+      * leaves come out in key order. A cell's candidates are its parent's
+      * boundary polygons, each with the segments that met the parent (a
+      * child's widened rectangle lies in its parent's); its parent's
+      * interior polygons are interior in it too. */
+    def apply(polygons: Polygons, level: Int): Cover = {
+      val r = polygons.rings
+      val n = polygons.ids.length
+      val maxLevel = math.max(MaxLevel, level)
+      // where the edge cells end: past the grid and every polygon
+      // (an empty polygon's envelope is +-Infinity, and skipped)
+      def beyond(sides: Array[Double], from: Double): Double =
+        sides.foldLeft(from)((m, v) => if (v.isInfinite) m else math.max(m, math.abs(v))) + 1
+      val outX = beyond(r.minX ++ r.maxX, 180.0)
+      val outY = beyond(r.minY ++ r.maxY, 90.0)
+
+      val leafStart = new mutable.ArrayBuilder.ofLong
+      val leafInterior = new mutable.ArrayBuilder.ofInt
+      val leafBoundary = new mutable.ArrayBuilder.ofInt
+      val listOff = new mutable.ArrayBuilder.ofInt
+      val items = new mutable.ArrayBuilder.ofInt
+      listOff.addOne(0)
+      var nItems = 0
+      val pool = new java.util.HashMap[ListKey, Integer]()
+      def intern(list: Array[Int]): Int = {
+        val key = new ListKey(list)
+        val known = pool.get(key)
+        if (known != null) known.intValue
+        else {
+          val id = pool.size
+          pool.put(key, id)
+          items.addAll(list); nItems += list.length; listOff.addOne(nItems)
+          id
+        }
+      }
+
+      // candidate k is polygon polys(k), with segments segs(from(k) until from(k + 1))
+      def visit(x: Long, y: Long, l: Int, interior: Array[Int],
+                polys: Array[Int], nPolys: Int, from: Array[Int], segs: Array[Int]): Unit = {
+        val cells = 1L << l
+        val w = 360.0 / cells; val h = 180.0 / cells
+        val x0 = if (x == 0) -outX else -180.0 + x * w - Margin
+        val x1 = if (x == cells - 1) outX else -180.0 + (x + 1) * w + Margin
+        val y0 = if (y == 0) -outY else -90.0 + y * h - Margin
+        val y1 = if (y == cells - 1) outY else -90.0 + (y + 1) * h + Margin
+        val cx = -180.0 + (x + 0.5) * w; val cy = -90.0 + (y + 0.5) * h
+        val bPolys = new Array[Int](nPolys); val bFrom = new Array[Int](nPolys + 1)
+        val bSegs = new Array[Int](from(nPolys)); var nb = 0; var ns = 0
+        val inside = new Array[Int](nPolys); var ni = 0
+        var k = 0
+        while (k < nPolys) {
+          val p = polys(k)
+          if (r.maxX(p) >= x0 && r.minX(p) <= x1 && r.maxY(p) >= y0 && r.minY(p) <= y1) {
+            val ns0 = ns
+            var j = from(k)
+            while (j < from(k + 1)) {
+              if (r.segmentMeets(segs(j), x0, y0, x1, y1)) { bSegs(ns) = segs(j); ns += 1 }
+              j += 1
+            }
+            if (ns > ns0) { bPolys(nb) = p; nb += 1; bFrom(nb) = ns }
+            else if (r.contains(p, cx, cy)) { inside(ni) = p; ni += 1 }
+          }
+          k += 1
+        }
+        val inner = if (ni == 0) interior else merge(interior, inside, ni)
+        if (nb > 0 && l < maxLevel && (l < level || nb > SplitAbove)) {
+          var q = 0
+          while (q < 4) {
+            visit(2 * x + (q & 1), 2 * y + (q >> 1), l + 1, inner, bPolys, nb, bFrom, bSegs)
+            q += 1
+          }
+        } else {
+          val shift = maxLevel - l
+          leafStart.addOne(CellGrid.morton(x << shift, y << shift))
+          leafInterior.addOne(intern(inner))
+          leafBoundary.addOne(intern(java.util.Arrays.copyOf(bPolys, nb)))
+        }
+      }
+
+      visit(0, 0, 0, Array.emptyIntArray, Array.range(0, n), n, r.segStart, Array.range(0, r.segStart(n)))
+      new Cover(r, polygons.ids, maxLevel, leafStart.result(), leafInterior.result(),
+        leafBoundary.result(), listOff.result(), items.result())
+    }
+
+    /** The ascending union of two disjoint ascending lists (`b` holds `nb`). */
+    private def merge(a: Array[Int], b: Array[Int], nb: Int): Array[Int] = {
+      val out = new Array[Int](a.length + nb)
+      var i = 0; var j = 0; var m = 0
+      while (i < a.length || j < nb) {
+        if (j == nb || (i < a.length && a(i) < b(j))) { out(m) = a(i); i += 1 }
+        else { out(m) = b(j); j += 1 }
+        m += 1
+      }
+      out
+    }
+
+    private final class ListKey(val list: Array[Int]) {
+      override val hashCode: Int = java.util.Arrays.hashCode(list)
+      override def equals(o: Any): Boolean = o match {
+        case k: ListKey => java.util.Arrays.equals(list, k.list)
+        case _ => false
+      }
+    }
   }
 
   /** Cells at `level` whose rectangle intersects the geometry (bbox cover +

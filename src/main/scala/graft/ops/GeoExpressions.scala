@@ -40,8 +40,9 @@ object NodeCoordMap {
   * and worker JVMs spent about half their CPU in GC.)
   *
   * `st_containing_polys` calls [[CoverIndex.containing]] per row: the
-  * point's cell candidates, refined by the index's flat ray-crossing
-  * kernel (no JTS geometry and no lock on the row path). The shuffle
+  * point's quadtree leaf gives the polygons that contain its whole cell
+  * and the boundary polygons, which the index's flat ray-crossing kernel
+  * refines (no JTS geometry and no lock on the row path). The shuffle
   * joins refine each candidate pair with the same kernel
   * ([[polygonContains]]).
   */

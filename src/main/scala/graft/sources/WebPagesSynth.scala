@@ -2,7 +2,10 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.TableMemo
+import graft.ops.Kernel
 
 /** Deterministic Common-Crawl-style web-pages table (the north-rule
   * input_hint shape: url, warc_ts, html binary, text, lang), synthesized
@@ -11,7 +14,8 @@ import graft.TableMemo
   * the exact same table from the same parquet.
   *
   * Every numeric formula lives here ONCE, as a Spark `Column` builder and
-  * as a DuckDB SQL fragment, to keep the two sides bit-identical (all
+  * as a DuckDB SQL fragment (and the marker formulas as the scalar methods
+  * of the `pageText` kernel), to keep the sides bit-identical (all
   * coordinates are `<int>/20.0 - <offset>`, a single IEEE division both
   * engines perform identically).
   *
@@ -38,6 +42,33 @@ object WebPagesSynth {
   def latm(d: Column, k: Column): Column =
     when(isUrban(d, k), lit(1400) + ((d * 11 + k * 7) % 20))
       .otherwise((d * 197 + k * 1069) % 2800).cast("long")
+
+  // ---- the same formulas on one document (the `pageText` kernel) ----
+  private def isUrban(d: Long, k: Long): Boolean = (d * 7 + k * 3) % 4 == 0
+  private def lonm(d: Long, k: Long): Long =
+    if (isUrban(d, k)) 4000 + (d * 13 + k * 5) % 20 else (d * 131 + k * 2347) % 7200
+  private def latm(d: Long, k: Long): Long =
+    if (isUrban(d, k)) 1400 + (d * 11 + k * 7) % 20 else (d * 197 + k * 1069) % 2800
+
+  /** `page_text` kernel: `text`, a space, and the document's
+    * `GEO(<lonm>;<latm>)` markers joined by spaces, for k over
+    * `sequence(0, nEnts - 1)`, which counts down when nEnts < 1 (a
+    * negative doc_id). One call per row where a `transform` lambda over a
+    * `sequence` kept its whole projection out of whole-stage codegen. */
+  def pageText(text: UTF8String, d: Long): UTF8String = {
+    val last = d % 3
+    val step = if (last >= 0) 1 else -1
+    val sb = new java.lang.StringBuilder(16 + 24 * (math.abs(last).toInt + 1))
+    var k = 0L
+    while (k != last + step) {
+      sb.append(" GEO(").append(lonm(d, k)).append(';').append(latm(d, k)).append(')')
+      k += step
+    }
+    UTF8String.concat(text, UTF8String.fromString(sb.toString))
+  }
+
+  def pageText(text: Column, d: Column): Column =
+    Kernel.column("page_text", this, "pageText", StringType)(text -> StringType, d -> LongType)
 
   def lonOf(lonmCol: Column): Column = lonmCol / 20.0 - 180.0
   def latOf(latmCol: Column): Column = latmCol / 20.0 - 70.0
@@ -80,16 +111,13 @@ object WebPagesSynth {
     val base = TableMemo.parquet(spark, s"$sfDir/documents.parquet")
     val docs = sample.map(f => base.sample(f, 42)).getOrElse(base)
     val d = col("doc_id")
-    val markers = concat_ws(" ",
-      transform(sequence(lit(0), nEnts(d) - 1), k =>
-        concat(lit("GEO("), lonm(d, k).cast("string"), lit(";"), latm(d, k).cast("string"), lit(")"))))
-    val pageText = concat(col("text"), lit(" "), markers)
+    val text = pageText(col("text"), d)
     docs.select(
       urlOf(d).as("url"),
       timestamp_seconds(lit(Epoch0) + (d % 86400)).as("warc_ts"),
       encode(concat(lit("<html><head><title>"), urlOf(d), lit("</title></head><body><p>"),
-        pageText, lit("</p></body></html>")), "UTF-8").as("html"),
-      pageText.as("text"),
+        text, lit("</p></body></html>")), "UTF-8").as("html"),
+      text.as("text"),
       col("lang"))
   }
 }

@@ -80,8 +80,8 @@ class PipKernelSpec extends AnyFunSuite {
   test("CoverIndex.containing equals brute-force JTS contains over a layer, dense cells too") {
     val shapes = Gen.listOfN(60, Gen.oneOf(genRectangle, genConcave, genHoles, genMulti))
       .pureApply(Gen.Parameters.default, Seed(7L))
-    // 20 rectangles over one point: a cell with more candidates than the
-    // dense threshold, which probes through its STRtree
+    // 20 rectangles over one point: a root cell with more boundary
+    // polygons than the cover's split threshold
     val stacked = (1 to 20).map(i => polygon(Seq((-i, -i), (i, -i), (i, i), (-i, i))))
     val geoms = (shapes ++ stacked).toArray
     val ids = geoms.indices.map(i => 100L + i).toArray

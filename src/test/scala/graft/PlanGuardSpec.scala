@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window => LogicalWindow}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -201,6 +203,37 @@ class PlanGuardSpec extends AnyFunSuite with SparkTest {
         assert(outside.isEmpty,
           s"$what: ${outside.map(_.nodeName).mkString(", ")} calling $kernel run outside whole-stage codegen")
       }
+    }
+  }
+
+  test("the flagship runs as one codegen stage from its scan or exchange to the tile") {
+    // the page synthesis is one kernel call (WebPagesSynth.pageText): a
+    // transform lambda over a sequence took its projection out of
+    // whole-stage codegen and split the pass into stages
+    def finalPlan(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => finalPlan(a.executedPlan)
+      case q: QueryStageExec => finalPlan(q.plan)
+      case _ => p
+    }
+    for ((what, df, below) <- Seq[(String, org.apache.spark.sql.DataFrame, SparkPlan => Boolean)](
+        ("Pipeline.run", Pipeline.run(spark, Sf), _.isInstanceOf[FileSourceScanExec]),
+        ("amplified pass", Pipeline.enrich(spark, Sf, Pipeline.entitiesAmplifiedRange(spark, Sf, 0, 2, 2)), {
+          case _: ShuffleQueryStageExec | _: AQEShuffleReadExec => true
+          case _ => false
+        }))) {
+      val lambdas = df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case f: HigherOrderFunction => f.prettyName }))
+      assert(lambdas.isEmpty, s"$what: higher-order functions in the plan: $lambdas")
+      Probes.codegenSplit(df)
+      val root = finalPlan(df.queryExecution.executedPlan)
+      assert(root.isInstanceOf[WholeStageCodegenExec], s"$what: the plan's root is no codegen stage:\n$root")
+      def inputs(p: SparkPlan): Seq[SparkPlan] = p match {
+        case i: InputAdapter => Seq(i.child)
+        case _ => p.children.flatMap(inputs)
+      }
+      val fed = inputs(root.children.head)
+      assert(fed.size == 1 && below(fed.head), s"$what: the stage reads ${fed.map(_.nodeName)}:\n$root")
+      assert(root.collect { case g: GenerateExec => g }.nonEmpty, s"$what: extraction outside the stage:\n$root")
     }
   }
 

@@ -8,8 +8,9 @@ import graft.index.CoverIndex
 import graft.ops.PoiGrid
 
 /** An executor's task threads share one deserialized [[CoverIndex]] and one
-  * [[PoiGrid]] and race to build their lazy probe structures. Four threads
-  * probing a cold pair at once must answer exactly what one thread does. */
+  * [[PoiGrid]] and race to build their lazy probe structures (the ring
+  * arrays and the quadtree cover, the cell table). Four threads probing a
+  * cold pair at once must answer exactly what one thread does. */
 class ProbeConcurrencySpec extends AnyFunSuite {
 
   private val threads = 4
@@ -24,7 +25,7 @@ class ProbeConcurrencySpec extends AnyFunSuite {
 
   test("4 threads on one cold CoverIndex and PoiGrid answer as one thread does") {
     val rnd = new scala.util.Random(11)
-    // diamonds, many stacked near (20, 10) so some cells probe an STRtree
+    // diamonds, many stacked near (20, 10) so the cover splits deep there
     val polys = (0 until 300).map { i =>
       val (cx, cy) = if (i % 3 == 0) (20.0 + rnd.nextDouble(), 10.0 + rnd.nextDouble())
                      else (rnd.nextDouble() * 300 - 150, rnd.nextDouble() * 120 - 60)
