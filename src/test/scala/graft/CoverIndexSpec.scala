@@ -42,8 +42,7 @@ class CoverIndexSpec extends AnyFunSuite {
 
   private val genShape: Gen[Geometry] = Gen.oneOf(genRectangle, genConcave, genHoles, genMulti)
 
-  /** Two rectangles sharing an edge, as a MultiPolygon's neighbours or as
-    * two rows. */
+  /** Two rectangles sharing an edge. */
   private val genSharedEdge: Gen[Seq[Geometry]] = for {
     x0 <- Gen.choose(-50, 30); y0 <- Gen.choose(-30, 20)
     w <- Gen.choose(1, 20); h <- Gen.choose(1, 20); w2 <- Gen.choose(1, 20)
